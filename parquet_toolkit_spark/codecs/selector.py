@@ -23,6 +23,9 @@ from parquet_toolkit_spark.codecs.container import encode_blob
 # this host, see codecs/fsst.py) — admissible up to full content-column
 # chunks; the sample gate below still keeps it off buffers where the zstd
 # floor wins anyway, so the cap only bounds worst-case trial-encode cost.
+# The gate itself costs 0.05-0.14 s per column of an F0 pid on a 4-core
+# Xeon VM: a ~40 ms table build on the 64 KB slice head, then the encode
+# and two zstd passes over a slice of at most 1 MB.
 FSST_MAX_BYTES = 16 << 20
 _SAMPLE = 65536
 _ZONE_MAX_LEN = 128  # string zone maps stored only for short-key columns
@@ -296,8 +299,9 @@ def _fsst_sample_wins(data: bytes) -> bool:
     byte alignment — an effect only visible once the trial slice spans
     multiple files (measured: 256KB still mispredicts the F0 code corpus,
     1MB flips to the correct reject; a homogeneous text column keeps its
-    0.62 win at every slice size). ~0.5s per gate call at the 1MB cap,
-    paid once per job on the plan_hints sample partition."""
+    0.62 win at every slice size). ~0.13 s per gate call at the 1MB cap
+    (F0 `content`, 4-core Xeon VM), paid once per job on the plan_hints
+    sample partition."""
     from parquet_toolkit_spark.codecs import fsst as fsst_mod
     from parquet_toolkit_spark.codecs.bits import bit_width, pack_uints
     from parquet_toolkit_spark.codecs.container import _ZSTD

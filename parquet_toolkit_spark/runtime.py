@@ -71,8 +71,13 @@ def spark_builder_defaults(builder, shuffle_partitions: int | None = None):
     # count (the upper bound on concurrently page-holding tasks, ~192 MB
     # each — a cap, not a preallocation); env-overridable for deployments
     # with different executor shapes.
-    offheap_mb = int(os.environ.get("SPARK_GRAFT_OFFHEAP_MB",
-                                    str(192 * cores)))
+    raw = os.environ.get("SPARK_GRAFT_OFFHEAP_MB", str(192 * cores))
+    try:
+        offheap_mb = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_OFFHEAP_MB must be an integer number of MB "
+            f"(0 disables off-heap memory), got {raw!r}") from None
     if offheap_mb > 0:  # 0 disables (tungsten pages back on-heap)
         builder = (
             builder.config("spark.memory.offHeap.enabled", "true")

@@ -4,27 +4,38 @@ The off-heap execution pool is what keeps string-heavy shuffle map
 stages from pinning the old generation (GC-overhead JVM death at
 ~heap-sized inputs, measured on the 6M-row corpus layout with a 10 GB
 ParallelGC heap) — these tests pin that it is on by default, sized by
-core count, and cleanly disableable for deployments that budget memory
-differently.
+core count, cleanly disableable for deployments that budget memory
+differently, and that a malformed size fails naming the setting.
 """
 
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_toolkit_spark.runtime import spark_builder_defaults
 
 
-def _opts(builder):
-    return dict(builder._options)
+class _RecordingBuilder:
+    """Stands in for SparkSession.builder: records every config(k, v)."""
+
+    def __init__(self):
+        self.options: dict[str, str] = {}
+
+    def config(self, key, value):
+        self.options[key] = value
+        return self
+
+
+def _opts() -> dict[str, str]:
+    return spark_builder_defaults(_RecordingBuilder()).options
 
 
 def test_offheap_on_by_default(monkeypatch):
-    from pyspark.sql import SparkSession
-
     monkeypatch.delenv("SPARK_GRAFT_OFFHEAP_MB", raising=False)
-    opts = _opts(spark_builder_defaults(SparkSession.builder))
+    opts = _opts()
     assert opts["spark.memory.offHeap.enabled"] == "true"
     size = opts["spark.memory.offHeap.size"]
     assert size.endswith("m") and int(size[:-1]) >= 192
@@ -33,13 +44,20 @@ def test_offheap_on_by_default(monkeypatch):
 
 
 def test_offheap_env_override_and_disable(monkeypatch):
-    from pyspark.sql import SparkSession
-
     monkeypatch.setenv("SPARK_GRAFT_OFFHEAP_MB", "1024")
-    opts = _opts(spark_builder_defaults(SparkSession.builder))
+    opts = _opts()
     assert opts["spark.memory.offHeap.size"] == "1024m"
 
     monkeypatch.setenv("SPARK_GRAFT_OFFHEAP_MB", "0")
-    opts = _opts(spark_builder_defaults(SparkSession.builder))
+    opts = _opts()
     assert "spark.memory.offHeap.enabled" not in opts
     assert "spark.memory.offHeap.size" not in opts
+
+
+@pytest.mark.parametrize("bad", ["", "  ", "1g", "512m", "1.5", "lots"])
+def test_offheap_malformed_env_names_the_setting(monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_OFFHEAP_MB", bad)
+    with pytest.raises(ValueError) as err:
+        _opts()
+    assert "SPARK_GRAFT_OFFHEAP_MB" in str(err.value)
+    assert repr(bad) in str(err.value)
