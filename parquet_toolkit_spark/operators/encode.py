@@ -32,21 +32,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_toolkit_spark.operators.layout import sampled_width_and_rows
+from parquet_toolkit_spark.sources import store
+from parquet_toolkit_spark.sources.store import (
+    MANIFEST_COLS,
+    MANIFEST_DDL,
+    MANIFEST_SCHEMA,
+    read_manifest,
+)
 
-ENCODED_SCHEMA = (
-    "pid INT, column STRING, codec STRING, nrows BIGINT, bytes_in BIGINT, "
-    "bytes_out BIGINT, checksum STRING, stats_json STRING, run_id STRING, "
-    "blob BINARY"
-)
-MANIFEST_COLS = [
-    "pid", "column", "codec", "nrows", "bytes_in", "bytes_out",
-    "checksum", "stats_json", "run_id", "status",
-]
-MANIFEST_DDL = (
-    "pid INT, column STRING, codec STRING, nrows BIGINT, bytes_in BIGINT, "
-    "bytes_out BIGINT, checksum STRING, stats_json STRING, run_id STRING, "
-    "status STRING"
-)
+# one encoded row per (pid, column): the manifest row less its status,
+# plus the codec blob
+_ROWS_DDL = MANIFEST_DDL.replace(", status STRING", "")
+ENCODED_SCHEMA = _ROWS_DDL + ", blob BINARY"
 
 # driver-process memo: staging dir -> column codec hints (plan_hints)
 _HINTS_MEMO: dict[tuple, dict] = {}
@@ -127,12 +124,9 @@ def _encode_columns(cols: dict[str, pa.Array], pid: int,
     return rows
 
 
-_ENC_ARROW_SCHEMA = pa.schema([
-    ("pid", pa.int32()), ("column", pa.string()), ("codec", pa.string()),
-    ("nrows", pa.int64()), ("bytes_in", pa.int64()), ("bytes_out", pa.int64()),
-    ("checksum", pa.string()), ("stats_json", pa.string()),
-    ("run_id", pa.string()), ("blob", pa.large_binary()),
-])
+_ENC_ARROW_SCHEMA = pa.schema(
+    [f for f in MANIFEST_SCHEMA if f.name != "status"]
+    + [("blob", pa.large_binary())])
 
 
 def _rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
@@ -447,20 +441,10 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
         pid_files.setdefault(pid, []).append(f)
         pid_sizes[pid] = pid_sizes.get(pid, 0) + sz
     if not pid_files:
-        for d in dfs.list_dirs(staging_dir):
-            base = posixpath.basename(d.rstrip("/"))
-            if not base.startswith("pid="):
-                continue
-            try:
-                pid = int(base.split("=", 1)[1])
-            except ValueError:
-                continue
-            fs_list = [
-                (f, sz) for f, sz in dfs.list_files(d)
-                if not posixpath.basename(f).startswith((".", "_"))
-            ]
+        for pid, d in store.pid_dirs(dfs, staging_dir).items():
+            fs_list = store.data_files(dfs, d)
             if fs_list:
-                pid_files[pid] = sorted(f for f, _ in fs_list)
+                pid_files[pid] = [f for f, _ in fs_list]
                 pid_sizes[pid] = sum(sz for _, sz in fs_list)
     for pid in pid_files:
         pid_files[pid].sort()
@@ -479,16 +463,21 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
     if schema_map is None:  # exotic arrow type: fall back to Spark
         schema_map = _schema_map(spark.read.parquet(any_file))
 
-    committed: set[int] = set()
-    if resume:
-        committed = _committed_pid_set(dfs, out_dir) or set()
-    pending = sorted(set(pid_files) - committed)
+    committed = store.committed_pids(dfs, out_dir) if resume else None
+    if committed is not None:
+        # resumed pids would sit under a column map that is not theirs
+        old_schema = store.read_schema_map(dfs, out_dir)
+        if old_schema != schema_map:
+            raise ValueError(
+                f"cannot resume into {out_dir}: the store has schema "
+                f"{old_schema}, the staged table has {schema_map}; "
+                "re-encode with resume=False")
+    pending = sorted(set(pid_files) - (committed or set()))
     if fail_after is not None:
         pending = pending[:fail_after]
     if not pending:
         return read_manifest(spark, out_dir)
 
-    blobs_dir = os.path.join(out_dir, "blobs")
     tmp_dir = os.path.join(out_dir, "_tmp")
     dfs.mkdirs(tmp_dir)
 
@@ -562,7 +551,7 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
             }
             rows = _encode_columns(cols, pid, run_id, hints=hints)
             blob_table = pa.Table.from_batches([_rows_to_batch(rows)])
-            dest_dir = os.path.join(blobs_dir, f"pid={pid}")
+            dest_dir = store.pid_dir(out_dir, pid)
             wfs, dest_plain = task_fs(dest_dir)
             wfs.create_dir(dest_plain, recursive=True)
             # Arrow IPC, not parquet: blob sections are already
@@ -604,66 +593,39 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
                     break
                 yield encode_one(pid, table)
 
-    manifest_schema = ENCODED_SCHEMA.replace(", blob BINARY", "")
-    new_rows = tasks.mapInPandas(encode_task, manifest_schema)
-
-    dfs.mkdirs(out_dir)
-    dfs.write_text(os.path.join(out_dir, "_schema.json"), json.dumps(schema_map))
-
-    new_man = (
-        new_rows
-        .withColumn("status", F.lit("committed"))
-        .select(*MANIFEST_COLS)
-    )
-    # resume=False re-encodes every pid, so no old manifest row could
-    # survive the pending filter — skip the read (and its exception round
-    # trip on a fresh out_dir) entirely
-    old_man = read_manifest(spark, out_dir) if resume else None
-    if old_man is not None:
-        keep = old_man.where(~F.col("pid").isin([int(p) for p in pending]))
-        new_man = keep.select(*MANIFEST_COLS).unionByName(new_man)
-    _commit_manifest(dfs, out_dir, new_man)
+    new_rows = tasks.mapInPandas(encode_task, _ROWS_DDL)
+    # resume=False re-encodes every pid, so no old manifest row survives
+    _commit_rows(spark, dfs, out_dir, new_rows,
+                 pending if resume else None, schema_map)
     dfs.delete(tmp_dir, recursive=True)
     return read_manifest(spark, out_dir)
 
 
-def _commit_manifest(dfs, out_dir: str, man_df: DataFrame) -> None:
-    """Swap-commit the manifest — ONE job: manifest rows -> manifest_new
-    parts written by the producing tasks themselves (no repartition/
-    coalesce: the extra shuffle stage + single-reducer wave was pure
-    fixed overhead per run, and at a 10^6-pid store one reducer writing
-    every manifest row is a bottleneck — read_manifest reads the part
-    directory either way), then rename-swap into place. Crash-safe at
-    every boundary
-    (the reference's temp-suffix protocol, SimpleMergeThread.java:118-122):
-    read_manifest falls back to manifest_old inside the swap window, and
-    this function FIRST rolls an interrupted swap forward (manifest_old
-    present without manifest) instead of deleting the only committed copy
-    — deleting manifest_old before the new manifest lands would brick the
-    store if this run then crashed (code-review r3)."""
-    man_dir = os.path.join(out_dir, "manifest")
-    tmp_man = os.path.join(out_dir, "manifest_new")
-    man_old = os.path.join(out_dir, "manifest_old")
-    if dfs.exists(man_old):
-        if dfs.exists(man_dir):
-            # crash after the forward rename but before cleanup: manifest
-            # is committed, manifest_old is a stale leftover
-            dfs.delete(man_old, recursive=True)
-        else:
-            # crash between the two renames: manifest_old IS the last
-            # committed manifest — restore it before anything else
-            dfs.rename(man_old, man_dir)
-    man_df.write.mode("overwrite").parquet(tmp_man)
-    if dfs.exists(man_dir):
-        dfs.rename(man_dir, man_old)
-    dfs.rename(tmp_man, man_dir)
-    dfs.delete(man_old, recursive=True)
+def _commit_rows(spark: SparkSession, dfs, out_dir: str, rows: DataFrame,
+                 replaced: list[int] | None,
+                 schema_map: dict[str, str]) -> None:
+    """Swap-commit `rows` (encoded rows less the blob) as the manifest,
+    carrying over the committed rows of every pid not in `replaced`
+    (None: carry nothing over). ONE job: the producing tasks write the
+    manifest parts themselves — a repartition/coalesce added a shuffle
+    stage and a single-reducer wave per run."""
+    man = rows.withColumn("status", F.lit("committed")).select(*MANIFEST_COLS)
+
+    def stage(tmp_dir: str) -> None:
+        out = man
+        old = read_manifest(spark, out_dir) if replaced is not None else None
+        if old is not None:
+            out = (old.where(~F.col("pid").isin([int(p) for p in replaced]))
+                   .unionByName(man))
+        out.write.mode("overwrite").parquet(tmp_dir)
+
+    store.commit(dfs, out_dir, stage, schema_map)
 
 
 def _write_encoded(spark: SparkSession, encoded: DataFrame, out_dir: str,
                    schema_map: dict[str, str], append_pids: bool = False,
                    pids: list[int] | None = None) -> None:
-    blobs_dir = os.path.join(out_dir, "blobs")
+    blobs_dir = os.path.join(out_dir, store.BLOBS)
     # dynamic overwrite: only re-encoded pid directories are replaced
     # (idempotent resume); static mode wipes the whole store first.
     # per-write option, NOT a session conf — leaking the mode would change
@@ -677,118 +639,28 @@ def _write_encoded(spark: SparkSession, encoded: DataFrame, out_dir: str,
     from parquet_toolkit_spark.sources.fs import DriverFS
 
     dfs = DriverFS(spark)
-    dfs.mkdirs(out_dir)
-    dfs.write_text(os.path.join(out_dir, "_schema.json"), json.dumps(schema_map))
-
     # manifest derives from the blob store (column-pruned scan: the binary
     # blob column is never read), so it is always consistent with it.
-    # Commit through the same swap protocol as encode_partitions — a plain
-    # mode("overwrite") deletes the old manifest before the new one lands,
-    # and decode_pipeline's missing-manifest refusal would turn that crash
-    # window into an unreadable store (code-review r3).
     # When the caller knows WHICH pids it just wrote (`pids`, the
     # incremental path), only those pid directories are scanned and the
     # rest of the manifest is carried over from the committed one — the
     # commit cost is O(batch), not O(store) (VERDICT r3 #3: a stream's
     # per-batch cost must not grow with store history).
-    man_cols = ["pid", "column", "codec", "nrows", "bytes_in", "bytes_out",
-                "checksum", "stats_json", "run_id"]
-    if pids is not None:
+    # explicit schema: the blob layout is ours, so the footer
+    # schema-inference job (~0.1-0.2 s fixed overhead per commit) buys
+    # nothing
+    reader = spark.read.schema(ENCODED_SCHEMA)
+    if pids is None:
+        rows = reader.parquet(blobs_dir)
+    else:
         # a round-robin repartition can leave a trailing partition empty,
         # so its pid dir never materializes — filter to what was written
-        pids = [p for p in pids
-                if dfs.exists(os.path.join(blobs_dir, f"pid={p}"))]
+        pids = [p for p in pids if dfs.exists(store.pid_dir(out_dir, p))]
         if not pids:
             return  # nothing actually landed; the manifest is unchanged
-        new_man = (
-            spark.read.schema(ENCODED_SCHEMA)
-            .option("basePath", blobs_dir)
-            .parquet(*[os.path.join(blobs_dir, f"pid={p}") for p in pids])
-            .select(*man_cols)
-            .withColumn("status", F.lit("committed"))
-        )
-        old_man = read_manifest(spark, out_dir)
-        if old_man is not None:
-            keep = old_man.where(~F.col("pid").isin([int(p) for p in pids]))
-            new_man = keep.select(*MANIFEST_COLS).unionByName(
-                new_man.select(*MANIFEST_COLS))
-        man = new_man
-    else:
-        # explicit schema: the blob layout is ours, so the footer
-        # schema-inference job (~0.1-0.2 s fixed overhead per commit)
-        # buys nothing
-        man = (
-            spark.read.schema(ENCODED_SCHEMA).parquet(blobs_dir)
-            .select(*man_cols)
-            .withColumn("status", F.lit("committed"))
-        )
-    _commit_manifest(dfs, out_dir, man)
-
-
-def _manifest_arrow(dfs, out_dir: str, columns: list[str] | None = None):
-    """Committed-manifest read as a pyarrow Table — manifest/ falling back
-    to manifest_old/ exactly like read_manifest, but DRIVER-SIDE through
-    the pyarrow fs shim: control-plane consumers that immediately
-    .collect() O(pids) rows (decode pid sets, zone-map pruning, compaction
-    binning) paid a full Spark job (~0.1-0.2 s fixed overhead) per call
-    for what is a column-pruned read of a small parquet directory. Any
-    scheme the shim resolves works. Returns None when no manifest exists
-    (callers keep their existing refusal/fallback behavior)."""
-    import pyarrow.parquet as pq
-
-    from parquet_toolkit_spark.sources.fs import task_fs
-
-    for name in ("manifest", "manifest_old"):
-        d = os.path.join(out_dir, name)
-        try:
-            if not dfs.exists(d):
-                continue
-            files = [f for f, _sz in dfs.list_files(d)
-                     if f.endswith(".parquet")]
-            if not files:
-                continue
-            tabs = []
-            for f in files:
-                fs, plain = task_fs(f)
-                tabs.append(pq.read_table(plain, filesystem=fs,
-                                          columns=columns))
-            return pa.concat_tables(tabs) if len(tabs) > 1 else tabs[0]
-        except Exception:
-            continue
-    return None
-
-
-def _committed_pid_set(dfs, out_dir: str) -> set[int] | None:
-    """Committed pid set from the manifest, driver-side (no Spark job)."""
-    mt = _manifest_arrow(dfs, out_dir, ["pid", "status"])
-    if mt is None:
-        return None
-    return {p for p, s in zip(mt.column("pid").to_pylist(),
-                              mt.column("status").to_pylist())
-            if s == "committed"}
-
-
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Committed manifest, falling back to the pre-swap copy.
-
-    `manifest_old` only exists inside the commit swap's crash window
-    (rename(manifest→old) happened, rename(new→manifest) did not) — it is
-    the last fully-committed manifest, so reading it is always safe."""
-    # explicit schema: the manifest layout is ours, so the schema-
-    # inference footer job (~0.1-0.3 s of per-call fixed overhead) buys
-    # nothing. A directory check replaces the exception round trip.
-    from parquet_toolkit_spark.sources.fs import DriverFS
-
-    dfs = DriverFS(spark)
-    for name in ("manifest", "manifest_old"):
-        d = os.path.join(out_dir, name)
-        try:
-            if not dfs.exists(d):
-                continue
-            return spark.read.schema(MANIFEST_DDL).parquet(d)
-        except Exception:
-            continue
-    return None
+        rows = reader.option("basePath", blobs_dir).parquet(
+            *[store.pid_dir(out_dir, p) for p in pids])
+    _commit_rows(spark, dfs, out_dir, rows.drop("blob"), pids, schema_map)
 
 
 def fsck_store(spark: SparkSession, enc_dir: str,
@@ -801,35 +673,21 @@ def fsck_store(spark: SparkSession, enc_dir: str,
     orphan (blob row, no manifest entry) | unreadable (file won't parse).
     Orphan PID DIRS (no committed manifest rows at all) are ignored, same
     as decode — the manifest is the source of truth."""
-    import posixpath
-
     from parquet_toolkit_spark.sources.fs import DriverFS
 
     dfs = DriverFS(spark)
     man = read_manifest(spark, enc_dir)
     if man is None:
         raise FileNotFoundError(f"no manifest under {enc_dir}")
-    committed = _committed_pid_set(dfs, enc_dir)
-    blobs_dir = os.path.join(enc_dir, "blobs")
-    pid_files: list[tuple[int, str]] = []
-    for d in dfs.list_dirs(blobs_dir) if dfs.exists(blobs_dir) else []:
-        base = posixpath.basename(d.rstrip("/"))
-        if not base.startswith("pid="):
-            continue
-        try:
-            pid = int(base.split("=", 1)[1])
-        except ValueError:
-            continue
-        if pid not in committed:
-            continue
-        for f, _sz in dfs.list_files(d):
-            if f.endswith((".parquet", ".arrow")):
-                pid_files.append((pid, f))
-
-    man_side = (
-        man.where(F.col("status") == "committed")
-        .select("pid", "column", F.col("checksum").alias("expected_sha"))
-    )
+    committed = store.committed_pids(dfs, enc_dir)
+    pid_files: list[tuple[int, str]] = [
+        (pid, f)
+        for pid, d in store.pid_dirs(dfs, os.path.join(enc_dir, store.BLOBS)
+                                     ).items() if pid in committed
+        for f, _sz in store.data_files(dfs, d)
+    ]
+    man_side = man.select("pid", "column",
+                          F.col("checksum").alias("expected_sha"))
     if not pid_files:
         return man_side.select(
             "pid", "column", F.lit("missing_blob").alias("status"),
@@ -975,8 +833,6 @@ def compact_store(spark: SparkSession, enc_dir: str,
     bloom_columns=None auto-detects: columns whose manifest stats carry a
     bloom keep one on the merged chunks.
     """
-    import posixpath
-
     from parquet_toolkit_spark.sources.fs import DriverFS
 
     dfs = DriverFS(spark)
@@ -985,17 +841,9 @@ def compact_store(spark: SparkSession, enc_dir: str,
         raise FileNotFoundError(f"no manifest under {enc_dir}")
     # one driver-side arrow read replaces three O(pids) collect jobs
     # (sizes, bloom columns, codec hints below)
-    mt = _manifest_arrow(dfs, enc_dir,
-                         ["pid", "column", "codec", "status", "bytes_out",
-                          "stats_json"])
-    mrows = [
-        (p, c, cd, bo, sj) for p, c, cd, s, bo, sj in zip(
-            mt.column("pid").to_pylist(), mt.column("column").to_pylist(),
-            mt.column("codec").to_pylist(), mt.column("status").to_pylist(),
-            mt.column("bytes_out").to_pylist(),
-            mt.column("stats_json").to_pylist())
-        if s == "committed"
-    ]
+    cols = ["pid", "column", "codec", "bytes_out", "stats_json"]
+    mt = store.manifest_table(dfs, enc_dir, cols)
+    mrows = list(zip(*(mt.column(c).to_pylist() for c in cols)))
     sizes: dict[int, int] = {}
     for p, _c, _cd, bo, _sj in mrows:
         sizes[p] = sizes.get(p, 0) + (bo or 0)
@@ -1027,24 +875,12 @@ def compact_store(spark: SparkSession, enc_dir: str,
     if not groups:
         return man
 
-    blobs_dir = os.path.join(enc_dir, "blobs")
     # member files in (pid, filename) order — concat preserves the sorted
-    # layout's row order across adjacent pids
-    pid_files: dict[int, list[str]] = {}
-    live_pids: set[int] = set()
-    for d in dfs.list_dirs(blobs_dir):
-        base = posixpath.basename(d.rstrip("/"))
-        if not base.startswith("pid="):
-            continue
-        try:
-            pid = int(base.split("=", 1)[1])
-        except ValueError:
-            continue
-        live_pids.add(pid)  # includes orphans: new pids must not collide
-        pid_files[pid] = sorted(
-            f for f, _ in dfs.list_files(d)
-            if f.endswith((".parquet", ".arrow"))
-        )
+    # layout's row order across adjacent pids. Orphan dirs count as live:
+    # new pids must not collide with them
+    live = store.pid_dirs(dfs, os.path.join(enc_dir, store.BLOBS))
+    pid_files = {pid: [f for f, _ in store.data_files(dfs, d)]
+                 for pid, d in live.items()}
     missing = [p for g in groups for p in g if not pid_files.get(p)]
     if missing:
         raise FileNotFoundError(
@@ -1052,7 +888,7 @@ def compact_store(spark: SparkSession, enc_dir: str,
             "run fsck_store"
         )
 
-    next_pid = max(live_pids | set(sizes)) + 1
+    next_pid = max(set(live) | set(sizes)) + 1
     merged_pids = [p for g in groups for p in g]
     # codec hints from the MEMBERS' committed choices: re-gating a merged
     # chunk from scratch re-pays the FSST admission trial per (group,
@@ -1103,7 +939,7 @@ def compact_store(spark: SparkSession, enc_dir: str,
                 rows = _encode_columns(cols, new_pid, run_id, hints=hints,
                                        bloom_columns=bloom_columns)
                 blob_table = pa.Table.from_batches([_rows_to_batch(rows)])
-                dest_dir = os.path.join(blobs_dir, f"pid={new_pid}")
+                dest_dir = store.pid_dir(enc_dir, new_pid)
                 wfs, dest_plain = task_fs(dest_dir)
                 wfs.create_dir(dest_plain, recursive=True)
                 task_write_ipc_atomic(
@@ -1113,19 +949,13 @@ def compact_store(spark: SparkSession, enc_dir: str,
                 )
                 yield pd.DataFrame(rows).drop(columns=["blob"])
 
-    manifest_schema = ENCODED_SCHEMA.replace(", blob BINARY", "")
-    new_rows = tasks.mapInPandas(compact_task, manifest_schema)
-    new_man = (
-        new_rows.withColumn("status", F.lit("committed"))
-        .select(*MANIFEST_COLS)
-    )
-    keep = man.where(~F.col("pid").isin([int(p) for p in merged_pids]))
-    _commit_manifest(dfs, enc_dir, keep.select(*MANIFEST_COLS)
-                     .unionByName(new_man))
+    new_rows = tasks.mapInPandas(compact_task, _ROWS_DDL)
+    _commit_rows(spark, dfs, enc_dir, new_rows, merged_pids,
+                 store.read_schema_map(dfs, enc_dir))
     # post-commit cleanup: the manifest no longer references the members,
     # so a crash here leaves only ignorable orphans
     for p in merged_pids:
-        dfs.delete(os.path.join(blobs_dir, f"pid={p}"), recursive=True)
+        dfs.delete(store.pid_dir(enc_dir, p), recursive=True)
     dfs.delete(tmp_dir, recursive=True)
     return read_manifest(spark, enc_dir)
 
@@ -1147,20 +977,11 @@ def decode_pipeline(spark: SparkSession, enc_dir: str,
     buffers, so untouched columns cost ~0 IO).
     pids: decode only these partitions — pair with pids_matching_range
     (zone-map pruning from the manifest's per-chunk min/max stats)."""
-    import posixpath
-
     from parquet_toolkit_spark.sources.fs import DriverFS
 
     dfs = DriverFS(spark)
-    # prefer the schema committed atomically with the manifest swap (the
-    # ptsc writer stages it inside manifest/; encode paths write only the
-    # root copy) — see _store_schema_map (ADVICE r6)
-    man_schema = os.path.join(enc_dir, "manifest", "_schema.json")
-    schema_map: dict[str, str] = json.loads(
-        dfs.read_text(man_schema) if dfs.exists(man_schema)
-        else dfs.read_text(os.path.join(enc_dir, "_schema.json"))
-    )
-    blobs_dir = os.path.join(enc_dir, "blobs")
+    schema_map = store.read_schema_map(dfs, enc_dir)
+    blobs_dir = os.path.join(enc_dir, store.BLOBS)
 
     # only manifest-committed pids are decoded: a crashed run may leave
     # orphan blob files with no manifest row (F5 parity: the manifest is
@@ -1168,29 +989,18 @@ def decode_pipeline(spark: SparkSession, enc_dir: str,
     # with _schema.json but NO manifest is a broken commit — refuse rather
     # than resurrect orphan/partial blobs (ADVICE r2). Driver-side arrow
     # read: no Spark job for the O(pids) pid set.
-    committed = _committed_pid_set(dfs, enc_dir)
+    committed = store.committed_pids(dfs, enc_dir)
     if committed is None:
         raise FileNotFoundError(
             f"no manifest under {enc_dir}: encode commit incomplete; "
             "re-run encode_partitions(resume=True) to rebuild it"
         )
-
-    pid_files: list[tuple[int, str]] = []
-    for d in dfs.list_dirs(blobs_dir):
-        base = posixpath.basename(d.rstrip("/"))
-        if not base.startswith("pid="):
-            continue
-        try:
-            pid = int(base.split("=", 1)[1])
-        except ValueError:
-            continue
-        if pid not in committed:
-            continue
-        if pids is not None and pid not in pids:
-            continue
-        for f, sz in dfs.list_files(d):
-            if f.endswith((".parquet", ".arrow")):
-                pid_files.append((pid, f, sz))
+    if pids is not None:
+        committed &= set(pids)
+    pid_files = [(pid, f, sz)
+                 for pid, d in store.pid_dirs(dfs, blobs_dir).items()
+                 if pid in committed
+                 for f, sz in store.data_files(dfs, d)]
     if not pid_files:
         raise FileNotFoundError(f"no committed blob files under {blobs_dir}")
     # largest-first for balanced striping; size column dropped after sort
@@ -1289,12 +1099,6 @@ def pids_matching_range(spark: SparkSession, enc_dir: str, column: str,
     column's chunks are disjoint ranges, so point/range reads touch O(1)
     partitions instead of all of them (the columnar zone-map /
     parquet row-group-stats idea applied to the blob store)."""
-    from parquet_toolkit_spark.sources.fs import DriverFS
-
-    mt = _manifest_arrow(DriverFS(spark), enc_dir,
-                         ["pid", "column", "status", "stats_json"])
-    if mt is None:
-        raise FileNotFoundError(f"no manifest under {enc_dir}")
     # EVERY bound type routes through the shared _chunk_admits admission
     # (the same evidence dispatch the ptsc pushdown uses): int/float
     # bounds against whichever of $.min/$.max / $.fmin/$.fmax the chunk
@@ -1302,9 +1106,8 @@ def pids_matching_range(spark: SparkSession, enc_dir: str, column: str,
     # by the stats' logical marker, and decimal-mantissa chunks scale ANY
     # numeric bound exactly — the previous Catalyst numeric path compared
     # a plain int/float bound against the UNSCALED mantissa and silently
-    # dropped matching pids (ADVICE r6). One collect over the column's
-    # manifest rows; admission is O(n_pids) driver-side python, exact at
-    # any decimal width.
+    # dropped matching pids (ADVICE r6). One driver-side manifest read;
+    # admission is O(n_pids) python, exact at any decimal width.
     import decimal as _dcm
 
     from pyspark.sql.datasource import (
@@ -1312,20 +1115,14 @@ def pids_matching_range(spark: SparkSession, enc_dir: str, column: str,
         LessThanOrEqual,
     )
 
-    from parquet_toolkit_spark.sources.ptsc_datasource import _chunk_admits
+    from parquet_toolkit_spark.sources.fs import DriverFS
 
-    stats_rows = [
-        (p, json.loads(sj)) for p, c, s, sj in zip(
-            mt.column("pid").to_pylist(), mt.column("column").to_pylist(),
-            mt.column("status").to_pylist(),
-            mt.column("stats_json").to_pylist())
-        if c == column and s == "committed"
-    ]
+    pids, stats = store.chunk_stats(DriverFS(spark), enc_dir, {column})
     if isinstance(lo, _dcm.Decimal) or isinstance(hi, _dcm.Decimal):
         # loud refusal kept from r6: Decimal bounds on a column with no
         # decimal zone maps means the caller is pruning the wrong column
         if not any((s.get("logical") or "").startswith("dec_")
-                   for _, s in stats_rows):
+                   for s in stats.values()):
             raise TypeError(
                 f"Decimal bounds on {column!r}, but its chunks carry no "
                 "decimal zone maps (is the column decimal-typed?)"
@@ -1335,8 +1132,7 @@ def pids_matching_range(spark: SparkSession, enc_dir: str, column: str,
         flts.append(GreaterThanOrEqual((column,), lo))
     if hi is not None:
         flts.append(LessThanOrEqual((column,), hi))
-    return {pid for pid, s in stats_rows
-            if all(_chunk_admits(s, f) for f in flts)}
+    return store.admit_pids(pids, stats, flts)
 
 
 def pids_matching_value(spark: SparkSession, enc_dir: str, column: str,
@@ -1348,32 +1144,17 @@ def pids_matching_value(spark: SparkSession, enc_dir: str, column: str,
     kept. Complements pids_matching_range, which needs the SORTED key —
     blooms prune needle queries on any column they were built for.
     Driver cost is O(pids) bloom probes (4KB each, numpy)."""
-    import json as _json
-
     from pyspark.sql.datasource import EqualTo
 
     from parquet_toolkit_spark.sources.fs import DriverFS
-    from parquet_toolkit_spark.sources.ptsc_datasource import _chunk_admits
 
-    mt = _manifest_arrow(DriverFS(spark), enc_dir,
-                         ["pid", "column", "status", "stats_json"])
-    if mt is None:
-        raise FileNotFoundError(f"no manifest under {enc_dir}")
     # shared admission (_chunk_admits): bloom probe + zone-map point
     # range, with the logical-unit handling (temporal units, decimal
     # mantissa scaling) applied consistently — a raw bloom probe with a
     # Decimal value would hash the unscaled value and could UNSOUNDLY
     # prune (r5)
-    flt = EqualTo((column,), value)
-    keep: set[int] = set()
-    for p, c, s, sj in zip(
-            mt.column("pid").to_pylist(), mt.column("column").to_pylist(),
-            mt.column("status").to_pylist(),
-            mt.column("stats_json").to_pylist()):
-        if c == column and s == "committed" \
-                and _chunk_admits(_json.loads(sj), flt):
-            keep.add(p)
-    return keep
+    pids, stats = store.chunk_stats(DriverFS(spark), enc_dir, {column})
+    return store.admit_pids(pids, stats, [EqualTo((column,), value)])
 
 
 def _prefix_upper_bound(prefix: str) -> str | None:
@@ -1437,8 +1218,8 @@ def decode_where(spark: SparkSession, enc_dir: str,
     # ONE manifest scan serves every predicate (a per-predicate
     # pids_matching_* call re-reads and re-collects the manifest — ~6
     # driver scans for 3 predicates on a 10^6-pid store; code-review
-    # r4). Per-chunk admission reuses the data source's _chunk_admits —
-    # same zone-map/bloom/prefix evidence, one shared implementation.
+    # r4). Per-chunk admission is the data source's — same zone-map/
+    # bloom/prefix evidence, one shared implementation.
     from pyspark.sql.datasource import (
         EqualTo,
         GreaterThanOrEqual,
@@ -1446,7 +1227,7 @@ def decode_where(spark: SparkSession, enc_dir: str,
         StringStartsWith,
     )
 
-    from parquet_toolkit_spark.sources.ptsc_datasource import _chunk_admits
+    from parquet_toolkit_spark.sources.fs import DriverFS
 
     flts: list = []
     for col, spec in predicates.items():
@@ -1461,41 +1242,17 @@ def decode_where(spark: SparkSession, enc_dir: str,
         else:
             flts.append(EqualTo((col,), spec))
 
-    from parquet_toolkit_spark.sources.fs import DriverFS
-
-    mt = _manifest_arrow(DriverFS(spark), enc_dir,
-                         ["pid", "column", "status", "stats_json"])
-    if mt is None:
-        raise FileNotFoundError(f"no manifest under {enc_dir}")
-    pred_col_set = set(predicates)
-    stats_by: dict[tuple, dict] = {}
-    pids: set[int] = set()
-    for p, c, s, sj in zip(
-            mt.column("pid").to_pylist(), mt.column("column").to_pylist(),
-            mt.column("status").to_pylist(),
-            mt.column("stats_json").to_pylist()):
-        if s != "committed":
-            continue
-        pids.add(p)
-        if c in pred_col_set:
-            stats_by[(p, c)] = json.loads(sj)
-    for flt in flts:
-        col = flt.attribute[0]
-        for pid in list(pids):
-            st = stats_by.get((pid, col))
-            if st is not None and not _chunk_admits(st, flt):
-                pids.discard(pid)
+    dfs = DriverFS(spark)
+    pids = store.admit_pids(*store.chunk_stats(dfs, enc_dir, set(predicates)),
+                            flts)
 
     pred_cols = list(predicates)
     want = columns
     if columns is not None:
         columns = list(dict.fromkeys(columns + pred_cols))
-    if pids is not None and not pids:
+    if not pids:
         # fully pruned: an empty result with the store's schema, no IO
-        from parquet_toolkit_spark.sources.fs import DriverFS
-
-        schema_map = json.loads(
-            DriverFS(spark).read_text(os.path.join(enc_dir, "_schema.json")))
+        schema_map = store.read_schema_map(dfs, enc_dir)
         keep_cols = columns if columns is not None else list(schema_map)
         ddl = ", ".join(
             ([f"pid int"] if keep_pid else [])

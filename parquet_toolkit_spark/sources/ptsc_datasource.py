@@ -25,8 +25,6 @@ pages.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 
 from dataclasses import dataclass, field
@@ -48,6 +46,9 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
+
+from parquet_toolkit_spark.sources import store
+from parquet_toolkit_spark.sources.fs import DriverFS
 
 _RANGE_FILTERS = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
                   LessThanOrEqual, StringStartsWith,
@@ -73,43 +74,6 @@ def bundle_by_size(items: list, size_of, max_partitions: int = MAX_PARTITIONS
         bundles[i].append(it)
         loads[i] += size_of(it)
     return [b for b in bundles if b]
-
-
-def _store_schema_map(path: str) -> dict[str, str]:
-    # prefer the copy committed atomically WITH the manifest swap (the
-    # ptsc writer stages it inside manifest_new): after a crash between
-    # the swap and the root _schema.json refresh, this is the pair that
-    # matches the committed manifest (ADVICE r6)
-    for p in (os.path.join(path, "manifest", "_schema.json"),
-              os.path.join(path, "_schema.json")):
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-    raise FileNotFoundError(os.path.join(path, "_schema.json"))
-
-
-def _manifest_stats(path: str) -> list[dict]:
-    """Committed manifest rows as dicts (pid, column, stats) — pyarrow
-    read, falling back to the pre-swap copy like read_manifest does."""
-    import pyarrow.parquet as pq
-
-    for name in ("manifest", "manifest_old"):
-        d = os.path.join(path, name)
-        files = glob.glob(os.path.join(d, "*.parquet"))
-        if not files:
-            continue
-        t = pq.read_table(files, columns=["pid", "column", "status",
-                                          "stats_json"])
-        out = []
-        for pid, col, status, sj in zip(
-                t.column("pid").to_pylist(), t.column("column").to_pylist(),
-                t.column("status").to_pylist(),
-                t.column("stats_json").to_pylist()):
-            if status == "committed":
-                out.append({"pid": pid, "column": col,
-                            "stats": json.loads(sj)})
-        return out
-    raise FileNotFoundError(f"no manifest under {path}")
 
 
 _TS_UNIT_US = {"ts_s": 1_000_000, "ts_ms": 1_000, "ts_us": 1, "ts_ns": None}
@@ -273,23 +237,14 @@ class PtscReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        rows = _manifest_stats(self.path)
-        pids = {r["pid"] for r in rows}
-        if self.filters:
-            by_pid_col = {(r["pid"], r["column"]): r["stats"] for r in rows}
-            for f in self.filters:
-                col = f.attribute[0]
-                for pid in list(pids):
-                    st = by_pid_col.get((pid, col))
-                    if st is not None and not _chunk_admits(st, f):
-                        pids.discard(pid)
-        files = []
-        blobs = os.path.join(self.path, "blobs")
-        for pid in sorted(pids):
-            d = os.path.join(blobs, f"pid={pid}")
-            for f in sorted(glob.glob(os.path.join(d, "*"))):
-                if f.endswith((".arrow", ".parquet")):
-                    files.append((os.path.getsize(f), f))
+        dfs = DriverFS()
+        pids = store.admit_pids(
+            *store.chunk_stats(dfs, self.path,
+                               {f.attribute[0] for f in self.filters}),
+            self.filters)
+        dirs = store.pid_dirs(dfs, os.path.join(self.path, store.BLOBS))
+        files = [(sz, f) for pid in sorted(pids) if pid in dirs
+                 for f, sz in store.data_files(dfs, dirs[pid])]
         return [InputPartition([f for _sz, f in b])
                 for b in bundle_by_size(files, size_of=lambda t: t[0])]
 
@@ -308,7 +263,7 @@ class PtscReader(DataSourceReader):
         # type preserved, then casts to the exact type Spark's Arrow
         # deserializer expects for the declared schema (no-op when the
         # store was Spark-written)
-        schema_map = _store_schema_map(self.path)
+        schema_map = store.read_schema_map(DriverFS(), self.path)
         fields = [(c, ddl_to_arrow(ddl)) for c, ddl in schema_map.items()]
         for fpath in partition.value:
             cols = _decode_blob_file(fpath, set(schema_map))
@@ -370,7 +325,7 @@ class PtscWriter(DataSourceArrowWriter):
         rows = _encode_columns(cols, pid, run_id="dsw")
         blob_table = pa.Table.from_batches([_rows_to_batch(rows)]) \
             .drop_columns(["pid"])
-        dest_dir = os.path.join(self.path, "blobs", f"pid={pid}")
+        dest_dir = store.pid_dir(self.path, pid)
         wfs, dest_plain = task_fs(dest_dir)
         wfs.create_dir(dest_plain, recursive=True)
         tfs, tmp_plain = task_fs(os.path.join(self.path, "_tmp_write"))
@@ -392,53 +347,19 @@ class PtscWriter(DataSourceArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        rows = [r for m in messages if m is not None for r in m.rows]
-        os.makedirs(self.path, exist_ok=True)
-        if not self.overwrite:
-            rows = _committed_manifest_rows(self.path) + rows
-        man_schema = pa.schema([
-            ("pid", pa.int32()), ("column", pa.string()),
-            ("codec", pa.string()), ("nrows", pa.int64()),
-            ("bytes_in", pa.int64()), ("bytes_out", pa.int64()),
-            ("checksum", pa.string()), ("stats_json", pa.string()),
-            ("run_id", pa.string()), ("status", pa.string()),
-        ])
-        cols = {name: [r.get(name, "committed" if name == "status"
-                             else None) for r in rows]
-                for name in man_schema.names}
-        tbl = pa.Table.from_pydict(cols, schema=man_schema)
-        # same swap protocol as encode's _commit_manifest (roll an
-        # interrupted swap forward first; never delete the only copy)
-        man_dir = os.path.join(self.path, "manifest")
-        tmp_man = os.path.join(self.path, "manifest_new")
-        man_old = os.path.join(self.path, "manifest_old")
-        if os.path.exists(man_old):
-            if os.path.exists(man_dir):
-                shutil.rmtree(man_old)
-            else:
-                os.replace(man_old, man_dir)
-        shutil.rmtree(tmp_man, ignore_errors=True)
-        os.makedirs(tmp_man)
-        pq.write_table(tbl, os.path.join(tmp_man, "part-0.parquet"))
-        # the schema rides INSIDE the manifest swap (ADVICE r6): writing
-        # the root _schema.json before the swap paired a new schema with
-        # the old manifest across a crash window, so readers decoded old
-        # blobs under the wrong column map. Spark/pyarrow manifest readers
-        # ignore the underscore file.
-        schema_bytes = json.dumps(self.schema_map)
-        with open(os.path.join(tmp_man, "_schema.json"), "w") as fh:
-            fh.write(schema_bytes)
-        if os.path.exists(man_dir):
-            os.replace(man_dir, man_old)
-        os.replace(tmp_man, man_dir)
-        shutil.rmtree(man_old, ignore_errors=True)
-        # refresh the root copy (decode_pipeline/DuckDB-side compat) only
-        # AFTER the swap, atomically; a crash in between leaves the
-        # manifest-dir copy as the consistent source readers prefer
-        tmp_schema = os.path.join(self.path, "_schema.json.tmp")
-        with open(tmp_schema, "w") as fh:
-            fh.write(schema_bytes)
-        os.replace(tmp_schema, os.path.join(self.path, "_schema.json"))
+        dfs = DriverFS()
+        rows = [{**r, "status": "committed"}
+                for m in messages if m is not None for r in m.rows]
+
+        def stage(tmp_dir: str) -> None:
+            old = None if self.overwrite else store.manifest_table(dfs,
+                                                                   self.path)
+            tbl = pa.Table.from_pylist(
+                ([] if old is None else old.to_pylist()) + rows,
+                schema=store.MANIFEST_SCHEMA)
+            pq.write_table(tbl, os.path.join(tmp_dir, "part-0.parquet"))
+
+        store.commit(dfs, self.path, stage, self.schema_map)
         if self.overwrite:
             for d in self.old_pid_dirs:  # delete-inputs, post-commit
                 shutil.rmtree(d, ignore_errors=True)
@@ -455,21 +376,6 @@ class PtscWriter(DataSourceArrowWriter):
                       ignore_errors=True)
 
 
-def _committed_manifest_rows(path: str) -> list[dict]:
-    """Existing committed manifest rows as plain dicts ([] for a fresh
-    store). Falls back to the pre-swap copy like _manifest_stats does:
-    without it, a crash inside the swap window (manifest_old present,
-    manifest missing) made the next append plan base_pid=0 and drop every
-    previously committed row (ADVICE r6 medium)."""
-    import pyarrow.parquet as pq
-
-    for name in ("manifest", "manifest_old"):
-        files = glob.glob(os.path.join(path, name, "*.parquet"))
-        if files:
-            return pq.read_table(files).to_pylist()
-    return []
-
-
 class PtscDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -479,7 +385,7 @@ class PtscDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("ptsc source needs .load(<enc_dir>)")
-        schema_map = _store_schema_map(path)
+        schema_map = store.read_schema_map(DriverFS(), path)
         return ", ".join(f"`{c}` {t}" for c, t in schema_map.items())
 
     def reader(self, schema) -> PtscReader:
@@ -516,22 +422,24 @@ class PtscDataSource(DataSource):
             except ValueError as ex:
                 raise ValueError(
                     f"ptsc cannot encode column {n}:{t} ({ex})")
+        dfs = DriverFS()
+        try:
+            existing = store.read_schema_map(dfs, path)
+        except FileNotFoundError:
+            existing = None  # a fresh store
         base_pid, old_dirs = 0, []
-        if os.path.exists(os.path.join(path, "_schema.json")) or \
-                os.path.exists(os.path.join(path, "manifest",
-                                            "_schema.json")):
-            existing = _store_schema_map(path)
+        if existing is not None:
             if not overwrite and existing != schema_map:
                 raise ValueError(
                     f"schema mismatch appending to ptsc store {path}: "
                     f"store has {existing}, dataframe has {schema_map}")
-            rows = _committed_manifest_rows(path)
-            if rows:
+            pids = store.committed_pids(dfs, path)
+            if pids:
                 # fresh pids above the committed maximum (never reused);
                 # overwrite also starts there so new blob dirs cannot
                 # collide with live ones mid-write
-                base_pid = max(r["pid"] for r in rows) + 1
+                base_pid = max(pids) + 1
             if overwrite:
-                old_dirs = sorted(
-                    glob.glob(os.path.join(path, "blobs", "pid=*")))
+                old_dirs = list(store.pid_dirs(
+                    dfs, os.path.join(path, store.BLOBS)).values())
         return PtscWriter(path, schema_map, base_pid, old_dirs, overwrite)

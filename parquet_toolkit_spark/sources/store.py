@@ -1,0 +1,224 @@
+"""The PTSC blob store's on-disk layout and manifest protocol.
+
+Every store reader and writer (encode_pipeline, encode_partitions,
+compact_store, incremental encode, decode, fsck, the ptsc data source)
+goes through this module; no other module names a manifest directory.
+
+Layout of a store directory::
+
+    blobs/pid=N/part-*.arrow   one Arrow IPC file per pid: one row per
+                               column (column, codec, nrows, ..., blob);
+                               Spark-written stores hold part-*.parquet
+    manifest/                  the committed manifest: parquet parts, one
+                               row per (pid, column), see MANIFEST_SCHEMA
+    manifest/_schema.json      {column: Spark DDL} committed with it
+    manifest_new/              a manifest being staged (crash leftover)
+    manifest_old/              the previous manifest during the swap
+    _schema.json               compat copy of the schema map, refreshed
+                               after each swap (DuckDB-side readers)
+    _tmp/, _tmp_write/         writers' temp files before the atomic
+                               rename into blobs/
+
+The manifest is the source of truth: a blob directory without committed
+manifest rows is an orphan that readers ignore and fsck_store reports.
+``commit`` moves a store from one manifest to the next with the
+reference's temp-then-rename protocol (SimpleMergeThread.java:118-122):
+stage manifest_new/ (parts, then _schema.json), rename manifest/ to
+manifest_old/, rename manifest_new/ to manifest/, delete manifest_old/,
+refresh the root _schema.json. The crash states a reader can meet:
+
+- manifest/ only: the normal state.
+- manifest/ and a stale manifest_new/: a crash while staging. Readers
+  ignore manifest_new/; the next commit deletes it.
+- manifest_old/ and manifest_new/, no manifest/: a crash between the two
+  renames. manifest_old/ is the last committed manifest and readers use
+  it; the next commit renames it back before staging anything.
+- manifest/ and manifest_old/: a crash before the cleanup. manifest/ is
+  committed; the next commit deletes manifest_old/.
+- a stale root _schema.json: a crash before the root refresh. Readers
+  take the schema map committed beside the manifest they read and use
+  the root copy only when that one is absent (stores written before
+  the schema rode the swap).
+"""
+
+from __future__ import annotations
+
+import json
+import posixpath
+
+import pyarrow as pa
+
+MANIFEST = "manifest"
+MANIFEST_NEW = "manifest_new"
+MANIFEST_OLD = "manifest_old"
+SCHEMA_FILE = "_schema.json"
+BLOBS = "blobs"
+
+MANIFEST_SCHEMA = pa.schema([
+    ("pid", pa.int32()), ("column", pa.string()), ("codec", pa.string()),
+    ("nrows", pa.int64()), ("bytes_in", pa.int64()),
+    ("bytes_out", pa.int64()), ("checksum", pa.string()),
+    ("stats_json", pa.string()), ("run_id", pa.string()),
+    ("status", pa.string()),
+])
+MANIFEST_COLS = MANIFEST_SCHEMA.names
+_SPARK_TYPE = {pa.int32(): "INT", pa.int64(): "BIGINT", pa.string(): "STRING"}
+MANIFEST_DDL = ", ".join(f"{f.name} {_SPARK_TYPE[f.type]}"
+                         for f in MANIFEST_SCHEMA)
+
+
+def pid_dir(store: str, pid: int) -> str:
+    return posixpath.join(store, BLOBS, f"pid={pid}")
+
+
+def pid_dirs(dfs, folder: str) -> dict[int, str]:
+    """pid -> path of every ``pid=N`` subdirectory of `folder`, in
+    listing order; {} when `folder` does not exist."""
+    out = {}
+    if not dfs.exists(folder):
+        return out
+    for d in dfs.list_dirs(folder):
+        base = posixpath.basename(d.rstrip("/"))
+        if base.startswith("pid=") and base[4:].isdigit():
+            out[int(base[4:])] = d
+    return out
+
+
+def data_files(dfs, folder: str) -> list[tuple[str, int]]:
+    """Sorted (path, size) of the .arrow/.parquet files in `folder`."""
+    return [(f, sz) for f, sz in dfs.list_files(folder)
+            if f.endswith((".arrow", ".parquet"))]
+
+
+def _committed_parts(dfs, store: str) -> tuple[str, list[str]] | None:
+    """(directory, parquet parts) of the committed manifest: manifest/,
+    else manifest_old/ inside the swap window; None for neither."""
+    for name in (MANIFEST, MANIFEST_OLD):
+        d = posixpath.join(store, name)
+        if dfs.exists(d):
+            parts = [f for f, _sz in dfs.list_files(d)
+                     if f.endswith(".parquet")]
+            if parts:
+                return d, parts
+    return None
+
+
+def manifest_table(dfs, store: str,
+                   columns: list[str] | None = None) -> pa.Table | None:
+    """Committed manifest rows as a pyarrow Table, read driver-side
+    through the pyarrow fs shim (no Spark job); None when the store has
+    no manifest. `columns` prunes the read."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.sources.fs import task_fs
+
+    found = _committed_parts(dfs, store)
+    if found is None:
+        return None
+    fs, _ = task_fs(found[1][0])
+    read = None if columns is None else list(dict.fromkeys(
+        [*columns, "status"]))
+    t = pq.read_table([task_fs(f)[1] for f in found[1]], filesystem=fs,
+                      columns=read)
+    t = t.filter(pc.equal(t.column("status"), "committed"))
+    if columns is not None and "status" not in columns:
+        t = t.drop_columns(["status"])
+    return t
+
+
+def read_manifest(spark, store: str):
+    """Committed manifest rows as a Spark DataFrame (None when the store
+    has none): the same parts manifest_table reads. The explicit schema
+    skips Spark's footer-inference job."""
+    from pyspark.sql import functions as F
+
+    from parquet_toolkit_spark.sources.fs import DriverFS
+
+    found = _committed_parts(DriverFS(spark), store)
+    if found is None:
+        return None
+    return (spark.read.schema(MANIFEST_DDL).parquet(found[0])
+            .where(F.col("status") == "committed"))
+
+
+def committed_pids(dfs, store: str) -> set[int] | None:
+    """Committed pid set; None when the store has no manifest."""
+    t = manifest_table(dfs, store, ["pid"])
+    return None if t is None else set(t.column("pid").to_pylist())
+
+
+def read_schema_map(dfs, store: str) -> dict[str, str]:
+    """{column: Spark DDL} of the store: the copy committed beside the
+    manifest, else the root copy."""
+    found = _committed_parts(dfs, store)
+    paths = [posixpath.join(found[0], SCHEMA_FILE)] if found else []
+    paths.append(posixpath.join(store, SCHEMA_FILE))
+    for p in paths:
+        if dfs.exists(p):
+            return json.loads(dfs.read_text(p))
+    raise FileNotFoundError(paths[-1])
+
+
+def commit(dfs, store: str, stage, schema_map: dict[str, str]) -> None:
+    """Swap-commit a new manifest. `stage(tmp_dir)` writes the manifest
+    parquet parts into tmp_dir; it runs after an interrupted swap is
+    rolled forward, so a carried-over manifest it reads is the committed
+    one. Never deletes the only committed copy (code-review r3)."""
+    man = posixpath.join(store, MANIFEST)
+    new = posixpath.join(store, MANIFEST_NEW)
+    old = posixpath.join(store, MANIFEST_OLD)
+    if dfs.exists(old):
+        if dfs.exists(man):
+            dfs.delete(old, recursive=True)  # crash before the cleanup
+        else:
+            dfs.rename(old, man)  # crash between the two renames
+    dfs.delete(new, recursive=True)  # crash while staging
+    dfs.mkdirs(new)
+    stage(new)
+    # the schema rides INSIDE the swap (ADVICE r6): a root _schema.json
+    # written before the swap paired a new schema with the old manifest
+    # across a crash window. Manifest readers skip underscore files.
+    text = json.dumps(schema_map)
+    dfs.write_text(posixpath.join(new, SCHEMA_FILE), text)
+    if dfs.exists(man):
+        dfs.rename(man, old)
+    dfs.rename(new, man)
+    dfs.delete(old, recursive=True)
+    root = posixpath.join(store, SCHEMA_FILE)
+    dfs.write_text(root + ".tmp", text)
+    if not dfs.rename(root + ".tmp", root):
+        # Hadoop rename refuses an existing target
+        dfs.delete(root, recursive=False)
+        dfs.rename(root + ".tmp", root)
+
+
+def chunk_stats(dfs, store: str, columns: set[str]
+                ) -> tuple[set[int], dict[tuple[int, str], dict]]:
+    """(committed pids, {(pid, column): stats} for `columns`) from one
+    manifest read. Raises FileNotFoundError when there is no manifest."""
+    t = manifest_table(dfs, store, ["pid", "column", "stats_json"])
+    if t is None:
+        raise FileNotFoundError(f"no manifest under {store}")
+    pids: set[int] = set()
+    stats: dict[tuple[int, str], dict] = {}
+    for p, c, sj in zip(t.column("pid").to_pylist(),
+                        t.column("column").to_pylist(),
+                        t.column("stats_json").to_pylist()):
+        pids.add(p)
+        if c in columns:
+            stats[(p, c)] = json.loads(sj)
+    return pids, stats
+
+
+def admit_pids(pids: set[int], stats: dict, filters) -> set[int]:
+    """The pids whose chunks could hold a row matching every filter
+    (single-column pyspark.sql.datasource filters). A pid without stats
+    for a filter's column is kept: pruning must stay sound."""
+    from parquet_toolkit_spark.sources.ptsc_datasource import _chunk_admits
+
+    for f in filters:
+        col = f.attribute[0]
+        pids = {p for p in pids if (p, col) not in stats
+                or _chunk_admits(stats[(p, col)], f)}
+    return pids

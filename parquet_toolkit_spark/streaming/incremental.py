@@ -15,8 +15,6 @@ ones.
 
 from __future__ import annotations
 
-import json
-import os
 
 import pandas as pd
 
@@ -57,8 +55,8 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
     )
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from parquet_toolkit_spark.operators.encode import _manifest_arrow
         from parquet_toolkit_spark.sources.fs import DriverFS
+        from parquet_toolkit_spark.sources.store import committed_pids
 
         # one count job doubles as the emptiness check (isEmpty was a
         # second job per batch); base_pid comes from a driver-side arrow
@@ -66,10 +64,8 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
         n = batch_df.count()
         if n == 0:
             return
-        mt = _manifest_arrow(DriverFS(spark), enc_dir, ["pid"])
-        base_pid = 0
-        if mt is not None and mt.num_rows:
-            base_pid = max(mt.column("pid").to_pylist()) + 1
+        pids = committed_pids(DriverFS(spark), enc_dir)
+        base_pid = max(pids) + 1 if pids else 0
         schema_map = _schema_map(batch_df)
         n_parts = max(1, (n + rows_per_pid - 1) // rows_per_pid)
         laid = batch_df.repartition(n_parts)
@@ -133,10 +129,10 @@ def encode_iceberg_increment(spark: SparkSession, table_dir: str,
     exclude = frozenset({"bin_fsst"}) if codec_profile == "fast" \
         else frozenset()
 
-    from parquet_toolkit_spark.operators.encode import _manifest_arrow
     from parquet_toolkit_spark.sources.fs import DriverFS
+    from parquet_toolkit_spark.sources.store import manifest_table
 
-    mt = _manifest_arrow(DriverFS(spark), enc_dir, ["run_id", "pid"])
+    mt = manifest_table(DriverFS(spark), enc_dir, ["run_id", "pid"])
     last = None
     base_pid = 0
     if mt is not None and mt.num_rows:

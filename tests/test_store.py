@@ -1,0 +1,174 @@
+"""The blob store's manifest protocol (sources/store.py): every writer
+commits the schema inside the manifest swap, every reader sees the same
+committed rows in every crash state, resume refuses a schema change, and
+the shared reader/commit adds no Spark job."""
+
+import json
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from parquet_toolkit_spark.datagen import write_corpus
+from parquet_toolkit_spark.operators.encode import (
+    compact_store,
+    decode_pipeline,
+    decode_where,
+    encode_partitions,
+    encode_pipeline,
+    layout_stage,
+    read_manifest,
+)
+from parquet_toolkit_spark.sources import store
+from parquet_toolkit_spark.sources.fs import DriverFS
+from parquet_toolkit_spark.sources.ptsc_datasource import PtscDataSource
+
+
+@pytest.fixture(scope="module")
+def corpus_df(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("store_corpus") / "files")
+    write_corpus(out, 2000, n_files=8, avg_content_bytes=400)
+    return spark.read.parquet(out)
+
+
+def _keyed(spark, n0, n1, extra=False):
+    df = spark.range(n0, n1).select(
+        F.col("id").alias("k"), F.col("id").cast("string").alias("s"))
+    return df.withColumn("extra", F.lit(1)) if extra else df
+
+
+def _schemas(enc):
+    with open(os.path.join(enc, "manifest", "_schema.json")) as fh:
+        committed = json.load(fh)
+    with open(os.path.join(enc, "_schema.json")) as fh:
+        return committed, json.load(fh)
+
+
+def _ptsc_store(spark, enc, n0=0, n1=200, parts=2):
+    spark.dataSource.register(PtscDataSource)
+    (_keyed(spark, n0, n1).repartition(parts)
+     .write.format("ptsc").mode("append").save(enc))
+
+
+def test_encode_writers_stage_schema_inside_swap(spark, corpus_df, tmp_path):
+    enc = str(tmp_path / "pipe")
+    encode_pipeline(spark, corpus_df, enc, target_bytes=48 << 10,
+                    run_id="p0")
+    committed, root = _schemas(enc)
+    assert committed == root
+    assert set(committed) == set(corpus_df.columns)
+
+    pids0 = {r.pid for r in read_manifest(spark, enc).collect()}
+    compact_store(spark, enc, target_bytes=256 << 10, run_id="c1")
+    assert {r.pid for r in read_manifest(spark, enc).collect()} != pids0
+    committed, root = _schemas(enc)
+    assert committed == root and set(committed) == set(corpus_df.columns)
+
+    stg, enc2 = str(tmp_path / "stg"), str(tmp_path / "parts")
+    layout_stage(spark, corpus_df, stg, n_partitions=3)
+    encode_partitions(spark, stg, enc2, run_id="e0")
+    committed, root = _schemas(enc2)
+    assert committed == root and set(committed) == set(corpus_df.columns)
+
+
+def test_decode_where_pruned_reads_committed_schema(spark, tmp_path):
+    # a crash between the swap and the root refresh leaves a stale root
+    # _schema.json; the fully pruned branch must not read it
+    enc = str(tmp_path / "stale_root")
+    _ptsc_store(spark, enc)
+    committed, _ = _schemas(enc)
+    with open(os.path.join(enc, "_schema.json"), "w") as fh:
+        json.dump({"old": "bigint"}, fh)
+    got = decode_where(spark, enc, {"k": (10**9, None)})
+    assert got.columns == list(committed) == ["k", "s"]
+    assert got.count() == 0
+
+
+def test_resume_refuses_schema_change(spark, tmp_path):
+    enc = str(tmp_path / "enc")
+    keys = dict(range_keys=("k",), sort_keys=("k",))
+    stg1, stg2, stg3 = (str(tmp_path / f"stg{i}") for i in (1, 2, 3))
+    layout_stage(spark, _keyed(spark, 0, 400), stg1, n_partitions=2, **keys)
+    encode_partitions(spark, stg1, enc, run_id="a")
+    old = store.read_schema_map(DriverFS(spark), enc)
+
+    # same pid count: resume used to return the old store silently;
+    # more pids: it encoded the extra pids under the new schema
+    layout_stage(spark, _keyed(spark, 0, 400, extra=True), stg2,
+                 n_partitions=2, **keys)
+    layout_stage(spark, _keyed(spark, 0, 400, extra=True), stg3,
+                 n_partitions=3, **keys)
+    for stg in (stg2, stg3):
+        with pytest.raises(ValueError) as ei:
+            encode_partitions(spark, stg, enc, run_id="b")
+        assert str(old) in str(ei.value) and "'extra'" in str(ei.value)
+    assert store.read_schema_map(DriverFS(spark), enc) == old
+    assert decode_pipeline(spark, enc).columns == ["k", "s"]
+
+    # resume=False re-encodes under the new schema, as before
+    encode_partitions(spark, stg3, enc, run_id="c", resume=False)
+    back = decode_pipeline(spark, enc)
+    assert back.columns == ["k", "s", "extra"] and back.count() == 400
+
+
+def test_manifest_readers_agree_in_every_crash_state(spark, tmp_path):
+    enc = str(tmp_path / "diff")
+    _ptsc_store(spark, enc, 0, 200, parts=2)
+    dfs = DriverFS(spark)
+    man = os.path.join(enc, "manifest")
+
+    def both():
+        rows = sorted(tuple(r) for r in read_manifest(spark, enc).collect())
+        t = store.manifest_table(dfs, enc)
+        assert t.column_names == store.MANIFEST_COLS
+        assert sorted(tuple(r.values()) for r in t.to_pylist()) == rows
+        assert store.committed_pids(dfs, enc) == {r[0] for r in rows}
+        return rows
+
+    normal = both()
+    assert len(normal) == 2 * 2  # two pids, two columns
+
+    # inside the swap window: manifest/ renamed away, new not in place
+    os.rename(man, os.path.join(enc, "manifest_old"))
+    assert both() == normal
+    os.rename(os.path.join(enc, "manifest_old"), man)
+
+    # a crash while staging left a manifest_new/ that disagrees
+    stale = os.path.join(enc, "manifest_new")
+    os.makedirs(stale)
+    t = pq.read_table(man).slice(0, 1)
+    pq.write_table(t.set_column(0, "pid", pa.array([99], pa.int32())),
+                   os.path.join(stale, "part-0.parquet"))
+    assert both() == normal
+
+    # an append from that state keeps every committed row
+    _ptsc_store(spark, enc, 200, 260, parts=1)
+    after = both()
+    assert set(normal) < set(after) and len(after) == len(normal) + 2
+    assert {r[0] for r in after} == {0, 1, 2}
+    assert not os.path.exists(stale)
+    assert spark.read.format("ptsc").load(enc).count() == 260
+
+
+def test_store_calls_add_no_spark_job(spark, tmp_path):
+    # pinned at the counts of the per-module manifest code this replaced
+    stg, enc = str(tmp_path / "stg"), str(tmp_path / "enc")
+    layout_stage(spark, _keyed(spark, 0, 600), stg, n_partitions=3,
+                 range_keys=("k",), sort_keys=("k",))
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("store-pin-encode", "encode_partitions")
+        encode_partitions(spark, stg, enc, run_id="pin")
+        sc.setJobGroup("store-pin-lookup", "decode_where")
+        rows = decode_where(spark, enc, {"k": (10, 19)}).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 10
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("store-pin-encode")) == 1
+    assert len(tracker.getJobIdsForGroup("store-pin-lookup")) == 1
+    shutil.rmtree(stg)
