@@ -71,10 +71,12 @@ def _resolve_sf_dir(sf_dir: str) -> str:
 
 
 def _sf_fingerprint(sf_dir: str) -> str:
-    """Cheap content fingerprint (name/size/mtime of every table file) in
-    the cache key: regenerated testdata at the same path must invalidate
-    cached fixtures, or both engines silently read bands/signatures built
-    from the OLD corpus (code-review r3)."""
+    """Cheap content fingerprint (name, size and Parquet footer of every
+    table file) in the cache key: regenerated testdata at the same path
+    must invalidate cached fixtures, or both engines silently read
+    bands/signatures built from the OLD corpus (code-review r3). No file
+    time enters it, so touching or copying the testdata keeps the
+    fixture paths, and with them the oracle SQL text."""
     sf_dir = _resolve_sf_dir(sf_dir)
     fp = _FP_MEMO.get(sf_dir)
     if fp is None:
@@ -83,11 +85,15 @@ def _sf_fingerprint(sf_dir: str) -> str:
 
         h = hashlib.sha256()
         for p in sorted(_g.glob(os.path.join(sf_dir, "*.parquet"))):
-            st = os.stat(p)
-            h.update(
-                f"{os.path.basename(p)}:{st.st_size}:{int(st.st_mtime)}"
-                .encode()
-            )
+            size = os.path.getsize(p)
+            h.update(f"{os.path.basename(p)}:{size}:".encode())
+            with open(p, "rb") as fh:
+                # the file ends <footer><4-byte LE footer length>PAR1
+                fh.seek(max(0, size - 8))
+                tail = fh.read(8)
+                flen = int.from_bytes(tail[:4], "little")
+                fh.seek(max(0, size - 8 - flen))
+                h.update(fh.read())
         fp = h.hexdigest()[:10]
         _FP_MEMO[sf_dir] = fp
     return fp

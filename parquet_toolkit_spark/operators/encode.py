@@ -2,11 +2,13 @@
 
 The north-rule core: layout (repartitionByRange + sortWithinPartitions,
 reproducing the toolkit's merge/sort/split) → per-partition, per-column
-codec-encoded blobs via Arrow-vectorized applyInPandas (never per-row
-Python) → per-partition lineage/metrics manifest → resumable re-runs that
-skip committed partitions (Spark-native analogue of the reference's
-`alreadyMerged`/`brokenFiles` bookkeeping, merge/ParquetMergerImpl.java:
-28-30, and its temp-suffix atomic commit, SimpleMergeThread.java:118-122 —
+codec-encoded blobs via Arrow-vectorized UDFs (never per-row Python; the
+store jobs run one Python stage per task over a spark.range frame, see
+_striped_tasks) → per-partition lineage/metrics manifest → resumable
+re-runs that skip committed partitions (Spark-native analogue of the
+reference's `alreadyMerged`/`brokenFiles` bookkeeping, merge/
+ParquetMergerImpl.java:28-30, and its temp-suffix atomic commit,
+SimpleMergeThread.java:118-122 —
 here atomicity comes from the parquet committer + dynamic partition
 overwrite, so a re-encoded pid replaces its directory idempotently).
 
@@ -23,7 +25,7 @@ import hashlib
 import json
 import math
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 import pyarrow as pa
@@ -245,7 +247,7 @@ def plan_layout(df: DataFrame, target_bytes: int,
         # layout partition here is an encode scope whose working set is
         # decoded Arrow columns — the serialized (dictionary-encoded)
         # width under-sizes scopes 4-5x on numeric tables, leaving the
-        # encode stage under-parallelized (measured: lineitem@4MB target
+        # encode stage with too few tasks (measured: lineitem@4MB target
         # 4 scopes/1.8s vs 13 scopes/1.55s, and the 4-scope first run
         # pays a 2x straggler). Derived/filtered columns only shift this
         # sizing heuristic, never results. Fallback: one fused job for
@@ -305,7 +307,7 @@ def encode_pipeline(spark: SparkSession, df: DataFrame, out_dir: str,
                     cluster_bits: int = 8) -> DataFrame:
     """Fused layout+encode in one Spark job. Returns the manifest DataFrame.
 
-    mapInPandas accumulates the partition's Arrow batches (one partition ==
+    mapInArrow accumulates the partition's Arrow batches (one partition ==
     one codec scope, per the north rule's per-partition symbol tables).
     bloom_columns: per-chunk blooms for pids_matching_value point lookups.
     cluster_keys: Z-order the layout over these columns instead of
@@ -373,28 +375,51 @@ def _staged_pid_of(filename: str) -> int | None:
     return int(digits) if digits.isdigit() else None
 
 
-def _striped_task_df(spark: SparkSession, rows: list[tuple], ddl: str,
-                     width: int) -> DataFrame:
-    """Distribute cost-DESC-sorted task rows over exactly `width` partitions.
+def _striped_tasks(spark: SparkSession, rows: pa.Table, width: int | None,
+                   run: Callable[[pa.Table], Iterator[pa.RecordBatch]],
+                   schema: str) -> DataFrame:
+    """Run `run(stripe)` in exactly `width` tasks (capped at the row
+    count; None: one task per row), where stripe i holds rows i,
+    i+width, ... of `rows`.
 
-    Round-robin striping of the sorted list balances total cost per
-    partition; the identity partitioner makes the layout exact (hash
-    repartition can collide stripes and idle a slot). This is the
-    engine's spark.task.cpus analogue: memory-bandwidth-bound stages are
-    sized by concurrent tasks, not available cores — on a real cluster
-    set executor cores/task.cpus instead."""
-    width = max(1, min(width, len(rows)))
-    # one stripe-list per parallelize slice: numSlices == len(list) puts
-    # exactly one stripe in each partition, flatMap unpacks it in place —
-    # exact placement with ZERO shuffle (the previous partitionBy route
-    # paid a python-RDD shuffle: two extra python worker stages of pure
-    # fixed overhead per job, parallelism-independent, taxing the N-vs-4N
-    # scaling ratio)
-    stripes: list[list] = [[] for _ in range(width)]
-    for i, r in enumerate(rows):
-        stripes[i % width].append(r)
-    rdd = spark.sparkContext.parallelize(stripes, width).flatMap(lambda s: s)
-    return spark.createDataFrame(rdd, ddl)
+    Callers sort `rows` cost-DESC, so round-robin striping balances total
+    cost per task. This is the engine's spark.task.cpus analogue:
+    memory-bandwidth-bound stages are sized by concurrent tasks, not
+    available cores — on a real cluster set executor cores/task.cpus.
+
+    The frame is spark.range(0, width, 1, width), whose partition i holds
+    exactly id i, so task i runs stripe i with no shuffle, and each task
+    crosses the Python boundary once, in the mapInArrow UDF. A task list
+    shipped as a Python RDD instead paid a PythonRDD stage whose rows a
+    second Python worker pickled for the JVM: a trivial job into a noop
+    sink measured 674 ms that way vs 394 ms on the range frame at 4 tasks,
+    9.4-10.9 s vs 4.9-5.8 s at 64 tasks (4-core Xeon VM, local[4]) —
+    ~70 ms per task.
+
+    The task list rides in the UDF closure as one Arrow IPC buffer (a
+    stripe column plus the row columns, sorted by stripe), so every task
+    deserializes the whole list: O(rows) bytes per task, small next to
+    the pid of work each row names."""
+    n = rows.num_rows
+    width = max(1, min(width or n, n))
+    order = [k for i in range(width) for k in range(i, n, width)]
+    table = rows.take(order).append_column(
+        "stripe", pa.array([k % width for k in order], pa.int64()))
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    buf = sink.getvalue().to_pybytes()
+
+    def task(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
+        t = pa.ipc.open_stream(buf).read_all()
+        for b in ids:
+            for i in b.column(0).to_pylist():
+                yield from run(t.filter(pc.equal(t.column("stripe"), i))
+                               .drop_columns(["stripe"]))
+
+    return spark.range(0, width, 1, width).mapInArrow(task, schema)
 
 
 def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
@@ -513,13 +538,12 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
         _HINTS_MEMO[memo_key] = hints
 
     by_size = sorted(pending, key=lambda p: -pid_sizes[p])
-    task_rows = [(p, ",".join(pid_files[p])) for p in by_size]
-    tasks = _striped_task_df(
-        spark, task_rows, "pid INT, files STRING",
-        concurrency or len(task_rows),
-    )
+    task_rows = pa.table({
+        "pid": pa.array(by_size, pa.int32()),
+        "files": [pid_files[p] for p in by_size],
+    })
 
-    def encode_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         from concurrent.futures import ThreadPoolExecutor
 
         from parquet_toolkit_spark.runtime import tune_malloc
@@ -532,44 +556,38 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
         tune_malloc()
 
         def read_pid(task) -> tuple[int, pa.Table]:
-            table = task_read_table(task["files"].split(","))
-            return int(task["pid"]), table.drop_columns(
+            table = task_read_table(task["files"])
+            return task["pid"], table.drop_columns(
                 [c for c in table.schema.names if c not in schema_map]
             )
 
-        def pid_tasks():
-            for pdf in batches:
-                for _, task in pdf.iterrows():
-                    yield task
-
-        def encode_one(pid: int, table: pa.Table) -> pd.DataFrame:
+        def encode_one(pid: int, table: pa.Table) -> pa.RecordBatch:
             cols = {
                 name: (table.column(name).chunk(0)
                        if table.column(name).num_chunks == 1
                        else table.column(name).combine_chunks())
                 for name in table.schema.names
             }
-            rows = _encode_columns(cols, pid, run_id, hints=hints)
-            blob_table = pa.Table.from_batches([_rows_to_batch(rows)])
+            batch = _rows_to_batch(_encode_columns(cols, pid, run_id,
+                                                   hints=hints))
             dest_dir = store.pid_dir(out_dir, pid)
             wfs, dest_plain = task_fs(dest_dir)
             wfs.create_dir(dest_plain, recursive=True)
             # Arrow IPC, not parquet: blob sections are already
             # compressed, so the store wants a raw-memcpy format —
             # IPC writes ~4x faster here and memory-maps on decode
-            blob_table = blob_table.drop_columns(["pid"])
             task_write_ipc_atomic(
-                blob_table,
+                pa.Table.from_batches([batch.drop_columns(["pid"])]),
                 os.path.join(tmp_dir, f"pid-{pid}-{run_id}.arrow"),
                 os.path.join(dest_dir, "part-0.arrow"),
             )
-            return pd.DataFrame(rows).drop(columns=["blob"])
+            return batch.drop_columns(["blob"])
 
         if not prefetch:
             # strictly one thread per task: read pid k, encode pid k.
             # The scaling protocol runs this mode on both legs so
             # threads-per-task is constant across parallelism levels.
-            for task in pid_tasks():
+            for task in stripe.to_pylist():
                 pid, table = read_pid(task)
                 yield encode_one(pid, table)
             return
@@ -579,7 +597,7 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
         # the two halves of the per-pid wall (~0.1s IO + ~0.13s kernel on
         # the F0 corpus). Depth 1 bounds the extra resident set to one
         # spare partition (~target_bytes).
-        it = pid_tasks()
+        it = iter(stripe.to_pylist())
         with ThreadPoolExecutor(max_workers=1) as pool:
             nxt = None
             for task in it:
@@ -593,7 +611,8 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
                     break
                 yield encode_one(pid, table)
 
-    new_rows = tasks.mapInPandas(encode_task, _ROWS_DDL)
+    new_rows = _striped_tasks(spark, task_rows, concurrency, encode_task,
+                              _ROWS_DDL)
     # resume=False re-encodes every pid, so no old manifest row survives
     _commit_rows(spark, dfs, out_dir, new_rows,
                  pending if resume else None, schema_map)
@@ -694,12 +713,14 @@ def fsck_store(spark: SparkSession, enc_dir: str,
             "expected_sha", F.lit(None).cast("string").alias("actual_sha"),
         )
 
-    tasks = _striped_task_df(
-        spark, pid_files, "pid INT, file STRING",
-        concurrency or len(pid_files),
-    )
+    task_rows = pa.table({
+        "pid": pa.array([p for p, _ in pid_files], pa.int32()),
+        "file": [f for _, f in pid_files],
+    })
+    scanned_schema = pa.schema([("pid", pa.int32()), ("column", pa.string()),
+                                ("actual_sha", pa.string())])
 
-    def scan_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         import hashlib
 
         from parquet_toolkit_spark.runtime import tune_malloc
@@ -709,31 +730,30 @@ def fsck_store(spark: SparkSession, enc_dir: str,
         )
 
         tune_malloc()
-        for pdf in batches:
-            rows = {"pid": [], "column": [], "actual_sha": []}
-            for _, task in pdf.iterrows():
-                pid, f = int(task["pid"]), task["file"]
-                try:
-                    if f.endswith(".arrow"):
-                        t = task_open_ipc(f).read_all()
-                    else:
-                        t = task_read_table([f])
-                    cols = t.column("column").to_pylist()
-                    blobs = t.column("blob")
-                    for i, name in enumerate(cols):
-                        buf = blobs[i].as_buffer()
-                        rows["pid"].append(pid)
-                        rows["column"].append(name)
-                        rows["actual_sha"].append(
-                            hashlib.sha256(memoryview(buf)).hexdigest())
-                except Exception as exc:  # torn/truncated file
+        rows = {"pid": [], "column": [], "actual_sha": []}
+        for task in stripe.to_pylist():
+            pid, f = task["pid"], task["file"]
+            try:
+                if f.endswith(".arrow"):
+                    t = task_open_ipc(f).read_all()
+                else:
+                    t = task_read_table([f])
+                cols = t.column("column").to_pylist()
+                blobs = t.column("blob")
+                for i, name in enumerate(cols):
+                    buf = blobs[i].as_buffer()
                     rows["pid"].append(pid)
-                    rows["column"].append("__file__")
-                    rows["actual_sha"].append(f"UNREADABLE: {exc}"[:120])
-            yield pd.DataFrame(rows)
+                    rows["column"].append(name)
+                    rows["actual_sha"].append(
+                        hashlib.sha256(memoryview(buf)).hexdigest())
+            except Exception as exc:  # torn/truncated file
+                rows["pid"].append(pid)
+                rows["column"].append("__file__")
+                rows["actual_sha"].append(f"UNREADABLE: {exc}"[:120])
+        yield pa.RecordBatch.from_pydict(rows, schema=scanned_schema)
 
-    scanned = tasks.mapInPandas(
-        scan_task, "pid INT, column STRING, actual_sha STRING")
+    scanned = _striped_tasks(spark, task_rows, concurrency, scan_task,
+                             "pid INT, column STRING, actual_sha STRING")
     joined = man_side.join(scanned, ["pid", "column"], "full_outer")
     status = (
         F.when(F.col("column") == "__file__", F.lit("unreadable"))
@@ -903,53 +923,49 @@ def compact_store(spark: SparkSession, enc_dir: str,
         hints.setdefault(c, [])
         if cd not in hints[c]:
             hints[c].append(cd)
-    task_rows = []
-    bin_bytes = {}
-    for i, g in enumerate(groups):
-        files = [f for p in g for f in pid_files[p]]
-        task_rows.append((next_pid + i, ",".join(files)))
-        bin_bytes[next_pid + i] = sum(sizes[p] for p in g)
+    bins = [(next_pid + i, [f for p in g for f in pid_files[p]],
+             sum(sizes[p] for p in g)) for i, g in enumerate(groups)]
     # largest merged bin (by ENCODED bytes, not path-string length —
     # code-review r4) first for balanced striping
-    task_rows.sort(key=lambda t: -bin_bytes[t[0]])
+    bins.sort(key=lambda b: -b[2])
+    task_rows = pa.table({
+        "pid": pa.array([p for p, _, _ in bins], pa.int32()),
+        "files": [files for _, files, _ in bins],
+    })
 
     tmp_dir = os.path.join(enc_dir, "_tmp")
     dfs.mkdirs(tmp_dir)
-    tasks = _striped_task_df(
-        spark, task_rows, "pid INT, files STRING",
-        concurrency or len(task_rows),
-    )
 
-    def compact_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def compact_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         from parquet_toolkit_spark.runtime import tune_malloc
         from parquet_toolkit_spark.sources.fs import task_fs, task_write_ipc_atomic
 
         tune_malloc()
-        for pdf in batches:
-            for _, task in pdf.iterrows():
-                new_pid = int(task["pid"])
-                parts: dict[str, list[pa.Array]] = {}
-                for f in task["files"].split(","):
-                    for name, arr in _decode_blob_file(f).items():
-                        parts.setdefault(name, []).append(arr)
-                cols = {
-                    name: pa.chunked_array(arrs).combine_chunks()
-                    for name, arrs in parts.items()
-                }
-                rows = _encode_columns(cols, new_pid, run_id, hints=hints,
-                                       bloom_columns=bloom_columns)
-                blob_table = pa.Table.from_batches([_rows_to_batch(rows)])
-                dest_dir = store.pid_dir(enc_dir, new_pid)
-                wfs, dest_plain = task_fs(dest_dir)
-                wfs.create_dir(dest_plain, recursive=True)
-                task_write_ipc_atomic(
-                    blob_table.drop_columns(["pid"]),
-                    os.path.join(tmp_dir, f"pid-{new_pid}-{run_id}.arrow"),
-                    os.path.join(dest_dir, "part-0.arrow"),
-                )
-                yield pd.DataFrame(rows).drop(columns=["blob"])
+        for task in stripe.to_pylist():
+            new_pid = task["pid"]
+            parts: dict[str, list[pa.Array]] = {}
+            for f in task["files"]:
+                for name, arr in _decode_blob_file(f).items():
+                    parts.setdefault(name, []).append(arr)
+            cols = {
+                name: pa.chunked_array(arrs).combine_chunks()
+                for name, arrs in parts.items()
+            }
+            batch = _rows_to_batch(_encode_columns(
+                cols, new_pid, run_id, hints=hints,
+                bloom_columns=bloom_columns))
+            dest_dir = store.pid_dir(enc_dir, new_pid)
+            wfs, dest_plain = task_fs(dest_dir)
+            wfs.create_dir(dest_plain, recursive=True)
+            task_write_ipc_atomic(
+                pa.Table.from_batches([batch.drop_columns(["pid"])]),
+                os.path.join(tmp_dir, f"pid-{new_pid}-{run_id}.arrow"),
+                os.path.join(dest_dir, "part-0.arrow"),
+            )
+            yield batch.drop_columns(["blob"])
 
-    new_rows = tasks.mapInPandas(compact_task, _ROWS_DDL)
+    new_rows = _striped_tasks(spark, task_rows, concurrency, compact_task,
+                              _ROWS_DDL)
     _commit_rows(spark, dfs, enc_dir, new_rows, merged_pids,
                  store.read_schema_map(dfs, enc_dir))
     # post-commit cleanup: the manifest no longer references the members,
@@ -1003,9 +1019,12 @@ def decode_pipeline(spark: SparkSession, enc_dir: str,
                  for f, sz in store.data_files(dfs, d)]
     if not pid_files:
         raise FileNotFoundError(f"no committed blob files under {blobs_dir}")
-    # largest-first for balanced striping; size column dropped after sort
-    pid_files = [(p, f) for p, f, _ in
-                 sorted(pid_files, key=lambda t: -t[2])]
+    # largest-first for balanced striping
+    pid_files.sort(key=lambda t: -t[2])
+    task_rows = pa.table({
+        "pid": pa.array([p for p, _, _ in pid_files], pa.int32()),
+        "file": [f for _, f, _ in pid_files],
+    })
 
     if columns is not None:
         unknown = set(columns) - set(schema_map)
@@ -1020,32 +1039,26 @@ def decode_pipeline(spark: SparkSession, enc_dir: str,
     # round trip preserved the exact arrow type, emit it verbatim
     out_pa_types = {c: _out_pa_type(t) for c, t in out_fields}
 
-    tasks = _striped_task_df(
-        spark, pid_files, "pid INT, file STRING",
-        concurrency or len(pid_files),
-    )
-
-    def decode_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def decode_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         from parquet_toolkit_spark.runtime import tune_malloc
 
         tune_malloc()
-        for b in batches:
-            for task in b.to_pylist():
-                cols = _decode_blob_file(task["file"], set(schema_map))
-                nrows = len(next(iter(cols.values()))) if cols else 0
-                arrays = []
-                for c, t in out_fields:
-                    if c == "pid":
-                        arrays.append(pa.array([task["pid"]] * nrows, pa.int32()))
-                        continue
-                    pt = out_pa_types[c]
-                    arrays.append(cols[c] if pt is None else cols[c].cast(pt))
-                table = pa.Table.from_arrays(
-                    arrays, names=[c for c, _ in out_fields])
-                for ob in table.to_batches(max_chunksize=32768):
-                    yield ob
+        for task in stripe.to_pylist():
+            cols = _decode_blob_file(task["file"], set(schema_map))
+            nrows = len(next(iter(cols.values()))) if cols else 0
+            arrays = []
+            for c, t in out_fields:
+                if c == "pid":
+                    arrays.append(pa.array([task["pid"]] * nrows, pa.int32()))
+                    continue
+                pt = out_pa_types[c]
+                arrays.append(cols[c] if pt is None else cols[c].cast(pt))
+            table = pa.Table.from_arrays(
+                arrays, names=[c for c, _ in out_fields])
+            yield from table.to_batches(max_chunksize=32768)
 
-    return tasks.mapInArrow(decode_task, out_schema)
+    return _striped_tasks(spark, task_rows, concurrency, decode_task,
+                          out_schema)
 
 
 def verify_roundtrip(original: DataFrame, decoded: DataFrame,
@@ -1074,17 +1087,22 @@ def verify_roundtrip(original: DataFrame, decoded: DataFrame,
 
 
 def encoded_size_report(spark: SparkSession, enc_dir: str) -> dict:
-    """Total encoded bytes vs raw bytes from the manifest."""
-    man = read_manifest(spark, enc_dir)
-    row = man.agg(
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
-        F.countDistinct("pid").alias("n_partitions"),
-    ).first()
+    """Total encoded bytes vs raw bytes from the manifest (driver-side
+    arrow read, no Spark job). The sums are None on an empty manifest."""
+    import pyarrow.compute as pc
+
+    from parquet_toolkit_spark.sources.fs import DriverFS
+
+    t = store.manifest_table(DriverFS(spark), enc_dir,
+                             ["pid", "bytes_in", "bytes_out"])
+    if t is None:
+        raise FileNotFoundError(f"no manifest under {enc_dir}")
+    bytes_in = pc.sum(t.column("bytes_in")).as_py()
+    bytes_out = pc.sum(t.column("bytes_out")).as_py()
     return {
-        "bytes_in": row.bytes_in, "bytes_out": row.bytes_out,
-        "ratio": (row.bytes_out or 0) / max(1, row.bytes_in or 1),
-        "n_partitions": row.n_partitions,
+        "bytes_in": bytes_in, "bytes_out": bytes_out,
+        "ratio": (bytes_out or 0) / max(1, bytes_in or 1),
+        "n_partitions": pc.count_distinct(t.column("pid")).as_py(),
     }
 
 

@@ -925,3 +925,81 @@ def test_compact_store_decimal_and_nested(spark, tmp_path):
     assert bad == 0
     one = dec.where(F.col("doc_id") == 10).first()
     assert one.price == dcm.Decimal("0.10") and one.info.lg is not None
+
+
+@pytest.mark.parametrize("n_rows,width", [(1, 4), (4, 4), (9, 4), (9, 3),
+                                          (5, 1), (3, None)])
+def test_striped_tasks_placement(spark, n_rows, width):
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    from parquet_toolkit_spark.operators.encode import _striped_tasks
+
+    def run(stripe):
+        part = TaskContext.get().partitionId()
+        ks = stripe.column("k").to_pylist()
+        yield pa.RecordBatch.from_pydict(
+            {"task": [part] * len(ks), "k": ks},
+            schema=pa.schema([("task", pa.int32()), ("k", pa.int64())]))
+
+    group = f"striped-{n_rows}-{width}"
+    sc = spark.sparkContext
+    rows = pa.table({"k": pa.array(range(n_rows), pa.int64())})
+    try:
+        sc.setJobGroup(group, group)
+        got = _striped_tasks(spark, rows, width, run,
+                             "task INT, k BIGINT").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # width None: one task per row
+    w = min(width or n_rows, n_rows)
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    assert sum(tracker.getStageInfo(s).numTasks for s in stages) == w
+    # task i gets rows i, i+w, ... in input order; every row exactly once
+    by_task = {}
+    for r in got:
+        by_task.setdefault(r.task, []).append(r.k)
+    assert by_task == {i: list(range(i, n_rows, w)) for i in range(w)}
+    assert sorted(r.k for r in got) == list(range(n_rows))
+
+
+def test_encoded_size_report_matches_spark_aggregate(spark, corpus_df,
+                                                     tmp_path):
+    enc = str(tmp_path / "size_report")
+    encode_pipeline(spark, corpus_df, enc, target_bytes=1 << 20,
+                    run_id="sz")
+    row = read_manifest(spark, enc).agg(
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("bytes_out").alias("bytes_out"),
+        F.countDistinct("pid").alias("n_partitions"),
+    ).first()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("size-report", "encoded_size_report")
+        rep = encoded_size_report(spark, enc)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("size-report") == []
+    assert rep == {
+        "bytes_in": row.bytes_in, "bytes_out": row.bytes_out,
+        "ratio": row.bytes_out / row.bytes_in,
+        "n_partitions": row.n_partitions,
+    }
+    assert rep["n_partitions"] > 1
+
+    # an empty manifest keeps Spark's None sums
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.sources import store
+
+    empty = tmp_path / "empty" / "manifest"
+    empty.mkdir(parents=True)
+    pq.write_table(store.MANIFEST_SCHEMA.empty_table(),
+                   str(empty / "part-0.parquet"))
+    assert encoded_size_report(spark, str(tmp_path / "empty")) == {
+        "bytes_in": None, "bytes_out": None, "ratio": 0.0,
+        "n_partitions": 0}

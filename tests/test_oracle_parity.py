@@ -98,3 +98,23 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 5
     assert all(r.decode_bit_identical for r in rows)
+
+
+def test_fixture_fingerprint_is_content_keyed(tmp_path):
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    touched, rewritten = str(tmp_path / "touched"), str(tmp_path / "rewritten")
+    shutil.copytree(SF_DIR, touched)
+    shutil.copytree(SF_DIR, rewritten)
+    for f in os.listdir(touched):
+        st = os.stat(os.path.join(touched, f))
+        os.utime(os.path.join(touched, f),
+                 (st.st_atime + 86400, st.st_mtime + 86400))
+    region = os.path.join(rewritten, "region.parquet")
+    t = pq.read_table(region)
+    pq.write_table(t.slice(1), region)
+    fp = entrymod._sf_fingerprint(SF_DIR)
+    assert entrymod._sf_fingerprint(touched) == fp
+    assert entrymod._sf_fingerprint(rewritten) != fp

@@ -19,6 +19,7 @@ from parquet_toolkit_spark.operators.encode import (
     decode_where,
     encode_partitions,
     encode_pipeline,
+    fsck_store,
     layout_stage,
     read_manifest,
 )
@@ -154,21 +155,38 @@ def test_manifest_readers_agree_in_every_crash_state(spark, tmp_path):
 
 
 def test_store_calls_add_no_spark_job(spark, tmp_path):
-    # pinned at the counts of the per-module manifest code this replaced
+    # pinned at the counts of the per-module manifest code this replaced;
+    # lookup_count was 2 on a Python-RDD task frame: the 1-pid range
+    # frame is one partition, so the count needs no exchange
     stg, enc = str(tmp_path / "stg"), str(tmp_path / "enc")
     layout_stage(spark, _keyed(spark, 0, 600), stg, n_partitions=3,
                  range_keys=("k",), sort_keys=("k",))
     sc = spark.sparkContext
+    calls = {
+        "encode": lambda: encode_partitions(spark, stg, enc, run_id="pin"),
+        "lookup": lambda: decode_where(spark, enc, {"k": (10, 19)}).collect(),
+        "lookup_count": lambda: decode_where(
+            spark, enc, {"k": (10, 19)}).count(),
+        "decode": lambda: decode_pipeline(spark, enc).write.format("noop")
+        .mode("overwrite").save(),
+        "fsck": lambda: fsck_store(spark, enc).collect(),
+        "compact": lambda: compact_store(spark, enc, target_bytes=1 << 20,
+                                         run_id="pin-c"),
+    }
+    out = {}
     try:
-        sc.setJobGroup("store-pin-encode", "encode_partitions")
-        encode_partitions(spark, stg, enc, run_id="pin")
-        sc.setJobGroup("store-pin-lookup", "decode_where")
-        rows = decode_where(spark, enc, {"k": (10, 19)}).collect()
+        for name, call in calls.items():
+            sc.setJobGroup(f"store-pin-{name}", name)
+            out[name] = call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(rows) == 10
+    assert len(out["lookup"]) == 10 and out["lookup_count"] == 10
+    assert {r.status for r in out["fsck"]} == {"ok"}
+    assert out["compact"].select("pid").distinct().count() == 1
     tracker = sc.statusTracker()
-    assert len(tracker.getJobIdsForGroup("store-pin-encode")) == 1
-    assert len(tracker.getJobIdsForGroup("store-pin-lookup")) == 1
+    jobs = {name: len(tracker.getJobIdsForGroup(f"store-pin-{name}"))
+            for name in calls}
+    assert jobs == {"encode": 1, "lookup": 1, "lookup_count": 1,
+                    "decode": 1, "fsck": 3, "compact": 1}
     shutil.rmtree(stg)
