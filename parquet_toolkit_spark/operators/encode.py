@@ -389,12 +389,15 @@ def _striped_tasks(spark: SparkSession, rows: pa.Table, width: int | None,
 
     The frame is spark.range(0, width, 1, width), whose partition i holds
     exactly id i, so task i runs stripe i with no shuffle, and each task
-    crosses the Python boundary once, in the mapInArrow UDF. A task list
-    shipped as a Python RDD instead paid a PythonRDD stage whose rows a
-    second Python worker pickled for the JVM: a trivial job into a noop
-    sink measured 674 ms that way vs 394 ms on the range frame at 4 tasks,
-    9.4-10.9 s vs 4.9-5.8 s at 64 tasks (4-core Xeon VM, local[4]) —
-    ~70 ms per task.
+    crosses the Python boundary once, in the mapInArrow UDF. Per-task
+    cost (4-core Xeon VM, local[4], trivial UDF into a noop sink): a task
+    list shipped as a Python RDD paid a second, pickling Python stage,
+    ~70 ms per task (674 vs 394 ms at 4 tasks). On the range frame, most
+    of what was left was pyspark re-reading pyspark.zip's directory before
+    every task; the task starts with runtime.tune_malloc(), which stops
+    that in its worker from the next task on (see the runtime module
+    docstring): one task 296 -> 115 ms, four tasks 410 -> 144 ms, against
+    60-71 ms for four tasks with no Python stage.
 
     The task list rides in the UDF closure as one Arrow IPC buffer (a
     stripe column plus the row columns, sorted by stripe), so every task
@@ -413,6 +416,9 @@ def _striped_tasks(spark: SparkSession, rows: pa.Table, width: int | None,
     def task(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
+        from parquet_toolkit_spark.runtime import tune_malloc
+
+        tune_malloc()
         t = pa.ipc.open_stream(buf).read_all()
         for b in ids:
             for i in b.column(0).to_pylist():
@@ -546,14 +552,11 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
     def encode_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         from concurrent.futures import ThreadPoolExecutor
 
-        from parquet_toolkit_spark.runtime import tune_malloc
         from parquet_toolkit_spark.sources.fs import (
             task_fs,
             task_read_table,
             task_write_ipc_atomic,
         )
-
-        tune_malloc()
 
         def read_pid(task) -> tuple[int, pa.Table]:
             table = task_read_table(task["files"])
@@ -723,13 +726,11 @@ def fsck_store(spark: SparkSession, enc_dir: str,
     def scan_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         import hashlib
 
-        from parquet_toolkit_spark.runtime import tune_malloc
         from parquet_toolkit_spark.sources.fs import (
             task_open_ipc,
             task_read_table,
         )
 
-        tune_malloc()
         rows = {"pid": [], "column": [], "actual_sha": []}
         for task in stripe.to_pylist():
             pid, f = task["pid"], task["file"]
@@ -937,10 +938,8 @@ def compact_store(spark: SparkSession, enc_dir: str,
     dfs.mkdirs(tmp_dir)
 
     def compact_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
-        from parquet_toolkit_spark.runtime import tune_malloc
         from parquet_toolkit_spark.sources.fs import task_fs, task_write_ipc_atomic
 
-        tune_malloc()
         for task in stripe.to_pylist():
             new_pid = task["pid"]
             parts: dict[str, list[pa.Array]] = {}
@@ -1040,9 +1039,6 @@ def decode_pipeline(spark: SparkSession, enc_dir: str,
     out_pa_types = {c: _out_pa_type(t) for c, t in out_fields}
 
     def decode_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
-        from parquet_toolkit_spark.runtime import tune_malloc
-
-        tune_malloc()
         for task in stripe.to_pylist():
             cols = _decode_blob_file(task["file"], set(schema_map))
             nrows = len(next(iter(cols.values()))) if cols else 0

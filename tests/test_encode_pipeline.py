@@ -966,6 +966,34 @@ def test_striped_tasks_placement(spark, n_rows, width):
     assert sorted(r.k for r in got) == list(range(n_rows))
 
 
+def test_striped_tasks_make_zip_invalidation_lazy(spark):
+    """Every store task starts with runtime.tune_malloc(), which makes
+    importlib.invalidate_caches() drop the worker's zipimporters instead of
+    re-reading their archives (workers import pyspark from pyspark.zip);
+    pyspark calls it before every task, so a reused worker's next task
+    starts with no zip directory re-read."""
+    import pyarrow as pa
+
+    from parquet_toolkit_spark.operators.encode import _striped_tasks
+
+    def run(stripe):
+        import importlib
+        import sys
+        import zipimport
+
+        importlib.invalidate_caches()
+        n = sum(isinstance(v, zipimport.zipimporter)
+                for v in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_pydict(
+            {"k": stripe.column("k").to_pylist(), "n": [n] * stripe.num_rows},
+            schema=pa.schema([("k", pa.int64()), ("n", pa.int32())]))
+
+    rows = pa.table({"k": pa.array(range(4), pa.int64())})
+    got = _striped_tasks(spark, rows, 4, run, "k BIGINT, n INT").collect()
+    assert sorted(r.k for r in got) == [0, 1, 2, 3]
+    assert [r.n for r in got] == [0, 0, 0, 0]
+
+
 def test_encoded_size_report_matches_spark_aggregate(spark, corpus_df,
                                                      tmp_path):
     enc = str(tmp_path / "size_report")

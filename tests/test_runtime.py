@@ -1,4 +1,4 @@
-"""Session-default guards for runtime.spark_builder_defaults.
+"""Guards for runtime.spark_builder_defaults and runtime.tune_malloc.
 
 The off-heap execution pool is what keeps string-heavy shuffle map
 stages from pinning the old generation (GC-overhead JVM death at
@@ -6,16 +6,23 @@ stages from pinning the old generation (GC-overhead JVM death at
 ParallelGC heap) — these tests pin that it is on by default, sized by
 core count, cleanly disableable for deployments that budget memory
 differently, and that a malformed size fails naming the setting.
+
+After tune_malloc(), invalidating import caches drops zipimporters instead
+of re-reading their archives; imports from a zip must stay sound, including
+for an archive rewritten in place.
 """
 
+import importlib
 import os
 import sys
+import zipfile
+import zipimport
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from parquet_toolkit_spark.runtime import spark_builder_defaults
+from parquet_toolkit_spark.runtime import spark_builder_defaults, tune_malloc
 
 
 class _RecordingBuilder:
@@ -61,3 +68,41 @@ def test_offheap_malformed_env_names_the_setting(monkeypatch, bad):
         _opts()
     assert "SPARK_GRAFT_OFFHEAP_MB" in str(err.value)
     assert repr(bad) in str(err.value)
+
+
+def _write_zpkg(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("zpkg/__init__.py", "")
+        for name in modules:
+            zf.writestr(f"zpkg/{name}.py", f"NAME = {name!r}\n")
+
+
+def test_tune_malloc_makes_zip_invalidation_lazy_and_sound(tmp_path):
+    tune_malloc()
+    zpath = str(tmp_path / "zpkg.zip")
+    _write_zpkg(zpath, ["a", "b"])
+    sys.path.insert(0, zpath)
+    try:
+        importlib.invalidate_caches()
+        assert importlib.import_module("zpkg.a").NAME == "a"
+        assert any(isinstance(v, zipimport.zipimporter)
+                   for v in sys.path_importer_cache.values())
+
+        importlib.invalidate_caches()
+        assert not any(isinstance(v, zipimport.zipimporter)
+                       for v in sys.path_importer_cache.values())
+
+        # rewritten in place: a new member ahead of the old ones shifts
+        # their offsets in the archive
+        _write_zpkg(zpath, ["c", "a", "b"])
+        importlib.invalidate_caches()
+        assert importlib.import_module("zpkg.b").NAME == "b"
+        assert importlib.import_module("zpkg.c").NAME == "c"
+    finally:
+        sys.path.remove(zpath)
+        for name in [m for m in sys.modules
+                     if m == "zpkg" or m.startswith("zpkg.")]:
+            del sys.modules[name]
+        for key in [k for k in sys.path_importer_cache
+                    if k.startswith(zpath)]:
+            del sys.path_importer_cache[key]
