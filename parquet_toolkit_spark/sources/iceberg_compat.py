@@ -5,11 +5,22 @@ The north rule targets "Iceberg tables of source-code repositories". This
 container ships neither the iceberg-spark runtime jar nor pyiceberg, so
 CATALOG access is stubbed behind an import/config probe — but filesystem
 tables read exactly with zero dependencies: the JSON metadata layer
-(read_table_metadata) plus the Avro manifest layer (avro_lite →
-read_manifest_list/read_manifest/snapshot_data_files/read_data) resolve
+(read_table_metadata) plus the Avro manifest layer (avro_lite) resolve
 the precise live data-file set of any snapshot, including delete/replace
-snapshots and time travel. The engine's own store also mirrors the
-Iceberg constructs it needs:
+snapshots and time travel.
+
+One read protocol serves every reader. `_manifest_entries` is the only
+manifest-list -> manifest -> entry walk of a snapshot's live files
+(path resolution, sequence-number and snapshot-id inheritance);
+snapshot_files, table_files and incremental_scan all consume it.
+`scan_plan` is the only read plan: one metadata read, the snapshot
+selection rule (`pin_snapshot`: snapshot id or as-of timestamp, the
+pinned schema, rename aliases), the snapshot's live files and the
+equality-delete key names. read_data and delete_where execute the plan
+on the JVM with distributed anti-joins (_scan_live_rows);
+format("iceberg_fs") (iceberg_datasource) executes the same plan per
+task in pyarrow. The engine's own store also mirrors the Iceberg
+constructs it needs:
 
   Iceberg construct          engine equivalent
   ------------------------   ------------------------------------------
@@ -157,49 +168,21 @@ def read_table_metadata(table_dir: str, spark: SparkSession | None = None) -> di
         (s for s in schemas if s.get("schema-id", 0) == cur_schema_id),
         schemas[-1],
     )
-    ddl = ", ".join(
-        f"{f['name']} {_iceberg_type_to_ddl(f['type'])}"
-        for f in schema["fields"]
-    )
     snaps = md.get("snapshots", [])
-
-    def _fields_of(s):
-        return [(f["name"], _iceberg_type_to_ddl(f["type"]),
-                 f.get("required", False)) for f in s["fields"]]
-
     return {
         "metadata_file": target,
         "format_version": md.get("format-version"),
         "table_uuid": md.get("table-uuid"),
         "location": md.get("location", table_dir),
-        "schema_ddl": ddl,
-        # every schema ever committed, by id — time travel to a
-        # pre-evolution snapshot reads with ITS schema (snapshot
-        # schema-id pin), not the current one
-        "schemas_by_id": {
-            s.get("schema-id", 0): _fields_of(s) for s in schemas
-        },
-        "schema_fields": [
-            (f["name"], _iceberg_type_to_ddl(f["type"]), f.get("required", False))
-            for f in schema["fields"]
-        ],
-        # field-id <-> name maps (equality-delete files name columns by
-        # field id; hand-built schemas without ids map positionally 1..n)
-        "schema_id_to_name": {
-            f.get("id", i + 1): f["name"]
-            for i, f in enumerate(schema["fields"])
-        },
+        # schema_fields, schema_ddl, schema_id_to_name, field_aliases of
+        # the CURRENT schema; pin_snapshot re-derives them for time travel
+        **_schema_view(schemas, schema),
         "schema_name_to_id": {
             f["name"]: f.get("id", i + 1)
             for i, f in enumerate(schema["fields"])
         },
-        # rename evolution (r6): {current name -> older names the SAME
-        # field id carried in prior schemas, newest-first}. Data files
-        # written before a rename store the column under one of these —
-        # field ids are never reused (spec), so the chain is exact.
-        "field_aliases": _field_aliases(schemas, schema),
-        # raw spec-shaped schemas list: time travel recomputes aliases
-        # relative to the PINNED schema, not the current one
+        # raw spec-shaped schemas list: time travel pins the snapshot's
+        # schema-id and recomputes its view (pin_snapshot)
         "_raw_schemas": schemas,
         "partition_specs": md.get("partition-specs",
                                   [{"spec-id": 0, "fields": md.get("partition-spec", [])}]),
@@ -212,7 +195,33 @@ def read_table_metadata(table_dir: str, spark: SparkSession | None = None) -> di
              "summary": s.get("summary", {})}
             for s in snaps
         ],
+        "snapshot_log": [
+            {"snapshot_id": e.get("snapshot-id"),
+             "timestamp_ms": e.get("timestamp-ms")}
+            for e in md.get("snapshot-log", [])
+        ],
         "properties": md.get("properties", {}),
+    }
+
+
+def _schema_view(schemas: list, schema: dict) -> dict:
+    """What a read needs of one spec-shaped schema: its fields as (name,
+    Spark DDL type, required), the DDL string, the field-id -> name map
+    (equality-delete files name their key columns by field id;
+    hand-built schemas without ids map positionally 1..n) and its rename
+    alias chain against every other schema."""
+    fields = [(f["name"], _iceberg_type_to_ddl(f["type"]),
+               f.get("required", False)) for f in schema["fields"]]
+    return {
+        "schema_fields": fields,
+        "schema_ddl": ", ".join(f"{n} {t}" for n, t, _r in fields),
+        "schema_id_to_name": {f.get("id", i + 1): f["name"]
+                              for i, f in enumerate(schema["fields"])},
+        # rename evolution (r6): {name -> older names the SAME field id
+        # carried in prior schemas, newest-first}. Data files written
+        # before a rename store the column under one of these — field ids
+        # are never reused (spec), so the chain is exact.
+        "field_aliases": _field_aliases(schemas, schema),
     }
 
 
@@ -307,6 +316,101 @@ def read_manifest(path: str, spark: SparkSession | None = None) -> list[dict]:
     return rows
 
 
+def _snapshot(md: dict, snapshot_id: int | None, table_dir: str) -> dict:
+    """The snapshot record of `snapshot_id` (None: the current one)."""
+    sid = snapshot_id if snapshot_id is not None else md["current_snapshot_id"]
+    snap = next((s for s in md["snapshots"] if s["snapshot_id"] == sid), None)
+    if snap is None:
+        raise ValueError(f"snapshot {sid} not found in {table_dir}")
+    return snap
+
+
+def _manifest_entries(md: dict, table_dir: str, snap: dict,
+                     spark: SparkSession | None = None):
+    """The one manifest-list -> manifests -> entries walk of a snapshot.
+
+    Yields every LIVE entry (status != 2, DELETED) with its data-file
+    path resolved (`path`) and the spec's inheritance applied: a null
+    `sequence_number` or `snapshot_id` takes the manifest-list row's
+    sequence_number / added_snapshot_id (ADDED entries written by
+    foreign engines leave them null). Only expire_snapshots and
+    remove_orphan_files walk DELETED entries, on purpose."""
+    loc = md["location"]
+    mlist = _resolve_path(snap["manifest_list"], table_dir, loc)
+    for mf in read_manifest_list(mlist, spark):
+        mpath = _resolve_path(mf["manifest_path"], table_dir, loc)
+        for e in read_manifest(mpath, spark):
+            if e.get("status", 0) == 2:
+                continue
+            seq, sid = e.get("sequence_number"), e.get("snapshot_id")
+            yield {**e,
+                   "sequence_number": (mf.get("sequence_number", 0)
+                                       if seq is None else seq),
+                   "snapshot_id": (mf.get("added_snapshot_id")
+                                   if sid is None else sid),
+                   "path": _resolve_path(e["data_file"]["file_path"],
+                                         table_dir, loc)}
+
+
+def _empty_files() -> dict:
+    return {"data": [], "position_deletes": [], "equality_deletes": [],
+            "data_seq": {}, "partition_values": {}, "raw_to_resolved": {},
+            "record_counts": {}, "file_sizes": {},
+            "file_formats": {}}  # only non-PARQUET entries
+
+
+def _add_data_file(files: dict, e: dict) -> None:
+    """Record one live data entry of _manifest_entries in a files dict."""
+    from parquet_toolkit_spark.sources.fs import strip_local_scheme
+
+    dfile, p = e["data_file"], e["path"]
+    files["data"].append(p)
+    files["data_seq"][p] = e["sequence_number"]
+    files["record_counts"][p] = dfile.get("record_count")
+    files["file_sizes"][p] = dfile.get("file_size_in_bytes")
+    fmt = (dfile.get("file_format") or "PARQUET").upper()
+    if fmt != "PARQUET":
+        files["file_formats"][p] = fmt
+    if dfile.get("partition"):
+        files["partition_values"][p] = dict(dfile["partition"])
+    files["raw_to_resolved"][strip_local_scheme(dfile["file_path"])] = p
+
+
+def _live_files(md: dict, table_dir: str, snap: dict,
+                spark: SparkSession | None, partition_filter: dict | None,
+                range_filter: dict | None) -> dict:
+    """snapshot_files over an already-read metadata dict."""
+    pf_terms = (_resolve_partition_filter(md, partition_filter)
+                if partition_filter else [])
+    files = _empty_files()
+    for e in _manifest_entries(md, table_dir, snap, spark):
+        dfile = e["data_file"]
+        content = dfile.get("content", 0)
+        if content == 0:
+            pvals = dfile.get("partition") or {}
+            if pf_terms and any(
+                    name in pvals and pvals[name] != tv
+                    for name, tv in pf_terms):
+                continue  # manifest-level pruning: zero data IO
+            if range_filter and not _bounds_admit(dfile, range_filter, md):
+                continue  # zone-map pruning: bounds exclude the range
+            _add_data_file(files, e)
+        elif content == 1:
+            files["position_deletes"].append(e["path"])
+        else:
+            eq_ids = dfile.get("equality_ids")
+            if not eq_ids:
+                raise NotImplementedError(
+                    f"live EQUALITY delete file {dfile['file_path']} "
+                    "carries no equality_ids — cannot determine the "
+                    "key columns to match on"
+                )
+            files["equality_deletes"].append({
+                "path": e["path"], "seq": e["sequence_number"],
+                "equality_ids": list(eq_ids)})
+    return files
+
+
 def snapshot_files(table_dir: str, snapshot_id: int | None = None,
                    spark: SparkSession | None = None,
                    partition_filter: dict | None = None,
@@ -317,7 +421,8 @@ def snapshot_files(table_dir: str, snapshot_id: int | None = None,
     paths], "equality_deletes": [{"path", "seq", "equality_ids"}],
     "data_seq": {resolved data path -> data sequence number},
     "partition_values": {resolved data path -> {col: identity value}},
-    "raw_to_resolved": {manifest-recorded path -> resolved}}.
+    "raw_to_resolved": {manifest-recorded path -> resolved},
+    "record_counts", "file_sizes", "file_formats" (non-PARQUET only)}.
     partition_filter={"col": value} drops data entries whose manifest
     partition record holds a different value for that column — pruning
     at the METADATA layer, before any data file is opened.
@@ -326,83 +431,103 @@ def snapshot_files(table_dir: str, snapshot_id: int | None = None,
     the file-level zone maps written from parquet footer stats. Files
     without bounds (old/hand-built manifests, skipped long strings) are
     always kept: absence of evidence never prunes.
-    Walks manifest-list -> manifests -> entries, keeping entries with
-    status != 2 (DELETED). Positional (content=1) AND equality
-    (content=2) delete files are returned for read_data to apply;
-    equality deletes carry their data sequence number (entry value, or
-    inherited from the manifest-list row per the spec's inheritance rule)
-    because they apply only to data files with a strictly SMALLER
-    sequence number."""
-    from parquet_toolkit_spark.sources.fs import strip_local_scheme
-
+    Equality deletes carry their data sequence number because they apply
+    only to data files with a strictly SMALLER sequence number."""
     md = read_table_metadata(table_dir, spark)
-    sid = snapshot_id if snapshot_id is not None else md["current_snapshot_id"]
-    snap = next((s for s in md["snapshots"] if s["snapshot_id"] == sid), None)
-    if snap is None:
-        raise ValueError(f"snapshot {sid} not found in {table_dir}")
-    mlist_path = _resolve_path(snap["manifest_list"], table_dir, md["location"])
-    pf_terms = (_resolve_partition_filter(md, partition_filter)
-                if partition_filter else [])
-    data: list[str] = []
-    pos_deletes: list[str] = []
-    eq_deletes: list[dict] = []
-    data_seq: dict[str, int] = {}
-    record_counts: dict[str, int | None] = {}
-    file_sizes: dict[str, int | None] = {}
-    partition_values: dict[str, dict] = {}
-    raw_to_resolved: dict[str, str] = {}
-    file_formats: dict[str, str] = {}  # only non-PARQUET entries
-    for mf in read_manifest_list(mlist_path, spark):
-        mpath = _resolve_path(mf["manifest_path"], table_dir, md["location"])
-        for e in read_manifest(mpath, spark):
-            if e.get("status", 0) == 2:
-                continue
-            dfile = e["data_file"]
-            content = dfile.get("content", 0)
-            resolved = _resolve_path(dfile["file_path"], table_dir,
-                                     md["location"])
-            seq = e.get("sequence_number")
-            if seq is None:  # spec inheritance: ADDED entries written with
-                seq = mf.get("sequence_number", 0)  # null inherit the
-            if content == 0:                        # manifest's commit seq
-                pvals = dict(dfile.get("partition") or {})
-                if pf_terms and any(
-                        name in pvals and pvals[name] != tv
-                        for name, tv in pf_terms):
-                    continue  # manifest-level pruning: zero data IO
-                if range_filter and not _bounds_admit(dfile, range_filter,
-                                                      md):
-                    continue  # zone-map pruning: bounds exclude the range
-                data.append(resolved)
-                data_seq[resolved] = seq
-                record_counts[resolved] = dfile.get("record_count")
-                file_sizes[resolved] = dfile.get("file_size_in_bytes")
-                fmt = (dfile.get("file_format") or "PARQUET").upper()
-                if fmt != "PARQUET":
-                    file_formats[resolved] = fmt
-                if pvals:
-                    partition_values[resolved] = pvals
-                raw_to_resolved[strip_local_scheme(dfile["file_path"])] = \
-                    resolved
-            elif content == 1:
-                pos_deletes.append(resolved)
-            else:
-                eq_ids = dfile.get("equality_ids")
-                if not eq_ids:
-                    raise NotImplementedError(
-                        f"live EQUALITY delete file {dfile['file_path']} "
-                        "carries no equality_ids — cannot determine the "
-                        "key columns to match on"
-                    )
-                eq_deletes.append({"path": resolved, "seq": seq,
-                                   "equality_ids": list(eq_ids)})
-    return {"data": data, "position_deletes": pos_deletes,
-            "equality_deletes": eq_deletes, "data_seq": data_seq,
-            "partition_values": partition_values,
-            "raw_to_resolved": raw_to_resolved,
-            "record_counts": record_counts,
-            "file_sizes": file_sizes,
-            "file_formats": file_formats}
+    return _live_files(md, table_dir, _snapshot(md, snapshot_id, table_dir),
+                       spark, partition_filter, range_filter)
+
+
+def pin_snapshot(md: dict, table_dir: str, snapshot_id: int | None = None,
+                 as_of_ms: int | None = None) -> dict:
+    """The one snapshot-selection rule of every read: `md` narrowed to
+    the snapshot and schema a read sees.
+
+    `snapshot_id`, or `as_of_ms` (epoch millis: the latest snapshot
+    committed at or before it), picks a snapshot; passing both refuses,
+    and an unknown id raises. A picked snapshot reads with the schema it
+    pins (its schema-id), with the alias chain and field-id -> name map
+    of THAT schema: pre-rename snapshots keep the names they were written
+    under, and equality-delete keys resolve to the same names the scan
+    carries. With neither, the read sees the current snapshot under the
+    CURRENT schema (a rename is a metadata-only commit, not a snapshot).
+
+    Returns md with schema_fields, schema_ddl, schema_id_to_name and
+    field_aliases replaced and "snapshot_id" set (None: current). A
+    former name of one live field that is the current name of another
+    refuses here (_check_alias_ambiguity)."""
+    if as_of_ms is not None:
+        if snapshot_id is not None:
+            raise ValueError(
+                "pass a snapshot id or an as-of timestamp, not both")
+        snapshot_id = snapshot_id_as_of(md, as_of_ms)
+    pinned = {**md, "snapshot_id": snapshot_id}
+    if snapshot_id is not None:
+        sid = _snapshot(md, snapshot_id, table_dir).get("schema_id")
+        schema = next((s for s in md["_raw_schemas"]
+                       if s.get("schema-id", 0) == sid), None)
+        if schema is not None:  # unpinned snapshots read the current one
+            pinned.update(_schema_view(md["_raw_schemas"], schema))
+    if pinned["field_aliases"]:
+        _check_alias_ambiguity(pinned)
+    return pinned
+
+
+def scan_plan(table_dir: str, snapshot_id: int | None = None,
+              spark: SparkSession | None = None,
+              partition_filter: dict | None = None,
+              range_filter: dict | None = None,
+              as_of_ms: int | None = None) -> dict:
+    """The read plan both Iceberg readers execute (read_data on the JVM,
+    format("iceberg_fs") per task in pyarrow), from ONE metadata read.
+
+    Returns snapshot_files' dict for the selected snapshot plus "md", the
+    metadata pinned by pin_snapshot. Pruning compares filters with the
+    table's current schema, as snapshot_files does. Every equality-delete
+    descriptor also carries "keys", its key names under the pinned schema
+    (this is the only place field ids become key names), and "key_src",
+    the column each key is stored under in that delete file: a file
+    written before a rename holds a key under a former name, found with
+    one driver-side footer read per file, only when the pinned schema has
+    aliases."""
+    md = read_table_metadata(table_dir, spark)
+    pinned = pin_snapshot(md, table_dir, snapshot_id, as_of_ms)
+    plan = _live_files(md, table_dir,
+                       _snapshot(md, pinned["snapshot_id"], table_dir),
+                       spark, partition_filter, range_filter)
+    id_to_name = pinned["schema_id_to_name"]
+    aliases = pinned["field_aliases"]
+    for d in plan["equality_deletes"]:
+        unknown = [f for f in d["equality_ids"] if f not in id_to_name]
+        if unknown:
+            raise NotImplementedError(
+                f"equality delete {d['path']} references unknown field "
+                f"id(s) {unknown}")
+        d["keys"] = [id_to_name[f] for f in d["equality_ids"]]
+        d["key_src"] = _key_sources(d["path"], d["keys"], aliases)
+    plan["md"] = pinned
+    return plan
+
+
+def _key_sources(path: str, keys: list, aliases: dict) -> list:
+    """The column each equality key is stored under in one delete file:
+    its pinned name, or a former name when the file predates a rename."""
+    if not any(aliases.get(k) for k in keys):
+        return list(keys)
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.sources.fs import task_fs
+
+    fs, rel = task_fs(path)
+    names = set(pq.read_schema(rel, filesystem=fs).names)
+    out = []
+    for k in keys:
+        src = next((c for c in (k, *aliases.get(k, ())) if c in names), None)
+        if src is None:
+            raise ValueError(f"equality delete {path} holds none of "
+                             f"{[k, *aliases.get(k, ())]}")
+        out.append(src)
+    return out
 
 
 def _resolve_partition_filter(md: dict, partition_filter: dict
@@ -561,21 +686,19 @@ def datafile_columns_arrow(path: str, fmt: str,
     return out, table.num_rows
 
 
-def _scan_nonparquet_rows(spark: SparkSession, md: dict, files: dict,
-                          read_ddl: str) -> DataFrame:
+def _scan_nonparquet_rows(spark: SparkSession, md: dict,
+                          files: dict) -> DataFrame:
     """AVRO/ORC data files -> rows of the declared schema + (_fp, _pos)
     lineage, via one python task per file (these are foreign-interop
     files; the parquet fast path stays JVM-side). _pos is the record
     ordinal within the file — the positional-delete axis (spec)."""
     import pandas as pd
 
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ caller)
-
-    aliases = md.get("field_aliases") or {}
+    aliases = md["field_aliases"]
     wanted = {n: (t, tuple(aliases.get(n, ())))
               for n, t, _r in md["schema_fields"]}
     plan = [(p, f) for p, f in files.items()]
-    out_ddl = read_ddl + ", _fp string, _pos bigint"
+    out_ddl = md["schema_ddl"] + ", _fp string, _pos bigint"
 
     def scan(iterator):
         from parquet_toolkit_spark.sources.iceberg_compat import (
@@ -604,10 +727,11 @@ def _scan_nonparquet_rows(spark: SparkSession, md: dict, files: dict,
     return src.mapInPandas(scan, out_ddl)
 
 
-def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
-    """Scan a snapshot's data files with positional deletes applied,
-    keeping row lineage columns (_fp = normalized source file path,
-    _pos = row index) for callers that need them (delete_where).
+def _scan_live_rows(spark: SparkSession, plan: dict) -> DataFrame:
+    """Execute a scan plan (scan_plan's dict) on the JVM: the plan's data
+    files with positional and equality deletes applied, keeping row
+    lineage columns (_fp = normalized source file path, _pos = row
+    index) for callers that need them (delete_where).
 
     The delete parquet rows (file_path, pos) anti-join the data rows on
     (normalized _metadata.file_path, _metadata.row_index) — a distributed
@@ -618,14 +742,14 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
 
     # rename evolution (r6): pre-rename data files store a renamed column
     # under its former name. Spark fills absent declared columns with
-    # null per file, so reading the current schema EXTENDED with the
+    # null per file, so reading the pinned schema EXTENDED with the
     # alias columns and coalescing (current, older...) resolves each
     # field from whichever name its file carries — exact because a file
-    # holds a field under exactly one name and ambiguity refuses below.
-    aliases = md.get("field_aliases") or {}
+    # holds a field under exactly one name (pin_snapshot refuses ambiguity).
+    md = plan["md"]
+    aliases = md["field_aliases"]
     read_ddl = md["schema_ddl"]
     if aliases:
-        _check_alias_ambiguity(md)
         types = {n: t for n, t, _r in md["schema_fields"]}
         extra = [f"{a} {types[c]}"
                  for c, al in aliases.items() if c in types for a in al]
@@ -633,9 +757,9 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
             read_ddl = ", ".join([read_ddl] + extra)
     # spec data-file format dispatch (r6): PARQUET files ride the JVM
     # scan; AVRO/ORC interop files go through one python task per file
-    fmts = sf.get("file_formats") or {}
-    pq_files = [p for p in sf["data"] if p not in fmts]
-    other = {p: fmts[p] for p in sf["data"] if p in fmts}
+    fmts = plan["file_formats"]
+    pq_files = [p for p in plan["data"] if p not in fmts]
+    other = {p: fmts[p] for p in plan["data"] if p in fmts}
     parts = []
     if pq_files:
         df = (
@@ -652,12 +776,11 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
                 df = df.withColumn(c, F.coalesce(c, *al)).drop(*al)
         parts.append(df)
     if other:
-        parts.append(_scan_nonparquet_rows(spark, md, other,
-                                           md["schema_ddl"]))
+        parts.append(_scan_nonparquet_rows(spark, md, other))
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    if sf.get("partition_values"):
+    if plan["partition_values"]:
         # spec-partitioned data files don't carry their partition columns
         # (the values live in the manifest) — re-inject them via one
         # broadcast map keyed by file path, Iceberg's own read semantics
@@ -665,14 +788,14 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
         # only identity transforms re-inject: a foreign table's derived
         # partition fields (id_bucket, ts_day, ...) are not table columns
         # — the data files carry the real columns (code-review r4)
-        pcols = sorted({k for v in sf["partition_values"].values()
+        pcols = sorted({k for v in plan["partition_values"].values()
                         for k in v if k in ddl_types})
         if pcols:
             pmap = spark.createDataFrame(
                 [tuple([_norm_fp(fp)]
                        + [_pv_to_spark(vals.get(c), ddl_types[c])
                           for c in pcols])
-                 for fp, vals in sf["partition_values"].items()],
+                 for fp, vals in plan["partition_values"].items()],
                 ", ".join(["_pv_fp string"]
                           + [f"_pv_{c} {ddl_types[c]}" for c in pcols]),
             )
@@ -682,12 +805,12 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
                 df = (df.withColumn(c, F.coalesce(F.col(c),
                                                   F.col(f"_pv_{c}")))
                       .drop(f"_pv_{c}"))
-    if sf["position_deletes"]:
+    if plan["position_deletes"]:
         dels = (
             # explicit spec schema (file_path string, pos long): skips the
             # footer schema-inference job per read
             spark.read.schema("file_path STRING, pos BIGINT")
-            .parquet(*sf["position_deletes"])
+            .parquet(*plan["position_deletes"])
             .select(
                 F.regexp_replace(F.col("file_path"), _STRIP_FILE_SCHEME, "")
                 .alias("_del_fp"),
@@ -699,7 +822,7 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
         # relocated table re-roots those via the same mapping the manifest
         # walk produced (broadcast: one row per live data file)
         fmap = spark.createDataFrame(
-            list(sf["raw_to_resolved"].items()),
+            list(plan["raw_to_resolved"].items()),
             "_del_fp string, _res_fp string",
         )
         dels = (
@@ -709,8 +832,8 @@ def _scan_live_rows(spark: SparkSession, md: dict, sf: dict) -> DataFrame:
         )
         df = df.join(dels, (F.col("_fp") == F.col("_del_fp"))
                      & (F.col("_pos") == F.col("_del_pos")), "left_anti")
-    if sf.get("equality_deletes"):
-        df = _apply_equality_deletes(spark, df, md, sf)
+    if plan["equality_deletes"]:
+        df = _apply_equality_deletes(spark, df, plan)
     return df
 
 
@@ -739,8 +862,8 @@ def _pv_to_spark(v, ddl: str):
     return v
 
 
-def _apply_equality_deletes(spark: SparkSession, df: DataFrame, md: dict,
-                            sf: dict) -> DataFrame:
+def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
+                            plan: dict) -> DataFrame:
     """Anti-join equality-delete rows against the data rows.
 
     Spec semantics: a delete row removes every data row whose values on
@@ -750,65 +873,29 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame, md: dict,
     commit survive. One left_anti per distinct key-column set (delete
     files sharing a key set are unioned, each tagged with its own seq);
     the equi part of the condition keys the hash join, the seq comparison
-    rides along as a join filter, so this stays a distributed equi-join."""
+    rides along as a join filter, so this stays a distributed equi-join.
+    Key names and each file's source columns come from scan_plan."""
     from collections import defaultdict
 
     from pyspark.sql import functions as F
 
-    id_to_name = md.get("schema_id_to_name", {})
     seq_df = spark.createDataFrame(
-        [(_norm_fp(fp), int(s)) for fp, s in sf["data_seq"].items()],
+        [(_norm_fp(fp), int(s)) for fp, s in plan["data_seq"].items()],
         "_seq_fp string, _dseq long")
     df = df.join(F.broadcast(seq_df), df["_fp"] == seq_df["_seq_fp"],
                  "left").drop("_seq_fp")
 
     by_keyset: dict[tuple, list[dict]] = defaultdict(list)
-    for d in sf["equality_deletes"]:
-        names = []
-        for fid in d["equality_ids"]:
-            if fid not in id_to_name:
-                raise NotImplementedError(
-                    f"equality delete {d['path']} references unknown "
-                    f"field id {fid}"
-                )
-            names.append(id_to_name[fid])
-        by_keyset[tuple(sorted(names))].append(d)
-
-    aliases = md.get("field_aliases") or {}
-    _names_memo: dict[str, set] = {}
-
-    def _key_src(path: str, k: str) -> str:
-        # a delete file written BEFORE a rename stores the key column
-        # under its former name — resolve per file through the alias
-        # chain (driver-side footer read, one per FILE via the memo;
-        # delete descriptors are already a driver-side walk)
-        if not aliases.get(k):
-            return k
-        names = _names_memo.get(path)
-        if names is None:
-            import pyarrow.parquet as pq
-
-            from parquet_toolkit_spark.sources.fs import task_fs
-
-            fs, rel = task_fs(path)
-            names = set(pq.read_schema(rel, filesystem=fs).names)
-            _names_memo[path] = names
-        if k in names:
-            return k
-        src = next((a for a in aliases[k] if a in names), None)
-        if src is None:
-            raise ValueError(
-                f"equality delete {path} holds none of {[k, *aliases[k]]}")
-        return src
-
+    for d in plan["equality_deletes"]:
+        by_keyset[tuple(sorted(d["keys"]))].append(d)
     for keys, files in by_keyset.items():
-        parts = [
-            spark.read.parquet(f["path"])
-            .select(*[F.col(_key_src(f["path"], k)).alias(f"_eq_{k}")
-                      for k in keys])
-            .withColumn("_eq_seq", F.lit(int(f["seq"])))
-            for f in files
-        ]
+        parts = []
+        for f in files:
+            src = dict(zip(f["keys"], f["key_src"]))
+            parts.append(
+                spark.read.parquet(f["path"])
+                .select(*[F.col(src[k]).alias(f"_eq_{k}") for k in keys])
+                .withColumn("_eq_seq", F.lit(int(f["seq"]))))
         dels = parts[0]
         for p in parts[1:]:
             dels = dels.unionByName(p)
@@ -863,70 +950,18 @@ def read_data(spark: SparkSession, table_dir: str,
     residual filtering is still the caller's .where() — pair them
     (`read_data(..., range_filter={"id": (a, b)}).where(...)`) for
     exact results with pruned IO."""
-    md = read_table_metadata(table_dir, spark)
-    if as_of_ms is not None:
-        if snapshot_id is not None:
-            raise ValueError("pass snapshot_id OR as_of_ms, not both")
-        snapshot_id = snapshot_id_as_of(md, as_of_ms)
-    if snapshot_id is not None:
-        # time travel reads the snapshot's pinned schema (evolution-aware):
-        # pre-rename snapshots keep reading with the names they were
-        # written under, and their alias chains re-key to those names
-        snap = next((s for s in md["snapshots"]
-                     if s["snapshot_id"] == snapshot_id), None)
-        sid = snap.get("schema_id") if snap else None
-        if sid is not None and sid in md["schemas_by_id"]:
-            sf_fields = md["schemas_by_id"][sid]
-            raw = md.get("_raw_schemas", [])
-            pinned = next((s for s in raw
-                           if s.get("schema-id", 0) == sid), None)
-            md = {**md, "schema_fields": sf_fields,
-                  "schema_ddl": ", ".join(f"{n} {t}"
-                                          for n, t, _r in sf_fields),
-                  "field_aliases": (_field_aliases(raw, pinned)
-                                    if pinned is not None else {})}
-            if pinned is not None:
-                # equality-delete key resolution must use the PINNED
-                # names too — a delete on a later-renamed column would
-                # otherwise resolve to the current name while the scan
-                # carries the old one (code-review r6)
-                md["schema_id_to_name"] = {
-                    f.get("id", i + 1): f["name"]
-                    for i, f in enumerate(pinned["fields"])}
-    sf = snapshot_files(table_dir, snapshot_id, spark,
-                        partition_filter=partition_filter,
-                        range_filter=range_filter)
-    if not sf["data"]:  # fully-deleted table: empty frame, declared schema
+    return _read_plan(spark, scan_plan(table_dir, snapshot_id, spark,
+                                       partition_filter, range_filter,
+                                       as_of_ms))
+
+
+def _read_plan(spark: SparkSession, plan: dict) -> DataFrame:
+    """A plan's live rows in its pinned schema (no lineage columns)."""
+    md = plan["md"]
+    if not plan["data"]:  # fully-deleted table: empty frame, declared schema
         return spark.createDataFrame([], md["schema_ddl"])
-    cols = [f[0] for f in md["schema_fields"]]
-    return _scan_live_rows(spark, md, sf).select(*cols)
-
-
-def read_data_fallback(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read an Iceberg table's data files with the DECLARED schema but
-    without manifest pruning (directory scan) — kept as the labeled
-    fallback for metadata-only layouts missing manifest files; read_data
-    (manifest-exact) is the primary path.
-
-    Exact for append-only tables with no replace/delete snapshots — the
-    10^12-file source-code corpus shape — and raises when the snapshot
-    summary says files were removed (a scan would resurrect them)."""
-    md = read_table_metadata(table_dir, spark)
-    for s in md["snapshots"]:
-        op = s["summary"].get("operation", "append")
-        if op not in ("append",):
-            raise NotImplementedError(
-                f"snapshot {s['snapshot_id']} is {op!r}: exact reads need "
-                "manifest pruning (Iceberg runtime / pyiceberg); the "
-                "directory scan below is only safe for append-only tables"
-            )
-    import posixpath
-
-    return (
-        spark.read.schema(md["schema_ddl"])
-        .option("recursiveFileLookup", "true")
-        .parquet(posixpath.join(table_dir.rstrip("/"), "data"))
-    )
+    return _scan_live_rows(spark, plan).select(
+        *[n for n, _t, _r in md["schema_fields"]])
 
 
 # ------------------------------------------------------- write / commit
@@ -2097,8 +2132,7 @@ def _prior_manifest_rows(existing: dict | None, table_dir: str,
     field set (v1/hand-built lists may omit counters)."""
     if existing is None or existing["current_snapshot_id"] is None:
         return []
-    cur = next(s for s in existing["snapshots"]
-               if s["snapshot_id"] == existing["current_snapshot_id"])
+    cur = _snapshot(existing, None, table_dir)
     mlist_path = _resolve_path(cur["manifest_list"], table_dir,
                                existing["location"])
     rows = []
@@ -2225,17 +2259,17 @@ def delete_where(spark: SparkSession, table_dir: str,
     import os
 
     table_dir = strip_local_scheme(table_dir).rstrip("/")
-    existing = read_table_metadata(table_dir, spark)
+    plan = scan_plan(table_dir, None, spark)
+    existing = plan["md"]
     _require_writable(existing)
-    sf = snapshot_files(table_dir, None, spark)
-    if not sf["data"]:
+    if not plan["data"]:
         return {"snapshot_id": None, "version": None, "deleted_rows": 0,
                 "delete_file": None}
     meta_dir = os.path.join(table_dir, "metadata")
     data_dir = os.path.join(table_dir, "data")
     # prior deletes already applied; _fp/_pos carry the row lineage
     hits = (
-        _scan_live_rows(spark, existing, sf)
+        _scan_live_rows(spark, plan)
         .where(condition)
         .select(F.col("_fp").alias("file_path"),
                 F.col("_pos").alias("pos"))
@@ -2414,9 +2448,9 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
     table_dir = strip_local_scheme(table_dir).rstrip("/")
     if sort_by and zorder_by:
         raise ValueError("sort_by and zorder_by are mutually exclusive")
-    existing = read_table_metadata(table_dir, spark)
+    sf = scan_plan(table_dir, None, spark)
+    existing = sf["md"]
     _require_writable(existing)
-    sf = snapshot_files(table_dir, None, spark)
     meta_dir = os.path.join(table_dir, "metadata")
     data_dir = os.path.join(table_dir, "data")
 
@@ -2425,7 +2459,7 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
                                data_dir, sort_by, zorder_by,
                                binary_target_bytes)
 
-    df = read_data(spark, table_dir)
+    df = _read_plan(spark, sf)
     sort_orders = None
     sort_order_id = None
     if zorder_by:
@@ -2790,12 +2824,7 @@ def table_files(spark: SparkSession, table_dir: str,
     import json
 
     md = read_table_metadata(table_dir, spark)
-    sid = (snapshot_id if snapshot_id is not None
-           else md["current_snapshot_id"])
-    snap = next((s for s in md["snapshots"] if s["snapshot_id"] == sid),
-                None)
-    if snap is None:
-        raise ValueError(f"snapshot {sid} not found in {table_dir}")
+    snap = _snapshot(md, snapshot_id, table_dir)
     types = {n: t for n, t, _r in md["schema_fields"]}
     fid_to_name = md["schema_id_to_name"]
 
@@ -2809,28 +2838,20 @@ def table_files(spark: SparkSession, table_dir: str,
             out[name] = v
         return json.dumps(out, sort_keys=True, default=str) if out else None
 
-    mlist = _resolve_path(snap["manifest_list"], table_dir, md["location"])
     rows = []
-    for mf in read_manifest_list(mlist, spark):
-        mpath = _resolve_path(mf["manifest_path"], table_dir, md["location"])
-        for e in read_manifest(mpath, spark):
-            if e.get("status", 0) == 2:
-                continue
-            d = e["data_file"]
-            seq = e.get("sequence_number")
-            if seq is None:
-                seq = mf.get("sequence_number", 0)
-            rows.append((
-                int(d.get("content", 0)),
-                _resolve_path(d["file_path"], table_dir, md["location"]),
-                int(d.get("record_count", 0)),
-                int(d.get("file_size_in_bytes", 0)),
-                int(seq),
-                json.dumps(dict(d.get("partition") or {}), sort_keys=True,
-                           default=str) or "{}",
-                _decode_bounds(d, "lower_bounds"),
-                _decode_bounds(d, "upper_bounds"),
-            ))
+    for e in _manifest_entries(md, table_dir, snap, spark):
+        d = e["data_file"]
+        rows.append((
+            int(d.get("content", 0)),
+            e["path"],
+            int(d.get("record_count", 0)),
+            int(d.get("file_size_in_bytes", 0)),
+            int(e["sequence_number"]),
+            json.dumps(dict(d.get("partition") or {}), sort_keys=True,
+                       default=str) or "{}",
+            _decode_bounds(d, "lower_bounds"),
+            _decode_bounds(d, "upper_bounds"),
+        ))
     return spark.createDataFrame(
         rows, "content int, file_path string, record_count long, "
               "file_size_in_bytes long, sequence_number long, "
@@ -2839,15 +2860,12 @@ def table_files(spark: SparkSession, table_dir: str,
 
 def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
     """Snapshot log: made_current_at_ms, snapshot_id, is_current."""
-    import json
-
-    with open(read_table_metadata(table_dir, spark)["metadata_file"]) as fh:
-        md = json.load(fh)
-    cur = md.get("current-snapshot-id")
+    md = read_table_metadata(table_dir, spark)
+    cur = md["current_snapshot_id"]
     rows = [
-        (int(e["timestamp-ms"]), int(e["snapshot-id"]),
-         e["snapshot-id"] == cur)
-        for e in md.get("snapshot-log", [])
+        (int(e["timestamp_ms"]), int(e["snapshot_id"]),
+         e["snapshot_id"] == cur)
+        for e in md["snapshot_log"]
     ]
     return spark.createDataFrame(
         rows, "made_current_at_ms long, snapshot_id long, "
@@ -2965,22 +2983,21 @@ def incremental_scan(spark: SparkSession, table_dir: str,
     # ids are random 64-bit values (code-review r4)
     snaps = md["snapshots"]
     ids = [s["snapshot_id"] for s in snaps]
-    to_id = to_snapshot_id if to_snapshot_id is not None else \
-        md["current_snapshot_id"]
-    if to_id not in ids:
-        raise ValueError(f"snapshot {to_id} not found in {table_dir}")
-    if from_snapshot_id is not None and from_snapshot_id not in ids:
-        if not allow_expired_from:
-            raise ValueError(
-                f"snapshot {from_snapshot_id} not found in {table_dir} "
-                "(expired watermark? pass allow_expired_from=True)")
-        return _scan_added_after(spark, md, table_dir, from_snapshot_id,
-                                 to_id, snaps, ids)
-    lo = -1 if from_snapshot_id is None else ids.index(from_snapshot_id)
-    hi = ids.index(to_id)
-    covered = snaps[lo + 1:hi + 1]
-
-    added: list[str] = []
+    to_snap = _snapshot(md, to_snapshot_id, table_dir)
+    hi = ids.index(to_snap["snapshot_id"])
+    expired = from_snapshot_id is not None and from_snapshot_id not in ids
+    if expired and not allow_expired_from:
+        raise ValueError(
+            f"snapshot {from_snapshot_id} not found in {table_dir} "
+            "(expired watermark? pass allow_expired_from=True)")
+    if expired:
+        # every retained snapshot above the watermark must be a pure
+        # append: a rewrite would have restamped rows under a new id
+        covered = [s for s in snaps[:hi + 1]
+                   if s["snapshot_id"] > from_snapshot_id]
+    else:
+        lo = -1 if from_snapshot_id is None else ids.index(from_snapshot_id)
+        covered = snaps[lo + 1:hi + 1]
     for s in covered:
         op = s.get("summary", {}).get("operation", "append")
         if op != "append":
@@ -2989,88 +3006,15 @@ def incremental_scan(spark: SparkSession, table_dir: str,
                 f"with operation={op!r}: only pure append ranges have "
                 "append-scan semantics"
             )
-        mlist = _resolve_path(s["manifest_list"], table_dir, md["location"])
-        for mf in read_manifest_list(mlist, spark):
-            mpath = _resolve_path(mf["manifest_path"], table_dir,
-                                  md["location"])
-            for e in read_manifest(mpath, spark):
-                # spec: an entry's snapshot_id may be null, inherited from
-                # the manifest-list row's added_snapshot_id (same rule as
-                # sequence-number inheritance) — foreign-written manifests
-                # use this; dropping them would under-read (ADVICE r4)
-                eid = e.get("snapshot_id")
-                if eid is None:
-                    eid = mf.get("added_snapshot_id")
-                if (e.get("status", 0) == 1
-                        and eid == s["snapshot_id"]
-                        and e["data_file"].get("content", 0) == 0):
-                    added.append(_resolve_path(e["data_file"]["file_path"],
-                                               table_dir, md["location"]))
-    if not added:
-        return spark.createDataFrame([], md["schema_ddl"])
-    cols = [f[0] for f in md["schema_fields"]]
-    full = snapshot_files(table_dir, to_id, spark)
-    added_set = set(added)
-    sf = {"data": added, "position_deletes": [], "equality_deletes": [],
-          "data_seq": {}, "raw_to_resolved": {},
-          "partition_values": {
-              p: v for p, v in full["partition_values"].items()
-              if p in added_set},
-          # AVRO/ORC interop files must keep their format through the
-          # incremental path too (code-review r6)
-          "file_formats": {
-              p: f for p, f in full.get("file_formats", {}).items()
-              if p in added_set}}
-    return _scan_live_rows(spark, md, sf).select(*cols)
-
-
-def _scan_added_after(spark: SparkSession, md: dict, table_dir: str,
-                      after_id: int, to_id: int, snaps: list,
-                      ids: list) -> DataFrame:
-    """Expired-watermark recovery for incremental_scan: live data-file
-    entries of `to_id` whose committing snapshot id is > after_id.
-    Retained snapshots above the watermark must all be pure appends —
-    a rewrite would have restamped rows under a new id and broken the
-    'added after' meaning."""
-    hi = ids.index(to_id)
-    for s in snaps[:hi + 1]:
-        if s["snapshot_id"] > after_id:
-            op = s.get("summary", {}).get("operation", "append")
-            if op != "append":
-                raise NotImplementedError(
-                    f"expired-watermark recovery crossed snapshot "
-                    f"{s['snapshot_id']} with operation={op!r}"
-                )
-    snap = snaps[hi]
-    mlist = _resolve_path(snap["manifest_list"], table_dir, md["location"])
-    added: list[str] = []
-    for mf in read_manifest_list(mlist, spark):
-        mpath = _resolve_path(mf["manifest_path"], table_dir,
-                              md["location"])
-        for e in read_manifest(mpath, spark):
-            # null snapshot_id inherits the manifest's added_snapshot_id
-            # (same spec rule as in incremental_scan above)
-            eid = e.get("snapshot_id")
-            if eid is None:
-                eid = mf.get("added_snapshot_id")
-            if (e.get("status", 0) != 2
-                    and (eid or 0) > after_id
-                    and e["data_file"].get("content", 0) == 0):
-                added.append(_resolve_path(e["data_file"]["file_path"],
-                                           table_dir, md["location"]))
-    if not added:
-        return spark.createDataFrame([], md["schema_ddl"])
-    cols = [f[0] for f in md["schema_fields"]]
-    full = snapshot_files(table_dir, to_id, spark)
-    added_set = set(added)
-    sf = {"data": added, "position_deletes": [], "equality_deletes": [],
-          "data_seq": {}, "raw_to_resolved": {},
-          "partition_values": {
-              p: v for p, v in full["partition_values"].items()
-              if p in added_set},
-          # AVRO/ORC interop files must keep their format through the
-          # incremental path too (code-review r6)
-          "file_formats": {
-              p: f for p, f in full.get("file_formats", {}).items()
-              if p in added_set}}
-    return _scan_live_rows(spark, md, sf).select(*cols)
+    # expired watermark: the `to` snapshot's live entries committed after
+    # it; otherwise each covered snapshot's entries ADDED by itself
+    plan = _empty_files()
+    for snap in [to_snap] if expired else covered:
+        for e in _manifest_entries(md, table_dir, snap, spark):
+            eid = e["snapshot_id"]
+            new = ((eid or 0) > from_snapshot_id if expired else
+                   e.get("status", 0) == 1 and eid == snap["snapshot_id"])
+            if new and e["data_file"].get("content", 0) == 0:
+                _add_data_file(plan, e)
+    plan["md"] = pin_snapshot(md, table_dir)
+    return _read_plan(spark, plan)

@@ -7,14 +7,18 @@ source:
     spark.read.format("iceberg_fs").load(table_dir).where("lang = 'py'")
     spark.read.format("iceberg_fs").option("snapshot", "3").load(tdir)
 
-Planning walks the metadata + Avro manifest layer driver-side (no nested
-Spark jobs) and prunes DATA FILES with the pushed filters: equalities
-map to partition_filter (transform-aware — a filter on a bucketed or
-day-partitioned SOURCE column prunes through the spec transform) and to
-point range_filters over the manifest's per-file column bounds;
-inequalities tighten the range_filters. All filters are returned as
-residual — file pruning admits supersets, Spark applies the exact
-predicate row-level.
+Planning comes from iceberg_compat.scan_plan, the same plan read_data
+executes: the snapshot the options select ("snapshot" or
+"as-of-timestamp", never both), its pinned schema, rename aliases, live
+files and equality-delete key names. This module resolves none of these
+itself. It turns the pushed filters into the plan's file pruning, which
+walks the metadata + Avro manifest layer driver-side (no nested Spark
+jobs): equalities map to partition_filter (transform-aware — a filter on
+a bucketed or day-partitioned SOURCE column prunes through the spec
+transform) and to point range_filters over the manifest's per-file
+column bounds; inequalities tighten the range_filters. All filters are
+returned as residual — file pruning admits supersets, Spark applies the
+exact predicate row-level.
 
 Reads are task-local pyarrow with full merge-on-read semantics applied
 PER TASK (no shuffle): positional deletes mask row indices of their
@@ -32,7 +36,6 @@ files plus the snapshot-level delete descriptors.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -128,62 +131,36 @@ class IcebergFsReader(DataSourceReader):
         return part_filter, range_filter
 
     def partitions(self):
-        from parquet_toolkit_spark.sources.iceberg_compat import (
-            read_table_metadata,
-            snapshot_files,
-        )
-
-        md = read_table_metadata(self.path, None)
-        part_filter, range_filter = self._pruning_args()
-        sf = snapshot_files(self.path, self.snapshot, None,
-                            partition_filter=part_filter or None,
-                            range_filter=range_filter or None)
-        schema_fields = _snapshot_schema_fields(md, self.snapshot)
-        _check_readable_types(schema_fields)
-        id_to_name = _snapshot_id_to_name(md, self.snapshot)
-        eq_deletes = []
-        for d in sf["equality_deletes"]:
-            names = [id_to_name.get(fid) for fid in d["equality_ids"]]
-            if any(n is None for n in names):
-                raise NotImplementedError(
-                    f"equality delete {d['path']} references unknown "
-                    "field ids")
-            eq_deletes.append({"path": d["path"], "seq": int(d["seq"]),
-                               "keys": names})
-        resolved_to_raw = {v: k for k, v in sf["raw_to_resolved"].items()}
-        fmts = sf.get("file_formats") or {}
-        files = []
-        for p in sf["data"]:
-            files.append({
-                "path": p,
-                "raw": resolved_to_raw.get(p, p),
-                "seq": int(sf["data_seq"].get(p, 0)),
-                "pvals": sf["partition_values"].get(p, {}),
-                "size": os.path.getsize(p) if os.path.exists(p) else 0,
-                "fmt": fmts.get(p, "PARQUET"),
-            })
-        if not files:
-            return []
+        from parquet_toolkit_spark.sources.iceberg_compat import scan_plan
         from parquet_toolkit_spark.sources.ptsc_datasource import (
             bundle_by_size,
         )
 
+        part_filter, range_filter = self._pruning_args()
+        plan = scan_plan(self.path, self.snapshot, None,
+                         partition_filter=part_filter or None,
+                         range_filter=range_filter or None)
+        md = plan["md"]
+        _check_readable_types(md["schema_fields"])
+        resolved_to_raw = {v: k for k, v in plan["raw_to_resolved"].items()}
+        files = [{
+            "path": p,
+            "raw": resolved_to_raw.get(p, p),
+            "seq": int(plan["data_seq"].get(p, 0)),
+            "pvals": plan["partition_values"].get(p, {}),
+            "size": os.path.getsize(p) if os.path.exists(p) else 0,
+            "fmt": plan["file_formats"].get(p, "PARQUET"),
+        } for p in plan["data"]]
+        if not files:
+            return []
         # rename evolution (r6): pre-rename data files carry a column
         # under its former name; read() falls back through the alias
-        # chain per file (ambiguous reuse refuses at planning)
-        aliases = _snapshot_aliases(md, self.snapshot)
-        if aliases:
-            from parquet_toolkit_spark.sources.iceberg_compat import (
-                _check_alias_ambiguity,
-            )
-
-            _check_alias_ambiguity(
-                {"schema_fields": schema_fields, "field_aliases": aliases})
+        # chain per file
         shared = {
-            "schema": [(n, t) for n, t, _r in schema_fields],
-            "aliases": aliases,
-            "pos_deletes": sf["position_deletes"],
-            "eq_deletes": eq_deletes,
+            "schema": [(n, t) for n, t, _r in md["schema_fields"]],
+            "aliases": md["field_aliases"],
+            "pos_deletes": plan["position_deletes"],
+            "eq_deletes": plan["equality_deletes"],
         }
         return [InputPartition({"files": b, **shared})
                 for b in bundle_by_size(files, size_of=lambda f: f["size"])]
@@ -209,14 +186,10 @@ class IcebergFsReader(DataSourceReader):
         # mtime) so with worker reuse each delete file is read ~once per
         # worker, not once per bundle (code-review r4)
         pos_by_file = _pos_deletes_cached(tuple(spec["pos_deletes"]))
-        aliases = spec.get("aliases") or {}
-        eq_sets = [
-            (d["seq"], d["keys"],
-             _eq_delete_rows_cached(
-                 d["path"], tuple(d["keys"]),
-                 tuple(tuple(aliases.get(k, ())) for k in d["keys"])))
-            for d in spec["eq_deletes"]
-        ]
+        aliases = spec["aliases"]
+        eq_sets = [(d["seq"], d["keys"],
+                    _eq_delete_rows_cached(d["path"], tuple(d["key_src"])))
+                   for d in spec["eq_deletes"]]
 
         wanted = {n: (t, tuple(aliases.get(n, ())))
                   for n, t in spec["schema"]}
@@ -292,79 +265,19 @@ def _pos_deletes_cached(paths: tuple) -> dict:
     return hit
 
 
-def _eq_delete_rows_cached(path: str, keys: tuple,
-                           aliases: tuple = ()) -> set:
-    """Key-tuple set of one equality-delete file. `aliases` carries, per
-    key, the former names the SAME field id had (rename evolution) — a
-    delete file written pre-rename stores the column under one of those."""
+def _eq_delete_rows_cached(path: str, columns: tuple) -> set:
+    """Key-tuple set of one equality-delete file, read from the columns
+    scan_plan resolved for it (a file written before a rename stores a
+    key under a former name)."""
     import pyarrow.parquet as pq
 
-    key = ("eq", _cache_key(path, (keys, aliases)))
+    key = ("eq", _cache_key(path, columns))
     hit = _DELETE_CACHE.get(key)
     if hit is None:
-        names = set(pq.read_schema(path).names)
-        src = []
-        for i, k in enumerate(keys):
-            al = aliases[i] if i < len(aliases) else ()
-            s = k if k in names else next(
-                (a for a in al if a in names), None)
-            if s is None:
-                raise ValueError(
-                    f"equality delete {path} holds none of {[k, *al]}")
-            src.append(s)
-        t = pq.read_table(path, columns=src)
-        hit = set(zip(*(t.column(s).to_pylist() for s in src)))
+        t = pq.read_table(path, columns=list(columns))
+        hit = set(zip(*(t.column(c).to_pylist() for c in columns)))
         _DELETE_CACHE[key] = hit
     return hit
-
-
-def _snapshot_schema_fields(md: dict, snapshot_id: int | None) -> list:
-    """Schema fields for the requested snapshot (evolution-aware pin),
-    mirroring read_data's time-travel schema resolution."""
-    if snapshot_id is not None:
-        snap = next((s for s in md["snapshots"]
-                     if s["snapshot_id"] == snapshot_id), None)
-        sid = snap.get("schema_id") if snap else None
-        if sid is not None and sid in md.get("schemas_by_id", {}):
-            return md["schemas_by_id"][sid]
-    return md["schema_fields"]
-
-
-def _pinned_schema(md: dict, snapshot_id: int | None) -> dict | None:
-    """Raw spec-shaped schema a snapshot is pinned to, or None for the
-    current-schema read (and for snapshots without a resolvable pin)."""
-    if snapshot_id is None:
-        return None
-    snap = next((s for s in md["snapshots"]
-                 if s["snapshot_id"] == snapshot_id), None)
-    sid = snap.get("schema_id") if snap else None
-    if sid is None:
-        return None
-    return next((s for s in md.get("_raw_schemas", [])
-                 if s.get("schema-id", 0) == sid), None)
-
-
-def _snapshot_id_to_name(md: dict, snapshot_id: int | None) -> dict:
-    """field-id -> name under the schema this read is pinned to:
-    equality-delete keys must resolve to the SAME name generation the
-    scan carries (code-review r6)."""
-    pinned = _pinned_schema(md, snapshot_id)
-    if pinned is None:
-        return md.get("schema_id_to_name", {})
-    return {f.get("id", i + 1): f["name"]
-            for i, f in enumerate(pinned["fields"])}
-
-
-def _snapshot_aliases(md: dict, snapshot_id: int | None) -> dict:
-    """Field-rename alias chain for the schema this read is pinned to:
-    current-schema aliases normally, recomputed against the snapshot's
-    pinned schema for time travel."""
-    pinned = _pinned_schema(md, snapshot_id)
-    if pinned is None:
-        return md.get("field_aliases") or {}
-    from parquet_toolkit_spark.sources.iceberg_compat import _field_aliases
-
-    return _field_aliases(md.get("_raw_schemas", []), pinned)
 
 
 class IcebergFsDataSource(DataSource):
@@ -372,35 +285,26 @@ class IcebergFsDataSource(DataSource):
     def name(cls) -> str:
         return "iceberg_fs"
 
-    def _snapshot(self) -> int | None:
-        s = self.options.get("snapshot")
-        if s is not None:
-            return int(s)
-        ts = self.options.get("as-of-timestamp")
-        if ts is not None:
-            # epoch millis, like Spark's own Iceberg option: resolve to
-            # the latest snapshot committed at or before it (driver-side
-            # metadata read, one small json)
-            from parquet_toolkit_spark.sources.iceberg_compat import (
-                read_table_metadata,
-                snapshot_id_as_of,
-            )
-
-            md = read_table_metadata(self.options["path"], None)
-            return snapshot_id_as_of(md, int(ts))
-        return None
-
-    def schema(self) -> str:
+    def _pinned(self) -> dict:
+        """Table metadata pinned to the snapshot the options select."""
         from parquet_toolkit_spark.sources.iceberg_compat import (
+            pin_snapshot,
             read_table_metadata,
         )
 
         path = self.options.get("path")
         if not path:
             raise ValueError("iceberg_fs source needs .load(<table_dir>)")
-        md = read_table_metadata(path, None)
-        fields = _snapshot_schema_fields(md, self._snapshot())
-        return ", ".join(f"`{n}` {t}" for n, t, _r in fields)
+        snap, ts = (self.options.get(k)
+                    for k in ("snapshot", "as-of-timestamp"))
+        return pin_snapshot(read_table_metadata(path, None), path,
+                            None if snap is None else int(snap),
+                            None if ts is None else int(ts))
+
+    def schema(self) -> str:
+        return ", ".join(f"`{n}` {t}"
+                         for n, t, _r in self._pinned()["schema_fields"])
 
     def reader(self, schema) -> IcebergFsReader:
-        return IcebergFsReader(self.options["path"], self._snapshot())
+        return IcebergFsReader(self.options["path"],
+                               self._pinned()["snapshot_id"])
