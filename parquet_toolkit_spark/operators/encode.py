@@ -1,7 +1,8 @@
 """Columnar encode/decode pipeline with manifest + checkpoint-resume.
 
-The north-rule core: layout (repartitionByRange + sortWithinPartitions,
-reproducing the toolkit's merge/sort/split) → per-partition, per-column
+The north-rule core: layout (a range shuffle on driver-picked bounds +
+sortWithinPartitions, reproducing the toolkit's merge/sort/split; see
+plan_layout) → per-partition, per-column
 codec-encoded blobs via Arrow-vectorized UDFs (never per-row Python; the
 store jobs run one Python stage per task over a spark.range frame, see
 _striped_tasks) → per-partition lineage/metrics manifest → resumable
@@ -9,8 +10,12 @@ re-runs that skip committed partitions (Spark-native analogue of the
 reference's `alreadyMerged`/`brokenFiles` bookkeeping, merge/
 ParquetMergerImpl.java:28-30, and its temp-suffix atomic commit,
 SimpleMergeThread.java:118-122 —
-here atomicity comes from the parquet committer + dynamic partition
-overwrite, so a re-encoded pid replaces its directory idempotently).
+here an encode_partitions or compact_store task writes its pid's blob
+file to a temp name and renames it into place, and encode_pipeline and
+the incremental encoders write blobs through Spark's parquet writer with
+dynamic partition overwrite, so a re-encoded pid replaces its blobs
+idempotently. Every writer's job hands its manifest rows to the driver,
+and the manifest swap in sources/store.commit makes the run visible).
 
 Two modes:
   encode_pipeline()     one job, layout+encode fused (fastest; bench path)
@@ -35,12 +40,7 @@ from pyspark.sql import functions as F
 
 from parquet_toolkit_spark.operators.layout import sampled_width_and_rows
 from parquet_toolkit_spark.sources import store
-from parquet_toolkit_spark.sources.store import (
-    MANIFEST_COLS,
-    MANIFEST_DDL,
-    MANIFEST_SCHEMA,
-    read_manifest,
-)
+from parquet_toolkit_spark.sources.store import MANIFEST_DDL, read_manifest
 
 # one encoded row per (pid, column): the manifest row less its status,
 # plus the codec blob
@@ -127,8 +127,7 @@ def _encode_columns(cols: dict[str, pa.Array], pid: int,
 
 
 _ENC_ARROW_SCHEMA = pa.schema(
-    [f for f in MANIFEST_SCHEMA if f.name != "status"]
-    + [("blob", pa.large_binary())])
+    list(store.ROWS_SCHEMA) + [("blob", pa.large_binary())])
 
 
 def _rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
@@ -227,9 +226,11 @@ def plan_layout(df: DataFrame, target_bytes: int,
     """Range-partition + sort the table into ~target_bytes partitions.
 
     Range partitioning on (repo, path) splits a skewed mega-repo across
-    partitions by path ranges (Catalyst samples the key distribution), so
-    layout skew is handled without salting; salting is for hash-based
-    groupBy aggregations (see operators/skew.py).
+    partitions by path ranges (layout.range_split picks the bounds on the
+    driver from a deterministic sample of the key columns), so layout
+    skew is handled without salting; salting is for hash-based groupBy
+    aggregations (see operators/skew.py). Partition i is pid i, and one
+    input always gives the same bounds.
 
     cluster_keys switches the layout to Z-order clustering (operators/
     zorder.py): partitions range over a Morton key interleaving the
@@ -239,35 +240,30 @@ def plan_layout(df: DataFrame, target_bytes: int,
     partition by the cluster columns themselves (compression locality),
     or by sort_keys when the caller overrides the default.
     """
-    n_rows: int | None = None
-    if n_partitions is None:
-        # bytes/row from the plan's input-file footers when the frame
-        # scans parquet (driver-side, no job — guide §1.2: the footers
-        # already know the width); the DECODED-width estimator, because a
-        # layout partition here is an encode scope whose working set is
-        # decoded Arrow columns — the serialized (dictionary-encoded)
-        # width under-sizes scopes 4-5x on numeric tables, leaving the
-        # encode stage with too few tasks (measured: lineitem@4MB target
-        # 4 scopes/1.8s vs 13 scopes/1.55s, and the 4-scope first run
-        # pays a 2x straggler). Derived/filtered columns only shift this
-        # sizing heuristic, never results. Fallback: one fused job for
-        # small tables (sampled width + exact count), two only past the
-        # sample size — see sampled_width_and_rows.
-        from parquet_toolkit_spark.operators.layout import (
-            _footer_decoded_bytes_per_row,
-        )
+    from parquet_toolkit_spark.operators.layout import (
+        _footer_decoded_bytes_per_row,
+        input_footers,
+        range_split,
+    )
 
-        bpr = None
-        try:
-            in_files = [f for f in df.inputFiles()
-                        if f.lower().endswith((".parq", ".parquet"))]
-        except Exception:
-            in_files = []
-        if in_files:
-            bpr = _footer_decoded_bytes_per_row(in_files)
-        if bpr is not None:
-            n_rows = df.count()  # metadata-driven vectorized count
-        else:
+    # one driver-side footer pass (no job): the exact row count of a
+    # frame that scans parquet, its width, and the row groups the range
+    # bounds are sampled from
+    footers = input_footers(df)
+    n_rows = sum(md.num_rows for _f, md in footers) if footers else None
+    if n_partitions is None:
+        # DECODED bytes/row from the footers: a layout partition here is
+        # an encode scope whose working set is decoded Arrow columns — the
+        # serialized (dictionary-encoded) width under-sizes scopes 4-5x on
+        # numeric tables, leaving the encode stage with too few tasks
+        # (measured: lineitem@4MB target 4 scopes/1.8s vs 13 scopes/1.55s,
+        # and the 4-scope first run pays a 2x straggler). A filtered or
+        # derived frame only shifts this sizing heuristic, never results.
+        # Fallback: one fused job for small tables (sampled width + exact
+        # count), two only past the sample size — see
+        # sampled_width_and_rows.
+        bpr = _footer_decoded_bytes_per_row([md for _f, md in footers])
+        if bpr is None:
             bpr, n_rows = sampled_width_and_rows(df)
         n_partitions = max(1, math.ceil(bpr * n_rows / target_bytes))
     if cluster_keys:
@@ -290,7 +286,7 @@ def plan_layout(df: DataFrame, target_bytes: int,
         )
         return out, n_partitions
     out = (
-        df.repartitionByRange(n_partitions, *[F.col(k) for k in range_keys])
+        range_split(df, range_keys, n_partitions, footers, n_rows)
         .sortWithinPartitions(*[F.col(k) for k in sort_keys])
     )
     return out, n_partitions
@@ -614,34 +610,14 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
                     break
                 yield encode_one(pid, table)
 
+    # the job's rows (blob dropped) come back to the driver and commit
+    # there; resume=False re-encodes every pid, so no old row survives
     new_rows = _striped_tasks(spark, task_rows, concurrency, encode_task,
-                              _ROWS_DDL)
-    # resume=False re-encodes every pid, so no old manifest row survives
-    _commit_rows(spark, dfs, out_dir, new_rows,
-                 pending if resume else None, schema_map)
+                              _ROWS_DDL).toArrow()
+    store.commit(dfs, out_dir, new_rows, pending if resume else None,
+                 schema_map)
     dfs.delete(tmp_dir, recursive=True)
     return read_manifest(spark, out_dir)
-
-
-def _commit_rows(spark: SparkSession, dfs, out_dir: str, rows: DataFrame,
-                 replaced: list[int] | None,
-                 schema_map: dict[str, str]) -> None:
-    """Swap-commit `rows` (encoded rows less the blob) as the manifest,
-    carrying over the committed rows of every pid not in `replaced`
-    (None: carry nothing over). ONE job: the producing tasks write the
-    manifest parts themselves — a repartition/coalesce added a shuffle
-    stage and a single-reducer wave per run."""
-    man = rows.withColumn("status", F.lit("committed")).select(*MANIFEST_COLS)
-
-    def stage(tmp_dir: str) -> None:
-        out = man
-        old = read_manifest(spark, out_dir) if replaced is not None else None
-        if old is not None:
-            out = (old.where(~F.col("pid").isin([int(p) for p in replaced]))
-                   .unionByName(man))
-        out.write.mode("overwrite").parquet(tmp_dir)
-
-    store.commit(dfs, out_dir, stage, schema_map)
 
 
 def _write_encoded(spark: SparkSession, encoded: DataFrame, out_dir: str,
@@ -682,7 +658,7 @@ def _write_encoded(spark: SparkSession, encoded: DataFrame, out_dir: str,
             return  # nothing actually landed; the manifest is unchanged
         rows = reader.option("basePath", blobs_dir).parquet(
             *[store.pid_dir(out_dir, p) for p in pids])
-    _commit_rows(spark, dfs, out_dir, rows.drop("blob"), pids, schema_map)
+    store.commit(dfs, out_dir, rows.drop("blob").toArrow(), pids, schema_map)
 
 
 def fsck_store(spark: SparkSession, enc_dir: str,
@@ -964,8 +940,8 @@ def compact_store(spark: SparkSession, enc_dir: str,
             yield batch.drop_columns(["blob"])
 
     new_rows = _striped_tasks(spark, task_rows, concurrency, compact_task,
-                              _ROWS_DDL)
-    _commit_rows(spark, dfs, enc_dir, new_rows, merged_pids,
+                              _ROWS_DDL).toArrow()
+    store.commit(dfs, enc_dir, new_rows, merged_pids,
                  store.read_schema_map(dfs, enc_dir))
     # post-commit cleanup: the manifest no longer references the members,
     # so a crash here leaves only ignorable orphans

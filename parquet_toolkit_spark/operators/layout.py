@@ -8,16 +8,19 @@ Reference parity map (SURVEY.md §2):
                    file-scan coalescing + a size-targeted repartition do it)
   sort_by_key()  = SimpleParquetSorter / AdvancedParquetSorter /
                    BigParquetSorter (the SQLite ORDER BY spill engine,
-                   sort/SortDataFactory.java:84-99, is exactly Spark's
-                   range-partition + external sort)
+                   sort/SortDataFactory.java:84-99, is exactly a
+                   range shuffle + Spark's external sort; range_split
+                   picks the range bounds on the driver)
   split_by_size()= SimpleParquetSplitter / MultithreadedParquetSplitter
                    (the 50k-record size probe, split/
                    MultithreadedParquetSplitter.java:152-170, becomes a
                    sampled avg(octet_length) estimate)
 
 All functions are declarative DataFrame plans: predicate pushdown, column
-pruning and AQE re-planning apply for free; nothing is collected on the
-driver except O(1) scalars (row counts, sampled averages).
+pruning and AQE re-planning apply for free. The driver reads parquet
+footers (row counts, widths) and, for a range layout, a bounded sample of
+the key columns (at most _SAMPLE_ROWS rows from _SAMPLE_GROUPS row
+groups); it collects no data beyond that.
 """
 
 from __future__ import annotations
@@ -96,46 +99,34 @@ def _footer_disk_bytes_per_row(sample: list[tuple[str, int]],
     """ON-DISK (compressed) bytes/row from footer row counts of up to
     `sample_files` largest files — lets compact() size maxRecordsPerFile
     without a count job. None when no footer is readable."""
-    import pyarrow.parquet as pq
+    import pyarrow as pa
 
-    from parquet_toolkit_spark.sources.fs import task_fs
+    from parquet_toolkit_spark.sources.parquet_tools import read_footers
 
-    tot_sz = tot_rows = 0
-    for p, sz in sorted(sample, key=lambda t: -t[1])[:sample_files]:
-        try:
-            fs, plain = task_fs(p)
-            md = pq.ParquetFile(fs.open_input_file(plain)).metadata
-        except Exception:
-            return None
-        tot_rows += md.num_rows
-        tot_sz += sz
+    picked = sorted(sample, key=lambda t: -t[1])[:sample_files]
+    try:
+        metas = read_footers([p for p, _sz in picked])
+    except (OSError, pa.ArrowException):
+        return None
+    tot_rows = sum(md.num_rows for md in metas)
     if tot_rows <= 0:
         return None
-    return tot_sz / tot_rows
+    return sum(sz for _p, sz in picked) / tot_rows
 
 
-def _footer_bytes_per_row(paths: list[str], sample_files: int = 8
+def _footer_bytes_per_row(metas: list, sample_files: int = 8
                           ) -> float | None:
     """Serialized (encoded, pre-compression) bytes/row from parquet footer
     metadata — the probe closest to the reference's "write 50k records to
     a temp file and divide" (serialized record width), at zero scan cost:
-    only footers are read, driver-side, for up to `sample_files` files.
-    None when no footer is readable (caller falls back to the sampled
-    row-width Spark job, which costs one scan of the first 50k rows)."""
-    import pyarrow.parquet as pq
-
-    from parquet_toolkit_spark.sources.fs import task_fs
-
+    only the footers of up to `sample_files` files. None when they hold no
+    row (caller falls back to the sampled row-width Spark job, which costs
+    one scan of the first 50k rows)."""
     tot_bytes = tot_rows = 0
-    for p in paths[:sample_files]:
-        try:
-            fs, plain = task_fs(p)
-            md = pq.ParquetFile(fs.open_input_file(plain)).metadata
-            tot_bytes += sum(md.row_group(i).total_byte_size
-                             for i in range(md.num_row_groups))
-            tot_rows += md.num_rows
-        except Exception:
-            return None
+    for md in metas[:sample_files]:
+        tot_bytes += sum(md.row_group(i).total_byte_size
+                         for i in range(md.num_row_groups))
+        tot_rows += md.num_rows
     if tot_rows <= 0:
         return None
     return tot_bytes / tot_rows
@@ -148,7 +139,7 @@ _PHYSICAL_WIDTH = {
 }
 
 
-def _footer_decoded_bytes_per_row(paths: list[str], sample_files: int = 8
+def _footer_decoded_bytes_per_row(metas: list, sample_files: int = 8
                                   ) -> float | None:
     """DECODED (in-memory Arrow) bytes/row from parquet footer metadata.
 
@@ -160,43 +151,257 @@ def _footer_decoded_bytes_per_row(paths: list[str], sample_files: int = 8
     that from the schema; variable-width (BYTE_ARRAY) columns keep the
     page-bytes estimate plus the 4-byte offset entry — text is normally
     plain-encoded, so its page bytes ARE close to the decoded bytes.
-    Driver-side, footers only. None when no footer is readable."""
-    import pyarrow.parquet as pq
-
-    from parquet_toolkit_spark.sources.fs import task_fs
-
+    Footers only, of up to `sample_files` files. None when they hold no
+    row."""
     tot_bytes = 0.0
     tot_rows = 0
-    for p in paths[:sample_files]:
-        try:
-            fs, plain = task_fs(p)
-            pf = pq.ParquetFile(fs.open_input_file(plain))
-            md, schema = pf.metadata, pf.schema
-            widths = []
-            for j in range(md.num_columns):
-                phys = schema.column(j).physical_type
-                if phys == "FIXED_LEN_BYTE_ARRAY":
-                    widths.append(float(schema.column(j).length or 16))
+    for md in metas[:sample_files]:
+        schema = md.schema
+        widths = []
+        for j in range(md.num_columns):
+            phys = schema.column(j).physical_type
+            if phys == "FIXED_LEN_BYTE_ARRAY":
+                widths.append(float(schema.column(j).length or 16))
+            else:
+                widths.append(_PHYSICAL_WIDTH.get(phys))
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j, w in enumerate(widths):
+                # num_values counts LEAF values (list/map columns
+                # repeat per element; rg.num_rows would undercount
+                # a 128-dim float list 128x)
+                col = rg.column(j)
+                if w is not None:
+                    tot_bytes += w * col.num_values
                 else:
-                    widths.append(_PHYSICAL_WIDTH.get(phys))
-            for i in range(md.num_row_groups):
-                rg = md.row_group(i)
-                for j, w in enumerate(widths):
-                    # num_values counts LEAF values (list/map columns
-                    # repeat per element; rg.num_rows would undercount
-                    # a 128-dim float list 128x)
-                    col = rg.column(j)
-                    if w is not None:
-                        tot_bytes += w * col.num_values
-                    else:
-                        tot_bytes += (col.total_uncompressed_size
-                                      + 4 * col.num_values)
-            tot_rows += md.num_rows
-        except Exception:
-            return None
+                    tot_bytes += (col.total_uncompressed_size
+                                  + 4 * col.num_values)
+        tot_rows += md.num_rows
     if tot_rows <= 0:
         return None
     return tot_bytes / tot_rows
+
+
+# ------------------------------------------------------- range splitters
+#
+# A range layout needs n-1 bounds on the key and a way to send every row
+# to partition #{bounds <= key}. Spark's RangePartitioner samples the
+# whole input in one or two jobs (every column is scanned) and seeds its
+# re-sample from the RDD id, so its bounds change with session history.
+# Here the driver picks the bounds from a bounded, deterministic sample
+# of the key columns alone, read from the parquet footers' row groups,
+# and the rows move in one hash shuffle whose partition i holds pid i.
+
+#: the key sample: at most this many row groups, at most this many rows
+_SAMPLE_GROUPS = 64
+_SAMPLE_ROWS = 1 << 16
+
+
+def input_footers(df: DataFrame) -> list[tuple[str, object]]:
+    """(file, footer) of every parquet file `df` scans, sorted by path;
+    [] when it scans none or a footer is unreadable. Driver-side, one
+    footer read per file, no Spark job."""
+    import pyarrow as pa
+
+    from parquet_toolkit_spark.sources.parquet_tools import read_footers
+
+    files = sorted(f for f in df.inputFiles()
+                   if f.lower().endswith((".parq", ".parquet")))
+    try:
+        return list(zip(files, read_footers(files)))
+    except (OSError, pa.ArrowException):
+        return []
+
+
+def _footer_key_sample(df: DataFrame, keys: list[str],
+                       footers: list[tuple[str, object]]):
+    """(sampled key columns, rows each sampled row stands for) read from
+    the files' row groups, or None when a key is not a top-level column,
+    of the frame's type, of every sampled file. Row groups are picked by
+    a fixed stride over the (path, row group) list, and each pick gives
+    its first _SAMPLE_ROWS / picks rows: no RNG, so one input always
+    gives one sample."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.operators.encode import _ddl_of_arrow
+    from parquet_toolkit_spark.sources.fs import task_fs
+
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    groups = [(f, md, i) for f, md in footers
+              for i in range(md.num_row_groups) if md.row_group(i).num_rows]
+    if not groups:  # no row: any bounds will do
+        return pa.table({k: pa.array([]) for k in keys}), np.empty(0)
+    n_picks = min(len(groups), _SAMPLE_GROUPS)
+    picks = [groups[j * len(groups) // n_picks] for j in range(n_picks)]
+    head = -(-_SAMPLE_ROWS // n_picks)
+    tables, weights = [], []
+    for f, md, i in picks:
+        schema = md.schema.to_arrow_schema()
+        if any(k not in schema.names
+               or _ddl_of_arrow(schema.field(k).type) != types[k]
+               for k in keys):
+            return None
+        fs, plain = task_fs(f)
+        pf = pq.ParquetFile(fs.open_input_file(plain), metadata=md)
+        b = next(pf.iter_batches(batch_size=head, row_groups=[i],
+                                 columns=list(keys)))
+        tables.append(pa.Table.from_batches([b]).select(list(keys)))
+        weights.append(np.full(b.num_rows,
+                               md.row_group(i).num_rows / b.num_rows))
+    return (pa.concat_tables(tables, promote_options="permissive"),
+            np.concatenate(weights))
+
+
+def _order_key(bound: tuple) -> tuple:
+    """Sort key that orders bound tuples as Catalyst orders the struct of
+    their values: null first, NaN above every number."""
+    return tuple((0,) if v is None else (2,) if v != v else (1, v)
+                 for v in bound)
+
+
+def range_bounds(sample, weights, n: int, descending: bool = False
+                 ) -> list[tuple]:
+    """n-1 weighted quantiles of the sampled key rows, sorted in the
+    partition order (ascending, or descending for `descending`)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if n <= 1 or sample.num_rows == 0:
+        return []
+    sample = sample.combine_chunks()  # halves the multi-key sort
+    order = pc.sort_indices(
+        sample, sort_keys=[(k, "descending" if descending else "ascending")
+                           for k in sample.column_names],
+        null_placement="at_end" if descending else "at_start")
+    cum = np.cumsum(weights[order.to_numpy()])
+    picks = np.searchsorted(cum, cum[-1] * np.arange(1, n) / n, side="right")
+    rows = sample.take(order.take(pa.array(picks))).to_pylist()
+    return sorted((tuple(r.values()) for r in rows), key=_order_key,
+                  reverse=descending)
+
+
+def _sql_literal(v, ddl: str) -> str:
+    """SQL text of the value `v` of Spark type `ddl`. Strings and bytes
+    go through hex, so no value needs escaping; every other atomic value
+    is its str() cast to the type (numbers, NaN/inf, decimals, ISO dates
+    and timestamps with their offset)."""
+    if v is None:
+        return f"CAST(NULL AS {ddl})"
+    if isinstance(v, str):
+        v = v.encode()
+    if isinstance(v, bytes):
+        return f"CAST(X'{v.hex()}' AS {ddl})"
+    return f"CAST('{v}' AS {ddl})"
+
+
+def range_pid(df: DataFrame, keys: list[str], bounds: list[tuple],
+              descending: bool = False):
+    """Column: the pid of each row, #{bounds <= key} (#{bounds >= key}
+    for `descending`), by binary search over the sorted bounds with
+    struct comparisons, so a null key field sorts first as in Catalyst's
+    ordering. Monotone in Catalyst's order of the key whatever the bound
+    values, so output order never depends on them; they decide balance
+    only. Built as one SQL expression (one driver round trip, not one per
+    Column call): size O(n), evaluation O(log n) per row."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    key = "struct({})".format(", ".join(
+        "`{}`".format(k.replace("`", "``")) for k in keys))
+    op = ">=" if descending else "<="
+
+    def search(lo: int, hi: int) -> str:
+        if lo == hi:
+            return str(lo)
+        mid = (lo + hi) // 2
+        bound = "struct({})".format(", ".join(
+            _sql_literal(v, types[k]) for k, v in zip(keys, bounds[mid])))
+        return (f"CASE WHEN {bound} {op} {key} THEN {search(mid + 1, hi)}"
+                f" ELSE {search(lo, mid)} END")
+
+    return F.expr(search(0, len(bounds)))
+
+
+def _murmur3_int(x):
+    """Spark's Murmur3_x86_32.hashInt(x, seed=42), i.e. F.hash of an int
+    column, vectorized over an int array; int32 results."""
+    import numpy as np
+
+    h = (np.asarray(x, np.int64) & 0xFFFFFFFF).astype(np.uint32)
+    with np.errstate(over="ignore"):
+        h *= np.uint32(0xCC9E2D51)
+        h = (h << np.uint32(15)) | (h >> np.uint32(17))
+        h *= np.uint32(0x1B873593)
+        h ^= np.uint32(42)
+        h = (h << np.uint32(13)) | (h >> np.uint32(19))
+        h = h * np.uint32(5) + np.uint32(0xE6546B64)
+        h ^= np.uint32(4)
+        h ^= h >> np.uint32(16)
+        h *= np.uint32(0x85EBCA6B)
+        h ^= h >> np.uint32(13)
+        h *= np.uint32(0xC2B2AE35)
+        h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def hash_slots(n: int) -> list[int]:
+    """slots[p] is the smallest int >= 0 that hash partitioning into n
+    partitions (pmod(hash(k), n)) sends to partition p."""
+    import numpy as np
+
+    slots = [-1] * n
+    need, start = n, 0
+    while need:
+        ids = np.arange(start, start + 4 * n + 64)
+        part = _murmur3_int(ids).astype(np.int64) % n
+        uniq, first = np.unique(part, return_index=True)
+        for p, i in zip(uniq.tolist(), first.tolist()):
+            if slots[p] < 0:
+                slots[p] = int(ids[i])
+                need -= 1
+        start += len(ids)
+    return slots
+
+
+def place_by_pid(df: DataFrame, pid, n: int) -> DataFrame:
+    """`df` in n partitions where partition p holds the rows whose `pid`
+    Column (an int in [0, n)) is p: one hash shuffle on hash_slots(n)[pid],
+    with no sampling job."""
+    slots = F.expr("array({})".format(", ".join(map(str, hash_slots(n)))))
+    return df.repartition(n, F.element_at(slots, pid + 1))
+
+
+def range_split(df: DataFrame, keys: list[str], n: int,
+                footers: list[tuple[str, object]], n_rows: int | None,
+                descending: bool = False) -> DataFrame:
+    """`df` range-partitioned on `keys` into exactly n partitions, where
+    partition p holds the rows of pid p (see range_pid): rows of a lower
+    pid sort before every row of a higher one.
+
+    The bounds come from the key columns of the input's row groups
+    (`footers`, from input_footers) with no Spark job; when the frame
+    scans no parquet file or a key is not a top-level file column, from
+    one key-pruned, seeded Spark sample (plus a count when `n_rows` is
+    None). The rows then move in one hash shuffle (place_by_pid)."""
+    import numpy as np
+
+    keys = list(keys)
+    nested = [f.name for f in df.schema.fields if f.name in keys
+              and f.dataType.simpleString().startswith(
+                  ("array<", "struct<", "map<"))]
+    if nested:
+        raise TypeError(f"range keys must be atomic columns: {nested}")
+    got = _footer_key_sample(df, keys, footers) if footers else None
+    if got is None:
+        if n_rows is None:
+            n_rows = df.count()
+        frac = min(1.0, _SAMPLE_ROWS / max(n_rows, 1))
+        sample = df.select(*keys).sample(False, frac, seed=0).toArrow()
+        got = sample, np.full(sample.num_rows,
+                              n_rows / max(sample.num_rows, 1))
+    pid = range_pid(df, keys, range_bounds(*got, n, descending), descending)
+    return place_by_pid(df, pid, n)
 
 
 def compact(spark: SparkSession, in_path: str | list[str], out_path: str,
@@ -294,34 +499,27 @@ def sort_by_key(spark: SparkSession, in_path: str | list[str], out_path: str,
     Typed native ordering (documented divergence: the reference compares
     the string rendering of keys, SortThread.java:37, and hard-errors on
     null keys, DMCMemoryData.java:68-70; we use Catalyst ordering with
-    NULLS FIRST).
-    """
-    from parquet_toolkit_spark.sources.fs import DriverFS
+    NULLS FIRST; descending=True sorts every key descending, NULLS LAST).
 
+    One range shuffle on driver-picked bounds (range_split), then a sort
+    within each partition: file i holds the i-th key range. The footers
+    give the exact row count and the width, so nothing is scanned before
+    the shuffle.
+    """
     paths = [in_path] if isinstance(in_path, str) else list(in_path)
     df = spark.read.parquet(*paths)
-    # size the output from footer metadata when the input is parquet
-    # files/dirs we can stat (guide §1.2: don't scan to learn what the
-    # footers already say); fall back to the sampled row-width job
-    fs = DriverFS(spark)
-    files: list[str] = []
-    for p in paths:
-        if p.lower().endswith((".parq", ".parquet")) and not fs.exists(
-                os.path.join(p, "_SUCCESS")):
-            files.append(p)
-        else:
-            files.extend(f for f, _sz in fs.list_files(p)
-                         if f.lower().endswith((".parq", ".parquet")))
-    bpr = _footer_bytes_per_row(files) if files else None
+    footers = input_footers(df)
+    n_rows = sum(md.num_rows for _f, md in footers)
+    bpr = _footer_bytes_per_row([md for _f, md in footers])
     if bpr is not None:
-        n_rows = df.count()  # metadata-driven vectorized count
         n_parts = max(1, math.ceil(bpr * n_rows / target_bytes))
         max_records = max(1, int(target_bytes / max(bpr, 1.0)))
     else:
         n_parts, max_records = _target_file_counts(df, target_bytes)
     cols = [F.col(k).desc() if descending else F.col(k).asc() for k in keys]
     (
-        df.repartitionByRange(n_parts, *cols)
+        range_split(df, keys, n_parts, footers,
+                    n_rows if footers else None, descending)
         .sortWithinPartitions(*cols)
         .write.mode("overwrite")
         .option("compression", compression)

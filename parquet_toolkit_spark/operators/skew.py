@@ -1,8 +1,8 @@
 """Skew-aware aggregation: salting for hot keys (north rule: 'salting for
 skewed repos') + AQE as the runtime backstop.
 
-Range layout (plan_layout) doesn't need salting — Catalyst's range
-partitioner samples (repo, path) and splits the mega-repo by path. Hash
+Range layout (plan_layout) doesn't need salting — its driver-picked
+(repo, path) bounds split the mega-repo by path (layout.range_split). Hash
 aggregations DO: groupBy(repo) sends repo0's ~30% of rows to one reducer.
 salted_agg does the classic two-stage rewrite:
 

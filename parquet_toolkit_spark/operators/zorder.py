@@ -12,12 +12,13 @@ Scale notes:
 - The whole key is a Catalyst Column expression: rank lookup is one
   `F.aggregate` over a literal boundary array (O(2^bits) integer adds
   per row, JVM-side, no python in the hot path); the bit interleave is
-  a shiftleft/bitwiseOR chain. No extra shuffle beyond the
-  repartitionByRange the layout already does.
+  a shiftleft/bitwiseOR chain. No extra shuffle beyond the range
+  shuffle on the Morton key that plan_layout does.
 - Driver state is the sampled boundaries only: <= (2^bits - 1) values
-  per column from a bounded reservoir-style sample — O(1) in table
-  size, the same discipline repartitionByRange's own range sampling
-  uses.
+  per column from one bounded, seeded sample job — O(1) in table size.
+  The range shuffle on the Morton key still samples with Spark's
+  RangePartitioner; the plain range layout (layout.range_split) does
+  not.
 - Quantile (not uniform-width) buckets keep ranks balanced under skew:
   a mega-repo that owns half the rows still spreads over half the rank
   space instead of one bucket.

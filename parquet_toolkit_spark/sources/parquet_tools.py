@@ -38,15 +38,21 @@ def list_parquet_files(folder: str, spark: SparkSession | None = None) -> list[s
     return out
 
 
+def read_footers(files: list[str]) -> list[pq.FileMetaData]:
+    """The footer of each file, in order, read driver-side through the
+    pyarrow fs shim: metadata only, no data page, no Spark job."""
+    out = []
+    for f in files:
+        fs, p = task_fs(f)
+        out.append(pq.ParquetFile(fs.open_input_file(p)).metadata)
+    return out
+
+
 def footer_row_counts(files: list[str]) -> dict[str, tuple[int, int]]:
     """file -> (row_groups, rows) without reading data (ParquetFile.java:
     36-44 parity)."""
-    out = {}
-    for f in files:
-        fs, p = task_fs(f)
-        md = pq.ParquetFile(fs.open_input_file(p)).metadata
-        out[f] = (md.num_row_groups, md.num_rows)
-    return out
+    return {f: (md.num_row_groups, md.num_rows)
+            for f, md in zip(files, read_footers(files))}
 
 
 def schema_groups(files: list[str]) -> tuple[dict[str, list[str]], list[str]]:

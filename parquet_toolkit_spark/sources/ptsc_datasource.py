@@ -345,21 +345,14 @@ class PtscWriter(DataSourceArrowWriter):
         import shutil
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         dfs = DriverFS()
-        rows = [{**r, "status": "committed"}
-                for m in messages if m is not None for r in m.rows]
-
-        def stage(tmp_dir: str) -> None:
-            old = None if self.overwrite else store.manifest_table(dfs,
-                                                                   self.path)
-            tbl = pa.Table.from_pylist(
-                ([] if old is None else old.to_pylist()) + rows,
-                schema=store.MANIFEST_SCHEMA)
-            pq.write_table(tbl, os.path.join(tmp_dir, "part-0.parquet"))
-
-        store.commit(dfs, self.path, stage, self.schema_map)
+        rows = pa.Table.from_pylist(
+            [r for m in messages if m is not None for r in m.rows],
+            schema=store.ROWS_SCHEMA)
+        # overwrite carries no committed row over; append carries them all
+        store.commit(dfs, self.path, rows, None if self.overwrite else [],
+                     self.schema_map)
         if self.overwrite:
             for d in self.old_pid_dirs:  # delete-inputs, post-commit
                 shutil.rmtree(d, ignore_errors=True)

@@ -62,6 +62,8 @@ MANIFEST_SCHEMA = pa.schema([
     ("status", pa.string()),
 ])
 MANIFEST_COLS = MANIFEST_SCHEMA.names
+#: the rows a writer hands to commit: every manifest column but status
+ROWS_SCHEMA = pa.schema([f for f in MANIFEST_SCHEMA if f.name != "status"])
 _SPARK_TYPE = {pa.int32(): "INT", pa.int64(): "BIGINT", pa.string(): "STRING"}
 MANIFEST_DDL = ", ".join(f"{f.name} {_SPARK_TYPE[f.type]}"
                          for f in MANIFEST_SCHEMA)
@@ -160,11 +162,20 @@ def read_schema_map(dfs, store: str) -> dict[str, str]:
     raise FileNotFoundError(paths[-1])
 
 
-def commit(dfs, store: str, stage, schema_map: dict[str, str]) -> None:
-    """Swap-commit a new manifest. `stage(tmp_dir)` writes the manifest
-    parquet parts into tmp_dir; it runs after an interrupted swap is
-    rolled forward, so a carried-over manifest it reads is the committed
-    one. Never deletes the only committed copy (code-review r3)."""
+def commit(dfs, store: str, rows: pa.Table, replaced,
+           schema_map: dict[str, str]) -> None:
+    """Swap-commit a new manifest: `rows` (ROWS_SCHEMA columns, as the
+    writer's job returned them) plus the committed rows of every pid not
+    in `replaced` (None: carry nothing over; []: carry every row). The
+    carried-over rows are read after an interrupted swap is rolled
+    forward, so they are the committed ones. The staged manifest is one
+    parquet part written with pyarrow through the fs shim: no Spark job.
+    Never deletes the only committed copy (code-review r3)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.sources.fs import task_fs
+
     man = posixpath.join(store, MANIFEST)
     new = posixpath.join(store, MANIFEST_NEW)
     old = posixpath.join(store, MANIFEST_OLD)
@@ -175,7 +186,17 @@ def commit(dfs, store: str, stage, schema_map: dict[str, str]) -> None:
             dfs.rename(old, man)  # crash between the two renames
     dfs.delete(new, recursive=True)  # crash while staging
     dfs.mkdirs(new)
-    stage(new)
+    table = rows.select(ROWS_SCHEMA.names).append_column(
+        "status", pa.array(["committed"] * rows.num_rows, pa.string())
+    ).cast(MANIFEST_SCHEMA)
+    kept = manifest_table(dfs, store) if replaced is not None else None
+    if kept is not None:
+        drop = pc.is_in(kept.column("pid"),
+                        value_set=pa.array(list(replaced), pa.int32()))
+        kept = kept.filter(pc.invert(drop)).select(MANIFEST_COLS)
+        table = pa.concat_tables([kept.cast(MANIFEST_SCHEMA), table])
+    fs, part = task_fs(posixpath.join(new, "part-00000.parquet"))
+    pq.write_table(table, part, filesystem=fs)
     # the schema rides INSIDE the swap (ADVICE r6): a root _schema.json
     # written before the swap paired a new schema with the old manifest
     # across a crash window. Manifest readers skip underscore files.

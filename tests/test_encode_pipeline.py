@@ -1031,3 +1031,31 @@ def test_encoded_size_report_matches_spark_aggregate(spark, corpus_df,
     assert encoded_size_report(spark, str(tmp_path / "empty")) == {
         "bytes_in": None, "bytes_out": None, "ratio": 0.0,
         "n_partitions": 0}
+
+
+def test_layout_stage_bounds_ignore_session_history(spark, corpus_df,
+                                                    tmp_path):
+    """Three layout_stage calls of one corpus, with unrelated RDDs created
+    between them, stage the same rows in every pid file (the pid bounds
+    come from a deterministic sample, not an RDD-id-seeded one), and the
+    F0-shaped corpus splits within 1.25x of the mean pid size."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    digests = []
+    for k in range(3):
+        spark.range(k + 2).rdd.count()
+        stg = str(tmp_path / f"stg{k}")
+        layout_stage(spark, corpus_df, stg, n_partitions=8)
+        files = sorted(glob.glob(os.path.join(stg, "part-*.parquet")))
+        per_pid = {}
+        for f in files:
+            t = pq.read_table(f, columns=["repo", "path", "commit"])
+            per_pid[os.path.basename(f)[:10]] = hashlib.sha256(
+                repr(t.to_pydict()).encode()).hexdigest()
+        digests.append(per_pid)
+        sizes = [os.path.getsize(f) for f in files]
+        assert max(sizes) <= 1.25 * sum(sizes) / len(sizes), sizes
+    assert len(digests[0]) == 8
+    assert digests[0] == digests[1] == digests[2]

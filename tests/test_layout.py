@@ -41,23 +41,255 @@ def test_compact_preserves_multiset_and_reduces_files(spark, tmp_path):
     assert _multiset_hash(back, cols) == _multiset_hash(li, cols)
 
 
+def _catalyst_key(row):
+    """Python sort key of a key tuple in Catalyst's ascending order
+    (NULLS FIRST)."""
+    return tuple((0,) if v is None else (1, v) for v in row)
+
+
+def _check_sorted_output(src, out, keys, descending=False):
+    """Every file of `out`, read in filename order, continues one global
+    key order (NULLS FIRST ascending, NULLS LAST descending); the files
+    hold exactly the input's rows. Returns the part files."""
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
+    got = []
+    for f in files:
+        t = pq.read_table(f)
+        got.extend(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+    names = pq.read_table(files[0]).column_names
+    at = [names.index(k) for k in keys]
+    ks = [_catalyst_key([r[i] for i in at]) for r in got]
+    pairs = list(zip(ks, ks[1:]))
+    if descending:
+        assert all(a >= b for a, b in pairs), "not descending across files"
+    else:
+        assert all(a <= b for a, b in pairs), "not ascending across files"
+    t = pq.read_table(src, columns=names)
+    want = list(zip(*(t.column(c).to_pylist() for c in names)))
+    assert sorted(got, key=_catalyst_key) == sorted(want, key=_catalyst_key)
+    return files
+
+
+def _part_index(f):
+    return int(os.path.basename(f)[5:].split("-", 1)[0])
+
+
 def test_sort_by_key_is_globally_sorted(spark, tmp_path):
     out = str(tmp_path / "sorted")
     sort_by_key(spark, f"{SF}/lineitem.parquet", out,
                 keys=["l_orderkey", "l_linenumber"], target_bytes=1 << 20)
-    files = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
+    files = _check_sorted_output(f"{SF}/lineitem.parquet", out,
+                                 ["l_orderkey", "l_linenumber"])
     assert len(files) >= 2, "want multiple output files for a real check"
-    # file-level ranges must be disjoint and ordered by filename,
-    # and each file internally sorted
-    prev_max = None
-    for f in files:
-        pdf = spark.read.parquet(f).select("l_orderkey").toPandas()
-        vals = pdf["l_orderkey"].tolist()
-        assert vals == sorted(vals), f
-        if vals:
-            if prev_max is not None:
-                assert vals[0] >= prev_max, "file ranges overlap"
-            prev_max = vals[-1]
+
+
+def test_sort_by_key_descending(spark, tmp_path):
+    out = str(tmp_path / "sorted_desc")
+    sort_by_key(spark, f"{SF}/lineitem.parquet", out,
+                keys=["l_orderkey", "l_linenumber"], target_bytes=1 << 20,
+                descending=True)
+    files = _check_sorted_output(f"{SF}/lineitem.parquet", out,
+                                 ["l_orderkey", "l_linenumber"],
+                                 descending=True)
+    assert len(files) >= 2
+
+
+@pytest.mark.parametrize("descending", [False, True])
+def test_sort_by_key_null_keys_across_files(spark, tmp_path, descending):
+    """Null keys go first ascending and last descending, across files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "nullkeys")
+    os.makedirs(src)
+    for i in range(4):
+        ks = [None if (i * 500 + j) % 7 == 0 else (i * 500 + j) * 37 % 1000
+              for j in range(500)]
+        pq.write_table(pa.table({
+            "k": pa.array(ks, pa.int64()),
+            "pad": pa.array([f"{i}-{j}-" + "x" * 200 for j in range(500)]),
+        }), os.path.join(src, f"f{i}.parquet"))
+    out = str(tmp_path / "sorted")
+    sort_by_key(spark, src, out, keys=["k"], target_bytes=64 << 10,
+                descending=descending)
+    files = _check_sorted_output(src, out, ["k"], descending)
+    assert len({_part_index(f) for f in files}) >= 3
+
+
+def test_sort_by_key_constant_key_fills_one_pid(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "const")
+    os.makedirs(src)
+    for i in range(3):
+        pq.write_table(pa.table({
+            "k": pa.array(["same"] * 400),
+            "v": pa.array(range(i * 400, (i + 1) * 400), pa.int64()),
+            "pad": pa.array([f"{i}-{j}-" + "y" * 290 for j in range(400)]),
+        }), os.path.join(src, f"f{i}.parquet"))
+    out = str(tmp_path / "sorted")
+    info = sort_by_key(spark, src, out, keys=["k"], target_bytes=64 << 10)
+    assert info["n_partitions"] >= 2
+    files = _check_sorted_output(src, out, ["k"])
+    # partition 0 always writes a file, an empty one when its pid is
+    assert len({_part_index(f) for f in files
+                if pq.ParquetFile(f).metadata.num_rows}) == 1
+
+
+def test_sort_by_key_single_partition(spark, tmp_path):
+    out = str(tmp_path / "sorted_one")
+    info = sort_by_key(spark, f"{SF}/orders.parquet", out,
+                       keys=["o_custkey", "o_orderkey"])
+    assert info["n_partitions"] == 1
+    files = _check_sorted_output(f"{SF}/orders.parquet", out,
+                                 ["o_custkey", "o_orderkey"])
+    assert {_part_index(f) for f in files} == {0}
+
+
+def _typed_keys(ddl):
+    """400 deterministic key values of Spark type `ddl`, with nulls and
+    the values a literal must round-trip (quotes, backslashes, non-ASCII,
+    NaN, infinities, signed zeros)."""
+    import datetime as dt
+    import decimal
+
+    utc = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+    plain = {
+        "string": lambda i: f"k{i:03d}",
+        "double": lambda i: i - 40.5,
+        "decimal(10,2)": lambda i: decimal.Decimal(f"{i - 40}.25"),
+        "date": lambda i: dt.date(2020, 1, 1) + dt.timedelta(days=i),
+        "timestamp": lambda i: utc + dt.timedelta(minutes=i,
+                                                  microseconds=i % 7),
+        "binary": lambda i: bytes([i, 255 - i % 7]),
+        "boolean": lambda i: i % 3 == 0,
+    }[ddl]
+    special = {
+        "string": ["it's", "a\\b", "\u00e9t\u00e9", ""],
+        "double": [float("nan"), float("inf"), -float("inf"), -0.0, 0.0],
+    }.get(ddl, []) + [None]
+    return [special[i // 9 % len(special)] if i % 9 == 0 else plain(i % 97)
+            for i in range(400)]
+
+
+@pytest.mark.parametrize("ddl", ["string", "double", "decimal(10,2)", "date",
+                                 "timestamp", "binary", "boolean"])
+def test_sort_by_key_typed_keys_follow_catalyst_order(spark, tmp_path, ddl):
+    """The driver-side bounds of every atomic key type render as literals
+    that keep the output files in Catalyst's own key order. Spark writes
+    timestamps as INT96, which the footers do not type as Spark's
+    timestamp, so that case takes the bounds from a Spark sample."""
+    src = str(tmp_path / "typed")
+    rows = [(v, f"{i:04d}-" + "p" * 200)
+            for i, v in enumerate(_typed_keys(ddl))]
+    (spark.createDataFrame(rows, f"k {ddl}, pad string").repartition(4)
+     .write.parquet(src))
+    out = str(tmp_path / "sorted")
+    info = sort_by_key(spark, src, out, keys=["k"], target_bytes=16 << 10)
+    assert info["n_partitions"] >= 3
+    got = []
+    for f in sorted(glob.glob(os.path.join(out, "part-*.parquet"))):
+        got.extend(spark.read.parquet(f).select("k").toArrow()
+                   .column("k").to_pylist())
+    want = (spark.read.parquet(src).orderBy("k").toArrow()
+            .column("k").to_pylist())
+
+    def norm(v):
+        return "NaN" if isinstance(v, float) and v != v else v
+
+    assert [norm(v) for v in got] == [norm(v) for v in want]
+
+
+@pytest.mark.parametrize("descending", [False, True])
+@pytest.mark.parametrize("ddl", ["string", "double", "decimal(10,2)", "date",
+                                 "timestamp", "binary", "boolean"])
+def test_range_pid_counts_the_bounds_before_each_key(spark, ddl, descending):
+    """range_pid's one SQL expression (rendered literals + binary search)
+    equals the plain count of bounds at or before each key, with every
+    special value (quote, backslash, non-ASCII, NaN, +-inf, -0.0, null)
+    among the bounds."""
+    from parquet_toolkit_spark.operators.layout import _order_key, range_pid
+
+    vals = _typed_keys(ddl)
+    df = spark.createDataFrame([(v,) for v in vals], f"k {ddl}")
+    bounds = sorted({(v,) for v in vals[::9] + vals[1::23]},
+                    key=_order_key, reverse=descending)
+    key = F.struct("k")
+
+    def before(b):
+        lit = F.struct(F.lit(b[0]).cast(ddl))
+        return (lit >= key) if descending else (lit <= key)
+
+    count = sum(F.when(before(b), 1).otherwise(0) for b in bounds)
+    rows = df.select(range_pid(df, ["k"], bounds, descending).alias("pid"),
+                     count.alias("want")).collect()
+    assert len(bounds) >= 3
+    assert all(r.pid == r.want for r in rows)
+
+
+def test_murmur3_port_matches_spark_hash(spark):
+    from parquet_toolkit_spark.operators.layout import _murmur3_int
+
+    ids = [0, 1, -1, 2**31 - 1, -2**31, 2**31 - 2, -2**31 + 1,
+           *range(2, 300), *range(-300, -2), *range(10**9, 10**9 + 50)]
+    df = spark.createDataFrame([(i,) for i in ids], "x int")
+    want = {r.x: r.h for r in df.select("x", F.hash("x").alias("h"))
+            .collect()}
+    assert dict(zip(ids, _murmur3_int(ids).tolist())) == want
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 8, 17])
+def test_place_by_pid_puts_pid_p_in_partition_p(spark, n):
+    from parquet_toolkit_spark.operators.layout import hash_slots, place_by_pid
+
+    slots = hash_slots(n)
+    assert len(set(slots)) == n and min(slots) >= 0
+    df = spark.range(0, 40 * n + 7).withColumn(
+        "pid", ((F.col("id") * 7919) % n).cast("int"))
+    placed = place_by_pid(df, F.col("pid"), n).select(
+        "id", "pid", F.spark_partition_id().alias("part"))
+    rows = placed.collect()
+    assert len(rows) == 40 * n + 7
+    assert all(r.pid == r.part for r in rows)
+    assert {r.part for r in rows} == set(range(n))
+
+
+def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
+    """layout_stage on a parquet frame runs the shuffle's map stage and
+    the write; sort_by_key adds only its own schema read. No sampling job
+    and no count job run before the shuffle."""
+    from parquet_toolkit_spark.operators.encode import layout_stage
+
+    src = f"{SF}/lineitem.parquet"
+    df = spark.read.parquet(src)
+    sc = spark.sparkContext
+    calls = {
+        "layout_stage": lambda: layout_stage(
+            spark, df, str(tmp_path / "stg"), target_bytes=1 << 20,
+            range_keys=("l_orderkey", "l_linenumber"),
+            sort_keys=("l_orderkey", "l_linenumber")),
+        "layout_stage_n": lambda: layout_stage(
+            spark, df, str(tmp_path / "stg_n"), n_partitions=4,
+            range_keys=("l_orderkey", "l_linenumber"),
+            sort_keys=("l_orderkey", "l_linenumber")),
+        "sort_by_key": lambda: sort_by_key(
+            spark, src, str(tmp_path / "sorted"),
+            keys=["l_orderkey", "l_linenumber"], target_bytes=1 << 20),
+    }
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"range-pin-{name}", name)
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = {name: len(tracker.getJobIdsForGroup(f"range-pin-{name}"))
+            for name in calls}
+    assert jobs == {"layout_stage": 2, "layout_stage_n": 2, "sort_by_key": 3}
 
 
 def test_split_by_size_bounds(spark, tmp_path):
