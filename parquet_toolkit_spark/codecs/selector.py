@@ -6,6 +6,14 @@ one vectorized numpy pass per chunk; the selector turns stats into a small
 candidate list, encodes the candidates, and keeps the smallest blob — with
 plain(+zstd) always in the candidate set as the floor so we never regress
 above a general-purpose baseline (SURVEY.md §4.3).
+
+The costly gate is FSST's 1 MB admission trial (`_fsst_sample_wins`). A
+reject-only screen (`_fsst_screen`) settles it first from two zstd sizes,
+one per failure mode of FSST-style tokens: a head zstd ratio that sits at
+the order-0 entropy bound (nothing beyond byte frequencies), and a slice
+zstd ratio well below the head's (long-range redundancy). On the F0 code
+corpus it rejects `commit` and `content` for ~1-10 ms where the trial
+took ~80-210 ms; the trial stays the only way FSST is admitted.
 """
 
 from __future__ import annotations
@@ -23,9 +31,13 @@ from parquet_toolkit_spark.codecs.container import encode_blob
 # this host, see codecs/fsst.py) — admissible up to full content-column
 # chunks; the sample gate below still keeps it off buffers where the zstd
 # floor wins anyway, so the cap only bounds worst-case trial-encode cost.
-# The gate itself costs 0.05-0.14 s per column of an F0 pid on a 4-core
-# Xeon VM: a ~40 ms table build on the 64 KB slice head, then the encode
-# and two zstd passes over a slice of at most 1 MB.
+# The gate is the screen, then the trial for columns the screen passes.
+# On a staged F0 pid (4-core Xeon VM) the screen takes ~1 ms on `path`
+# and `commit` and ~8-10 ms on `content` (two zstd passes: the 64 KB
+# head and the 1 MB slice); the trial takes 80-125 ms on `path` (a
+# table build on the 64 KB head, the token encode and one zstd pass over
+# the slice, whose plain zstd size the screen hands over) and used to
+# take 80-125 ms on `commit` and ~200 ms on `content`.
 FSST_MAX_BYTES = 16 << 20
 _SAMPLE = 65536
 _ZONE_MAX_LEN = 128  # string zone maps stored only for short-key columns
@@ -238,9 +250,11 @@ def candidate_codecs(chunk: ColumnChunk, stats: dict,
         and payload <= FSST_MAX_BYTES
         and stats.get("byte_entropy", 8.0) < 6.5
         and "bin_dict" not in cands
-        and _fsst_sample_wins(chunk.data)
     ):
-        cands.append("bin_fsst")
+        plain_zstd = _fsst_screen(chunk.data, stats["byte_entropy"])
+        if plain_zstd is not None and _fsst_sample_wins(chunk.data,
+                                                        plain_zstd):
+            cands.append("bin_fsst")
     cands.append("bin_plain")
     return cands
 
@@ -276,9 +290,75 @@ def _prefix_sample_wins(data: bytes, offsets) -> bool:
 
 
 _FSST_TRIAL_BYTES = 1 << 20
+# Screen thresholds (see _fsst_screen): rule A rejects inside
+# _FLAT_BAND, rule B below _LONG_RANGE_RATIO.
+_FLAT_BAND = (0.9, 1.2)
+_LONG_RANGE_RATIO = 0.85
 
 
-def _fsst_sample_wins(data: bytes) -> bool:
+def _fsst_screen(data: bytes, byte_entropy: float) -> int | None:
+    """Reject-only screen in front of the FSST trial, from two zstd sizes.
+
+    Returns None when the trial cannot admit FSST, else the zstd size of
+    the trial slice, which `_fsst_sample_wins` reuses. `byte_entropy` is
+    H0 of the 64 KB head, as `profile_chunk` computes it. With
+    A = head zstd ratio / (H0 / 8) and, when the 1 MB slice is >= 4x the
+    head, B = slice zstd ratio / head zstd ratio, the two rules are the
+    two failure modes of FSST-style tokens (FSST, VLDB 2020):
+
+    A. 0.9 <= A < 1.2: zstd codes the head at its order-0 entropy bound,
+       so the data has no structure beyond byte frequencies (random-hex
+       commit ids) and a symbol table has nothing to add. The band is
+       bounded above because far above the bound (A >= 1.4, on iid
+       strings of H0 <= 1.4 bits) the loss is zstd's one-bit Huffman
+       floor per literal, which a multi-byte token stream recovers: the
+       trial admits those at 0.71-0.76.
+    B. B < 0.85: the slice compresses much better than its head, so the
+       redundancy is long-range (cross-file duplicate code), which zstd
+       recovers from the plain buffer and the bit-packed token stream
+       breaks.
+
+    Census (bench/codec_census.py) over the string columns that reach the
+    gate: F0 seeds 1, 2, 3, 5, 7 x pids 0, 3, 6 of an 8-pid staging
+    sorted by (repo, path, commit), the seed-5 corpus tests/test_fsst.py
+    pins, and the sf0.001-sf0.1 fixtures (trial = fsst/plain zstd size on
+    the slice, admitted below 0.80):
+
+      column           A            B            trial        screen
+      F0 commit        1.001-1.012  -            1.07         A
+      F0 content       0.545-0.568  0.736-0.800  1.23-1.31    B
+      F0 path          0.223-0.285  -            0.725-0.813  pass
+      documents.text   0.41-0.43    0.949        0.62-0.63    pass
+      customer.c_name  0.07-0.13    0.800        1.9-7.7      B at sf0.1
+      supplier.s_name  0.07-0.17    -            1.4-5.4      pass
+
+    Every column a rule rejects is one the trial rejects, with margin on
+    both sides of each threshold; `path` and `documents.text` reach the
+    trial. The screen only ever says no: `_fsst_sample_wins` stays the
+    only way in. tests/test_fsst.py checks this on F0, the fixtures and
+    synthetic inputs. Buffers under 1 KB pass unscreened, as the trial
+    admits them untried.
+    """
+    from parquet_toolkit_spark.codecs.container import _ZSTD
+
+    sample = data[:_FSST_TRIAL_BYTES]
+    if len(sample) < 1024:
+        return len(_ZSTD.compress(sample, asbytes=True))
+    head = sample[:_SAMPLE]
+    head_z = len(_ZSTD.compress(head, asbytes=True))
+    order0 = byte_entropy * len(head) / 8
+    if _FLAT_BAND[0] * order0 <= head_z < _FLAT_BAND[1] * order0:
+        return None
+    if len(sample) == len(head):
+        return head_z
+    plain_zstd = len(_ZSTD.compress(sample, asbytes=True))
+    if (len(sample) >= 4 * len(head) and plain_zstd * len(head)
+            < _LONG_RANGE_RATIO * head_z * len(sample)):
+        return None
+    return plain_zstd
+
+
+def _fsst_sample_wins(data: bytes, plain_zstd: int | None = None) -> bool:
     """1MB-slice trial: admit FSST only if the REAL codec shape — dense
     bit-packed token stream, zstd'd like the container does — beats
     zstd(plain) on the slice by >20%.
@@ -299,21 +379,35 @@ def _fsst_sample_wins(data: bytes) -> bool:
     byte alignment — an effect only visible once the trial slice spans
     multiple files (measured: 256KB still mispredicts the F0 code corpus,
     1MB flips to the correct reject; a homogeneous text column keeps its
-    0.62 win at every slice size). ~0.13 s per gate call at the 1MB cap
-    (F0 `content`, 4-core Xeon VM), paid once per job on the plan_hints
-    sample partition."""
-    from parquet_toolkit_spark.codecs import fsst as fsst_mod
-    from parquet_toolkit_spark.codecs.bits import bit_width, pack_uints
+    0.62 win at every slice size). ~0.2 s per call at the 1MB cap (F0
+    `content`, 4-core Xeon VM); candidate_codecs calls it only for the
+    columns `_fsst_screen` passes, with the slice's plain zstd size as
+    `plain_zstd`."""
     from parquet_toolkit_spark.codecs.container import _ZSTD
 
     sample = data[:_FSST_TRIAL_BYTES]
     if len(sample) < 1024:
         return True  # tiny buffers: trial cost is irrelevant, just compete
+    fsst_zstd = _fsst_trial_zstd(sample)
+    if fsst_zstd is None:
+        return False
+    if plain_zstd is None:
+        plain_zstd = len(_ZSTD.compress(sample, asbytes=True))
+    return fsst_zstd < 0.80 * plain_zstd
+
+
+def _fsst_trial_zstd(sample: bytes) -> int | None:
+    """zstd size of the trial slice's bit-packed token stream, or None
+    when the head builds no symbol table."""
+    from parquet_toolkit_spark.codecs import fsst as fsst_mod
+    from parquet_toolkit_spark.codecs.bits import pack_uints
+    from parquet_toolkit_spark.codecs.container import _ZSTD
+
     # table from the slice HEAD (enc_bin_fsst's own build policy), applied
     # across the slice — the trial must mirror what the codec will do
     merges = fsst_mod.build_table(sample[:65536])
     if not merges:
-        return False
+        return None
     tokens = fsst_mod.apply_merges(sample, merges)
     used = np.unique(tokens)
     remap = np.zeros(512, dtype=np.int64)
@@ -321,9 +415,7 @@ def _fsst_sample_wins(data: bytes) -> bool:
     codes = remap[tokens].view(np.uint64)
     w = bit_width(len(used) - 1) if len(used) > 1 else 0
     packed = pack_uints(codes, w)
-    fsst_zstd = len(_ZSTD.compress(bytes(packed), asbytes=True))
-    plain_zstd = len(_ZSTD.compress(sample, asbytes=True))
-    return fsst_zstd < 0.80 * plain_zstd
+    return len(_ZSTD.compress(bytes(packed), asbytes=True))
 
 
 def select_codec(chunk: ColumnChunk, stats: dict | None = None,
@@ -392,11 +484,11 @@ def plan_hints(cols: dict, keep_best: int = 1) -> dict[str, list[str]]:
     for name, arr in cols.items():
         chunk = from_arrow(arr)
         stats = profile_chunk(chunk)
-        sizes: list[tuple[int, str]] = []
-        for cand in candidate_codecs(chunk, stats):
-            sizes.append((len(encode_blob(chunk, cand)), cand))
-        sizes.sort()
-        chosen = [c for _, c in sizes[:keep_best]]
+        cands = candidate_codecs(chunk, stats)
+        if len(cands) > 1:  # a lone candidate wins without a trial encode
+            cands = [c for _, c in sorted(
+                (len(encode_blob(chunk, c)), c) for c in cands)]
+        chosen = cands[:keep_best]
         floor = {"bin": "bin_plain", "int": "int_plain",
                  "flist": "flist_plain",
                  "nested": "nested_ipc"}.get(chunk.kind)

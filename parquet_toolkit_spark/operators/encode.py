@@ -31,8 +31,8 @@ import json
 import math
 import os
 from collections.abc import Callable, Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +41,9 @@ from pyspark.sql import functions as F
 from parquet_toolkit_spark.operators.layout import sampled_width_and_rows
 from parquet_toolkit_spark.sources import store
 from parquet_toolkit_spark.sources.store import MANIFEST_DDL, read_manifest
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # one encoded row per (pid, column): the manifest row less its status,
 # plus the codec blob
@@ -138,7 +141,11 @@ def _rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
 def _encode_pdf(pdf: pd.DataFrame, pid: int, schema_map: dict[str, str],
                 run_id: str,
                 exclude_codecs: frozenset[str] = frozenset()) -> pd.DataFrame:
-    """pandas entry (applyInPandas resume path)."""
+    """pandas entry (applyInPandas resume path). pandas is imported here,
+    not at module top: store workers import this module for every task
+    and never need it."""
+    import pandas as pd
+
     cols = {
         col: pa.Array.from_pandas(pdf[col], type=_arrow_type_for(stype))
         for col, stype in schema_map.items()

@@ -213,6 +213,112 @@ def input_footers(df: DataFrame) -> list[tuple[str, object]]:
         return []
 
 
+def _flat_parquet_files(spark: SparkSession, paths: list[str]
+                        ) -> list[str] | None:
+    """The files `spark.read.parquet(*paths)` scans, sorted, when every
+    path is a parquet file or a flat directory of them (no subdirectory,
+    so no partition discovery; names Spark hides skipped); None when
+    anything else is there, or nothing is."""
+    from parquet_toolkit_spark.sources.fs import DriverFS
+    from parquet_toolkit_spark.sources.parquet_tools import PARQUET_SUFFIXES
+
+    dfs = DriverFS(spark)
+    files: list[str] = []
+    for p in paths:
+        if any(c in p for c in "*?[{"):
+            return None  # a glob: Spark expands it
+        if not dfs.is_dir(p):
+            if not p.lower().endswith(PARQUET_SUFFIXES):
+                return None
+            files.append(p)
+            continue
+        if dfs.list_dirs(p):
+            return None
+        for f, _size in dfs.list_files(p):
+            name = os.path.basename(f)
+            if name.startswith(("_metadata", "_common_metadata")):
+                return None  # Spark would infer from the summary file
+            if name.startswith(".") or (name.startswith("_")
+                                        and "=" not in name):
+                continue
+            if not name.lower().endswith(PARQUET_SUFFIXES):
+                return None
+            files.append(f)
+    files.sort()
+    return files if files and len(set(files)) == len(files) else None
+
+
+def _footer_ddl(metas: list) -> str | None:
+    """The Spark DDL schema Spark infers for files with these footers, or
+    None unless every footer has one parquet schema whose every column
+    maps exactly (no INT96, no unsigned or nanosecond type, no Spark type
+    the row metadata gives otherwise)."""
+    import json
+
+    import pyarrow as pa
+
+    from parquet_toolkit_spark.operators.encode import _ddl_of_arrow
+
+    first = metas[0].schema
+    if any(not md.schema.equals(first) for md in metas[1:]):
+        return None
+    if any(first.column(i).physical_type == "INT96"
+           for i in range(len(first))):
+        return None
+    fields = []
+    for f in first.to_arrow_schema():
+        ddl = _ddl_of_arrow(f.type)
+        if ddl is None or (pa.types.is_timestamp(f.type)
+                           and f.type.unit == "ns"):
+            return None
+        fields.append((f.name, ddl))
+    spark_meta = (metas[0].metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_meta is not None:
+        # Spark infers from its own row metadata when a file carries it
+        from pyspark.sql.types import StructType
+
+        try:
+            written = StructType.fromJson(json.loads(spark_meta))
+        except Exception:
+            return None
+        if [(f.name, f.dataType.simpleString()) for f in written] != fields:
+            return None
+    return ", ".join("`{}` {}".format(n.replace("`", "``"), ddl)
+                     for n, ddl in fields)
+
+
+def read_parquet_footed(spark: SparkSession, paths: list[str]
+                        ) -> tuple[DataFrame, list[tuple[str, object]]]:
+    """`spark.read.parquet(*paths)` and the (file, footer) list
+    input_footers gives for it, each footer read once on the driver. When
+    every path is a parquet file or a flat directory of them and the
+    footers give one exactly-typed schema (_footer_ddl), the frame reads
+    with that schema, so Spark runs no schema-inference job; otherwise
+    Spark infers it as before."""
+    import pyarrow as pa
+
+    from pyspark.errors import ParseException
+
+    from parquet_toolkit_spark.sources.parquet_tools import read_footers
+
+    files = _flat_parquet_files(spark, paths)
+    if files is not None:
+        try:
+            metas = read_footers(files)
+        except (OSError, pa.ArrowException):
+            metas = None
+        ddl = _footer_ddl(metas) if metas else None
+        if ddl is not None:
+            try:
+                return (spark.read.schema(ddl).parquet(*paths),
+                        list(zip(files, metas)))
+            except ParseException:
+                pass
+    df = spark.read.parquet(*paths)
+    return df, input_footers(df)
+
+
 def _footer_key_sample(df: DataFrame, keys: list[str],
                        footers: list[tuple[str, object]]):
     """(sampled key columns, rows each sampled row stands for) read from
@@ -502,13 +608,12 @@ def sort_by_key(spark: SparkSession, in_path: str | list[str], out_path: str,
     NULLS FIRST; descending=True sorts every key descending, NULLS LAST).
 
     One range shuffle on driver-picked bounds (range_split), then a sort
-    within each partition: file i holds the i-th key range. The footers
-    give the exact row count and the width, so nothing is scanned before
-    the shuffle.
+    within each partition: file i holds the i-th key range. The footers,
+    read once (read_parquet_footed), give the schema, the exact row count
+    and the width, so nothing is scanned before the shuffle.
     """
     paths = [in_path] if isinstance(in_path, str) else list(in_path)
-    df = spark.read.parquet(*paths)
-    footers = input_footers(df)
+    df, footers = read_parquet_footed(spark, paths)
     n_rows = sum(md.num_rows for _f, md in footers)
     bpr = _footer_bytes_per_row([md for _f, md in footers])
     if bpr is not None:

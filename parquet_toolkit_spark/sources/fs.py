@@ -129,6 +129,14 @@ class DriverFS:
 
         return os.path.exists(strip_local_scheme(path))
 
+    def is_dir(self, path: str) -> bool:
+        if self._use_jvm(path):
+            fs, jp = self._fs(path), self._jpath(path)
+            return bool(fs.exists(jp) and fs.getFileStatus(jp).isDirectory())
+        import os
+
+        return os.path.isdir(strip_local_scheme(path))
+
     def mkdirs(self, path: str) -> None:
         if self._use_jvm(path):
             self._fs(path).mkdirs(self._jpath(path))

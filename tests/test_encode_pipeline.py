@@ -1059,3 +1059,18 @@ def test_layout_stage_bounds_ignore_session_history(spark, corpus_df,
         assert max(sizes) <= 1.25 * sum(sizes) / len(sizes), sizes
     assert len(digests[0]) == 8
     assert digests[0] == digests[1] == digests[2]
+
+
+def test_encode_module_imports_no_pandas():
+    """Store workers import operators.encode for every task, and only the
+    incremental (pandas) entry needs pandas: a fresh interpreter that
+    imports the module must not load it (~0.4 s per worker)."""
+    import subprocess
+    import sys
+
+    code = ("import sys, parquet_toolkit_spark.operators.encode; "
+            "print('pandas' in sys.modules)")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "False"

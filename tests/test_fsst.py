@@ -12,6 +12,7 @@ north-rule scope, from the public VLDB 2020 paper.
 from __future__ import annotations
 
 import hashlib
+import os
 import random
 
 import numpy as np
@@ -20,6 +21,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import TESTDATA
 from parquet_toolkit_spark.codecs import fsst as fm
 
 
@@ -165,6 +167,120 @@ def test_fsst_gate_verdicts_pinned(staged_corpus_cols):
     verdicts = {n: _fsst_sample_wins(from_arrow(a).data)
                 for n, a in staged_corpus_cols.items()}
     assert verdicts == _GATE_FSST_WINS
+
+
+# The FSST screen (selector._fsst_screen) may only say no: every column it
+# rejects must be one the 1 MB trial rejects. Checked on every string
+# column that reaches the gate, over the stores the system writes and the
+# fixtures, plus the codec tests' inputs and low-entropy iid strings
+# (where zstd sits far above H0 and a token stream wins).
+_SF_DIRS = tuple(os.path.join(TESTDATA, sf) for sf in ("sf0.01", "sf0.1"))
+
+
+def _staged_f0_pids(root: str, seed: int) -> list:
+    """The 30 k-row F0 corpus of `seed` as an 8-pid layout_stage stages
+    it: sorted by (repo, path, commit), 3750 rows per pid."""
+    from parquet_toolkit_spark.datagen import write_corpus
+
+    src = write_corpus(os.path.join(root, f"f0-{seed}"), 30_000,
+                       n_files=64, seed=seed)
+    table = pq.read_table(src).sort_by(
+        [(k, "ascending") for k in ("repo", "path", "commit")])
+    return [table.slice(i * 3750, 3750) for i in range(8)]
+
+
+def _low_entropy_docs() -> dict:
+    out = {}
+    for weights in ((49, 49, 2), (9, 1), (7, 2, 1), (60, 30, 5, 5)):
+        rng = random.Random(1)
+        alphabet = "FOPQ"[:len(weights)]
+        out[f"iid{weights}"] = ["".join(rng.choices(alphabet, weights, k=40))
+                                for _ in range(20_000)]
+    return out
+
+
+def _gated_columns(name: str, table) -> dict:
+    """(source, column) -> chunk for the string columns of `table` that
+    reach the FSST step of candidate_codecs."""
+    import pyarrow as pa
+
+    from parquet_toolkit_spark.codecs.chunk import from_arrow
+    from parquet_toolkit_spark.codecs.selector import (
+        FSST_MAX_BYTES,
+        profile_chunk,
+    )
+
+    out = {}
+    for col in table.schema.names:
+        if not pa.types.is_string(table.schema.field(col).type):
+            continue
+        chunk = from_arrow(table.column(col).combine_chunks())
+        stats = profile_chunk(chunk)
+        if (stats["distinct_ratio"] >= 0.5 and stats["byte_entropy"] < 6.5
+                and len(chunk.data) <= FSST_MAX_BYTES):
+            out[(name, col)] = (chunk, stats["byte_entropy"])
+    return out
+
+
+@pytest.fixture(scope="module")
+def screen_corpus(tmp_path_factory, staged_corpus_cols):
+    import pyarrow as pa
+
+    root = str(tmp_path_factory.mktemp("screen"))
+    cols = {}
+    for seed in (1, 2):
+        for pid, table in enumerate(_staged_f0_pids(root, seed)):
+            cols.update(_gated_columns(f"f0-{seed}-{pid}", table))
+    cols.update(_gated_columns("f0-pinned", pa.table(staged_corpus_cols)))
+    for sf in _SF_DIRS:
+        if os.path.isdir(sf):
+            for t in ("documents", "customer", "supplier"):
+                cols.update(_gated_columns(
+                    f"{os.path.basename(sf)}.{t}",
+                    pq.read_table(f"{sf}/{t}.parquet")))
+    rng = random.Random(7)
+    words = ["the", "quick", "brown", "fox", "jumps", "over", "lazy",
+             "dog", "while", "reading", "spark", "manifests", "daily"]
+    synthetic = {
+        "word_docs": [" ".join(rng.choices(words, k=120))
+                      for _ in range(1200)],
+        "random_hex": ["".join(hashlib.sha256(str(i).encode()).hexdigest()
+                               for i in range(4000))],
+        **_low_entropy_docs(),
+    }
+    for name, values in synthetic.items():
+        cols.update(_gated_columns(name, pa.table({"v": values})))
+    return cols
+
+
+def test_fsst_screen_only_rejects_what_the_trial_rejects(screen_corpus):
+    from parquet_toolkit_spark.codecs.container import _ZSTD
+    from parquet_toolkit_spark.codecs.selector import (
+        _FSST_TRIAL_BYTES,
+        _fsst_sample_wins,
+        _fsst_screen,
+    )
+
+    screened = set()
+    for key, (chunk, h0) in screen_corpus.items():
+        plain = _fsst_screen(chunk.data, h0)
+        wins = _fsst_sample_wins(chunk.data)
+        if plain is None:
+            screened.add(key)
+            assert wins is False, f"screen rejects {key}, the trial admits"
+        else:  # the size handed to the trial is the one it would compute
+            sample = chunk.data[:_FSST_TRIAL_BYTES]
+            assert plain == len(_ZSTD.compress(sample, asbytes=True)), key
+            assert _fsst_sample_wins(chunk.data, plain) == wins, key
+    f0 = {k for k in screen_corpus if k[0].startswith("f0-")}
+    assert {c for _, c in screened & f0} == {"commit", "content"}
+    assert {k for k in f0 if k[1] in ("commit", "content")} <= screened
+    reach = set(screen_corpus) - screened
+    assert {k for k in f0 if k[1] == "path"} <= reach
+    assert {k for k in screen_corpus if k[1] == "text"} <= reach
+    assert ("sf0.01.documents", "text") in reach
+    assert ("random_hex", "v") in screened
+    assert {k for k in screen_corpus if k[0].startswith("iid")} <= reach
 
 
 def test_fast_apply_roundtrips_and_tracks_greedy_size():

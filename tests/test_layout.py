@@ -259,8 +259,9 @@ def test_place_by_pid_puts_pid_p_in_partition_p(spark, n):
 
 def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
     """layout_stage on a parquet frame runs the shuffle's map stage and
-    the write; sort_by_key adds only its own schema read. No sampling job
-    and no count job run before the shuffle."""
+    the write, and so does sort_by_key: it reads its input with the
+    footers' schema, so Spark runs no schema-inference job. No sampling
+    job and no count job run before the shuffle."""
     from parquet_toolkit_spark.operators.encode import layout_stage
 
     src = f"{SF}/lineitem.parquet"
@@ -289,7 +290,77 @@ def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
     tracker = sc.statusTracker()
     jobs = {name: len(tracker.getJobIdsForGroup(f"range-pin-{name}"))
             for name in calls}
-    assert jobs == {"layout_stage": 2, "layout_stage_n": 2, "sort_by_key": 3}
+    assert jobs == {"layout_stage": 2, "layout_stage_n": 2, "sort_by_key": 2}
+
+
+def _jobs_in(spark, group, call):
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["corpus", "lineitem", "orders", "events",
+                                  "documents"])
+def test_footer_schema_read_equals_inferred_schema(spark, tmp_path, name):
+    """sort_by_key's input frame, read with the schema its footers give,
+    has the schema Spark's own inference gives, its footer list is the
+    one input_footers gives, and reading it runs no Spark job: on a
+    flat directory of F0 corpus files and on the fixture tables."""
+    from parquet_toolkit_spark.operators.layout import (
+        input_footers,
+        read_parquet_footed,
+    )
+    from parquet_toolkit_spark.sources.fs import strip_local_scheme
+
+    if name == "corpus":
+        from parquet_toolkit_spark.datagen import write_corpus
+
+        src = write_corpus(str(tmp_path / "corpus"), 2000, n_files=20, seed=1)
+    else:
+        src = f"{SF}/{name}.parquet"
+    (df, footers), jobs = _jobs_in(spark, f"footed-{name}",
+                                   lambda: read_parquet_footed(spark, [src]))
+    assert jobs == 0
+    want = spark.read.parquet(src)
+    assert df.schema.simpleString() == want.schema.simpleString()
+    assert df.schema == want.schema
+    assert ([strip_local_scheme(f) for f, _ in footers]
+            == [strip_local_scheme(f) for f, _ in input_footers(want)])
+    assert df.count() == want.count()
+
+
+def test_footer_schema_read_falls_back_on_int96(spark, tmp_path):
+    """An INT96 timestamp has no exact footer mapping (Spark reads it as
+    timestamp, pyarrow as timestamp_ntz), so the frame falls back to
+    Spark's inference and keeps Spark's schema."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.operators.layout import (
+        _footer_ddl,
+        read_parquet_footed,
+    )
+
+    src = str(tmp_path / "int96.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2, 3]),
+                             "ts": pa.array([dt.datetime(2020, 1, d)
+                                             for d in (1, 2, 3)])}),
+                   src, use_deprecated_int96_timestamps=True)
+    assert _footer_ddl([pq.ParquetFile(src).metadata]) is None
+    (df, footers), jobs = _jobs_in(spark, "footed-int96",
+                                   lambda: read_parquet_footed(spark, [src]))
+    assert jobs >= 1
+    want = spark.read.parquet(src)
+    assert df.schema == want.schema
+    assert df.schema.simpleString() == "struct<k:bigint,ts:timestamp>"
+    assert len(footers) == 1
 
 
 def test_split_by_size_bounds(spark, tmp_path):
