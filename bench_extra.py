@@ -73,13 +73,8 @@ def main() -> None:
         yield pd.DataFrame({"x": [1]})
 
     spark.range(CPUS * 4).repartition(CPUS * 2).mapInPandas(_noop, "x long").count()
-    warm = [n for n in (
-        "minhash_lsh", "simhash_pairs", "ivf_ann_topk",
-        "embedding_near_pairs_lsh", "media_features",
-        "ngram_jaccard_minhash", "dedup_clusters", "encode_pruned_decode",
-        "fsck_store", "bloom_point_lookup", "compact_store",
-        "iceberg_bucket_prune", "ptsc_scan", "zorder_prune",
-        "jsonl_convert", "nested_roundtrip") if n in names or not sys.argv[1:]]
+    warm = [n for n in benchmod.WARM_QUERIES
+            if n in names or not sys.argv[1:]]
     for name in warm:
         qs[name](spark, SF_DIR)
     if "merge_compact" in names or not sys.argv[1:]:

@@ -284,6 +284,9 @@ def main(argv: list[str] | None = None) -> dict:
                             quarantine=args.quarantine)
     elif v == "encode":
         from parquet_toolkit_spark.operators.encode import encode_pipeline
+        from parquet_toolkit_spark.operators.layout import (
+            read_parquet_footed,
+        )
         kw = {}
         if _cols(args.range_keys):
             kw["range_keys"] = tuple(_cols(args.range_keys))
@@ -292,7 +295,7 @@ def main(argv: list[str] | None = None) -> dict:
         if _cols(args.cluster_keys):
             kw["cluster_keys"] = tuple(_cols(args.cluster_keys))
         man = encode_pipeline(
-            spark, spark.read.parquet(args.input), args.output,
+            spark, read_parquet_footed(spark, [args.input])[0], args.output,
             target_bytes=_size(args.target_size), run_id=args.run_id,
             bloom_columns=tuple(_cols(args.bloom_columns) or ()), **kw)
         agg = man.groupBy().agg(

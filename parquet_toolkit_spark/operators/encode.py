@@ -276,18 +276,14 @@ def plan_layout(df: DataFrame, target_bytes: int,
     if cluster_keys:
         from parquet_toolkit_spark.operators.zorder import (
             ZCLUSTER_COL,
-            zorder_key,
+            zorder_split,
         )
 
-        if ZCLUSTER_COL in df.columns:
-            raise ValueError(f"input already has a {ZCLUSTER_COL} column")
-        zk = zorder_key(df, tuple(cluster_keys), bits=cluster_bits,
-                        total_rows=n_rows)
         eff_sort = (tuple(cluster_keys) if sort_keys is DEFAULT_SORT_KEYS
                     else tuple(sort_keys))
         out = (
-            df.withColumn(ZCLUSTER_COL, zk)
-            .repartitionByRange(n_partitions, F.col(ZCLUSTER_COL))
+            zorder_split(df, tuple(cluster_keys), cluster_bits,
+                         n_partitions, footers, n_rows)
             .sortWithinPartitions(*[F.col(k) for k in eff_sort])
             .drop(ZCLUSTER_COL)
         )

@@ -94,26 +94,6 @@ def _target_file_counts(df: DataFrame, target_bytes: int,
     return n_parts, max_records
 
 
-def _footer_disk_bytes_per_row(sample: list[tuple[str, int]],
-                               sample_files: int = 8) -> float | None:
-    """ON-DISK (compressed) bytes/row from footer row counts of up to
-    `sample_files` largest files — lets compact() size maxRecordsPerFile
-    without a count job. None when no footer is readable."""
-    import pyarrow as pa
-
-    from parquet_toolkit_spark.sources.parquet_tools import read_footers
-
-    picked = sorted(sample, key=lambda t: -t[1])[:sample_files]
-    try:
-        metas = read_footers([p for p, _sz in picked])
-    except (OSError, pa.ArrowException):
-        return None
-    tot_rows = sum(md.num_rows for md in metas)
-    if tot_rows <= 0:
-        return None
-    return sum(sz for _p, sz in picked) / tot_rows
-
-
 def _footer_bytes_per_row(metas: list, sample_files: int = 8
                           ) -> float | None:
     """Serialized (encoded, pre-compression) bytes/row from parquet footer
@@ -185,12 +165,14 @@ def _footer_decoded_bytes_per_row(metas: list, sample_files: int = 8
 # ------------------------------------------------------- range splitters
 #
 # A range layout needs n-1 bounds on the key and a way to send every row
-# to partition #{bounds <= key}. Spark's RangePartitioner samples the
-# whole input in one or two jobs (every column is scanned) and seeds its
-# re-sample from the RDD id, so its bounds change with session history.
-# Here the driver picks the bounds from a bounded, deterministic sample
-# of the key columns alone, read from the parquet footers' row groups,
-# and the rows move in one hash shuffle whose partition i holds pid i.
+# to partition #{bounds <= key}. Every range layout in the package (the
+# plain and Z-order layouts, sort_by_key, the Iceberg sorted and Z-order
+# rewrites) goes through range_split: the driver picks the bounds from
+# one bounded key sample (key_sample: the parquet footers' row groups,
+# else one seeded, key-pruned Spark sample), range_pid ranks each row
+# against them, and the rows move in one hash shuffle whose partition i
+# holds pid i. Neither the sample nor the shuffle depends on session
+# history, so one input always gives the same partitions.
 
 #: the key sample: at most this many row groups, at most this many rows
 _SAMPLE_GROUPS = 64
@@ -319,14 +301,16 @@ def read_parquet_footed(spark: SparkSession, paths: list[str]
     return df, input_footers(df)
 
 
-def _footer_key_sample(df: DataFrame, keys: list[str],
-                       footers: list[tuple[str, object]]):
-    """(sampled key columns, rows each sampled row stands for) read from
-    the files' row groups, or None when a key is not a top-level column,
-    of the frame's type, of every sampled file. Row groups are picked by
-    a fixed stride over the (path, row group) list, and each pick gives
-    its first _SAMPLE_ROWS / picks rows: no RNG, so one input always
-    gives one sample."""
+def key_sample(df: DataFrame, keys: list[str],
+               footers: list[tuple[str, object]], n_rows: int | None):
+    """(sampled key columns as an Arrow table, rows each sampled row
+    stands for), one sample per input. From the input's row groups
+    (`footers`, from input_footers), with no Spark job, when every key is
+    a top-level column of the frame's type in every sampled file: row
+    groups are picked by a fixed stride over the (path, row group) list
+    and each pick gives its first _SAMPLE_ROWS / picks rows. Else from
+    one key-pruned Spark sample with a fixed seed (plus a count when
+    `n_rows` is None)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -337,27 +321,31 @@ def _footer_key_sample(df: DataFrame, keys: list[str],
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     groups = [(f, md, i) for f, md in footers
               for i in range(md.num_row_groups) if md.row_group(i).num_rows]
-    if not groups:  # no row: any bounds will do
+    if footers and not groups:  # no row: any bounds will do
         return pa.table({k: pa.array([]) for k in keys}), np.empty(0)
     n_picks = min(len(groups), _SAMPLE_GROUPS)
     picks = [groups[j * len(groups) // n_picks] for j in range(n_picks)]
-    head = -(-_SAMPLE_ROWS // n_picks)
-    tables, weights = [], []
-    for f, md, i in picks:
-        schema = md.schema.to_arrow_schema()
-        if any(k not in schema.names
-               or _ddl_of_arrow(schema.field(k).type) != types[k]
-               for k in keys):
-            return None
-        fs, plain = task_fs(f)
-        pf = pq.ParquetFile(fs.open_input_file(plain), metadata=md)
-        b = next(pf.iter_batches(batch_size=head, row_groups=[i],
-                                 columns=list(keys)))
-        tables.append(pa.Table.from_batches([b]).select(list(keys)))
-        weights.append(np.full(b.num_rows,
-                               md.row_group(i).num_rows / b.num_rows))
-    return (pa.concat_tables(tables, promote_options="permissive"),
-            np.concatenate(weights))
+    schemas = [md.schema.to_arrow_schema() for _f, md, _i in picks]
+    if picks and all(k in s.names
+                     and _ddl_of_arrow(s.field(k).type) == types.get(k)
+                     for s in schemas for k in keys):
+        head = -(-_SAMPLE_ROWS // n_picks)
+        tables, weights = [], []
+        for f, md, i in picks:
+            fs, plain = task_fs(f)
+            pf = pq.ParquetFile(fs.open_input_file(plain), metadata=md)
+            b = next(pf.iter_batches(batch_size=head, row_groups=[i],
+                                     columns=list(keys)))
+            tables.append(pa.Table.from_batches([b]).select(list(keys)))
+            weights.append(np.full(b.num_rows,
+                                   md.row_group(i).num_rows / b.num_rows))
+        return (pa.concat_tables(tables, promote_options="permissive"),
+                np.concatenate(weights))
+    if n_rows is None:
+        n_rows = df.count()
+    frac = min(1.0, _SAMPLE_ROWS / max(n_rows, 1))
+    sample = df.select(*keys).sample(False, frac, seed=0).toArrow()
+    return sample, np.full(sample.num_rows, n_rows / max(sample.num_rows, 1))
 
 
 def _order_key(bound: tuple) -> tuple:
@@ -483,31 +471,18 @@ def range_split(df: DataFrame, keys: list[str], n: int,
                 descending: bool = False) -> DataFrame:
     """`df` range-partitioned on `keys` into exactly n partitions, where
     partition p holds the rows of pid p (see range_pid): rows of a lower
-    pid sort before every row of a higher one.
-
-    The bounds come from the key columns of the input's row groups
-    (`footers`, from input_footers) with no Spark job; when the frame
-    scans no parquet file or a key is not a top-level file column, from
-    one key-pruned, seeded Spark sample (plus a count when `n_rows` is
-    None). The rows then move in one hash shuffle (place_by_pid)."""
-    import numpy as np
-
+    pid sort before every row of a higher one. The bounds are n-1
+    quantiles of key_sample; the rows then move in one hash shuffle
+    (place_by_pid)."""
     keys = list(keys)
     nested = [f.name for f in df.schema.fields if f.name in keys
               and f.dataType.simpleString().startswith(
                   ("array<", "struct<", "map<"))]
     if nested:
         raise TypeError(f"range keys must be atomic columns: {nested}")
-    got = _footer_key_sample(df, keys, footers) if footers else None
-    if got is None:
-        if n_rows is None:
-            n_rows = df.count()
-        frac = min(1.0, _SAMPLE_ROWS / max(n_rows, 1))
-        sample = df.select(*keys).sample(False, frac, seed=0).toArrow()
-        got = sample, np.full(sample.num_rows,
-                              n_rows / max(sample.num_rows, 1))
-    pid = range_pid(df, keys, range_bounds(*got, n, descending), descending)
-    return place_by_pid(df, pid, n)
+    bounds = range_bounds(*key_sample(df, keys, footers, n_rows), n,
+                          descending)
+    return place_by_pid(df, range_pid(df, keys, bounds, descending), n)
 
 
 def compact(spark: SparkSession, in_path: str | list[str], out_path: str,
@@ -532,7 +507,7 @@ def compact(spark: SparkSession, in_path: str | list[str], out_path: str,
     so rows decode+re-encode inside the task — same as the reference's
     SimpleMergeThread row path, and what allows codec/row-group re-tuning.
     """
-    from parquet_toolkit_spark.sources.fs import DriverFS
+    from parquet_toolkit_spark.sources.fs import DriverFS, strip_local_scheme
 
     paths = [in_path] if isinstance(in_path, str) else list(in_path)
     fs = DriverFS(spark)
@@ -564,17 +539,23 @@ def compact(spark: SparkSession, in_path: str | list[str], out_path: str,
     # adjacent scan partitions into exactly n_bins write tasks
     sess.conf.set("spark.sql.files.maxPartitionBytes", str(target_bytes))
     sess.conf.set("spark.sql.files.openCostInBytes", str(64 << 10))
-    df = sess.read.parquet(*paths)
+    # the footers, read once, give the schema (no inference job on a
+    # flat input) and the row counts sized from below
+    df, footers = read_parquet_footed(sess, paths)
     # maxRecordsPerFile rolls oversize bins (e.g. one unsplittable
     # row group bigger than target) into multiple files WITHIN a task
     # — the reference splitter's roll-at-target behavior
     # (SimpleParquetSplitter.java:118-130); sized from ON-DISK bytes
-    # per row so compressed in ~= compressed out. bytes/row comes from
-    # footer row counts of sampled files (guide §1.2: the footers
-    # already know), so the common path runs ZERO jobs before the write;
-    # a count job remains only as the fallback for unreadable footers
-    # or nested layouts the flat sample missed.
-    disk_bpr = _footer_disk_bytes_per_row(sample) if sample else None
+    # per row of the <= 8 largest listed files, so compressed in ~=
+    # compressed out, and the common path runs ZERO jobs before the
+    # write; a count job remains only as the fallback for unreadable
+    # footers or nested layouts the flat sample missed.
+    rows_of = {strip_local_scheme(f): md.num_rows for f, md in footers}
+    picked = sorted(sample, key=lambda t: -t[1])[:8]
+    picked_rows = [rows_of.get(strip_local_scheme(p)) for p, _sz in picked]
+    disk_bpr = None
+    if picked and None not in picked_rows and sum(picked_rows) > 0:
+        disk_bpr = sum(sz for _p, sz in picked) / sum(picked_rows)
     if disk_bytes <= 0:
         # zero-byte listing despite rows (exotic fs): fall back to the
         # sampled row-width estimate instead of an unbounded file size

@@ -2406,7 +2406,7 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
 
     sort_by: sorted compaction — the table-format home of the toolkit's
     sorter family (SimpleParquetSorter/BigParquetSorter semantics):
-    repartitionByRange + sortWithinPartitions on the keys (ascending,
+    layout.range_split + sortWithinPartitions on the keys (ascending,
     range-partitioned so files hold disjoint key ranges) and a declared
     sort order (order-id 1) committed in the metadata with each new
     file's sort_order_id. Sorted files + the per-file column bounds make
@@ -2422,8 +2422,9 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
     key. Like the engine-side action (and per the spec, which defines no
     z-order sort-order transform), the clustering lives in the data
     layout + bounds only; no sort order is declared in metadata.
-    Boundary sampling sizes itself from the manifests' record counts —
-    no extra full-table count job.
+    Both layouts pick their range bounds on the driver from the live
+    files' footers and the manifests' record counts, so one table gives
+    the same files in any session and no full-table count job runs.
 
     binary=True: ZERO-DECODE compaction — the live data files are merged
     by raw row-group byte copy + footer surgery
@@ -2440,10 +2441,15 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
     deleted rows), when files predate a partition-spec evolution, or
     when sort_by/zorder_by is requested; identical parquet schemas
     across inputs are enforced by the append itself."""
+    import math
     import os
     import uuid
 
+    import pyarrow as pa
+
+    from parquet_toolkit_spark.operators import layout, zorder
     from parquet_toolkit_spark.sources.fs import strip_local_scheme
+    from parquet_toolkit_spark.sources.parquet_tools import read_footers
 
     table_dir = strip_local_scheme(table_dir).rstrip("/")
     if sort_by and zorder_by:
@@ -2462,40 +2468,39 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
     df = _read_plan(spark, sf)
     sort_orders = None
     sort_order_id = None
-    if zorder_by:
-        from pyspark.sql import functions as F
-
-        from parquet_toolkit_spark.operators.zorder import (
-            ZCLUSTER_COL,
-            zorder_key,
-        )
-
-        missing = [c for c in zorder_by if c not in df.columns]
-        if missing:
-            raise ValueError(f"zorder_by columns {missing} not in table")
+    keys = zorder_by or sort_by
+    missing = [c for c in keys or () if c not in df.columns]
+    if missing:
+        raise ValueError(f"{'zorder_by' if zorder_by else 'sort_by'} "
+                         f"columns {missing} not in table")
+    if keys:
+        # the manifests give the rows (no full-table count), the live
+        # files' footers the key sample: a key renamed, retyped or
+        # missing in a file makes range_split take its seeded sample
         counts = list(sf["record_counts"].values())
-        total = (sum(counts) if counts and all(c is not None for c in counts)
-                 else None)  # foreign manifests w/o counts: zorder counts
-        zk = zorder_key(df, tuple(zorder_by), bits=zorder_bits,
-                        total_rows=total)
-        # sortWithinPartitions on the Morton key keeps maxRecordsPerFile's
-        # contiguous splits z-contiguous, so every output file covers one
-        # small z range (-> tight bounds on every cluster column)
-        df = (df.withColumn(ZCLUSTER_COL, zk)
-              .repartitionByRange(F.col(ZCLUSTER_COL))
-              .sortWithinPartitions(ZCLUSTER_COL)
-              .drop(ZCLUSTER_COL))
+        total = sum(counts) if None not in counts else None
+        if target_file_rows and total is not None:
+            n = math.ceil(total / target_file_rows)
+        else:  # compact's rule
+            n = math.ceil(sum(v or 0 for v in sf["file_sizes"].values())
+                          / layout.DEFAULT_TARGET_BYTES)
+        try:
+            footers = list(zip(sf["data"], read_footers(sf["data"])))
+        except (OSError, pa.ArrowException):
+            footers = []
+    if zorder_by:
+        # sorting on the Morton key keeps maxRecordsPerFile's contiguous
+        # splits z-contiguous, so every output file covers one small z
+        # range (-> tight bounds on every cluster column)
+        df = (zorder.zorder_split(df, tuple(zorder_by), zorder_bits,
+                                  max(1, n), footers, total)
+              .sortWithinPartitions(zorder.ZCLUSTER_COL)
+              .drop(zorder.ZCLUSTER_COL))
     if sort_by:
-        missing = [c for c in sort_by if c not in df.columns]
-        if missing:
-            raise ValueError(f"sort_by columns {missing} not in table")
-        # no df.count(): a full-table pre-scan (through the merge-on-read
-        # anti-joins) just to size files would double compaction cost at
-        # scale (code-review r4). Catalyst samples the key distribution
-        # for the range partitioning; target_file_rows is enforced by the
-        # writer's maxRecordsPerFile, which splits CONTIGUOUSLY within
-        # each sorted partition, so disjoint key ranges survive.
-        df = (df.repartitionByRange(*sort_by)
+        # target_file_rows is enforced by the writer's maxRecordsPerFile,
+        # which splits CONTIGUOUSLY within each sorted partition, so
+        # disjoint key ranges survive
+        df = (layout.range_split(df, sort_by, max(1, n), footers, total)
               .sortWithinPartitions(*sort_by))
         name_to_fid = existing["schema_name_to_id"]
         sort_order_id = 1

@@ -57,6 +57,42 @@ def test_cli_compact_encode_decode_fsck(spark, tmp_path):
     assert set(res3) == {"ok"}
 
 
+def test_cli_encode_reads_footer_schema(spark, tmp_path, monkeypatch):
+    """The encode verb reads its input with the footers' schema: on a
+    flat parquet directory the frame it hands to encode_pipeline has the
+    schema Spark infers, and building it runs no Spark job."""
+    import parquet_toolkit_spark.operators.encode as encode_mod
+
+    src = str(tmp_path / "src")
+    spark.range(300).select(
+        F.col("id"), (F.col("id") % 7).cast("int").alias("k"),
+        F.col("id").cast("string").alias("v"),
+    ).repartition(3).write.parquet(src)
+
+    class Built(Exception):
+        pass
+
+    sc = spark.sparkContext
+    seen = {}
+
+    def capture(_spark, df, *_a, **_kw):
+        seen["df"] = df
+        seen["jobs"] = len(sc.statusTracker().getJobIdsForGroup("cli-encode"))
+        raise Built
+
+    monkeypatch.setattr(encode_mod, "encode_pipeline", capture)
+    try:
+        sc.setJobGroup("cli-encode", "cli-encode")
+        with pytest.raises(Built):
+            main(["encode", "--input", src, "--output",
+                  str(tmp_path / "enc")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen["jobs"] == 0
+    assert seen["df"].schema == spark.read.parquet(src).schema
+
+
 def test_cli_sort_split_csv(spark, tmp_path):
     src = str(tmp_path / "s")
     spark.range(2000).select(

@@ -261,11 +261,17 @@ def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
     """layout_stage on a parquet frame runs the shuffle's map stage and
     the write, and so does sort_by_key: it reads its input with the
     footers' schema, so Spark runs no schema-inference job. No sampling
-    job and no count job run before the shuffle."""
+    job and no count job run before the shuffle. compact and
+    split_by_size run only the write. A Z-order layout_stage adds one
+    sample of the Morton key: its column ranks come from the footers."""
     from parquet_toolkit_spark.operators.encode import layout_stage
+    from parquet_toolkit_spark.operators.layout import read_parquet_footed
 
     src = f"{SF}/lineitem.parquet"
     df = spark.read.parquet(src)
+    footed, _ = read_parquet_footed(spark, [src])
+    flat = str(tmp_path / "flat")
+    df.repartition(6).write.parquet(flat)
     sc = spark.sparkContext
     calls = {
         "layout_stage": lambda: layout_stage(
@@ -279,6 +285,13 @@ def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
         "sort_by_key": lambda: sort_by_key(
             spark, src, str(tmp_path / "sorted"),
             keys=["l_orderkey", "l_linenumber"], target_bytes=1 << 20),
+        "layout_stage_z": lambda: layout_stage(
+            spark, footed, str(tmp_path / "stg_z"), target_bytes=1 << 20,
+            cluster_keys=("l_orderkey", "l_partkey")),
+        "compact": lambda: compact(spark, flat, str(tmp_path / "compact"),
+                                   target_bytes=256 << 10),
+        "split_by_size": lambda: split_by_size(
+            spark, flat, str(tmp_path / "split"), target_bytes=256 << 10),
     }
     try:
         for name, call in calls.items():
@@ -290,7 +303,69 @@ def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
     tracker = sc.statusTracker()
     jobs = {name: len(tracker.getJobIdsForGroup(f"range-pin-{name}"))
             for name in calls}
-    assert jobs == {"layout_stage": 2, "layout_stage_n": 2, "sort_by_key": 2}
+    assert jobs == {"layout_stage": 2, "layout_stage_n": 2, "sort_by_key": 2,
+                    "layout_stage_z": 3, "compact": 1, "split_by_size": 1}
+
+
+def _file_rows(files):
+    """The sorted rows of each parquet file, in the order given."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in files:
+        t = pq.read_table(f)
+        out.append(sorted(zip(*(t.column(c).to_pylist()
+                                for c in t.column_names)),
+                          key=repr))
+    return out
+
+
+def test_range_layouts_are_the_same_in_any_session(spark, tmp_path):
+    """A Z-order layout_stage and a sorted and a Z-order Iceberg rewrite
+    write the same rows to every output file (by part index; for Iceberg
+    by commit order) in the caller's session and in a new session after
+    an unrelated job, so the RDD ids differ: their bounds come from the
+    footers and a seeded sample, not from RangePartitioner, whose sample
+    is seeded by the RDD id."""
+    from parquet_toolkit_spark.operators.encode import layout_stage
+    from parquet_toolkit_spark.sources import iceberg_compat as ic
+
+    src = f"{SF}/lineitem.parquet"
+    rows = [(i, (i * 7919) % 3000, f"v{i % 37}") for i in range(4000)]
+
+    def run(sess, tag):
+        stg = str(tmp_path / f"stg_{tag}")
+        layout_stage(sess, sess.read.parquet(src), stg,
+                     target_bytes=1 << 20,
+                     cluster_keys=("l_orderkey", "l_partkey"))
+        staged = sorted(glob.glob(os.path.join(stg, "part-*.parquet")),
+                        key=_part_index)
+        out = {"zorder_stage": _file_rows(staged)}
+        for name, kw in (("sort_by", {"sort_by": ["id"]}),
+                         ("zorder_by", {"zorder_by": ["id", "uid"]})):
+            tdir = str(tmp_path / f"{name}_{tag}")
+            ic.write_table(sess, sess.createDataFrame(
+                rows, "id long, uid long, v string"), tdir)
+            rw = ic.rewrite_data_files(sess, tdir, target_file_rows=250,
+                                       **kw)
+            out[name] = _file_rows(rw["files"])
+        return out
+
+    def session():
+        # AQE would coalesce a small range shuffle into one partition,
+        # where any bounds give the same files
+        sess = spark.newSession()
+        sess.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+                      "false")
+        return sess
+
+    first = run(session(), "a")
+    other = session()
+    other.range(1000).repartitionByRange(7, "id").count()  # unrelated job
+    second = run(other, "b")
+    assert len(first["zorder_stage"]) > 1
+    for name in first:
+        assert first[name] == second[name], name
 
 
 def _jobs_in(spark, group, call):

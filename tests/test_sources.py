@@ -3565,3 +3565,32 @@ def test_iceberg_reads_pin_spark_job_counts(spark, tmp_path):
     jobs = {name: len(tracker.getJobIdsForGroup(f"iceberg-pin-{name}"))
             for name in calls}
     assert jobs == {"read_data": 9, "iceberg_fs": 1}
+
+
+def test_iceberg_rewrites_pin_spark_job_counts(spark, tmp_path):
+    """A sorted rewrite picks its range bounds from the live files'
+    footers and runs the shuffle's map stage and the write; a Z-order
+    rewrite adds one sample of the Morton key. Neither counts the table
+    (the manifests give the rows) nor runs Spark's RangePartitioner."""
+    from parquet_toolkit_spark.sources import iceberg_compat as ic
+
+    rows = [(i, (i * 7919) % 3000, f"v{i}") for i in range(4000)]
+    sc = spark.sparkContext
+    jobs = {}
+    for name, kw in (("sort_by", {"sort_by": ["id"]}),
+                     ("zorder_by", {"zorder_by": ["id", "uid"]})):
+        tdir = str(tmp_path / name)
+        ic.write_table(spark, spark.createDataFrame(
+            rows, "id long, uid long, v string").repartition(5), tdir)
+        try:
+            sc.setJobGroup(f"iceberg-rw-{name}", name)
+            rw = ic.rewrite_data_files(spark, tdir, target_file_rows=250,
+                                       **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rw["files"]) >= 16
+        jobs[name] = len(
+            sc.statusTracker().getJobIdsForGroup(f"iceberg-rw-{name}"))
+        assert ic.read_data(spark, tdir).count() == 4000
+    assert jobs == {"sort_by": 2, "zorder_by": 3}

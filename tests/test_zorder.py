@@ -118,3 +118,86 @@ def test_zorder_key_is_jvm_side(spark):
     zk = zorder_key(df, ("ts", "user_id"), bits=6, total_rows=2_000)
     plan = df.withColumn("z", zk)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
+
+
+def _py_rank(v, bounds):
+    """#{bounds <= v}: null ranks 0, NaN above every bound."""
+    import bisect
+
+    if v is None:
+        return 0
+    if v != v:
+        return len(bounds)
+    return bisect.bisect_right(bounds, v)
+
+
+def _py_interleave(ranks, bits):
+    """Morton code of the ranks, one bit of each in turn, most
+    significant first."""
+    z = 0
+    for bit in range(bits - 1, -1, -1):
+        for r in ranks:
+            z = (z << 1) | ((r >> bit) & 1)
+    return z
+
+
+def _plain(v):
+    """A sampled bound as the value collect() gives (naive UTC
+    timestamps in the UTC test session)."""
+    if isinstance(v, dt.datetime) and v.tzinfo is not None:
+        return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def test_morton_key_equals_python_bit_interleave(spark, tmp_path):
+    """The spread-table Morton key equals a bit-by-bit interleave of the
+    same ranks, #{bounds <= value}, for bits 1-8 and 1-3 columns, on
+    long, double (with NaN), timestamp and string columns with nulls."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.operators.layout import (
+        input_footers,
+        key_sample,
+    )
+    from parquet_toolkit_spark.operators.zorder import _morton, _rank_bounds
+
+    rows = []
+    for i in range(600):
+        rows.append((
+            None if i % 17 == 0 else (i * 7919) % 211 - 50,
+            None if i % 13 == 0 else (float("nan") if i % 11 == 0
+                                      else ((i * 31) % 97) / 7.0),
+            None if i % 19 == 0 else (dt.datetime(2024, 1, 1)
+                                      + dt.timedelta(hours=(i * 37) % 500)),
+            None if i % 23 == 0 else f"s{(i * 13) % 150:03d}é"))
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({
+        "l": pa.array([r[0] for r in rows], pa.int64()),
+        "d": pa.array([r[1] for r in rows], pa.float64()),
+        "t": pa.array([r[2] for r in rows], pa.timestamp("us", "UTC")),
+        "s": pa.array([r[3] for r in rows], pa.string())}), src,
+        row_group_size=150)
+    df = spark.read.parquet(src)
+    footers = input_footers(df)
+    sc = spark.sparkContext
+    try:  # the ranks come from the footers' row groups: no Spark job
+        sc.setJobGroup("morton-footer-sample", "morton-footer-sample")
+        key_sample(df, ["l", "d", "t", "s"], footers, None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup("morton-footer-sample")
+    names = ["l", "d", "t", "s"]
+    for k in (1, 2, 3):
+        for bits in range(1, 9):  # every type leads at every k
+            cols = tuple((names * 2)[bits % 4:bits % 4 + k])
+            bounds = _rank_bounds(df, cols, bits, footers, None)
+            plain = {c: [_plain(b) for (b,) in bounds[c]] for c in cols}
+            assert all(0 < len(b) < 1 << bits for b in plain.values())
+            got = df.select(*cols, _morton(df, cols, bits, bounds)
+                            .alias("z")).collect()
+            assert len(got) == len(rows)
+            for r in got:
+                ranks = [_py_rank(r[c], plain[c]) for c in cols]
+                assert r.z == _py_interleave(ranks, bits), (cols, bits, r)
