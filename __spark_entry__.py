@@ -48,7 +48,7 @@ _NESTED_READ_WARMED: set[str] = set()
 
 # bump when any fixture-producing plan changes: stale caches under the old
 # version are simply left behind in /tmp, never read
-_FIX_VERSION = "v4"
+_FIX_VERSION = "v5"
 
 _FP_MEMO: dict[str, str] = {}
 

@@ -59,11 +59,10 @@ def main() -> None:
 
     from parquet_toolkit_spark.operators.encode import encode_partitions
 
-    # plain layout (part-NNNNN in the staging root) or legacy pid= dirs
+    # layout_stage writes part-NNNNN files in the staging root
     staged_bytes = sum(
         os.path.getsize(f)
-        for pat in ("part-*", os.path.join("pid=*", "*"))
-        for f in glob.glob(os.path.join(args.staging, pat))
+        for f in glob.glob(os.path.join(args.staging, "part-*"))
         if os.path.isfile(f)
     )
 

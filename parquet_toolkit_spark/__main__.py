@@ -283,7 +283,10 @@ def main(argv: list[str] | None = None) -> dict:
                             schema=args.schema, compression=args.codec,
                             quarantine=args.quarantine)
     elif v == "encode":
-        from parquet_toolkit_spark.operators.encode import encode_pipeline
+        from parquet_toolkit_spark.operators.encode import (
+            encode_pipeline,
+            encoded_size_report,
+        )
         from parquet_toolkit_spark.operators.layout import (
             read_parquet_footed,
         )
@@ -294,15 +297,13 @@ def main(argv: list[str] | None = None) -> dict:
             kw["sort_keys"] = tuple(_cols(args.sort_keys))
         if _cols(args.cluster_keys):
             kw["cluster_keys"] = tuple(_cols(args.cluster_keys))
-        man = encode_pipeline(
+        encode_pipeline(
             spark, read_parquet_footed(spark, [args.input])[0], args.output,
             target_bytes=_size(args.target_size), run_id=args.run_id,
             bloom_columns=tuple(_cols(args.bloom_columns) or ()), **kw)
-        agg = man.groupBy().agg(
-            {"bytes_in": "sum", "bytes_out": "sum"}).first()
-        res = {"pids": man.select("pid").distinct().count(),
-               "bytes_in": agg["sum(bytes_in)"],
-               "bytes_out": agg["sum(bytes_out)"]}
+        rep = encoded_size_report(spark, args.output)
+        res = {"pids": rep["n_partitions"], "bytes_in": rep["bytes_in"],
+               "bytes_out": rep["bytes_out"]}
     elif v == "decode":
         from parquet_toolkit_spark.operators.encode import (
             decode_pipeline,

@@ -1671,7 +1671,7 @@ def _land_parquet_parts(df: DataFrame, table_dir: str, data_dir: str,
     import shutil
     import uuid
 
-    tmp = os.path.join(table_dir, f"_tmp_write_{uuid.uuid4().hex[:8]}")
+    tmp = os.path.join(table_dir, f"_tmp_land_{uuid.uuid4().hex[:8]}")
     w = df.write.mode("overwrite")
     if max_records:
         w = w.option("maxRecordsPerFile", max_records)
@@ -1734,7 +1734,7 @@ def _land_partitioned_parts(df: DataFrame, table_dir: str, data_dir: str,
                     "a data column; rename the column or the spec field")
             df = df.withColumn(f["name"], _spec_partition_col(f, ddl))
         cols.append(f["name"])
-    tmp = os.path.join(table_dir, f"_tmp_write_{uuid.uuid4().hex[:8]}")
+    tmp = os.path.join(table_dir, f"_tmp_land_{uuid.uuid4().hex[:8]}")
     w = df.write.mode("overwrite")
     if max_records:
         w = w.option("maxRecordsPerFile", max_records)

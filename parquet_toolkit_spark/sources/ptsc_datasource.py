@@ -10,9 +10,11 @@ reader prunes PIDS at the manifest layer (int/string zone maps, prefix
 bounds, per-chunk blooms — the same evidence decode_where uses) and
 returns every filter as residual, because pid pruning is a SUPERSET
 optimization: Spark re-applies the predicates row-level, so results are
-exact while pruned partitions cost zero blob IO. One input partition per
-(pid, blob file); reads yield Arrow batches through the shared
-_decode_blob_file (memory-mapped IPC, zero-copy blob views).
+exact while pruned partitions cost zero blob IO. Pid files are bundled
+into at most MAX_PARTITIONS input partitions; reads yield Arrow batches
+through the store's one pid-file reader, encode._read_pid (memory-mapped
+IPC, zero-copy blob views), and writes go through its one writer,
+encode._write_pid.
 
 Driver-side planning reads the manifest with pyarrow directly — no
 nested Spark jobs during query planning, and the reader stays picklable.
@@ -27,7 +29,7 @@ from __future__ import annotations
 
 import os
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -253,44 +255,34 @@ class PtscReader(DataSourceReader):
         # one None partition — Spark's planner contract, not an error
         if partition is None:
             return
-        import pyarrow as pa
+        from parquet_toolkit_spark.operators.encode import (
+            _read_pid,
+            _spark_schema,
+        )
 
-        from parquet_toolkit_spark.operators.encode import _decode_blob_file
-        from parquet_toolkit_spark.sources.ddl import ddl_to_arrow
-
-        # ddl_to_arrow covers nested shapes too (r6): a struct/map/array
-        # column decodes from its IPC section with the ingest-time arrow
-        # type preserved, then casts to the exact type Spark's Arrow
-        # deserializer expects for the declared schema (no-op when the
-        # store was Spark-written)
-        schema_map = store.read_schema_map(DriverFS(), self.path)
-        fields = [(c, ddl_to_arrow(ddl)) for c, ddl in schema_map.items()]
+        schema = _spark_schema(store.read_schema_map(DriverFS(), self.path))
         for fpath in partition.value:
-            cols = _decode_blob_file(fpath, set(schema_map))
-            arrays = [cols[c] if str(cols[c].type) == str(t)
-                      else cols[c].cast(t) for c, t in fields]
-            table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-            yield from table.to_batches(max_chunksize=32768)
+            yield from _read_pid(fpath, schema).to_batches(
+                max_chunksize=32768)
 
 
 @dataclass
 class PtscCommitMessage(WriterCommitMessage):
-    rows: list = field(default_factory=list)  # manifest rows, blob dropped
-    pid_dir: str | None = None
+    rows: object = None  # the task's manifest rows (a RecordBatch) or None
 
 
 class PtscWriter(DataSourceArrowWriter):
     """df.write.format("ptsc").save(dir) — each task codec-encodes its
-    Spark partition into one pid blob file (same layout, manifest row
-    shape, and write-temp-then-rename protocol as encode_pipeline); the
-    driver commit writes _schema.json and swap-commits the manifest.
+    Spark partition into one pid file through encode._write_pid (the
+    store's one writer); the driver commit swap-commits the manifest and
+    the schema map.
 
     The caller owns the partitioning: a plain write encodes whatever
     partitions the plan produced — use encode_pipeline for the
-    range-partition + sort layout semantics. Append assigns fresh pids
-    above the store's committed maximum (ids never reused); overwrite
-    replaces the whole manifest and deletes the old pid directories
-    after the swap, like compact_store's delete-inputs protocol."""
+    range-partition + sort layout semantics. Pids start at
+    store.next_pid (ids never reused); overwrite replaces the whole
+    manifest and deletes the old pid directories after the swap, like
+    compact_store's delete-inputs protocol."""
 
     def __init__(self, path: str, schema_map: dict[str, str],
                  base_pid: int, old_pid_dirs: list[str],
@@ -306,67 +298,39 @@ class PtscWriter(DataSourceArrowWriter):
 
         from pyspark import TaskContext
 
-        from parquet_toolkit_spark.operators.encode import (
-            _encode_columns,
-            _rows_to_batch,
-        )
-        from parquet_toolkit_spark.sources.fs import (
-            task_fs,
-            task_write_ipc_atomic,
-        )
+        from parquet_toolkit_spark.operators.encode import _write_pid
 
         batches = [b for b in iterator if b.num_rows]
         if not batches:
             return PtscCommitMessage()
         pid = self.base_pid + TaskContext.get().partitionId()
-        table = pa.Table.from_batches(batches)
-        cols = {n: table.column(n).combine_chunks()
-                for n in table.schema.names}
-        rows = _encode_columns(cols, pid, run_id="dsw")
-        blob_table = pa.Table.from_batches([_rows_to_batch(rows)]) \
-            .drop_columns(["pid"])
-        dest_dir = store.pid_dir(self.path, pid)
-        wfs, dest_plain = task_fs(dest_dir)
-        wfs.create_dir(dest_plain, recursive=True)
-        tfs, tmp_plain = task_fs(os.path.join(self.path, "_tmp_write"))
-        tfs.create_dir(tmp_plain, recursive=True)
-        task_write_ipc_atomic(
-            blob_table,
-            os.path.join(self.path, "_tmp_write", f"pid-{pid}.arrow"),
-            os.path.join(dest_dir, "part-0.arrow"),
-        )
-        return PtscCommitMessage(
-            rows=[{k: v for k, v in r.items() if k != "blob"}
-                  for r in rows],
-            pid_dir=dest_dir,
-        )
+        return PtscCommitMessage(rows=_write_pid(
+            self.path, pid, pa.Table.from_batches(batches), run_id="dsw"))
 
     def commit(self, messages):
         import shutil
 
         import pyarrow as pa
 
-        dfs = DriverFS()
-        rows = pa.Table.from_pylist(
-            [r for m in messages if m is not None for r in m.rows],
+        rows = pa.Table.from_batches(
+            [m.rows for m in messages if m is not None and m.rows is not None],
             schema=store.ROWS_SCHEMA)
         # overwrite carries no committed row over; append carries them all
-        store.commit(dfs, self.path, rows, None if self.overwrite else [],
-                     self.schema_map)
+        store.commit(DriverFS(), self.path, rows,
+                     None if self.overwrite else [], self.schema_map)
         if self.overwrite:
             for d in self.old_pid_dirs:  # delete-inputs, post-commit
                 shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(os.path.join(self.path, "_tmp_write"),
-                      ignore_errors=True)
 
     def abort(self, messages):
         import shutil
 
         for m in messages or []:
-            if m is not None and m.pid_dir:
-                shutil.rmtree(m.pid_dir, ignore_errors=True)
-        shutil.rmtree(os.path.join(self.path, "_tmp_write"),
-                      ignore_errors=True)
+            if m is not None and m.rows is not None:
+                for pid in set(m.rows.column("pid").to_pylist()):
+                    shutil.rmtree(store.pid_dir(self.path, pid),
+                                  ignore_errors=True)
+        shutil.rmtree(os.path.join(self.path, store.TMP), ignore_errors=True)
 
 
 class PtscDataSource(DataSource):
@@ -420,19 +384,13 @@ class PtscDataSource(DataSource):
             existing = store.read_schema_map(dfs, path)
         except FileNotFoundError:
             existing = None  # a fresh store
-        base_pid, old_dirs = 0, []
-        if existing is not None:
-            if not overwrite and existing != schema_map:
-                raise ValueError(
-                    f"schema mismatch appending to ptsc store {path}: "
-                    f"store has {existing}, dataframe has {schema_map}")
-            pids = store.committed_pids(dfs, path)
-            if pids:
-                # fresh pids above the committed maximum (never reused);
-                # overwrite also starts there so new blob dirs cannot
-                # collide with live ones mid-write
-                base_pid = max(pids) + 1
-            if overwrite:
-                old_dirs = list(store.pid_dirs(
-                    dfs, os.path.join(path, store.BLOBS)).values())
-        return PtscWriter(path, schema_map, base_pid, old_dirs, overwrite)
+        if existing is not None and not overwrite and existing != schema_map:
+            raise ValueError(
+                f"schema mismatch appending to ptsc store {path}: "
+                f"store has {existing}, dataframe has {schema_map}")
+        # fresh pids (never reused); overwrite also starts there so new
+        # blob dirs cannot collide with live ones mid-write
+        old_dirs = list(store.pid_dirs(
+            dfs, os.path.join(path, store.BLOBS)).values()) if overwrite else []
+        return PtscWriter(path, schema_map, store.next_pid(dfs, path),
+                          old_dirs, overwrite)

@@ -6,9 +6,9 @@ goes through this module; no other module names a manifest directory.
 
 Layout of a store directory::
 
-    blobs/pid=N/part-*.arrow   one Arrow IPC file per pid: one row per
-                               column (column, codec, nrows, ..., blob);
-                               Spark-written stores hold part-*.parquet
+    blobs/pid=N/part-0.arrow   one Arrow IPC file per pid: one row per
+                               column (column, codec, nrows, ..., blob),
+                               written by encode._write_pid only
     manifest/                  the committed manifest: parquet parts, one
                                row per (pid, column), see MANIFEST_SCHEMA
     manifest/_schema.json      {column: Spark DDL} committed with it
@@ -16,11 +16,14 @@ Layout of a store directory::
     manifest_old/              the previous manifest during the swap
     _schema.json               compat copy of the schema map, refreshed
                                after each swap (DuckDB-side readers)
-    _tmp/, _tmp_write/         writers' temp files before the atomic
-                               rename into blobs/
+    _tmp/                      writers' temp files before the atomic
+                               rename into blobs/; commit deletes it
 
 The manifest is the source of truth: a blob directory without committed
 manifest rows is an orphan that readers ignore and fsck_store reports.
+Every writer takes fresh pids from ``next_pid`` (orphan dirs included),
+so a write never touches a committed pid's file; the pids a commit
+replaces are deleted only after the swap.
 ``commit`` moves a store from one manifest to the next with the
 reference's temp-then-rename protocol (SimpleMergeThread.java:118-122):
 stage manifest_new/ (parts, then _schema.json), rename manifest/ to
@@ -53,6 +56,7 @@ MANIFEST_NEW = "manifest_new"
 MANIFEST_OLD = "manifest_old"
 SCHEMA_FILE = "_schema.json"
 BLOBS = "blobs"
+TMP = "_tmp"
 
 MANIFEST_SCHEMA = pa.schema([
     ("pid", pa.int32()), ("column", pa.string()), ("codec", pa.string()),
@@ -87,9 +91,9 @@ def pid_dirs(dfs, folder: str) -> dict[int, str]:
 
 
 def data_files(dfs, folder: str) -> list[tuple[str, int]]:
-    """Sorted (path, size) of the .arrow/.parquet files in `folder`."""
+    """Sorted (path, size) of the .arrow blob files in `folder`."""
     return [(f, sz) for f, sz in dfs.list_files(folder)
-            if f.endswith((".arrow", ".parquet"))]
+            if f.endswith(".arrow")]
 
 
 def _committed_parts(dfs, store: str) -> tuple[str, list[str]] | None:
@@ -150,6 +154,15 @@ def committed_pids(dfs, store: str) -> set[int] | None:
     return None if t is None else set(t.column("pid").to_pylist())
 
 
+def next_pid(dfs, store: str) -> int:
+    """The one pid allocator: 1 + the largest committed pid or ``pid=N``
+    directory, 0 when there are neither. Orphan directories count, so a
+    fresh pid never lands in a crashed run's leftovers."""
+    used = (committed_pids(dfs, store) or set()) | set(
+        pid_dirs(dfs, posixpath.join(store, BLOBS)))
+    return max(used) + 1 if used else 0
+
+
 def read_schema_map(dfs, store: str) -> dict[str, str]:
     """{column: Spark DDL} of the store: the copy committed beside the
     manifest, else the root copy."""
@@ -170,7 +183,8 @@ def commit(dfs, store: str, rows: pa.Table, replaced,
     carried-over rows are read after an interrupted swap is rolled
     forward, so they are the committed ones. The staged manifest is one
     parquet part written with pyarrow through the fs shim: no Spark job.
-    Never deletes the only committed copy (code-review r3)."""
+    Never deletes the only committed copy (code-review r3). The writers'
+    temp dir goes last: every blob it staged has been renamed away."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -212,6 +226,7 @@ def commit(dfs, store: str, rows: pa.Table, replaced,
         # Hadoop rename refuses an existing target
         dfs.delete(root, recursive=False)
         dfs.rename(root + ".tmp", root)
+    dfs.delete(posixpath.join(store, TMP), recursive=True)
 
 
 def chunk_stats(dfs, store: str, columns: set[str]

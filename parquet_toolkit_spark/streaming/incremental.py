@@ -4,29 +4,69 @@ are encoded into the blob store as they arrive.
 The reference is batch-only (SURVEY.md §2.8); this is the Spark-native
 extension the north star anticipates ("incremental encode of new
 partitions maps to readStream + foreachBatch"). Each micro-batch becomes
-one or more encoded pids appended to the store; the manifest commit reads
-only the batch's new pid dirs and unions them with the committed manifest
-(O(batch) per batch — a stream's cost must not grow with store history).
+one or more encoded pids appended to the store. Its tasks write their pid
+files through the store's one writer (encode._write_pid) and return the
+manifest rows, and the commit appends those rows to the committed
+manifest without reading a blob file: O(batch) per batch — a stream's
+cost must not grow with store history.
 
-Pid allocation: micro-batch pids continue after the current manifest max
-(batch 0 starts at 0), so streamed partitions never collide with batch
-ones.
+Pid allocation: each increment's pids start at store.next_pid (0 on a
+fresh store), so streamed partitions never collide with batch ones or
+with a crashed run's orphan dirs.
 """
 
 from __future__ import annotations
 
-
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from parquet_toolkit_spark.operators.encode import (
-    ENCODED_SCHEMA,
-    _encode_pdf,
+    _ROWS_DDL,
     _schema_map,
-    _write_encoded,
+    _write_pid,
 )
+from parquet_toolkit_spark.sources import store
+from parquet_toolkit_spark.sources.fs import DriverFS
+
+_CODEC_PROFILES = {"fast": frozenset({"bin_fsst"}), "small": frozenset()}
+
+
+def _excluded_codecs(codec_profile: str) -> frozenset[str]:
+    if codec_profile not in _CODEC_PROFILES:
+        raise ValueError(f"unknown codec_profile {codec_profile!r}")
+    return _CODEC_PROFILES[codec_profile]
+
+
+def _encode_increment(spark: SparkSession, df: DataFrame, enc_dir: str,
+                      run_id: str, rows_per_pid: int,
+                      exclude: frozenset[str]) -> tuple[int, list[int]]:
+    """Append `df` to the store as fresh pids of ~rows_per_pid rows:
+    count, round-robin repartition, one _write_pid per task, one manifest
+    commit that carries every committed row over. Returns (rows, pids
+    written); an empty frame commits nothing."""
+    # one count job doubles as the emptiness check
+    n = df.count()
+    if n == 0:
+        return 0, []
+    dfs = DriverFS(spark)
+    base_pid = store.next_pid(dfs, enc_dir)
+    n_parts = max(1, (n + rows_per_pid - 1) // rows_per_pid)
+
+    def encode_iter(batches):
+        from pyspark import TaskContext
+
+        parts = list(batches)
+        if not parts:  # an empty round-robin partition writes no pid
+            return
+        pid = base_pid + TaskContext.get().partitionId()
+        yield _write_pid(enc_dir, pid, pa.Table.from_batches(parts), run_id,
+                         exclude_codecs=exclude)
+
+    rows = df.repartition(n_parts).mapInArrow(encode_iter, _ROWS_DDL) \
+        .toArrow()
+    store.commit(dfs, enc_dir, rows, [], _schema_map(df))
+    return n, sorted(set(rows.column("pid").to_pylist()))
 
 
 def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
@@ -44,10 +84,7 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
     "small" competes every codec like the batch path.
 
     Returns the StreamingQuery (already stopped if available_now)."""
-    if codec_profile not in ("fast", "small"):
-        raise ValueError(f"unknown codec_profile {codec_profile!r}")
-    exclude = frozenset({"bin_fsst"}) if codec_profile == "fast" \
-        else frozenset()
+    exclude = _excluded_codecs(codec_profile)
     stream = (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", 64)
@@ -55,38 +92,8 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
     )
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from parquet_toolkit_spark.sources.fs import DriverFS
-        from parquet_toolkit_spark.sources.store import committed_pids
-
-        # one count job doubles as the emptiness check (isEmpty was a
-        # second job per batch); base_pid comes from a driver-side arrow
-        # manifest read instead of a Spark agg job
-        n = batch_df.count()
-        if n == 0:
-            return
-        pids = committed_pids(DriverFS(spark), enc_dir)
-        base_pid = max(pids) + 1 if pids else 0
-        schema_map = _schema_map(batch_df)
-        n_parts = max(1, (n + rows_per_pid - 1) // rows_per_pid)
-        laid = batch_df.repartition(n_parts)
-
-        def encode_iter(batches):
-            from pyspark import TaskContext
-
-            parts = list(batches)
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            pid = base_pid + TaskContext.get().partitionId()
-            yield _encode_pdf(pdf, pid, schema_map, f"{run_id}-e{epoch_id}",
-                              exclude_codecs=exclude)
-
-        encoded = laid.mapInPandas(encode_iter, ENCODED_SCHEMA)
-        # pass the batch's pid range so the manifest commit reads ONLY the
-        # just-written pid dirs and unions with the committed manifest —
-        # O(batch) per micro-batch, not an O(store) rebuild (VERDICT r3 #3)
-        _write_encoded(spark, encoded, enc_dir, schema_map, append_pids=True,
-                       pids=list(range(base_pid, base_pid + n_parts)))
+        _encode_increment(spark, batch_df, enc_dir, f"{run_id}-e{epoch_id}",
+                          rows_per_pid, exclude)
 
     writer = (
         stream.writeStream.foreachBatch(handle_batch)
@@ -117,31 +124,17 @@ def encode_iceberg_increment(spark: SparkSession, table_dir: str,
     encode; non-append snapshots in range raise (incremental_scan).
 
     Returns {"rows", "snapshot_id", "pids"}."""
-    from pyspark import TaskContext
-
     from parquet_toolkit_spark.sources.iceberg_compat import (
         incremental_scan,
         read_table_metadata,
     )
 
-    if codec_profile not in ("fast", "small"):
-        raise ValueError(f"unknown codec_profile {codec_profile!r}")
-    exclude = frozenset({"bin_fsst"}) if codec_profile == "fast" \
-        else frozenset()
-
-    from parquet_toolkit_spark.sources.fs import DriverFS
-    from parquet_toolkit_spark.sources.store import manifest_table
-
-    mt = manifest_table(DriverFS(spark), enc_dir, ["run_id", "pid"])
-    last = None
-    base_pid = 0
-    if mt is not None and mt.num_rows:
-        run_ids = mt.column("run_id").to_pylist()
-        pid_vals = mt.column("pid").to_pylist()
-        done = [int(r.split("-", 1)[1]) for r in run_ids
-                if r is not None and r.startswith("iceinc-")]
-        last = max(done) if done else None
-        base_pid = max(pid_vals) + 1
+    exclude = _excluded_codecs(codec_profile)
+    mt = store.manifest_table(DriverFS(spark), enc_dir, ["run_id"])
+    done = [int(r.split("-", 1)[1])
+            for r in (mt.column("run_id").to_pylist() if mt is not None else [])
+            if r is not None and r.startswith("iceinc-")]
+    last = max(done) if done else None
 
     md = read_table_metadata(table_dir, spark)
     to_id = md["current_snapshot_id"]
@@ -153,26 +146,6 @@ def encode_iceberg_increment(spark: SparkSession, table_dir: str,
     # wedging the pipeline forever (code-review r4)
     df = incremental_scan(spark, table_dir, last, to_id,
                           allow_expired_from=True)
-    n = df.count()
-    if n == 0:
-        return {"rows": 0, "snapshot_id": to_id, "pids": []}
-    schema_map = _schema_map(df)
-    n_parts = max(1, (n + rows_per_pid - 1) // rows_per_pid)
-    laid = df.repartition(n_parts)
-    run_id = f"iceinc-{to_id}"
-
-    def encode_iter(batches):
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 \
-            else parts[0]
-        pid = base_pid + TaskContext.get().partitionId()
-        yield _encode_pdf(pdf, pid, schema_map, run_id,
-                          exclude_codecs=exclude)
-
-    encoded = laid.mapInPandas(encode_iter, ENCODED_SCHEMA)
-    pids = list(range(base_pid, base_pid + n_parts))
-    _write_encoded(spark, encoded, enc_dir, schema_map, append_pids=True,
-                   pids=pids)
+    n, pids = _encode_increment(spark, df, enc_dir, f"iceinc-{to_id}",
+                                rows_per_pid, exclude)
     return {"rows": n, "snapshot_id": to_id, "pids": pids}

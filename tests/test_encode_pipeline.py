@@ -1062,15 +1062,16 @@ def test_layout_stage_bounds_ignore_session_history(spark, corpus_df,
 
 
 def test_encode_module_imports_no_pandas():
-    """Store workers import operators.encode for every task, and only the
-    incremental (pandas) entry needs pandas: a fresh interpreter that
-    imports the module must not load it (~0.4 s per worker)."""
+    """Store workers import the store writers' modules for every task,
+    and no writer hands pandas frames around: a fresh interpreter that
+    imports one must not load pandas (~0.4 s per worker)."""
     import subprocess
     import sys
 
-    code = ("import sys, parquet_toolkit_spark.operators.encode; "
-            "print('pandas' in sys.modules)")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = subprocess.run([sys.executable, "-c", code], cwd=root,
-                         capture_output=True, text=True, check=True)
-    assert out.stdout.strip() == "False"
+    for module in ("parquet_toolkit_spark.operators.encode",
+                   "parquet_toolkit_spark.streaming.incremental"):
+        code = f"import sys, {module}; print('pandas' in sys.modules)"
+        out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                             capture_output=True, text=True, check=True)
+        assert out.stdout.strip() == "False", module

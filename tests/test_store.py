@@ -23,6 +23,7 @@ from parquet_toolkit_spark.operators.encode import (
     layout_stage,
     read_manifest,
 )
+from parquet_toolkit_spark.operators.layout import read_parquet_footed
 from parquet_toolkit_spark.sources import store
 from parquet_toolkit_spark.sources.fs import DriverFS
 from parquet_toolkit_spark.sources.ptsc_datasource import PtscDataSource
@@ -161,8 +162,14 @@ def test_store_calls_add_no_spark_job(spark, tmp_path):
     stg, enc = str(tmp_path / "stg"), str(tmp_path / "enc")
     layout_stage(spark, _keyed(spark, 0, 600), stg, n_partitions=3,
                  range_keys=("k",), sort_keys=("k",))
+    # the staged _keyed rows, read with the footers' schema (no job)
+    staged = read_parquet_footed(spark, [stg])[0]
     sc = spark.sparkContext
     calls = {
+        # the range shuffle and the encode job; the commit reads no blob
+        "pipeline": lambda: encode_pipeline(
+            spark, staged, str(tmp_path / "pipe"), n_partitions=3,
+            range_keys=("k",), sort_keys=("k",), run_id="pin-p"),
         "encode": lambda: encode_partitions(spark, stg, enc, run_id="pin"),
         "lookup": lambda: decode_where(spark, enc, {"k": (10, 19)}).collect(),
         "lookup_count": lambda: decode_where(
@@ -187,6 +194,28 @@ def test_store_calls_add_no_spark_job(spark, tmp_path):
     tracker = sc.statusTracker()
     jobs = {name: len(tracker.getJobIdsForGroup(f"store-pin-{name}"))
             for name in calls}
-    assert jobs == {"encode": 1, "lookup": 1, "lookup_count": 1,
-                    "decode": 1, "fsck": 3, "compact": 1}
+    assert jobs == {"pipeline": 2, "encode": 1, "lookup": 1,
+                    "lookup_count": 1, "decode": 1, "fsck": 3, "compact": 1}
     shutil.rmtree(stg)
+
+
+def test_encode_pipeline_crash_before_commit_keeps_old_store(
+        spark, tmp_path, monkeypatch):
+    # re-encoding writes fresh pids beside the committed ones; a crash
+    # before the manifest swap leaves the old view readable and intact
+    enc = str(tmp_path / "enc")
+    keys = dict(n_partitions=2, range_keys=("k",), sort_keys=("k",))
+    encode_pipeline(spark, _keyed(spark, 0, 300), enc, run_id="old", **keys)
+    old = sorted(tuple(r) for r in decode_pipeline(spark, enc).collect())
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the manifest swap")
+
+    monkeypatch.setattr(store, "commit", crash)
+    with pytest.raises(RuntimeError, match="before the manifest swap"):
+        encode_pipeline(spark, _keyed(spark, 1000, 1500), enc, run_id="new",
+                        **keys)
+    monkeypatch.undo()
+    assert sorted(tuple(r) for r in decode_pipeline(spark, enc).collect()) \
+        == old
+    assert {r.status for r in fsck_store(spark, enc).collect()} == {"ok"}
