@@ -7,9 +7,9 @@ answers "which pids might contain value v" in O(pids) driver time, and
 decode touches only those — the blob-store analogue of parquet
 column-index bloom filters, built vectorized at encode time.
 
-Hashing: one 64-bit value hash per row (splitmix64 for ints, the same
-polynomial-with-modular-inverses closed form functions/text.py uses for
-strings — whole-batch numpy, zero per-row Python), double-hashed into
+Hashing: one 64-bit value hash per row (splitmix64 for ints, a
+polynomial hash in closed form with modular inverses for strings —
+whole-batch numpy, zero per-row Python), double-hashed into
 K=4 bit positions of an M=32768-bit (4 KB) filter. At the default chunk
 size (~250k rows of a key column) that is ~8 bits/row -> ~2-3% false
 positives; false NEGATIVES are impossible, so pruning is always sound.
@@ -40,9 +40,14 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 
 
 def _poly_hash_batch(data: bytes, offsets: np.ndarray) -> np.ndarray:
-    """One polynomial hash per value over the concatenated buffer —
-    the closed form of functions/text._rolling_hash_batch applied to
-    arbitrary (data, offsets) instead of a pandas Series."""
+    """One polynomial hash per value over the concatenated buffer,
+    equal to _poly_hash_one of each value.
+
+    Per value: h = offset*B^n + sum_j b_j * B^(n-1-j)  (mod 2^64). With
+    global position p in a value starting at s (local j = p - s),
+    B^(n-1-j) = B^(end-1) * B^(-p), so h = offset*B^n + B^(end-1) *
+    sum_p b_p * invB^p: two cumprods, one elementwise multiply and one
+    segment reduceat over the whole buffer."""
     off = np.asarray(offsets, np.int64)
     lens = np.diff(off)
     buf = np.frombuffer(data, np.uint8).astype(np.uint64)

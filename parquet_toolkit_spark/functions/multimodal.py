@@ -1,5 +1,7 @@
 """Multimodal columns: image/audio/video as opaque binary columns with
-typed metadata, decoded and featurized inside Arrow-batched mapInPandas.
+typed metadata. The decoders and featurizers below are pure numpy over
+one payload's bytes, for callers to run inside their own Arrow-batched
+UDFs (the media_features query decodes WAV this way).
 
 REAL decoders (pure numpy + struct — no external media libs needed):
   - audio/wav  RIFF/WAVE PCM16 parse -> int16 samples; features: duration,
@@ -24,18 +26,12 @@ from __future__ import annotations
 import hashlib
 import json
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
 MEDIA_SCHEMA = "media_id LONG, kind STRING, meta STRING, payload BINARY"
-FEATURE_SCHEMA = (
-    "media_id LONG, kind STRING, n_bytes LONG, sha256 STRING, "
-    "feature ARRAY<FLOAT>"
-)
 FEATURE_DIM = 16  # all kinds emit a fixed-width vector (ANN-ready)
 
 
@@ -270,73 +266,3 @@ def make_media_df(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame
 
 
 # ------------------------------------------------------- Spark operators
-
-
-def extract_features(df: DataFrame, dim: int = FEATURE_DIM,
-                     fake: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
-
-    wav/bmp/ppm rows go through the REAL numpy decoders; codec-gated kinds
-    (mp4/png/jpeg) fall back to the deterministic fake feature when
-    fake=True, else raise. Output feature column is ANN-ready
-    (similarity.lsh_ann_topk)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from parquet_toolkit_spark.runtime import tune_malloc
-
-        tune_malloc()
-        for pdf in batches:
-            feats, shas, sizes = [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                raw = bytes(payload)
-                feats.append(payload_feature(raw, kind, dim, allow_fake=fake))
-                shas.append(hashlib.sha256(raw).hexdigest())
-                sizes.append(len(raw))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": sizes,
-                "sha256": shas,
-                "feature": [f.tolist() for f in feats],
-            })
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, out_h: int = 16, out_w: int = 16) -> DataFrame:
-    """Decode BMP/PPM rows, nearest-neighbor resize, re-encode as BMP —
-    a real distributed image transform (mapInPandas, binary in/out)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from parquet_toolkit_spark.runtime import tune_malloc
-
-        tune_malloc()
-        for pdf in batches:
-            out_rows = {"media_id": [], "kind": [], "payload": []}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                if not kind.startswith("image/"):
-                    continue
-                img = real_decode(bytes(payload), kind)
-                small = resize_nearest(img, out_h, out_w)
-                out_rows["media_id"].append(mid)
-                out_rows["kind"].append("image/bmp")
-                out_rows["payload"].append(encode_bmp(np.ascontiguousarray(small)))
-            yield pd.DataFrame(out_rows)
-
-    return df.mapInPandas(run, "media_id LONG, kind STRING, payload BINARY")
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling layout for video rows: one output row per sampled
-    frame timestamp (video decode codec-gated; timestamps from metadata)."""
-    from pyspark.sql import functions as F
-
-    dur = F.get_json_object("meta", "$.duration_ms").cast("long")
-    frames = F.sequence(
-        F.lit(0), F.coalesce(dur, F.lit(0)), F.lit(int(every_ms))
-    )
-    return (
-        df.where(F.col("kind").startswith("video"))
-        .select("media_id", F.explode(frames).alias("frame_ts_ms"))
-    )

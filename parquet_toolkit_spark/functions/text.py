@@ -3,19 +3,13 @@ token counting, fingerprinting.
 
 Every function returns a Column (composable) or a DataFrame query. The
 SQL-oracle-checked ones use only engine-portable primitives (literal
-`replace`, `length`, `sha2`) so DuckDB reproduces them exactly; the
-rolling-hash fingerprint is numpy-vectorized (pandas UDF) and checked by a
-python oracle in tests instead.
+`replace`, `length`, `sha2`) so DuckDB reproduces them exactly.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 # language marker words: counted via literal replace (no regex — identical
 # semantics in Spark and DuckDB). Space-padded to approximate word matches.
@@ -65,27 +59,6 @@ def token_count(col: Column) -> Column:
     return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))
     )
-
-
-# GPT-2-style pre-tokenizer shape (contraction pieces, letter runs with
-# optional leading space, digit runs, punctuation runs, whitespace runs)
-# — the standard BPE REGEX split; each piece then splits into >=1 BPE
-# tokens, so the count is a deterministic LOWER-BOUND estimate of real
-# tokenizer output, useful for packing/budgeting without shipping a
-# merges table. Pure JVM regexp, zero python.
-_BPE_PIECE = (r"'(?:s|t|re|ve|m|ll|d)"
-              r"| ?[A-Za-z]+"
-              r"| ?[0-9]+"
-              r"| ?[^\sA-Za-z0-9]+"
-              r"|\s+")
-
-
-def bpe_token_estimate(col: Column) -> Column:
-    """# of BPE pre-tokenizer pieces (GPT-2 split shape): the standard
-    fast token-budget estimate for packing and cost accounting. Exact
-    BPE counts need the merges table; this is the regex half, fully
-    codegen'd."""
-    return F.size(F.regexp_extract_all(col, F.lit(_BPE_PIECE), F.lit(0)))
 
 
 # punctuation counted one literal char at a time — locale/regex-free
@@ -164,63 +137,3 @@ def pii_counts(col: Column,
             col, F.lit(_PII_PATTERNS[kind]), F.lit(0)))
         for kind in kinds
     }
-
-
-_BASE = np.uint64(1099511628211)
-
-
-_OFFSET = np.uint64(14695981039346656037)
-# B is odd, hence invertible mod 2^64 — the whole-batch closed form below
-# relies on exact modular inverses, not division
-_INV_BASE = np.uint64(pow(1099511628211, -1, 2**64))
-
-
-def _rolling_hash_batch(texts: pd.Series) -> np.ndarray:
-    """Whole-batch polynomial rolling hash, zero per-document Python
-    (VERDICT r3 #8 — the old path looped docs inside the UDF).
-
-    Per doc: h = offset*B^n + sum_j b_j * B^(n-1-j)  (mod 2^64).
-    Vectorized over the concatenated buffer via modular inverses: with
-    global position p in a doc starting at s (local j = p - s),
-    B^(n-1-j) = B^(end-1) * B^(-p), so
-    h = offset*B^n + B^(end-1) * sum_p b_p * invB^p — two cumprods, one
-    elementwise multiply and one segment reduceat over the whole batch."""
-    docs = [t.encode("utf-8", "surrogatepass")
-            for t in texts.fillna("").astype(str)]
-    n_docs = len(docs)
-    if n_docs == 0:
-        return np.zeros(0, np.uint64)
-    lens = np.fromiter((len(d) for d in docs), np.int64, n_docs)
-    buf = np.frombuffer(b"".join(docs), np.uint8).astype(np.uint64)
-    total = len(buf)
-    with np.errstate(over="ignore"):
-        powB = np.full(total + 1, _BASE, np.uint64)
-        powB[0] = 1
-        np.cumprod(powB, out=powB)  # B^0 .. B^total
-        powI = np.full(max(total, 1), _INV_BASE, np.uint64)
-        powI[0] = 1
-        np.cumprod(powI, out=powI)  # invB^0 .. invB^(total-1)
-        c = buf * powI[:total]
-        ends = np.cumsum(lens)
-        starts = ends - lens
-        # pad one zero so a trailing empty doc's start == total stays a
-        # valid reduceat index (same discipline as dedup._simhash_batch);
-        # empty segments return a neighbor value and are masked below
-        cpad = np.concatenate([c, np.zeros(1, np.uint64)])
-        seg = np.add.reduceat(cpad, starts)
-        last = np.where(lens > 0, ends - 1, 0)
-        h = _OFFSET * powB[lens] + powB[last] * seg
-        return np.where(lens > 0, h, _OFFSET)
-
-
-@F.pandas_udf(LongType())
-def rolling_hash(texts: pd.Series) -> pd.Series:
-    """Polynomial rolling hash of the whole document (vectorized per batch).
-
-    FNV-ish base; arithmetic mod 2^64 (numpy uint64 wraparound); stable
-    across runs/partitions. Python oracle in tests (not portably
-    SQL-expressible)."""
-    from parquet_toolkit_spark.runtime import tune_malloc
-
-    tune_malloc()
-    return pd.Series(_rolling_hash_batch(texts).view(np.int64))

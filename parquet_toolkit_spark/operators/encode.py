@@ -451,6 +451,11 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
     fail_after=k encodes only k pending partitions then returns — the
     kill-after-k test hook (SURVEY.md §5.2 item 5).
 
+    Staged pid i is store pid i, which is what lets resume=True skip the
+    committed ones. resume=False over a store that has a manifest first
+    commits an empty one and deletes every pid dir, then encodes: the
+    store reads empty until the run commits, never a mix of two runs.
+
     All control-plane IO (listing, manifest, commit) goes through the
     filesystem shim, so staging/out dirs may live on any Hadoop-readable
     scheme (hdfs://, s3a://), matching the reference's HDFS-native
@@ -489,8 +494,8 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
     if schema_map is None:  # exotic arrow type: fall back to Spark
         schema_map = _schema_map(spark.read.parquet(any_file))
 
-    committed = store.committed_pids(dfs, out_dir) if resume else None
-    if committed is not None:
+    committed = store.committed_pids(dfs, out_dir)
+    if resume and committed is not None:
         # resumed pids would sit under a column map that is not theirs
         old_schema = store.read_schema_map(dfs, out_dir)
         if old_schema != schema_map:
@@ -498,11 +503,21 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
                 f"cannot resume into {out_dir}: the store has schema "
                 f"{old_schema}, the staged table has {schema_map}; "
                 "re-encode with resume=False")
-    pending = sorted(set(pid_files) - (committed or set()))
+    done = committed if resume and committed is not None else set()
+    pending = sorted(set(pid_files) - done)
     if fail_after is not None:
         pending = pending[:fail_after]
     if not pending:
         return read_manifest(spark, out_dir)
+    if not resume and committed is not None:
+        # staged pid i is store pid i, so a re-encode retires the old run
+        # first: commit an empty manifest, then delete every pid dir. No
+        # committed manifest then names a blob of another run, and no old
+        # pid outlives the run. A crash from here on leaves an empty
+        # store that resume=True fills.
+        store.commit(dfs, out_dir, store.ROWS_SCHEMA.empty_table(), None,
+                     schema_map)
+        dfs.delete(os.path.join(out_dir, store.BLOBS), recursive=True)
 
     # codec hints: full gated selection once, on the first pending pid
     # (longest-first task order also keeps the tail short); memoized per

@@ -16,7 +16,7 @@ sum+count at stage 1.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,20 +53,3 @@ def salted_agg(df: DataFrame, key: str, aggs: dict[str, tuple[str, str]],
     salted = with_salt(df, salt_from, buckets)
     partial = salted.groupBy(key, "_salt").agg(*stage1_exprs)
     return partial.groupBy(key).agg(*stage2_exprs)
-
-
-def repo_stats(df: DataFrame, buckets: int = 16) -> DataFrame:
-    """Per-repo file count + content bytes, skew-safe (the mega-repo owns
-    ~30% of rows in the F0 corpus)."""
-    with_len = df.withColumn(
-        "_clen", F.octet_length(F.col("content").cast("binary"))
-    )
-    return salted_agg(
-        with_len, "repo",
-        {
-            "n_files": ("count", "*"),
-            "content_bytes": ("sum", "_clen"),
-            "max_file_bytes": ("max", "_clen"),
-        },
-        salt_from=["path"], buckets=buckets,
-    )

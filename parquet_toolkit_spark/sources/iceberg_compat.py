@@ -19,19 +19,37 @@ pinned schema, rename aliases), the snapshot's live files and the
 equality-delete key names. read_data and delete_where execute the plan
 on the JVM with distributed anti-joins (_scan_live_rows);
 format("iceberg_fs") (iceberg_datasource) executes the same plan per
-task in pyarrow. The engine's own store also mirrors the Iceberg
-constructs it needs:
+task in pyarrow.
+
+One write protocol serves every writer. `_publish` is the only writer
+of vN.metadata.json and version-hint.text: it writes the next version,
+then renames a temp hint over the old one, so readers resolve the prior
+version until that rename. `_commit_snapshot` is the only snapshot
+commit on top of it: it allocates the snapshot id and sequence number,
+writes the manifests it is handed and the manifest list (the prior
+snapshot's rows first for append and delete, none for replace), and
+publishes. write_table, delete_where, delete_where_equality and both
+rewrite_data_files paths commit snapshots; rename_columns and
+expire_snapshots publish edited metadata with no snapshot.
+expire_snapshots and remove_orphan_files share `_snapshot_refs`, the
+walk of every path one snapshot references, DELETED entries included.
+
+The engine's blob store (sources/store.py) mirrors the constructs it
+needs with the same temp-then-rename rule:
 
   Iceberg construct          engine equivalent
   ------------------------   ------------------------------------------
-  data files per partition   staged pid=N/*.parquet (layout_stage)
+  data files per partition   staged part-NNNNN files, file index = pid
+                             (layout_stage), encoded to
+                             blobs/pid=N/part-0.arrow (encode._write_pid)
   manifest / manifest list   the per-(pid, column) manifest parquet
                              (codec, bytes, checksum, status, run_id)
-  snapshot commit            write-temp-then-rename blob commit + full
-                             manifest rewrite (atomic swap)
-  rewrite_data_files         operators/layout.compact / compact_in_place
-  expire_snapshots           iceberg_compat.expire_snapshots (real
-                             impl below) / superseded pid dirs
+  snapshot commit            store.commit: stage manifest_new/, rename
+                             manifest/ away and manifest_new/ into place
+  rewrite_data_files         encode.compact_store (layout.compact for
+                             plain parquet folders)
+  expire_snapshots           the pid dirs a commit replaced, deleted
+                             after the swap
 
 On a cluster with the iceberg-spark runtime on the classpath,
 `read_table` resolves through the catalog; here it raises with the exact
@@ -90,6 +108,8 @@ _ICEBERG_TO_SPARK = {
 # as (table_ddl, dataframe_ddl); Iceberg spec §Schema Evolution
 _SAFE_PROMOTIONS = {("int", "bigint"), ("float", "double")}
 _DDL_TO_ICEBERG = {"bigint": "long", "double": "double"}
+# the filesystem-table metadata file name this module reads and writes
+_VN_METADATA = r"v(\d+)\.metadata\.json$"
 
 
 def _iceberg_type_to_ddl(t) -> str:
@@ -148,7 +168,7 @@ def read_table_metadata(table_dir: str, spark: SparkSession | None = None) -> di
     if target is None:
         versions = sorted(
             (int(m.group(1)), p) for n, p in files.items()
-            if (m := re.match(r"v(\d+)\.metadata\.json$", n))
+            if (m := re.match(_VN_METADATA, n))
         )
         if not versions:  # catalog-writer layout: NNNNN-<uuid>.metadata.json
             versions = sorted(
@@ -160,9 +180,7 @@ def read_table_metadata(table_dir: str, spark: SparkSession | None = None) -> di
         target = versions[-1][1]
     md = json.loads(fs.read_text(target))
 
-    schemas = md.get("schemas")
-    if schemas is None:  # format-version 1 single-schema layout
-        schemas = [md["schema"]]
+    schemas = _schemas_of(md)
     cur_schema_id = md.get("current-schema-id", schemas[-1].get("schema-id", 0))
     schema = next(
         (s for s in schemas if s.get("schema-id", 0) == cur_schema_id),
@@ -181,9 +199,10 @@ def read_table_metadata(table_dir: str, spark: SparkSession | None = None) -> di
             f["name"]: f.get("id", i + 1)
             for i, f in enumerate(schema["fields"])
         },
-        # raw spec-shaped schemas list: time travel pins the snapshot's
-        # schema-id and recomputes its view (pin_snapshot)
-        "_raw_schemas": schemas,
+        # the metadata JSON as read: time travel pins a snapshot's
+        # schema-id from its schemas (pin_snapshot), and every commit
+        # carries it forward, so a commit reads the metadata once
+        "_raw": md,
         "partition_specs": md.get("partition-specs",
                                   [{"spec-id": 0, "fields": md.get("partition-spec", [])}]),
         "current_snapshot_id": md.get("current-snapshot-id"),
@@ -202,6 +221,13 @@ def read_table_metadata(table_dir: str, spark: SparkSession | None = None) -> di
         ],
         "properties": md.get("properties", {}),
     }
+
+
+def _schemas_of(raw: dict) -> list:
+    """The spec-shaped schemas list of raw metadata JSON; format-version
+    1 tables carry one "schema" instead (none for a table not yet
+    written)."""
+    return raw.get("schemas") or ([raw["schema"]] if "schema" in raw else [])
 
 
 def _schema_view(schemas: list, schema: dict) -> dict:
@@ -464,10 +490,11 @@ def pin_snapshot(md: dict, table_dir: str, snapshot_id: int | None = None,
     pinned = {**md, "snapshot_id": snapshot_id}
     if snapshot_id is not None:
         sid = _snapshot(md, snapshot_id, table_dir).get("schema_id")
-        schema = next((s for s in md["_raw_schemas"]
+        schemas = _schemas_of(md["_raw"])
+        schema = next((s for s in schemas
                        if s.get("schema-id", 0) == sid), None)
         if schema is not None:  # unpinned snapshots read the current one
-            pinned.update(_schema_view(md["_raw_schemas"], schema))
+            pinned.update(_schema_view(schemas, schema))
     if pinned["field_aliases"]:
         _check_alias_ambiguity(pinned)
     return pinned
@@ -1162,12 +1189,11 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str,
         fields.append({"id": fid, "name": f.name,
                        "type": _spark_field_to_iceberg(f, next_id),
                        "required": False})
-    # schema/commit metadata plumbing: None = carry the existing table's
-    # values forward through _commit_metadata unchanged
-    schemas_out: list | None = [
-        {"schema-id": 0, "type": "struct", "fields": fields}]
-    current_schema_id: int | None = None
-    last_col_out: int | None = id_state["last"]
+    # the raw metadata keys this commit sets; the rest carry forward
+    changes = {"last-column-id": id_state["last"],
+               "schemas": [{"schema-id": 0, "type": "struct",
+                            "fields": fields}]}
+    plain_append = False
     if existing is not None:
         want = [(n, t) for n, t, _req in existing["schema_fields"]]
         got = [(f["name"], _iceberg_type_to_ddl(f["type"])) for f in fields]
@@ -1193,16 +1219,16 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str,
         if want == got:
             # plain append: never rewrite the schema history (an evolved
             # table's schemas list + current-schema-id must survive)
-            schemas_out, last_col_out = None, None
+            changes, plain_append = {}, True
         elif allow_schema_evolution and prefix_compatible:
-            old_md0 = _load_old_md(existing)
-            old_schemas = old_md0.get("schemas") or [old_md0["schema"]]
-            cur_sid = old_md0.get("current-schema-id", 0)
+            raw = existing["_raw"]
+            old_schemas = _schemas_of(raw)
+            cur_sid = raw.get("current-schema-id", 0)
             old_schema = next(s for s in old_schemas
                               if s.get("schema-id", 0) == cur_sid)
             # new field ids CONTINUE from last-column-id: ids are never
             # reused across evolutions (Iceberg spec rule)
-            id_state["last"] = int(old_md0.get("last-column-id", 0))
+            id_state["last"] = int(raw.get("last-column-id", 0))
             new_fields = []
             for f0 in old_schema["fields"]:
                 if f0["name"] in promoted:
@@ -1225,11 +1251,11 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str,
                                    "type": _spark_field_to_iceberg(f, next_id),
                                    "required": False})
             new_sid = max(s.get("schema-id", 0) for s in old_schemas) + 1
-            schemas_out = old_schemas + [
-                {"schema-id": new_sid, "type": "struct",
-                 "fields": new_fields}]
-            current_schema_id = new_sid
-            last_col_out = id_state["last"]
+            changes = {"last-column-id": id_state["last"],
+                       "current-schema-id": new_sid,
+                       "schemas": old_schemas + [
+                           {"schema-id": new_sid, "type": "struct",
+                            "fields": new_fields}]}
             fields = new_fields
         else:
             hint = (" (append-only column adds and int->long/float->double "
@@ -1260,7 +1286,7 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str,
         spec_fields = (_parse_partition_by(partition_by, df_ddl)
                        if partition_by else [])
 
-    if existing is not None and schemas_out is None:
+    if plain_append:
         # plain append to an existing table: key manifest bounds (and any
         # spec source-ids) to the table's COMMITTED field ids, not the
         # positional renumbering above — a foreign-written table's ids need
@@ -1274,13 +1300,15 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str,
         name_to_fid = {f["name"]: f["id"] for f in fields}
     part_fields = ([(f["name"], f["avro"]) for f in spec_fields]
                    if spec_fields else None)
-    partition_specs = None
     if spec_fields and existing is None:
         # spec declared at table creation; appends carry the existing one
-        partition_specs = [{"spec-id": 0, "fields": [
+        changes["partition-specs"] = [{"spec-id": 0, "fields": [
             {"name": f["name"], "transform": f["transform"],
              "source-id": name_to_fid[f["source"]], "field-id": 1000 + i}
             for i, f in enumerate(spec_fields)]}]
+    if properties:
+        changes["properties"] = {**(existing or {}).get("properties", {}),
+                                 **properties}
 
     # ---- data files: spark write to a temp dir, move parts into data/
     commit_uuid = uuid.uuid4().hex[:12]
@@ -1293,49 +1321,31 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str,
         data_files = _land_parquet_parts(df, table_dir, data_dir, commit_uuid)
         part_vals = {}
 
-    old_md = _load_old_md(existing)
-    snapshot_id, seq, version = _next_commit_ids(existing, old_md)
-
     # ---- manifest for the new files (column bounds from the parquet
     # footers: free file-level zone maps for range_filter scan pruning;
     # footer reads run task-side above a threshold — VERDICT r4 #3)
     ddl_types = {f["name"]: _iceberg_type_to_ddl(f["type"]) for f in fields}
     stats = _collect_file_stats(spark, data_files, name_to_fid, ddl_types)
-    n_records = sum(s[0] for s in stats.values())
-    man_path = _write_manifest(
-        meta_dir, f"m-{commit_uuid}.avro",
-        [_added_entry(p, snapshot_id, stats[p][0],
-                      partition=part_vals.get(p),
-                      bounds=stats[p][2], file_size=stats[p][1])
-         for p in data_files],
-        partition_fields=part_fields)
-    new_mf = _manifest_file_row(man_path, content=0, seq=seq,
-                                snapshot_id=snapshot_id,
-                                added_files=len(data_files),
-                                added_rows=n_records)
-    mlist_path = _write_manifest_list(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro",
-        _prior_manifest_rows(existing, table_dir, spark) + [new_mf])
-
     summary = {"operation": "append",
                "added-data-files": str(len(data_files)),
-               "added-records": str(n_records)}
+               "added-records": str(sum(s[0] for s in stats.values()))}
     if snapshot_props:
         # caller-stamped snapshot summary entries (e.g. the streaming
         # sink's epoch watermark); values coerced to strings per spec
         summary.update({str(k): str(v) for k, v in snapshot_props.items()})
-    _commit_metadata(
-        meta_dir, table_dir, existing, old_md, snapshot_id, seq, version,
-        mlist_path, summary,
-        schemas=schemas_out, last_column_id=last_col_out,
-        properties=properties, partition_specs=partition_specs,
-        current_schema_id=current_schema_id)
-    return {"snapshot_id": snapshot_id, "sequence_number": seq,
-            "version": version, "files": data_files}
+    entries = [_added_entry(p, stats[p][0], partition=part_vals.get(p),
+                            bounds=stats[p][2], file_size=stats[p][1])
+               for p in data_files]
+    out = _commit_snapshot(spark, table_dir, existing, commit_uuid,
+                           [(f"m-{commit_uuid}.avro", entries, part_fields)],
+                           summary, changes=changes)
+    return {**out, "files": data_files}
 
 
-def _require_writable(info: dict | None) -> None:
-    """Writers only commit over the vN filesystem-table layout this
+def _require_writable(info: dict | None) -> int:
+    """N of the table's current vN.metadata.json (0: no table yet).
+
+    Writers only commit over the vN filesystem-table layout this
     module owns. Catalog-style metadata (NNNNN-<uuid>.metadata.json) is
     readable interop, but its source of truth is the catalog — a vN
     commit beside it would fork the table."""
@@ -1343,13 +1353,15 @@ def _require_writable(info: dict | None) -> None:
     import re
 
     if info is None:
-        return
+        return 0
     base = os.path.basename(info["metadata_file"])
-    if not re.match(r"v\d+\.metadata\.json$", base):
+    m = re.match(_VN_METADATA, base)
+    if m is None:
         raise ValueError(
             f"{base}: catalog-style Iceberg metadata is read-only here; "
             "refusing to commit a filesystem-table version beside it"
         )
+    return int(m.group(1))
 
 
 # ---- partition transforms (Iceberg spec §Partition Transforms) --------
@@ -1776,9 +1788,6 @@ def rename_columns(table_dir: str, renames: dict[str, str],
     is a rewrite, not a rename). Drops/reorders/type-narrowing remain
     refused by write_table.
     """
-    import json
-    import os
-    import re
     import time
 
     from parquet_toolkit_spark.sources.fs import strip_local_scheme
@@ -1786,8 +1795,8 @@ def rename_columns(table_dir: str, renames: dict[str, str],
     table_dir = strip_local_scheme(table_dir).rstrip("/")
     existing = read_table_metadata(table_dir, spark)
     _require_writable(existing)
-    old_md = _load_old_md(existing)
-    schemas = old_md.get("schemas") or [old_md["schema"]]
+    old_md = existing["_raw"]
+    schemas = _schemas_of(old_md)
     cur_sid = old_md.get("current-schema-id", 0)
     cur = next(s for s in schemas if s.get("schema-id", 0) == cur_sid)
     names = [f["name"] for f in cur["fields"]]
@@ -1842,48 +1851,18 @@ def rename_columns(table_dir: str, renames: dict[str, str],
     md.pop("schema", None)  # normalized v1 layouts carry schemas instead
     md["current-schema-id"] = new_sid
     md["last-updated-ms"] = int(time.time() * 1000)
-    m = re.search(r"v(\d+)\.metadata\.json$", existing["metadata_file"])
-    version = int(m.group(1)) + 1 if m else 2
-    meta_dir = os.path.join(table_dir, "metadata")
-    md_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(md_path, "w") as fh:
-        fh.write(json.dumps(md))
-    _swap_version_hint(meta_dir, version)
-    return {"version": version, "schema_id": new_sid,
-            "renamed": dict(renames)}
+    return {"version": _publish(table_dir, existing, md),
+            "schema_id": new_sid, "renamed": dict(renames)}
 
 
-def _load_old_md(existing: dict | None) -> dict:
-    import json
-
-    if existing is None:
-        return {}
-    with open(existing["metadata_file"]) as fh:
-        return json.load(fh)
-
-
-def _next_commit_ids(existing: dict | None, old_md: dict) -> tuple[int, int, int]:
-    """(snapshot_id, sequence_number, metadata version) for a new commit."""
-    import re
-
-    snapshot_id = max(
-        [s["snapshot_id"] for s in (existing or {}).get("snapshots", [])] or [0]
-    ) + 1
-    seq = int(old_md.get("last-sequence-number", 0)) + 1
-    version = 1
-    if existing is not None:
-        m = re.search(r"v(\d+)\.metadata\.json$", existing["metadata_file"])
-        version = int(m.group(1)) + 1 if m else 2
-    return snapshot_id, seq, version
-
-
-def _added_entry(path: str, snapshot_id: int, record_count: int,
+def _added_entry(path: str, record_count: int,
                  status: int = 1, content: int = 0,
                  equality_ids: list[int] | None = None,
                  partition: dict | None = None,
                  bounds: tuple[list, list] | None = None,
                  sort_order_id: int | None = None,
                  file_size: int | None = None) -> dict:
+    """One manifest entry; _commit_snapshot stamps its snapshot id."""
     import os
 
     lowers, uppers = bounds if bounds else (None, None)
@@ -1892,7 +1871,7 @@ def _added_entry(path: str, snapshot_id: int, record_count: int,
         # or the prior manifest) to keep per-file driver IO off commits
         file_size = (os.path.getsize(path) if os.path.exists(path) else 0)
     return {
-        "status": status, "snapshot_id": snapshot_id,
+        "status": status, "snapshot_id": None,
         "sequence_number": None, "file_sequence_number": None,
         "data_file": {"content": content, "file_path": path,
                       "file_format": "PARQUET",
@@ -2092,37 +2071,39 @@ def _manifest_entry_avro(partition_fields: list[tuple[str, str]]) -> dict:
     return schema
 
 
-def _write_manifest(meta_dir: str, name: str, entries: list[dict],
-                    partition_fields: list[tuple[str, str]] | None = None
-                    ) -> str:
+def _write_avro(meta_dir: str, name: str, schema: dict,
+                records: list[dict]) -> str:
     import os
 
     from parquet_toolkit_spark.sources.avro_lite import write_avro
 
-    schema = (_manifest_entry_avro(partition_fields) if partition_fields
-              else MANIFEST_ENTRY_AVRO)
     path = os.path.join(meta_dir, name)
     with open(path, "wb") as fh:
-        fh.write(write_avro(schema, entries, codec="deflate"))
+        fh.write(write_avro(schema, records, codec="deflate"))
     return path
 
 
-def _manifest_file_row(man_path: str, content: int, seq: int,
-                       snapshot_id: int, added_files: int = 0,
-                       added_rows: int = 0, deleted_files: int = 0,
-                       deleted_rows: int = 0) -> dict:
+def _manifest_file_row(man_path: str, entries: list[dict], seq: int,
+                       snapshot_id: int) -> dict:
+    """The manifest-list row of one manifest this commit wrote; its
+    counters come from the entries (status 1 added, 2 deleted)."""
     import os
 
+    added = [e["data_file"] for e in entries if e["status"] == 1]
+    deleted = [e["data_file"] for e in entries if e["status"] == 2]
     return {
         "manifest_path": man_path,
         "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": 0, "content": content,
+        "partition_spec_id": 0,
+        # spec: 0 = data manifest, 1 = positional or equality deletes
+        "content": int(any(e["data_file"]["content"] for e in entries)),
         "sequence_number": seq, "min_sequence_number": seq,
         "added_snapshot_id": snapshot_id,
-        "added_files_count": added_files, "existing_files_count": 0,
-        "deleted_files_count": deleted_files,
-        "added_rows_count": added_rows,
-        "existing_rows_count": 0, "deleted_rows_count": deleted_rows,
+        "added_files_count": len(added), "existing_files_count": 0,
+        "deleted_files_count": len(deleted),
+        "added_rows_count": sum(d["record_count"] for d in added),
+        "existing_rows_count": 0,
+        "deleted_rows_count": sum(d["record_count"] for d in deleted),
     }
 
 
@@ -2147,98 +2128,107 @@ def _prior_manifest_rows(existing: dict | None, table_dir: str,
     return rows
 
 
-def _write_manifest_list(meta_dir: str, name: str, rows: list[dict]) -> str:
-    import os
-
-    from parquet_toolkit_spark.sources.avro_lite import write_avro
-
-    path = os.path.join(meta_dir, name)
-    with open(path, "wb") as fh:
-        fh.write(write_avro(MANIFEST_FILE_AVRO, rows, codec="deflate"))
-    return path
-
-
-def _commit_metadata(meta_dir: str, table_dir: str, existing: dict | None,
-                     old_md: dict, snapshot_id: int, seq: int, version: int,
-                     mlist_path: str, summary: dict,
-                     schemas: list | None = None,
-                     last_column_id: int | None = None,
-                     properties: dict | None = None,
-                     partition_specs: list | None = None,
-                     current_schema_id: int | None = None,
-                     sort_orders: list | None = None) -> None:
-    """New vN.metadata.json + atomic version-hint swap.
-
-    The table LOCATION is carried forward from the existing metadata
-    (ADVICE r4): prior manifests and their data-file paths keep the old
-    location prefix, and _resolve_path can only re-root them while
-    `location` still names that old prefix. New absolute paths under the
-    current table_dir pass through _resolve_path unchanged."""
+def _publish(table_dir: str, prior: dict | None, md: dict) -> int:
+    """The one writer of vN.metadata.json and version-hint.text: write
+    `md` as the version after `prior`'s (read_table_metadata of the
+    table, None for a new one), then rename a temp hint over the old
+    one. Readers resolve the prior version until that rename, so a
+    crash before it leaves an unreferenced vN file that the next commit
+    overwrites. Single writer, no lock service: the contract of
+    Iceberg's HadoopTables. Returns the version."""
     import json
     import os
-    import time
-    import uuid
 
-    now_ms = int(time.time() * 1000)
-    schema_id = (current_schema_id if current_schema_id is not None
-                 else old_md.get("current-schema-id", 0))
-    snapshot = {
-        "snapshot-id": snapshot_id, "sequence-number": seq,
-        "timestamp-ms": now_ms, "manifest-list": mlist_path,
-        # per-snapshot schema pin (spec): time travel after a schema
-        # evolution reads each snapshot with the schema it was written
-        # under, not the current one
-        "schema-id": schema_id,
-        "summary": summary,
-    }
-    md = {
-        "format-version": 2,
-        "table-uuid": old_md.get("table-uuid", str(uuid.uuid4())),
-        "location": old_md.get("location", table_dir),
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": (last_column_id if last_column_id is not None
-                           else old_md.get("last-column-id", 0)),
-        "current-schema-id": schema_id,
-        # v1 single-"schema" metadata normalizes into a schemas list on
-        # carry-forward — writing "schemas": null would strand the table
-        # (the reader's v1 fallback needs "schema", which v2 output
-        # lacks; code-review r4)
-        "schemas": (schemas if schemas is not None
-                    else old_md.get("schemas")
-                    or ([old_md["schema"]] if "schema" in old_md
-                        else None)),
-        "default-spec-id": 0,
-        # same v1 normalization for "partition-spec" (fields list)
-        "partition-specs": (partition_specs if partition_specs is not None
-                            else old_md.get("partition-specs")
-                            or [{"spec-id": 0,
-                                 "fields": old_md.get("partition-spec",
-                                                      [])}]),
-        "default-sort-order-id": 0,
-        "sort-orders": (sort_orders if sort_orders is not None
-                        else old_md.get("sort-orders",
-                                        [{"order-id": 0, "fields": []}])),
-        "properties": {**old_md.get("properties", {}), **(properties or {})},
-        "current-snapshot-id": snapshot_id,
-        "snapshots": old_md.get("snapshots", []) + [snapshot],
-        "snapshot-log": old_md.get("snapshot-log", []) + [
-            {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}],
-        "metadata-log": old_md.get("metadata-log", []),
-    }
-    md_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(md_path, "w") as fh:
+    version = _require_writable(prior) + 1
+    meta_dir = os.path.join(table_dir, "metadata")
+    with open(os.path.join(meta_dir, f"v{version}.metadata.json"), "w") as fh:
         fh.write(json.dumps(md))
-    _swap_version_hint(meta_dir, version)
-
-
-def _swap_version_hint(meta_dir: str, version: int) -> None:
-    import os
-
     hint_tmp = os.path.join(meta_dir, ".version-hint.text.tmp")
     with open(hint_tmp, "w") as fh:
         fh.write(str(version))
     os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    return version
+
+
+def _commit_snapshot(spark: SparkSession | None, table_dir: str,
+                     prior: dict | None, commit_uuid: str,
+                     manifests: list[tuple], summary: dict,
+                     replace: bool = False,
+                     changes: dict | None = None) -> dict:
+    """The one snapshot commit. Allocates the next snapshot id and
+    sequence number, stamps the id on the entries of `manifests`
+    ([(file name, entries, partition fields or None)]) and writes them,
+    writes the manifest list (the prior snapshot's rows first, none when
+    `replace`), and publishes the prior metadata carried forward with
+    the snapshot appended and `changes` (raw metadata keys) applied.
+
+    The table LOCATION is carried forward (ADVICE r4): prior manifests
+    and their data-file paths keep the old location prefix, and
+    _resolve_path can only re-root them while `location` still names
+    that old prefix. New absolute paths under the current table_dir pass
+    through _resolve_path unchanged. Format-version 1 "schema" and
+    "partition-spec" normalize into their v2 lists: writing "schemas":
+    null would strand the table (code-review r4).
+
+    Returns {"snapshot_id", "sequence_number", "version"}."""
+    import os
+    import time
+    import uuid
+
+    raw = prior["_raw"] if prior is not None else {}
+    snapshot_id = max([s["snapshot_id"]
+                       for s in (prior or {}).get("snapshots", [])]
+                      or [0]) + 1
+    seq = int(raw.get("last-sequence-number", 0)) + 1
+    meta_dir = os.path.join(table_dir, "metadata")
+    rows = [] if replace else _prior_manifest_rows(prior, table_dir, spark)
+    for name, entries, part_fields in manifests:
+        for e in entries:
+            e["snapshot_id"] = snapshot_id
+        schema = (_manifest_entry_avro(part_fields) if part_fields
+                  else MANIFEST_ENTRY_AVRO)
+        rows.append(_manifest_file_row(
+            _write_avro(meta_dir, name, schema, entries), entries, seq,
+            snapshot_id))
+    mlist = _write_avro(meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro",
+                        MANIFEST_FILE_AVRO, rows)
+
+    now_ms = int(time.time() * 1000)
+    md = {
+        "format-version": 2,
+        "table-uuid": raw.get("table-uuid", str(uuid.uuid4())),
+        "location": raw.get("location", table_dir),
+        "last-sequence-number": seq,
+        "last-updated-ms": now_ms,
+        "last-column-id": raw.get("last-column-id", 0),
+        "current-schema-id": raw.get("current-schema-id", 0),
+        "schemas": _schemas_of(raw),
+        "default-spec-id": 0,
+        "partition-specs": (raw.get("partition-specs")
+                            or [{"spec-id": 0,
+                                 "fields": raw.get("partition-spec", [])}]),
+        "default-sort-order-id": 0,
+        "sort-orders": raw.get("sort-orders",
+                               [{"order-id": 0, "fields": []}]),
+        "properties": raw.get("properties", {}),
+        "current-snapshot-id": snapshot_id,
+        "snapshots": None,  # below: the snapshot pins the final schema id
+        "snapshot-log": raw.get("snapshot-log", []) + [
+            {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}],
+        "metadata-log": raw.get("metadata-log", []),
+    }
+    md.update(changes or {})
+    md["snapshots"] = raw.get("snapshots", []) + [{
+        "snapshot-id": snapshot_id, "sequence-number": seq,
+        "timestamp-ms": now_ms, "manifest-list": mlist,
+        # per-snapshot schema pin (spec): time travel after a schema
+        # evolution reads each snapshot with the schema it was written
+        # under, not the current one
+        "schema-id": md["current-schema-id"],
+        "summary": summary,
+    }]
+    return {"snapshot_id": snapshot_id, "sequence_number": seq,
+            "version": _publish(table_dir, prior, md)}
 
 
 def delete_where(spark: SparkSession, table_dir: str,
@@ -2250,13 +2240,12 @@ def delete_where(spark: SparkSession, table_dir: str,
     The delete file is spec-shaped (file_path string, pos long), its
     manifest carries content=1, and read_data applies it via anti-join.
     Returns {"snapshot_id", "version", "deleted_rows", "delete_file"}."""
+    import os
     import uuid
 
     from pyspark.sql import functions as F
 
     from parquet_toolkit_spark.sources.fs import strip_local_scheme
-
-    import os
 
     table_dir = strip_local_scheme(table_dir).rstrip("/")
     plan = scan_plan(table_dir, None, spark)
@@ -2265,7 +2254,6 @@ def delete_where(spark: SparkSession, table_dir: str,
     if not plan["data"]:
         return {"snapshot_id": None, "version": None, "deleted_rows": 0,
                 "delete_file": None}
-    meta_dir = os.path.join(table_dir, "metadata")
     data_dir = os.path.join(table_dir, "data")
     # prior deletes already applied; _fp/_pos carry the row lineage
     hits = (
@@ -2286,26 +2274,15 @@ def delete_where(spark: SparkSession, table_dir: str,
         return {"snapshot_id": None, "version": None, "deleted_rows": 0,
                 "delete_file": None}
 
-    old_md = _load_old_md(existing)
-    snapshot_id, seq, version = _next_commit_ids(existing, old_md)
-    man_path = _write_manifest(
-        meta_dir, f"m-del-{commit_uuid}.avro",
-        [_added_entry(p, snapshot_id, n_deleted, content=1,
-                      file_size=dstats[p][1])
-         for p in delete_files])
-    del_mf = _manifest_file_row(man_path, content=1, seq=seq,
-                                snapshot_id=snapshot_id,
-                                added_files=len(delete_files),
-                                added_rows=n_deleted)
-    mlist_path = _write_manifest_list(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro",
-        _prior_manifest_rows(existing, table_dir, spark) + [del_mf])
-    _commit_metadata(
-        meta_dir, table_dir, existing, old_md, snapshot_id, seq, version,
-        mlist_path, {"operation": "delete",
-                     "added-delete-files": str(len(delete_files)),
-                     "added-position-deletes": str(n_deleted)})
-    return {"snapshot_id": snapshot_id, "version": version,
+    out = _commit_snapshot(
+        spark, table_dir, existing, commit_uuid,
+        [(f"m-del-{commit_uuid}.avro",
+          [_added_entry(p, dstats[p][0], content=1, file_size=dstats[p][1])
+           for p in delete_files], None)],
+        {"operation": "delete",
+         "added-delete-files": str(len(delete_files)),
+         "added-position-deletes": str(n_deleted)})
+    return {"snapshot_id": out["snapshot_id"], "version": out["version"],
             "deleted_rows": n_deleted, "delete_file": delete_files[0]}
 
 
@@ -2333,7 +2310,6 @@ def delete_where_equality(spark: SparkSession, table_dir: str,
     import uuid
 
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ sibling)
 
     from parquet_toolkit_spark.sources.fs import strip_local_scheme
 
@@ -2353,37 +2329,27 @@ def delete_where_equality(spark: SparkSession, table_dir: str,
                 .where(condition).select(*equality_columns))
     keys = keys.select(*equality_columns).distinct()
 
-    meta_dir = os.path.join(table_dir, "metadata")
     data_dir = os.path.join(table_dir, "data")
     commit_uuid = uuid.uuid4().hex[:12]
     delete_files = _land_parquet_parts(
         keys.coalesce(1), table_dir, data_dir, f"eqdelete-{commit_uuid}")
-    n_keys = sum(pq.ParquetFile(p).metadata.num_rows for p in delete_files)
+    key_rows = {p: pq.ParquetFile(p).metadata.num_rows for p in delete_files}
+    n_keys = sum(key_rows.values())
     if n_keys == 0:
         for p in delete_files:
             os.remove(p)
         return {"snapshot_id": None, "version": None,
                 "delete_file": None, "key_rows": 0}
 
-    old_md = _load_old_md(existing)
-    snapshot_id, seq, version = _next_commit_ids(existing, old_md)
-    man_path = _write_manifest(
-        meta_dir, f"m-eqdel-{commit_uuid}.avro",
-        [_added_entry(p, snapshot_id, n_keys, content=2,
-                      equality_ids=eq_ids) for p in delete_files])
-    del_mf = _manifest_file_row(man_path, content=1, seq=seq,
-                                snapshot_id=snapshot_id,
-                                added_files=len(delete_files),
-                                added_rows=n_keys)
-    mlist_path = _write_manifest_list(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro",
-        _prior_manifest_rows(existing, table_dir, spark) + [del_mf])
-    _commit_metadata(
-        meta_dir, table_dir, existing, old_md, snapshot_id, seq, version,
-        mlist_path, {"operation": "delete",
-                     "added-delete-files": str(len(delete_files)),
-                     "added-equality-deletes": str(n_keys)})
-    return {"snapshot_id": snapshot_id, "version": version,
+    out = _commit_snapshot(
+        spark, table_dir, existing, commit_uuid,
+        [(f"m-eqdel-{commit_uuid}.avro",
+          [_added_entry(p, key_rows[p], content=2, equality_ids=eq_ids)
+           for p in delete_files], None)],
+        {"operation": "delete",
+         "added-delete-files": str(len(delete_files)),
+         "added-equality-deletes": str(n_keys)})
+    return {"snapshot_id": out["snapshot_id"], "version": out["version"],
             "delete_file": delete_files[0], "key_rows": n_keys}
 
 
@@ -2457,13 +2423,11 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
     sf = scan_plan(table_dir, None, spark)
     existing = sf["md"]
     _require_writable(existing)
-    meta_dir = os.path.join(table_dir, "metadata")
     data_dir = os.path.join(table_dir, "data")
 
     if binary:
-        return _rewrite_binary(spark, table_dir, existing, sf, meta_dir,
-                               data_dir, sort_by, zorder_by,
-                               binary_target_bytes)
+        return _rewrite_binary(spark, table_dir, existing, sf, data_dir,
+                               sort_by, zorder_by, binary_target_bytes)
 
     df = _read_plan(spark, sf)
     sort_orders = None
@@ -2528,13 +2492,13 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
                                         commit_uuid,
                                         max_records=target_file_rows)
         part_vals = {}
-    return _commit_replace_snapshot(
-        table_dir, existing, sf, meta_dir, commit_uuid, new_files, None,
-        part_vals, part_fields, sort_orders, sort_order_id, spark=spark)
+    return _commit_replace(spark, table_dir, existing, sf, commit_uuid,
+                           new_files, None, part_vals, part_fields,
+                           sort_orders, sort_order_id)
 
 
 def _rewrite_binary(spark, table_dir: str, existing: dict, sf: dict,
-                    meta_dir: str, data_dir: str, sort_by, zorder_by,
+                    data_dir: str, sort_by, zorder_by,
                     target_bytes: int) -> dict:
     """Zero-decode compaction body: bin-pack live data files, merge each
     bin by raw row-group copy in one Spark task, commit via the shared
@@ -2601,40 +2565,34 @@ def _rewrite_binary(spark, table_dir: str, existing: dict, sf: dict,
         lambda t: (t[1], append_files(t[0], t[1]))).collect()
     new_files = [d for d, _ in results]
     counts = {d: r["rows"] for d, r in results}
-    out = _commit_replace_snapshot(
-        table_dir, existing, sf, meta_dir, commit_uuid, new_files, counts,
-        part_vals, part_fields, None, None, spark=spark)
+    out = _commit_replace(spark, table_dir, existing, sf, commit_uuid,
+                          new_files, counts, part_vals, part_fields,
+                          None, None)
     return {**out, "binary": True, "n_bins": len(jobs),
             "partition_groups": len(groups)}
 
 
-def _commit_replace_snapshot(table_dir: str, existing: dict, sf: dict,
-                             meta_dir: str, commit_uuid: str,
-                             new_files: list, counts: dict | None,
-                             part_vals: dict, part_fields,
-                             sort_orders, sort_order_id,
-                             spark: SparkSession | None = None) -> dict:
+def _commit_replace(spark: SparkSession | None, table_dir: str,
+                    existing: dict, sf: dict, commit_uuid: str,
+                    new_files: list, counts: dict | None,
+                    part_vals: dict, part_fields,
+                    sort_orders, sort_order_id) -> dict:
     """Shared tail of both compaction paths: one ADDED manifest for the
     new files (+bounds from their footers), DELETED tombstones for every
     replaced data/delete file, a replace-operation snapshot commit.
 
     All per-file footer/stat work runs task-side via _collect_file_stats
     (VERDICT r4 #3); tombstone sizes come from the prior manifest."""
-    old_md = _load_old_md(existing)
-    snapshot_id, seq, version = _next_commit_ids(existing, old_md)
     rw_types = {n: t for n, t, _r in existing["schema_fields"]}
     stats = _collect_file_stats(spark, new_files,
                                 existing["schema_name_to_id"], rw_types)
     if counts is None:  # decode path: rows not known task-side
         counts = {p: stats[p][0] for p in new_files}
-    add_man = _write_manifest(
-        meta_dir, f"m-rw-{commit_uuid}.avro",
-        [_added_entry(p, snapshot_id, counts[p],
-                      partition=part_vals.get(p),
-                      bounds=stats[p][2], file_size=stats[p][1],
-                      sort_order_id=sort_order_id)
-         for p in new_files],
-        partition_fields=part_fields)
+    manifests = [(f"m-rw-{commit_uuid}.avro", [
+        _added_entry(p, counts[p], partition=part_vals.get(p),
+                     bounds=stats[p][2], file_size=stats[p][1],
+                     sort_order_id=sort_order_id)
+        for p in new_files], part_fields)]
     # DELETED entries for every replaced data + delete file: readers skip
     # status=2, expire_snapshots sees the files only via old snapshots.
     # Data-file and delete-file tombstones go in SEPARATE manifests with
@@ -2642,44 +2600,30 @@ def _commit_replace_snapshot(table_dir: str, existing: dict, sf: dict,
     # entries inside a data manifest and strict engines validate it
     # (code-review r4)
     man_sizes = sf.get("file_sizes", {})
-    data_dels = [
-        _added_entry(p, snapshot_id, 0, status=2, content=0,
-                     file_size=man_sizes.get(p) or 0)
-        for p in sf["data"]
-    ]
+    data_dels = [_added_entry(p, 0, status=2, content=0,
+                              file_size=man_sizes.get(p) or 0)
+                 for p in sf["data"]]
     deletefile_dels = [
-        _added_entry(p, snapshot_id, 0, status=2, content=1)
+        _added_entry(p, 0, status=2, content=1)
         for p in sf["position_deletes"]
     ] + [
-        _added_entry(d["path"], snapshot_id, 0, status=2, content=2,
+        _added_entry(d["path"], 0, status=2, content=2,
                      equality_ids=d["equality_ids"])
         for d in sf["equality_deletes"]
     ]
-    rows = [_manifest_file_row(add_man, content=0, seq=seq,
-                               snapshot_id=snapshot_id,
-                               added_files=len(new_files),
-                               added_rows=sum(counts.values()))]
     if data_dels:
-        del_man = _write_manifest(
-            meta_dir, f"m-rwdel-{commit_uuid}.avro", data_dels)
-        rows.append(_manifest_file_row(
-            del_man, content=0, seq=seq, snapshot_id=snapshot_id,
-            deleted_files=len(data_dels)))
+        manifests.append((f"m-rwdel-{commit_uuid}.avro", data_dels, None))
     if deletefile_dels:
-        ddel_man = _write_manifest(
-            meta_dir, f"m-rwdeldel-{commit_uuid}.avro", deletefile_dels)
-        rows.append(_manifest_file_row(
-            ddel_man, content=1, seq=seq, snapshot_id=snapshot_id,
-            deleted_files=len(deletefile_dels)))
-    mlist_path = _write_manifest_list(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro", rows)
-    _commit_metadata(
-        meta_dir, table_dir, existing, old_md, snapshot_id, seq, version,
-        mlist_path, {"operation": "replace",
-                     "added-data-files": str(len(new_files)),
-                     "deleted-data-files": str(len(sf["data"]))},
-        sort_orders=sort_orders)
-    return {"snapshot_id": snapshot_id, "version": version,
+        manifests.append((f"m-rwdeldel-{commit_uuid}.avro", deletefile_dels,
+                          None))
+    out = _commit_snapshot(
+        spark, table_dir, existing, commit_uuid, manifests,
+        {"operation": "replace",
+         "added-data-files": str(len(new_files)),
+         "deleted-data-files": str(len(sf["data"]))},
+        replace=True,
+        changes={"sort-orders": sort_orders} if sort_orders else None)
+    return {"snapshot_id": out["snapshot_id"], "version": out["version"],
             "files": new_files,
             "replaced_files": (len(sf["data"]) + len(sf["position_deletes"])
                                + len(sf["equality_deletes"]))}
@@ -2695,9 +2639,7 @@ def expire_snapshots(spark: SparkSession | None, table_dir: str,
 
     The current snapshot is always kept. Commits a new vN.metadata.json +
     version-hint swap; local filesystem tables only (single-writer)."""
-    import json
     import os
-    import re
     import time
 
     from parquet_toolkit_spark.sources.fs import strip_local_scheme
@@ -2705,8 +2647,7 @@ def expire_snapshots(spark: SparkSession | None, table_dir: str,
     table_dir = strip_local_scheme(table_dir).rstrip("/")
     info = read_table_metadata(table_dir, spark)
     _require_writable(info)
-    with open(info["metadata_file"]) as fh:
-        md = json.load(fh)
+    md = dict(info["_raw"])
     snaps = md.get("snapshots", [])
     if len(snaps) <= keep_last:
         return {"removed_snapshots": 0, "deleted_files": 0}
@@ -2717,72 +2658,41 @@ def expire_snapshots(spark: SparkSession | None, table_dir: str,
     if md.get("current-snapshot-id") not in kept_ids:
         raise ValueError("expire_snapshots would drop the current snapshot")
 
-    loc = info["location"]
-
-    def _paths_of(snapshot_json, tolerate_missing: bool
-                  ) -> tuple[str | None, list[str], list[str]]:
-        """(manifest_list, manifest paths, ALL referenced files).
-
-        With tolerate_missing (removed snapshots only): manifests already
-        gone — e.g. a re-run after a crash mid-delete — contribute
-        nothing instead of raising (ADVICE r4)."""
-        mlist = _resolve_path(snapshot_json["manifest-list"], table_dir, loc)
-        mans, dfiles = [], []
-        try:
-            mf_rows = read_manifest_list(mlist, spark)
-        except (FileNotFoundError, OSError):
-            if tolerate_missing:
-                return None, [], []
-            raise
-        for mf in mf_rows:
-            mp = _resolve_path(mf["manifest_path"], table_dir, loc)
-            try:
-                entries = read_manifest(mp, spark)
-            except (FileNotFoundError, OSError):
-                if tolerate_missing:
-                    continue
-                raise
-            mans.append(mp)
-            for e in entries:
-                dfiles.append(_resolve_path(e["data_file"]["file_path"],
-                                            table_dir, loc))
-        return mlist, mans, dfiles
-
     live_kept: set[str] = set()
     meta_kept: set[str] = set()
     for s in kept:
-        sfiles = snapshot_files(table_dir, s["snapshot-id"], spark)
-        live_kept.update(sfiles["data"])
-        live_kept.update(sfiles["position_deletes"])
-        live_kept.update(d["path"] for d in sfiles["equality_deletes"])
-        mlist, mans, _ = _paths_of(s, tolerate_missing=False)
-        meta_kept.add(mlist)
-        meta_kept.update(mans)
+        refs = _snapshot_refs(table_dir, info["location"],
+                              s["manifest-list"], spark)
+        if refs["missing"]:
+            # a kept snapshot's files are unknown: deleting anything it
+            # might still read would lose data
+            raise FileNotFoundError(
+                f"snapshot {s['snapshot-id']} is kept but cannot be read: "
+                f"{refs['missing']}")
+        meta_kept.update(refs["metadata"])
+        live_kept.update(p for status, p in refs["entries"] if status != 2)
 
+    # a removed snapshot's manifests may already be gone (a re-run after
+    # a crash mid-delete): they contribute nothing (ADVICE r4)
     doomed: set[str] = set()
     for s in removed:
-        mlist, mans, dfiles = _paths_of(s, tolerate_missing=True)
-        doomed.update(p for p in [mlist, *mans]
-                      if p is not None and p not in meta_kept)
-        doomed.update(p for p in dfiles if p not in live_kept)
+        refs = _snapshot_refs(table_dir, info["location"],
+                              s["manifest-list"], spark)
+        doomed.update(p for p in refs["metadata"] if p not in meta_kept)
+        doomed.update(p for _st, p in refs["entries"] if p not in live_kept)
 
     # Iceberg's commit order (ADVICE r4): publish the pruned metadata +
     # version-hint FIRST, only then delete the newly-orphaned files. A
     # crash mid-delete leaves orphans (harmless; a re-run or fsck reclaims
     # them) instead of committed metadata pointing at deleted manifests —
     # which would break time travel AND make expire itself unrunnable.
-    m = re.search(r"v(\d+)\.metadata\.json$", info["metadata_file"])
-    version = (int(m.group(1)) if m else 1) + 1
     md["snapshots"] = kept
     md["snapshot-log"] = [
         e for e in md.get("snapshot-log", [])
         if e.get("snapshot-id") in kept_ids
     ]
     md["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(table_dir, "metadata")
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json"), "w") as fh:
-        fh.write(json.dumps(md))
-    _swap_version_hint(meta_dir, version)
+    version = _publish(table_dir, info, md)
 
     deleted = 0
     for p in sorted(doomed):
@@ -2795,29 +2705,45 @@ def expire_snapshots(spark: SparkSession | None, table_dir: str,
             "version": version}
 
 
+def _snapshot_refs(table_dir: str, location: str, manifest_list: str,
+                   spark: SparkSession | None) -> dict:
+    """Every path one snapshot references: the maintenance verbs' walk
+    (expire_snapshots, remove_orphan_files). Unlike _manifest_entries it
+    keeps DELETED entries (a file a replace snapshot removed is still
+    time-travelable through older snapshots) and applies no inheritance.
+    A manifest list or manifest that cannot be read is listed under
+    "missing" instead of raising; each caller decides what that means.
+
+    Returns {"metadata": [manifest list, manifests read], "entries":
+    [(status, resolved file path)], "missing": [unreadable paths]}."""
+    out: dict = {"metadata": [], "entries": [], "missing": []}
+    mlist = _resolve_path(manifest_list, table_dir, location)
+    try:
+        mf_rows = read_manifest_list(mlist, spark)
+    except OSError:
+        out["missing"].append(mlist)
+        return out
+    out["metadata"].append(mlist)
+    for mf in mf_rows:
+        mpath = _resolve_path(mf["manifest_path"], table_dir, location)
+        try:
+            entries = read_manifest(mpath, spark)
+        except OSError:
+            out["missing"].append(mpath)
+            continue
+        out["metadata"].append(mpath)
+        out["entries"].extend(
+            (e.get("status", 0),
+             _resolve_path(e["data_file"]["file_path"], table_dir, location))
+            for e in entries)
+    return out
+
+
 # --------------------------------------------------- inspection tables
-# DataFrame views of the table metadata, mirroring the engine-side
-# `table.snapshots` / `table.files` / `table.history` metadata tables.
-# Row counts are metadata-bounded (snapshots, manifest entries), not
-# data-bounded: the driver walks manifests it already decodes for reads.
-
-
-def table_snapshots(spark: SparkSession, table_dir: str) -> DataFrame:
-    """One row per snapshot: committed_at_ms, snapshot_id, operation,
-    schema_id, manifest_list, summary (JSON string)."""
-    import json
-
-    md = read_table_metadata(table_dir, spark)
-    rows = [
-        (int(s["timestamp_ms"]), int(s["snapshot_id"]),
-         s.get("summary", {}).get("operation", "append"),
-         s.get("schema_id"), s["manifest_list"],
-         json.dumps(s.get("summary", {}), sort_keys=True))
-        for s in md["snapshots"]
-    ]
-    return spark.createDataFrame(
-        rows, "committed_at_ms long, snapshot_id long, operation string, "
-              "schema_id int, manifest_list string, summary string")
+# A DataFrame view of a snapshot's files, mirroring the engine-side
+# `table.files` metadata table. Its row count is metadata-bounded
+# (manifest entries), not data-bounded: the driver walks manifests it
+# already decodes for reads.
 
 
 def table_files(spark: SparkSession, table_dir: str,
@@ -2863,20 +2789,6 @@ def table_files(spark: SparkSession, table_dir: str,
               "partition string, lower_bounds string, upper_bounds string")
 
 
-def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Snapshot log: made_current_at_ms, snapshot_id, is_current."""
-    md = read_table_metadata(table_dir, spark)
-    cur = md["current_snapshot_id"]
-    rows = [
-        (int(e["timestamp_ms"]), int(e["snapshot_id"]),
-         e["snapshot_id"] == cur)
-        for e in md["snapshot_log"]
-    ]
-    return spark.createDataFrame(
-        rows, "made_current_at_ms long, snapshot_id long, "
-              "is_current boolean")
-
-
 def remove_orphan_files(spark: SparkSession | None, table_dir: str,
                         dry_run: bool = True,
                         older_than_s: float = 3 * 24 * 3600.0) -> dict:
@@ -2903,7 +2815,6 @@ def remove_orphan_files(spark: SparkSession | None, table_dir: str,
 
     Returns {"orphans": [paths], "deleted": int, "skipped_recent": int}."""
     import glob as _g
-    import json
     import os
 
     from parquet_toolkit_spark.sources.fs import strip_local_scheme
@@ -2911,26 +2822,13 @@ def remove_orphan_files(spark: SparkSession | None, table_dir: str,
     table_dir = strip_local_scheme(table_dir).rstrip("/")
     info = read_table_metadata(table_dir, spark)
     _require_writable(info)
-    with open(info["metadata_file"]) as fh:
-        md = json.load(fh)
-    loc = info["location"]
-
     referenced: set[str] = set()
-    for s in md.get("snapshots", []):
-        mlist = _resolve_path(s["manifest-list"], table_dir, loc)
-        try:
-            mf_rows = read_manifest_list(mlist, spark)
-        except (FileNotFoundError, OSError):
-            continue  # expired-but-unpruned snapshot rows: nothing to add
-        for mf in mf_rows:
-            mpath = _resolve_path(mf["manifest_path"], table_dir, loc)
-            try:
-                entries = read_manifest(mpath, spark)
-            except (FileNotFoundError, OSError):
-                continue
-            for e in entries:  # DELETED entries included on purpose
-                referenced.add(_resolve_path(e["data_file"]["file_path"],
-                                             table_dir, loc))
+    for s in info["snapshots"]:
+        # DELETED entries count; manifests an interrupted expire already
+        # removed reference nothing
+        refs = _snapshot_refs(table_dir, info["location"],
+                              s["manifest_list"], spark)
+        referenced.update(p for _st, p in refs["entries"])
 
     on_disk = {
         p for p in _g.glob(os.path.join(table_dir, "data", "*"))

@@ -21,9 +21,11 @@ Layout of a store directory::
 
 The manifest is the source of truth: a blob directory without committed
 manifest rows is an orphan that readers ignore and fsck_store reports.
-Every writer takes fresh pids from ``next_pid`` (orphan dirs included),
-so a write never touches a committed pid's file; the pids a commit
-replaces are deleted only after the swap.
+Every writer but encode_partitions takes fresh pids from ``next_pid``
+(orphan dirs included); encode_partitions writes staged pid i to pid i,
+skipping committed pids on resume and committing an empty manifest
+before a re-encode. So a write never touches a committed pid's file;
+the pids a commit replaces are deleted only after the swap.
 ``commit`` moves a store from one manifest to the next with the
 reference's temp-then-rename protocol (SimpleMergeThread.java:118-122):
 stage manifest_new/ (parts, then _schema.json), rename manifest/ to

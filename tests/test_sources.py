@@ -1,4 +1,4 @@
-"""CSV ingest, schema-group merge, quarantine, incremental-encode tests
+"""CSV ingest, schema groups, quarantine, incremental-encode tests
 (reference fixtures F1/F4 shapes from FIXTURES.md)."""
 
 import gzip
@@ -91,31 +91,6 @@ def test_schema_groups_and_quarantine(mixed_folder):
     assert [os.path.basename(b) for b in broken] == ["broken.parquet"]
     sizes = sorted(len(v) for v in groups.values())
     assert sizes == [1, 3, 5]  # v3=1, v2=3, v1=4+empty
-
-
-def test_merge_schema_groups(spark, mixed_folder, tmp_path):
-    out = str(tmp_path / "merged")
-    report = parquet_tools.merge_schema_groups(spark, mixed_folder, out)
-    assert report["n_groups"] == 3
-    assert len(report["outputs"]) == 3
-    total = 0
-    for o in report["outputs"]:
-        total += spark.read.parquet(o["path"]).count()
-    assert total == 4 * 2 + 3 * 1 + 1  # v1 rows + v2 rows + v3 rows
-
-
-def test_read_with_quarantine(spark, mixed_folder):
-    df, broken = parquet_tools.read_with_quarantine(spark, mixed_folder)
-    assert len(broken) == 1
-    assert df.count() >= 1  # reads the largest-schema group subset it can
-
-
-def test_footer_row_counts(mixed_folder):
-    files = [f for f in parquet_tools.list_parquet_files(mixed_folder)
-             if "v1_0" in f]
-    counts = parquet_tools.footer_row_counts(files)
-    (rg, rows), = counts.values()
-    assert rows == 2 and rg >= 1
 
 
 def test_incremental_encode_stream(spark, tmp_path):
@@ -218,7 +193,7 @@ def test_int96_legacy_timestamp_passthrough(spark, tmp_path):
     pq.write_table(t, f, use_deprecated_int96_timestamps=True)
     assert pq.ParquetFile(f).schema.column(1).physical_type == "INT96"
 
-    parquet_tools.int96_read_conf(spark, "LEGACY")
+    spark.conf.set("spark.sql.parquet.int96RebaseModeInRead", "LEGACY")
     rows = spark.read.parquet(f).orderBy("id").collect()
     got = [r.DATE_TIME.replace(tzinfo=None) for r in rows]
     assert got == ts
@@ -295,13 +270,15 @@ def test_int96_detect_compact_encode_roundtrip(spark, tmp_path):
     f = os.path.join(src, "part-0.parquet")
     pq.write_table(t, f, use_deprecated_int96_timestamps=True)
 
-    # per-field detection (auto-detect parity)
-    det = parquet_tools.detect_int96_fields([f])
-    assert det[f] == ["DATE_TIME"]
+    def int96_columns(path):
+        sch = pq.ParquetFile(path).schema
+        return [sch.column(i).name for i in range(len(sch.names))
+                if sch.column(i).physical_type == "INT96"]
+
+    assert int96_columns(f) == ["DATE_TIME"]
 
     # compact preserving INT96 physical type on output
-    parquet_tools.int96_read_conf(spark, "LEGACY")
-    parquet_tools.int96_write_conf(spark, True)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     try:
         out = str(tmp_path / "compacted")
         from parquet_toolkit_spark.operators.layout import compact
@@ -309,13 +286,13 @@ def test_int96_detect_compact_encode_roundtrip(spark, tmp_path):
         compact(spark, src, out, target_bytes=1 << 20)
         out_files = [os.path.join(out, n) for n in os.listdir(out)
                      if n.endswith(".parquet")]
-        det_out = parquet_tools.detect_int96_fields(out_files)
-        assert all(cols == ["DATE_TIME"] for cols in det_out.values())
+        assert all(int96_columns(p) == ["DATE_TIME"] for p in out_files)
         got = {(r.id, r.DATE_TIME.replace(tzinfo=None))
                for r in spark.read.parquet(out).collect()}
         assert got == set(zip([1, 2, 3], ts))
     finally:
-        parquet_tools.int96_write_conf(spark, False)
+        spark.conf.set("spark.sql.parquet.outputTimestampType",
+                       "TIMESTAMP_MICROS")
 
     # codec layer: the INT96-origin timestamps round-trip bit-exact
     from parquet_toolkit_spark.codecs.chunk import from_arrow, to_arrow
@@ -1445,8 +1422,8 @@ def test_iceberg_file_bounds_range_pruning(spark, tmp_path):
 
 
 def test_iceberg_inspection_tables(spark, tmp_path):
-    # snapshots/files/history metadata tables over a table with appends,
-    # a merge-on-read delete, and a schema evolution
+    # the files metadata table and the snapshot summaries over a table
+    # with appends and a merge-on-read delete
     import json
 
     from parquet_toolkit_spark.sources import iceberg_compat as ic
@@ -1458,9 +1435,10 @@ def test_iceberg_inspection_tables(spark, tmp_path):
         [(3, "c")], "id long, v string"), tdir)
     ic.delete_where(spark, tdir, "id = 2")
 
-    snaps = ic.table_snapshots(spark, tdir).orderBy("snapshot_id").collect()
-    assert [s.operation for s in snaps] == ["append", "append", "delete"]
-    assert json.loads(snaps[2].summary)["added-position-deletes"] == "1"
+    snaps = ic.read_table_metadata(tdir)["snapshots"]
+    assert [s["summary"]["operation"] for s in snaps] == \
+        ["append", "append", "delete"]
+    assert snaps[2]["summary"]["added-position-deletes"] == "1"
 
     files = ic.table_files(spark, tdir).collect()
     assert {f.content for f in files} == {0, 1}
@@ -1477,11 +1455,6 @@ def test_iceberg_inspection_tables(spark, tmp_path):
     f1 = ic.table_files(spark, tdir, c1["snapshot_id"]).collect()
     assert all(f.content == 0 for f in f1)
     assert sum(f.record_count for f in f1) == 2
-
-    hist = ic.table_history(spark, tdir).orderBy("made_current_at_ms").collect()
-    assert len(hist) == 3
-    assert [h.is_current for h in hist] == [False, False, True]
-    assert hist[-1].snapshot_id == snaps[-1].snapshot_id
 
 
 def test_iceberg_remove_orphan_files(spark, tmp_path):
@@ -1597,8 +1570,7 @@ def test_iceberg_catalog_style_metadata_read(spark, tmp_path):
     md = ic.read_table_metadata(tdir)
     assert "00002-" in os.path.basename(md["metadata_file"])
     assert {r.id for r in ic.read_data(spark, tdir).collect()} == {1, 2, 3}
-    snaps = ic.table_snapshots(spark, tdir).collect()
-    assert len(snaps) == 2
+    assert len(md["snapshots"]) == 2
 
     with pytest.raises(ValueError, match="refusing"):
         ic.write_table(spark, df, tdir)
@@ -3595,3 +3567,75 @@ def test_iceberg_rewrites_pin_spark_job_counts(spark, tmp_path):
             sc.statusTracker().getJobIdsForGroup(f"iceberg-rw-{name}"))
         assert ic.read_data(spark, tdir).count() == 4000
     assert jobs == {"sort_by": 2, "zorder_by": 3}
+
+
+def _ice_writers():
+    from parquet_toolkit_spark.sources import iceberg_compat as ic
+
+    one_row = "id long, v string"
+    # name -> (commit on the fixture table, whether it adds a snapshot)
+    return {
+        "write_table": (lambda spark, t: ic.write_table(
+            spark, spark.createDataFrame([(4, "d")], one_row), t), True),
+        "delete_where": (lambda spark, t: ic.delete_where(
+            spark, t, "id = 1"), True),
+        "delete_where_equality": (lambda spark, t: ic.delete_where_equality(
+            spark, t, ["v"], condition="v = 'b'"), True),
+        "rewrite_sort_by": (lambda spark, t: ic.rewrite_data_files(
+            spark, t, sort_by=["id"]), True),
+        "rewrite_binary": (lambda spark, t: ic.rewrite_data_files(
+            spark, t, binary=True), True),
+        "rename_columns": (lambda spark, t: ic.rename_columns(
+            t, {"v": "w"}, spark), False),
+        "expire_snapshots": (lambda spark, t: ic.expire_snapshots(
+            spark, t, keep_last=1), False),
+    }
+
+
+@pytest.mark.parametrize("writer", list(_ice_writers()))
+def test_iceberg_commit_protocol(spark, tmp_path, writer):
+    # every writer publishes through one commit: a snapshot commit adds
+    # one version and one snapshot, a metadata-only commit one version
+    # and no snapshot. A failure after the manifest list and the vN file
+    # are written, before the hint swap, leaves the prior snapshot read,
+    # and the next commit succeeds.
+    from parquet_toolkit_spark.sources import iceberg_compat as ic
+
+    tdir = str(tmp_path / "t")
+    ic.write_table(spark, spark.createDataFrame(
+        [(1, "a"), (2, "b")], "id long, v string"), tdir)
+    ic.write_table(spark, spark.createDataFrame(
+        [(3, "c")], "id long, v string"), tdir)
+    commit, adds_snapshot = _ice_writers()[writer]
+
+    def version(md):
+        return int(os.path.basename(md["metadata_file"])[1:].split(".")[0])
+
+    def seen():
+        md = ic.read_table_metadata(tdir)
+        return (version(md), md["current_snapshot_id"],
+                [s["snapshot_id"] for s in md["snapshots"]],
+                sorted(tuple(r) for r in ic.read_data(spark, tdir).collect()),
+                ic.snapshot_files(tdir)["data"])
+
+    before = seen()
+    meta = os.path.join(tdir, "metadata")
+    # the temp hint's path is a directory: the commit fails at the swap
+    os.mkdir(os.path.join(meta, ".version-hint.text.tmp"))
+    with pytest.raises(OSError):
+        commit(spark, tdir)
+    assert os.path.exists(os.path.join(meta,
+                                       f"v{before[0] + 1}.metadata.json"))
+    assert seen() == before
+    os.rmdir(os.path.join(meta, ".version-hint.text.tmp"))
+
+    out = commit(spark, tdir)
+    md = ic.read_table_metadata(tdir)
+    assert version(md) == out["version"] == before[0] + 1
+    ids = [s["snapshot_id"] for s in md["snapshots"]]
+    if adds_snapshot:
+        assert ids == before[2] + [out["snapshot_id"]]
+        assert md["current_snapshot_id"] == out["snapshot_id"]
+    else:
+        assert set(ids) <= set(before[2])
+        assert md["current_snapshot_id"] == before[1]

@@ -219,3 +219,64 @@ def test_encode_pipeline_crash_before_commit_keeps_old_store(
     assert sorted(tuple(r) for r in decode_pipeline(spark, enc).collect()) \
         == old
     assert {r.status for r in fsck_store(spark, enc).collect()} == {"ok"}
+
+
+def test_encode_partitions_reencode_never_mixes_runs(
+        spark, tmp_path, monkeypatch):
+    # resume=False into a committed store: a crash before its commit
+    # keeps one run's rows (the old manifest never names new blobs), a
+    # crash after the old run is retired leaves an empty store that
+    # resume=True fills, a resume after a finished run is a no-op, and
+    # no pid of the old run outlives the new one
+    enc, blobs = str(tmp_path / "enc"), str(tmp_path / "enc" / "blobs")
+    keys = dict(range_keys=("k",), sort_keys=("k",))
+    stg_old, stg_new = str(tmp_path / "stg_old"), str(tmp_path / "stg_new")
+    layout_stage(spark, _keyed(spark, 0, 400), stg_old, n_partitions=4,
+                 **keys)
+    layout_stage(spark, _keyed(spark, 1000, 1500), stg_new, n_partitions=2,
+                 **keys)
+    encode_partitions(spark, stg_old, enc, run_id="old")
+    dfs = DriverFS(spark)
+
+    def decoded():
+        return {r.k for r in decode_pipeline(spark, enc).collect()}
+
+    def crash_at(n):
+        calls, real = [], store.commit
+
+        def commit(*a, **k):
+            calls.append(1)
+            if len(calls) == n:
+                raise RuntimeError("crash before the manifest swap")
+            return real(*a, **k)
+        return commit
+
+    monkeypatch.setattr(store, "commit", crash_at(1))
+    with pytest.raises(RuntimeError, match="before the manifest swap"):
+        encode_partitions(spark, stg_new, enc, run_id="new", resume=False)
+    monkeypatch.undo()
+    assert decoded() == set(range(400))
+    assert {r.status for r in fsck_store(spark, enc).collect()} == {"ok"}
+
+    monkeypatch.setattr(store, "commit", crash_at(2))
+    with pytest.raises(RuntimeError, match="before the manifest swap"):
+        encode_partitions(spark, stg_new, enc, run_id="new", resume=False)
+    monkeypatch.undo()
+    assert store.committed_pids(dfs, enc) == set()
+    assert fsck_store(spark, enc).count() == 0
+    encode_partitions(spark, stg_new, enc, run_id="new")
+    assert decoded() == set(range(1000, 1500))
+
+    encode_partitions(spark, stg_old, enc, run_id="again", resume=False)
+    encode_partitions(spark, stg_new, enc, run_id="new", resume=False)
+    assert set(store.pid_dirs(dfs, blobs)) == {0, 1}
+    rows = sorted(tuple(r.values())
+                  for r in store.manifest_table(dfs, enc).to_pylist())
+    stamps = {p: os.stat(p).st_mtime_ns
+              for p, _sz in dfs.list_files(blobs + "/pid=0")}
+    encode_partitions(spark, stg_new, enc, run_id="resumed")
+    assert sorted(tuple(r.values()) for r in
+                  store.manifest_table(dfs, enc).to_pylist()) == rows
+    assert {p: os.stat(p).st_mtime_ns
+            for p, _sz in dfs.list_files(blobs + "/pid=0")} == stamps
+    assert decoded() == set(range(1000, 1500))
