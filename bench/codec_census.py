@@ -1,18 +1,29 @@
 #!/usr/bin/env python
-"""Codec census: the FSST screen's two zstd measurements, the trial and
-the plan_hints choice for every string column of the given chunks.
+"""Codec census: for every column of the given chunks, the codec the
+selector chooses, its size and the size of every codec of the column's
+kind; for every string column also the FSST screen's two zstd
+measurements and the trial.
 
     python3 bench/codec_census.py PATH [PATH ...] [--pids 0,3,6]
     python3 bench/codec_census.py --f0 1 2 3 5 7 --pids 0,3,6
 
-A PATH is a parquet file (one chunk) or a directory of parquet files,
-such as a `layout_stage` staging dir (one `part-NNNNN` file per pid,
-read as one chunk each). `--f0 SEED ...` writes the F0 corpus
+A PATH is a parquet file or a directory of parquet files, such as a
+`layout_stage` staging dir (one `part-NNNNN` file per pid); each file is
+cut into chunks of 65 536 rows. `--f0 SEED ...` writes the F0 corpus
 (`datagen.write_corpus`, 30 k rows in 64 files) to a temporary dir and
 stages it the way an 8-pid `layout_stage` does: sorted by (repo, path,
 commit), 3750 rows per pid. `--pids` keeps only those chunk indices.
 
-One row per string column per chunk:
+Sizes table, one row per column per chunk:
+  kind     the chunk kind (int, float, bool, bin, flist, nested)
+  chosen   `select_codec`'s pick with every gate applied
+  size     its blob size in bytes
+  hint     the plan_hints choice for the column
+  sizes    codec=bytes for every codec of the kind ("-" if it cannot
+           encode the chunk); a codec that never has the smallest size
+           across the census does not earn its place
+
+FSST table, one row per string column per chunk:
   bytes    payload bytes of the column chunk
   H0       byte entropy of the 64 KB head (bits/byte)
   A        head zstd ratio / (H0 / 8); the screen rejects in [0.9, 1.2)
@@ -23,7 +34,6 @@ One row per string column per chunk:
   screen   pass, or the rule that rejects (A or B)
   trial    `_fsst_sample_wins` verdict (admit/reject), run on every column
   ratio    the trial's token-stream zstd size / plain zstd size
-  hint     the plan_hints choice for the column
 No Spark session is started.
 """
 
@@ -43,10 +53,15 @@ import pyarrow.parquet as pq  # noqa: E402
 
 from parquet_toolkit_spark.codecs import selector as sel  # noqa: E402
 from parquet_toolkit_spark.codecs.chunk import from_arrow  # noqa: E402
-from parquet_toolkit_spark.codecs.container import _ZSTD  # noqa: E402
+from parquet_toolkit_spark.codecs.container import (  # noqa: E402
+    _ZSTD,
+    encode_blob,
+)
+from parquet_toolkit_spark.codecs.impl import ALL_CODECS  # noqa: E402
 
 F0_ROWS, F0_FILES, F0_PIDS = 30_000, 64, 8
 F0_SORT = ("repo", "path", "commit")
+CHUNK_ROWS = 65_536
 
 
 def f0_pids(seed: int, workdir: str) -> list[pa.Table]:
@@ -64,7 +79,23 @@ def path_chunks(path: str) -> list[pa.Table]:
     files = (sorted(glob.glob(os.path.join(path, "*.parquet"))
                     + glob.glob(os.path.join(path, "part-*")))
              if os.path.isdir(path) else [path])
-    return [pq.read_table(f) for f in sorted(set(files))]
+    tables = [pq.read_table(f) for f in sorted(set(files))]
+    return [t.slice(i, CHUNK_ROWS) for t in tables
+            for i in range(0, max(1, t.num_rows), CHUNK_ROWS)]
+
+
+def family_sizes(chunk) -> dict[str, int | None]:
+    """Blob size of every codec of the chunk's kind; None where the codec
+    cannot encode it."""
+    sizes = {}
+    for codec in sorted(ALL_CODECS):
+        if codec.split("_")[0] != chunk.kind:
+            continue
+        try:
+            sizes[codec] = len(encode_blob(chunk, codec))
+        except (TypeError, ValueError):  # e.g. float_alp on float32
+            sizes[codec] = None
+    return sizes
 
 
 def zsize(b: bytes) -> int:
@@ -106,22 +137,30 @@ def census_row(chunk, stats: dict) -> dict:
             "ratio": ratio}
 
 
-def census(name: str, chunks: list[tuple[int, pa.Table]]) -> list[dict]:
-    rows = []
+def is_string(t: pa.DataType) -> bool:
+    return (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t))
+
+
+def census(name: str, chunks: list[tuple[int, pa.Table]]
+           ) -> tuple[list[dict], list[dict]]:
+    """(sizes rows for every column, FSST rows for the string columns)."""
+    sizes, fsst = [], []
     for idx, table in chunks:
         cols = {n: table.column(n).combine_chunks()
-                for n in table.schema.names
-                if pa.types.is_string(table.schema.field(n).type)
-                or pa.types.is_large_string(table.schema.field(n).type)
-                or pa.types.is_binary(table.schema.field(n).type)
-                or pa.types.is_large_binary(table.schema.field(n).type)}
+                for n in table.schema.names}
         hints = sel.plan_hints(cols)
         for col, arr in cols.items():
             chunk = from_arrow(arr)
-            row = census_row(chunk, sel.profile_chunk(chunk))
-            rows.append({"source": name, "chunk": idx, "column": col,
-                         **row, "hint": hints[col][0]})
-    return rows
+            chosen, blob, stats = sel.select_codec(chunk)
+            where = {"source": name, "chunk": idx, "column": col}
+            sizes.append({**where, "kind": chunk.kind, "chosen": chosen,
+                          "size": len(blob), "hint": hints[col][0],
+                          "sizes": family_sizes(chunk)})
+            if is_string(arr.type):
+                fsst.append({**where, **census_row(chunk, stats),
+                             "hint": hints[col][0]})
+    return sizes, fsst
 
 
 def fmt(v, spec: str) -> str:
@@ -139,22 +178,36 @@ def main() -> None:
     keep = {int(p) for p in args.pids.split(",") if p}
     pick = (lambda ts: [(i, t) for i, t in enumerate(ts)
                         if not keep or i in keep])
-    rows = []
+    sizes, fsst = [], []
+
+    def add(name: str, tables: list[pa.Table]) -> None:
+        s_rows, f_rows = census(name, pick(tables))
+        sizes.extend(s_rows)
+        fsst.extend(f_rows)
+
     with tempfile.TemporaryDirectory() as work:
         for seed in args.f0:
-            rows += census(f"f0-seed{seed}", pick(f0_pids(seed, work)))
+            add(f"f0-seed{seed}", f0_pids(seed, work))
     for path in args.paths:
-        rows += census(os.path.basename(os.path.normpath(path)),
-                       pick(path_chunks(path)))
-    print(f"{'source':<24} {'chunk':>5} {'column':<14} {'bytes':>10} "
+        add(os.path.basename(os.path.normpath(path)), path_chunks(path))
+    print(f"{'source':<24} {'chunk':>5} {'column':<18} {'kind':<6} "
+          f"{'chosen':<14} {'size':>10} {'hint':<14} sizes")
+    for r in sizes:
+        fam = " ".join(f"{c}={fmt(n, 'd')}" for c, n in r["sizes"].items())
+        print(f"{r['source']:<24} {r['chunk']:>5} {r['column']:<18} "
+              f"{r['kind']:<6} {r['chosen']:<14} {r['size']:>10} "
+              f"{r['hint']:<14} {fam}")
+    if not fsst:
+        return
+    print()
+    print(f"{'source':<24} {'chunk':>5} {'column':<18} {'bytes':>10} "
           f"{'H0':>5} {'A':>6} {'B':>6} {'gate':<8} {'screen':<6} "
           f"{'trial':<6} {'ratio':>6} hint")
-    for r in rows:
-        print(f"{r['source']:<24} {r['chunk']:>5} {r['column']:<14} "
+    for r in fsst:
+        print(f"{r['source']:<24} {r['chunk']:>5} {r['column']:<18} "
               f"{r['bytes']:>10} {r['H0']:>5.2f} {fmt(r['A'], '6.3f')} "
               f"{fmt(r['B'], '6.3f')} {r['gate']:<8} {r['screen']:<6} "
               f"{r['trial']:<6} {fmt(r['ratio'], '6.3f')} {r['hint']}")
-
 
 if __name__ == "__main__":
     main()

@@ -40,8 +40,8 @@ _ZSTD_LEVEL = 3
 _ZSTD = pa.Codec("zstd", compression_level=_ZSTD_LEVEL)
 
 
-def _maybe_zstd(raw: bytes, enable: bool) -> tuple[bytes, str]:
-    if not enable or len(raw) < _MIN_COMPRESS:
+def _maybe_zstd(raw: bytes) -> tuple[bytes, str]:
+    if len(raw) < _MIN_COMPRESS:
         return raw, ""
     comp = _ZSTD.compress(raw, asbytes=True)
     if len(comp) < len(raw) * 0.98:
@@ -49,7 +49,7 @@ def _maybe_zstd(raw: bytes, enable: bool) -> tuple[bytes, str]:
     return raw, ""
 
 
-def encode_blob(chunk: ColumnChunk, codec: str, zstd: bool = True) -> bytes:
+def encode_blob(chunk: ColumnChunk, codec: str) -> bytes:
     """Encode a ColumnChunk with `codec` into one self-describing blob."""
     enc, _ = impl.ALL_CODECS[codec]
     if chunk.kind == "bin":
@@ -70,7 +70,7 @@ def encode_blob(chunk: ColumnChunk, codec: str, zstd: bool = True) -> bytes:
 
     names, blobs, sec_index = [], [], []
     for name, raw in sections.items():
-        stored, comp = _maybe_zstd(raw, zstd)
+        stored, comp = _maybe_zstd(raw)
         names.append(name)
         blobs.append(stored)
         sec_index.append([name, comp, len(raw), len(stored)])

@@ -4,8 +4,8 @@ North rule: "codec auto-selection from profiled column statistics
 (cardinality, run lengths, value ranges, string entropy)". The profile is
 one vectorized numpy pass per chunk; the selector turns stats into a small
 candidate list, encodes the candidates, and keeps the smallest blob — with
-plain(+zstd) always in the candidate set as the floor so we never regress
-above a general-purpose baseline (SURVEY.md §4.3).
+the kind's FLOOR codec (plain(+zstd)) always competing last, so we never
+regress above a general-purpose baseline (SURVEY.md §4.3).
 
 The costly gate is FSST's 1 MB admission trial (`_fsst_sample_wins`). A
 reject-only screen (`_fsst_screen`) settles it first from two zstd sizes,
@@ -40,6 +40,12 @@ from parquet_toolkit_spark.codecs.container import encode_blob
 # take 80-125 ms on `commit` and ~200 ms on `content`.
 FSST_MAX_BYTES = 16 << 20
 _SAMPLE = 65536
+# The floor codec of each chunk kind: plain(+zstd) where the kind has a
+# plain layout. Every selection lists it last, so the selector never does
+# worse than a general-purpose baseline (SURVEY.md §4.3).
+FLOOR = {"bin": "bin_plain", "int": "int_plain", "float": "float_plain",
+         "flist": "flist_plain", "bool": "bool_bitmap",
+         "nested": "nested_ipc"}
 _ZONE_MAX_LEN = 128  # string zone maps stored only for short-key columns
 
 
@@ -193,25 +199,23 @@ def profile_chunk(chunk: ColumnChunk) -> dict:
 
 
 def candidate_codecs(chunk: ColumnChunk, stats: dict,
-                     exclude: set[str] | frozenset[str] | None = None
+                     exclude: set[str] | frozenset[str] = frozenset()
                      ) -> list[str]:
-    """Stats -> ordered candidate codec names (floor codec always
-    included). `exclude` is checked BEFORE expensive gating so an
-    excluded codec's admission trial is never paid (the FSST 1MB trial
-    is the whole point of the streaming fast profile; code-review r4)."""
-    exclude = exclude or frozenset()
+    """Stats -> the ordered codecs that pass their gates, without the
+    kind's FLOOR codec (the selectors append it last). `exclude` is
+    checked BEFORE expensive gating so an excluded codec's admission
+    trial is never paid (the FSST 1MB trial is the whole point of the
+    streaming writers' exclusion)."""
     k = chunk.kind
-    if k == "nested":
-        return ["nested_ipc"]
-    if k == "bool":
-        return ["bool_bitmap"]
+    if k in ("nested", "bool"):
+        return []
     if k == "flist":
-        return ["flist_shuffle", "flist_plain"]
+        return ["flist_shuffle"]
     if k == "float":
         cands = []
         if stats.get("alp_e") is not None and "float_alp" not in exclude:
             cands.append("float_alp")
-        cands += ["float_shuffle", "float_plain"]
+        cands.append("float_shuffle")
         return cands
     if k == "int":
         cands = ["int_for"]
@@ -227,7 +231,6 @@ def candidate_codecs(chunk: ColumnChunk, stats: dict,
             > math.log2(max(2, stats.get("distinct", 2))) + 8
         ):
             cands.append("int_dict")
-        cands.append("int_plain")
         return cands
     # bin
     cands: list[str] = []
@@ -255,7 +258,6 @@ def candidate_codecs(chunk: ColumnChunk, stats: dict,
         if plain_zstd is not None and _fsst_sample_wins(chunk.data,
                                                         plain_zstd):
             cands.append("bin_fsst")
-    cands.append("bin_plain")
     return cands
 
 
@@ -418,81 +420,60 @@ def _fsst_trial_zstd(sample: bytes) -> int | None:
     return len(_ZSTD.compress(bytes(packed), asbytes=True))
 
 
-def select_codec(chunk: ColumnChunk, stats: dict | None = None,
-                 zstd: bool = True,
+def select_codec(chunk: ColumnChunk,
                  candidates: list[str] | None = None,
-                 exclude: set[str] | frozenset[str] | None = None
+                 exclude: set[str] | frozenset[str] = frozenset()
                  ) -> tuple[str, bytes, dict]:
-    """Encode candidates, keep the smallest blob.
+    """Encode the candidates, keep the smallest blob.
 
-    Returns (codec_name, blob, stats). Trial-encoding is bounded: the
-    candidate list is 1-3 codecs, each a vectorized pass. Pass
-    `candidates` (e.g. from plan_hints) to skip the per-chunk gating —
-    the hoisted-gate path for large encode jobs. `exclude` drops codecs
-    from consideration entirely (the encode-latency dial: streaming hot
-    paths exclude bin_fsst, whose 34%-size wins cost 10-25x the floor's
-    encode CPU); the plain floor can never be excluded away.
+    Returns (codec_name, blob, stats), stats from `profile_chunk`.
+    `candidates` (e.g. from plan_hints) skips the per-chunk gates: the
+    hoisted-gate path for large encode jobs. `exclude` drops codecs from
+    the competition (the stream writers exclude bin_fsst, whose 34%-size
+    wins cost 10-25x the floor's encode CPU). One pass over the
+    candidates drops the excluded codecs and any bin_fsst on a chunk
+    over 4 * FSST_MAX_BYTES (hints come from a SAMPLE partition and may
+    not have seen this one); a hint list that pass empties falls back to
+    the gates. The kind's FLOOR codec always competes last, so neither a
+    hint list nor `exclude` can take it away.
     """
-    if stats is None:
-        stats = profile_chunk(chunk)
-    if exclude:
-        floor = {"bin": "bin_plain", "int": "int_plain",
-                 "flist": "flist_plain", "float": "float_plain",
-                 "bool": "bool_bitmap",
-                 "nested": "nested_ipc"}.get(chunk.kind)
-        keep = [c for c in (candidates
-                            or candidate_codecs(chunk, stats, exclude))
-                if c not in exclude]
-        candidates = keep or ([floor] if floor else None)
-    if candidates:
-        # pinned hints come from a SAMPLE partition: never let them route
-        # FSST onto a pathologically large chunk (encode-cost cap)
-        candidates = [
-            c for c in candidates
-            if not (c == "bin_fsst" and len(chunk.data) > 4 * FSST_MAX_BYTES)
-        ] or None
-    if candidates:
-        # explicit candidate lists always compete against the plain floor
-        # (hint sources — plan_hints samples, compact_store member codecs
-        # — may not have seen this exact chunk)
-        floor = {"bin": "bin_plain", "int": "int_plain",
-                 "flist": "flist_plain", "float": "float_plain",
-                 "nested": "nested_ipc"}.get(chunk.kind)
-        if floor and floor not in candidates:
-            candidates = candidates + [floor]
+    stats = profile_chunk(chunk)
+
+    def admitted(names):
+        return [c for c in names if c not in exclude and not (
+            c == "bin_fsst" and len(chunk.data) > 4 * FSST_MAX_BYTES)]
+
+    cands = (admitted(candidates or ())
+             or admitted(candidate_codecs(chunk, stats, exclude)))
+    floor = FLOOR[chunk.kind]
+    if floor not in cands:
+        cands.append(floor)
     best_name, best_blob = None, None
-    for name in candidates or candidate_codecs(chunk, stats):
-        blob = encode_blob(chunk, name, zstd=zstd)
+    for name in cands:
+        blob = encode_blob(chunk, name)
         if best_blob is None or len(blob) < len(best_blob):
             best_name, best_blob = name, blob
-    assert best_name is not None and best_blob is not None
     return best_name, best_blob, stats
 
 
-def plan_hints(cols: dict, keep_best: int = 1) -> dict[str, list[str]]:
+def plan_hints(cols: dict) -> dict[str, list[str]]:
     """Column -> candidate codec list, decided ONCE on a sample partition.
 
     Runs the full gated selection (profile + trials + all candidates) on
-    one representative partition and keeps each column's winning codec
-    (plus the plain floor if it wasn't the winner). Per-partition encode
-    then skips re-gating: the codec family of a column is stable across
-    partitions of the same table, while the per-chunk floor comparison
-    still guards pathological partitions."""
+    one representative partition and keeps each column's winning codec,
+    then the kind's FLOOR codec when it did not win. Per-partition
+    encode then skips re-gating: the codec family of a column is stable
+    across partitions of the same table, while the per-chunk floor
+    comparison still guards pathological partitions."""
     from parquet_toolkit_spark.codecs.chunk import from_arrow
 
     hints: dict[str, list[str]] = {}
     for name, arr in cols.items():
         chunk = from_arrow(arr)
-        stats = profile_chunk(chunk)
-        cands = candidate_codecs(chunk, stats)
+        floor = FLOOR[chunk.kind]
+        cands = candidate_codecs(chunk, profile_chunk(chunk)) + [floor]
         if len(cands) > 1:  # a lone candidate wins without a trial encode
             cands = [c for _, c in sorted(
                 (len(encode_blob(chunk, c)), c) for c in cands)]
-        chosen = cands[:keep_best]
-        floor = {"bin": "bin_plain", "int": "int_plain",
-                 "flist": "flist_plain",
-                 "nested": "nested_ipc"}.get(chunk.kind)
-        if floor and floor not in chosen:
-            chosen.append(floor)
-        hints[name] = chosen
+        hints[name] = [cands[0]] + ([floor] if cands[0] != floor else [])
     return hints

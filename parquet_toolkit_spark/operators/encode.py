@@ -80,7 +80,7 @@ def _encode_columns(cols: dict[str, pa.Array], pid: int,
         chunk = from_arrow(arr)
         codec, blob, stats = select_codec(
             chunk, candidates=(hints or {}).get(col),
-            exclude=exclude_codecs or None
+            exclude=exclude_codecs
         )
         if col in bloom_columns:
             b = build_bloom(chunk)

@@ -422,21 +422,10 @@ def _murmur3_int(x):
     column, vectorized over an int array; int32 results."""
     import numpy as np
 
-    h = (np.asarray(x, np.int64) & 0xFFFFFFFF).astype(np.uint32)
-    with np.errstate(over="ignore"):
-        h *= np.uint32(0xCC9E2D51)
-        h = (h << np.uint32(15)) | (h >> np.uint32(17))
-        h *= np.uint32(0x1B873593)
-        h ^= np.uint32(42)
-        h = (h << np.uint32(13)) | (h >> np.uint32(19))
-        h = h * np.uint32(5) + np.uint32(0xE6546B64)
-        h ^= np.uint32(4)
-        h ^= h >> np.uint32(16)
-        h *= np.uint32(0x85EBCA6B)
-        h ^= h >> np.uint32(13)
-        h *= np.uint32(0xC2B2AE35)
-        h ^= h >> np.uint32(16)
-    return h.view(np.int32)
+    from parquet_toolkit_spark.codecs.bits import murmur3_32_blocks
+
+    low = (np.asarray(x, np.int64) & 0xFFFFFFFF).astype(np.uint32)
+    return murmur3_32_blocks(low[:, None], 42).view(np.int32)
 
 
 def hash_slots(n: int) -> list[int]:

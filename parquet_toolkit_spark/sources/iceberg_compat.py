@@ -1616,24 +1616,11 @@ def _murmur3_32_i64_vec(vals):
     'little', signed=True)) exactly; returns uint32."""
     import numpy as np
 
-    b = np.ascontiguousarray(vals, dtype="<i8").view(np.uint32).reshape(-1, 2)
-    c1, c2 = np.uint32(0xCC9E2D51), np.uint32(0x1B873593)
-    h = np.zeros(len(vals), dtype=np.uint32)
-    for i in range(2):
-        k = b[:, i].copy()
-        k *= c1
-        k = (k << np.uint32(15)) | (k >> np.uint32(17))
-        k *= c2
-        h ^= k
-        h = (h << np.uint32(13)) | (h >> np.uint32(19))
-        h = h * np.uint32(5) + np.uint32(0xE6546B64)
-    h ^= np.uint32(8)
-    h ^= h >> np.uint32(16)
-    h *= np.uint32(0x85EBCA6B)
-    h ^= h >> np.uint32(13)
-    h *= np.uint32(0xC2B2AE35)
-    h ^= h >> np.uint32(16)
-    return h
+    from parquet_toolkit_spark.codecs.bits import murmur3_32_blocks
+
+    return murmur3_32_blocks(
+        np.ascontiguousarray(vals, dtype="<i8").view(np.uint32)
+        .reshape(-1, 2), 0)
 
 
 def _transform_scalar(f: dict, value, ddl: dict[str, str]):
@@ -1719,7 +1706,8 @@ def _parse_partition_value(raw: str, avro_type: str):
 def _land_partitioned_parts(df: DataFrame, table_dir: str, data_dir: str,
                             commit_uuid: str,
                             spec_fields: list[dict],
-                            max_records: int | None = None
+                            max_records: int | None = None,
+                            order: tuple[str, ...] = ()
                             ) -> list[tuple[str, dict]]:
     """Write df hive-partitioned on the spec's partition values, then move
     the parts flat under data/ with commit-unique names, returning
@@ -1730,7 +1718,14 @@ def _land_partitioned_parts(df: DataFrame, table_dir: str, data_dir: str,
     Non-identity spec fields (bucket/truncate/temporal) are computed as
     derived columns named after the partition field; partitionBy strips
     them from the data files (the SOURCE column stays), exactly the spec
-    layout. Identity fields partition on the source column itself."""
+    layout. Identity fields partition on the source column itself.
+
+    `order` (the columns a layout sorted each task by) is kept inside
+    every file: each task's rows are sorted by the partition fields, then
+    by `order`, before the write, so partitionBy needs no sort of its own
+    (which orders by the partition fields only and loses the layout's
+    order). The Z-order layout's Morton key column is dropped after that
+    sort."""
     import glob as _g
     import os
     import shutil
@@ -1746,6 +1741,10 @@ def _land_partitioned_parts(df: DataFrame, table_dir: str, data_dir: str,
                     "a data column; rename the column or the spec field")
             df = df.withColumn(f["name"], _spec_partition_col(f, ddl))
         cols.append(f["name"])
+    if order:
+        from parquet_toolkit_spark.operators.zorder import ZCLUSTER_COL
+
+        df = df.sortWithinPartitions(*cols, *order).drop(ZCLUSTER_COL)
     tmp = os.path.join(table_dir, f"_tmp_land_{uuid.uuid4().hex[:8]}")
     w = df.write.mode("overwrite")
     if max_records:
@@ -2452,20 +2451,20 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
             footers = list(zip(sf["data"], read_footers(sf["data"])))
         except (OSError, pa.ArrowException):
             footers = []
+    # each task's rows are sorted by `order` (after the partition fields
+    # on a partitioned table): target_file_rows is enforced by the
+    # writer's maxRecordsPerFile, which splits CONTIGUOUSLY within each
+    # sorted task, so disjoint key ranges survive. Sorting on the Morton
+    # key keeps those splits z-contiguous, so every output file covers one
+    # small z range (-> tight bounds on every cluster column)
+    order: tuple[str, ...] = ()
     if zorder_by:
-        # sorting on the Morton key keeps maxRecordsPerFile's contiguous
-        # splits z-contiguous, so every output file covers one small z
-        # range (-> tight bounds on every cluster column)
-        df = (zorder.zorder_split(df, tuple(zorder_by), zorder_bits,
-                                  max(1, n), footers, total)
-              .sortWithinPartitions(zorder.ZCLUSTER_COL)
-              .drop(zorder.ZCLUSTER_COL))
+        df = zorder.zorder_split(df, tuple(zorder_by), zorder_bits,
+                                 max(1, n), footers, total)
+        order = (zorder.ZCLUSTER_COL,)
     if sort_by:
-        # target_file_rows is enforced by the writer's maxRecordsPerFile,
-        # which splits CONTIGUOUSLY within each sorted partition, so
-        # disjoint key ranges survive
-        df = (layout.range_split(df, sort_by, max(1, n), footers, total)
-              .sortWithinPartitions(*sort_by))
+        df = layout.range_split(df, sort_by, max(1, n), footers, total)
+        order = tuple(sort_by)
         name_to_fid = existing["schema_name_to_id"]
         sort_order_id = 1
         sort_orders = [
@@ -2483,11 +2482,14 @@ def rewrite_data_files(spark: SparkSession, table_dir: str,
         part_fields = [(f["name"], f["avro"]) for f in spec_fields]
         landed = _land_partitioned_parts(df, table_dir, data_dir,
                                          commit_uuid, spec_fields,
-                                         max_records=target_file_rows)
+                                         max_records=target_file_rows,
+                                         order=order)
         new_files = [p for p, _v in landed]
         part_vals = dict(landed)
     else:
         part_fields = None
+        if order:
+            df = df.sortWithinPartitions(*order).drop(zorder.ZCLUSTER_COL)
         new_files = _land_parquet_parts(df, table_dir, data_dir,
                                         commit_uuid,
                                         max_records=target_file_rows)

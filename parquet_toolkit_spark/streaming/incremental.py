@@ -29,18 +29,16 @@ from parquet_toolkit_spark.operators.encode import (
 from parquet_toolkit_spark.sources import store
 from parquet_toolkit_spark.sources.fs import DriverFS
 
-_CODEC_PROFILES = {"fast": frozenset({"bin_fsst"}), "small": frozenset()}
-
-
-def _excluded_codecs(codec_profile: str) -> frozenset[str]:
-    if codec_profile not in _CODEC_PROFILES:
-        raise ValueError(f"unknown codec_profile {codec_profile!r}")
-    return _CODEC_PROFILES[codec_profile]
+# A stream's encode latency bounds its ingest rate, and FSST buys its
+# 30%+ size wins with 10-25x the floor's encode CPU: every increment
+# competes the other codecs only. Batch re-encode (compaction through
+# encode_pipeline) can upgrade the stored codec later.
+STREAM_EXCLUDED_CODECS = frozenset({"bin_fsst"})
 
 
 def _encode_increment(spark: SparkSession, df: DataFrame, enc_dir: str,
-                      run_id: str, rows_per_pid: int,
-                      exclude: frozenset[str]) -> tuple[int, list[int]]:
+                      run_id: str, rows_per_pid: int
+                      ) -> tuple[int, list[int]]:
     """Append `df` to the store as fresh pids of ~rows_per_pid rows:
     count, round-robin repartition, one _write_pid per task, one manifest
     commit that carries every committed row over. Returns (rows, pids
@@ -61,7 +59,7 @@ def _encode_increment(spark: SparkSession, df: DataFrame, enc_dir: str,
             return
         pid = base_pid + TaskContext.get().partitionId()
         yield _write_pid(enc_dir, pid, pa.Table.from_batches(parts), run_id,
-                         exclude_codecs=exclude)
+                         exclude_codecs=STREAM_EXCLUDED_CODECS)
 
     rows = df.repartition(n_parts).mapInArrow(encode_iter, _ROWS_DDL) \
         .toArrow()
@@ -73,18 +71,13 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
                        schema_ddl: str, checkpoint_dir: str,
                        run_id: str = "stream",
                        rows_per_pid: int = 250_000,
-                       available_now: bool = True,
-                       codec_profile: str = "fast"):
+                       available_now: bool = True):
     """Start (and with available_now=True, drain) an incremental encode.
 
-    codec_profile: "fast" (default) excludes bin_fsst — a stream's
-    encode latency bounds its ingest rate, and FSST buys its 30%+ size
-    wins with 10-25x the floor's encode CPU; batch re-encode (compaction
-    through encode_pipeline) can upgrade the stored codec later.
-    "small" competes every codec like the batch path.
+    Every micro-batch selects its codecs without bin_fsst
+    (STREAM_EXCLUDED_CODECS).
 
     Returns the StreamingQuery (already stopped if available_now)."""
-    exclude = _excluded_codecs(codec_profile)
     stream = (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", 64)
@@ -93,7 +86,7 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
         _encode_increment(spark, batch_df, enc_dir, f"{run_id}-e{epoch_id}",
-                          rows_per_pid, exclude)
+                          rows_per_pid)
 
     writer = (
         stream.writeStream.foreachBatch(handle_batch)
@@ -108,8 +101,7 @@ def incremental_encode(spark: SparkSession, landing_dir: str, enc_dir: str,
 
 def encode_iceberg_increment(spark: SparkSession, table_dir: str,
                              enc_dir: str,
-                             rows_per_pid: int = 250_000,
-                             codec_profile: str = "fast") -> dict:
+                             rows_per_pid: int = 250_000) -> dict:
     """One incremental run: encode into the blob store exactly the rows
     APPENDED to an Iceberg table since the last processed snapshot.
 
@@ -122,6 +114,8 @@ def encode_iceberg_increment(spark: SparkSession, table_dir: str,
     were committed twice) or at the new one: exactly-once without a side
     state file. Cost per run is O(new files) metadata + O(new rows)
     encode; non-append snapshots in range raise (incremental_scan).
+    Like incremental_encode, it selects codecs without bin_fsst
+    (STREAM_EXCLUDED_CODECS).
 
     Returns {"rows", "snapshot_id", "pids"}."""
     from parquet_toolkit_spark.sources.iceberg_compat import (
@@ -129,7 +123,6 @@ def encode_iceberg_increment(spark: SparkSession, table_dir: str,
         read_table_metadata,
     )
 
-    exclude = _excluded_codecs(codec_profile)
     mt = store.manifest_table(DriverFS(spark), enc_dir, ["run_id"])
     done = [int(r.split("-", 1)[1])
             for r in (mt.column("run_id").to_pylist() if mt is not None else [])
@@ -147,5 +140,5 @@ def encode_iceberg_increment(spark: SparkSession, table_dir: str,
     df = incremental_scan(spark, table_dir, last, to_id,
                           allow_expired_from=True)
     n, pids = _encode_increment(spark, df, enc_dir, f"iceinc-{to_id}",
-                                rows_per_pid, exclude)
+                                rows_per_pid)
     return {"rows": n, "snapshot_id": to_id, "pids": pids}

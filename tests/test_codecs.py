@@ -352,16 +352,20 @@ def test_fsst_gate_admits_big_wins_rejects_marginal():
     assert not _fsst_sample_wins(rnd)
 
 
-def test_select_codec_exclude_profile():
+def test_select_codec_exclude_profile(monkeypatch):
     """exclude= drops codecs from competition but never the floor; the
-    streaming 'fast' profile uses it to skip FSST's encode cost."""
+    stream writers use it to skip FSST's encode cost. For every kind the
+    FLOOR codec competes, last, on the gated, hinted and excluded paths,
+    and a hint list the FSST size cap empties falls back to the gates."""
+    import random
+
     import pyarrow as pa
 
     from parquet_toolkit_spark.codecs import decode_blob
+    from parquet_toolkit_spark.codecs import selector as sel
     from parquet_toolkit_spark.codecs.chunk import from_arrow, to_arrow
-    from parquet_toolkit_spark.codecs.selector import select_codec
+    from parquet_toolkit_spark.codecs.selector import FLOOR, select_codec
 
-    import random
     rng = random.Random(3)
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     docs = [" ".join(rng.choices(words, k=80)) for _ in range(800)]
@@ -376,6 +380,49 @@ def test_select_codec_exclude_profile():
     name_floor, blob2, _ = select_codec(
         ch, exclude={"bin_fsst", "bin_dict", "bin_plain"})
     assert name_floor == "bin_plain"
+
+    tried = []
+    real_encode = sel.encode_blob
+    monkeypatch.setattr(sel, "encode_blob", lambda c, name: (
+        tried.append(name), real_encode(c, name))[1])
+
+    def trials(chunk, **kw):
+        tried.clear()
+        select_codec(chunk, **kw)
+        return list(tried)
+
+    # kind -> (chunk, a non-floor codec of that kind to hint or exclude)
+    kinds = {
+        "bin": (ch, "bin_fsst"),
+        "int": (from_arrow(pa.array(range(5000), pa.int64())), "int_for"),
+        "float": (from_arrow(pa.array([i / 8 for i in range(5000)])),
+                  "float_shuffle"),
+        "flist": (from_arrow(pa.array([[1.0, 2.0]] * 500,
+                                      pa.list_(pa.float32()))),
+                  "flist_shuffle"),
+        "bool": (from_arrow(pa.array([i % 3 == 0 for i in range(5000)])),
+                 None),
+        "nested": (from_arrow(pa.array([{"a": i} for i in range(500)])),
+                   None),
+    }
+    assert set(kinds) == set(FLOOR)
+    for kind, (chunk, other) in kinds.items():
+        assert chunk.kind == kind
+        floor = FLOOR[kind]
+        assert trials(chunk)[-1] == floor, kind
+        if other is None:  # the floor is the kind's only codec
+            assert trials(chunk, candidates=[floor]) == [floor]
+            continue
+        assert trials(chunk, candidates=[other]) == [other, floor], kind
+        got = trials(chunk, exclude={other})
+        assert other not in got and got[-1] == floor, kind
+
+    # a ["bin_fsst"] hint on a chunk over 4 * FSST_MAX_BYTES: the gates
+    # (which never admit FSST above FSST_MAX_BYTES) choose instead
+    monkeypatch.setattr(sel, "FSST_MAX_BYTES", len(ch.data) // 8)
+    gated = trials(ch)
+    assert "bin_fsst" not in gated and gated[-1] == "bin_plain"
+    assert trials(ch, candidates=["bin_fsst"]) == gated
 
 
 # ------------------------------------------------------------ front coding

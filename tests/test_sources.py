@@ -1900,6 +1900,30 @@ def test_iceberg_transform_spec_append_and_rewrite(spark, tmp_path):
     assert {r.id for r in ic.read_data(spark, tdir).collect()} == all_ids
 
 
+def test_iceberg_sorted_rewrite_of_partitioned_table_sorts_files(
+        spark, tmp_path):
+    """rewrite_data_files(sort_by=...) on a bucket-partitioned table
+    writes every file sorted by the key, as on an unpartitioned one: the
+    partitioned write must not re-sort each task by the bucket alone."""
+    from parquet_toolkit_spark.sources import iceberg_compat as ic
+
+    tdir = str(tmp_path / "sorted_bucketed")
+    rows = [((i * 7919) % 20000, f"v{i}") for i in range(20000)]
+    for k, chunk in enumerate((rows[:10000], rows[10000:])):
+        df = spark.createDataFrame(chunk, "doc_id long, v string")
+        ic.write_table(spark, df.repartition(3), tdir,
+                       partition_by=["bucket(8, doc_id)"] if k == 0 else None)
+    rw = ic.rewrite_data_files(spark, tdir, sort_by=["doc_id"])
+    files = ic.snapshot_files(tdir)["data"]
+    assert sorted(files) == sorted(rw["files"]) and len(files) == 8
+    got = []
+    for f in files:
+        ids = pq.read_table(f).column("doc_id").to_pylist()
+        assert ids == sorted(ids), f
+        got += ids
+    assert sorted(got) == list(range(20000))
+
+
 def test_iceberg_transform_validation_errors(spark):
     from parquet_toolkit_spark.sources.iceberg_compat import (
         _parse_partition_by,
