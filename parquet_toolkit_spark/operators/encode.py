@@ -140,7 +140,7 @@ def _write_pid(out_dir: str, pid: int, table: pa.Table, run_id: str,
     task_write_ipc_atomic(
         pa.Table.from_batches([batch.drop_columns(["pid"])]),
         os.path.join(tmp_dir, f"pid-{pid}-{run_id}.arrow"),
-        os.path.join(dest_dir, "part-0.arrow"),
+        store.pid_file(out_dir, pid),
     )
     return batch.drop_columns(["blob"])
 
@@ -494,22 +494,21 @@ def encode_partitions(spark: SparkSession, staging_dir: str, out_dir: str,
     if schema_map is None:  # exotic arrow type: fall back to Spark
         schema_map = _schema_map(spark.read.parquet(any_file))
 
-    committed = store.committed_pids(dfs, out_dir)
-    if resume and committed is not None:
+    plan = store.read_plan(dfs, out_dir)
+    if resume and plan is not None and plan.schema_map != schema_map:
         # resumed pids would sit under a column map that is not theirs
-        old_schema = store.read_schema_map(dfs, out_dir)
-        if old_schema != schema_map:
-            raise ValueError(
-                f"cannot resume into {out_dir}: the store has schema "
-                f"{old_schema}, the staged table has {schema_map}; "
-                "re-encode with resume=False")
-    done = committed if resume and committed is not None else set()
+        raise ValueError(
+            f"cannot resume into {out_dir}: the store has schema "
+            f"{plan.schema_map}, the staged table has {schema_map}; "
+            "re-encode with resume=False")
+    done = ({p for p, _f, _b in plan.files}
+            if resume and plan is not None else set())
     pending = sorted(set(pid_files) - done)
     if fail_after is not None:
         pending = pending[:fail_after]
     if not pending:
         return read_manifest(spark, out_dir)
-    if not resume and committed is not None:
+    if not resume and plan is not None:
         # staged pid i is store pid i, so a re-encode retires the old run
         # first: commit an empty manifest, then delete every pid dir. No
         # committed manifest then names a blob of another run, and no old
@@ -613,34 +612,26 @@ def fsck_store(spark: SparkSession, enc_dir: str,
     store level): one task per committed pid recomputes sha256 of every
     column blob and reconciles against the manifest. Returns
     (pid, column, status, expected_sha, actual_sha) with status one of
-    ok | corrupt | missing_blob (manifest entry, no blob row) |
-    orphan (blob row, no manifest entry) | unreadable (file won't parse).
-    Orphan PID DIRS (no committed manifest rows at all) are ignored, same
-    as decode — the manifest is the source of truth."""
+    ok | corrupt | missing_blob (manifest entry, no blob row; a lost
+    pid file scans as no rows) | orphan (blob row, no manifest entry) |
+    unreadable (file won't parse). The scan list is the store's read
+    plan, so orphan PID DIRS (no committed manifest rows at all) are
+    ignored, same as decode — the manifest is the source of truth."""
     from parquet_toolkit_spark.sources.fs import DriverFS
 
-    dfs = DriverFS(spark)
-    man = read_manifest(spark, enc_dir)
-    if man is None:
+    plan = store.read_plan(DriverFS(spark), enc_dir)
+    if plan is None:
         raise FileNotFoundError(f"no manifest under {enc_dir}")
-    committed = store.committed_pids(dfs, enc_dir)
-    pid_files: list[tuple[int, str]] = [
-        (pid, f)
-        for pid, d in store.pid_dirs(dfs, os.path.join(enc_dir, store.BLOBS)
-                                     ).items() if pid in committed
-        for f, _sz in store.data_files(dfs, d)
-    ]
-    man_side = man.select("pid", "column",
-                          F.col("checksum").alias("expected_sha"))
-    if not pid_files:
+    man_side = read_manifest(spark, enc_dir).select(
+        "pid", "column", F.col("checksum").alias("expected_sha"))
+    if not plan.files:  # an empty manifest: no task to run
         return man_side.select(
             "pid", "column", F.lit("missing_blob").alias("status"),
             "expected_sha", F.lit(None).cast("string").alias("actual_sha"),
         )
-
     task_rows = pa.table({
-        "pid": pa.array([p for p, _ in pid_files], pa.int32()),
-        "file": [f for _, f in pid_files],
+        "pid": pa.array([p for p, _f, _b in plan.files], pa.int32()),
+        "file": [f for _p, f, _b in plan.files],
     })
     scanned_schema = pa.schema([("pid", pa.int32()), ("column", pa.string()),
                                 ("actual_sha", pa.string())])
@@ -663,6 +654,8 @@ def fsck_store(spark: SparkSession, enc_dir: str,
                     rows["column"].append(name)
                     rows["actual_sha"].append(
                         hashlib.sha256(memoryview(buf)).hexdigest())
+            except FileNotFoundError:
+                continue  # a lost pid file: its rows read missing_blob
             except Exception as exc:  # torn/truncated file
                 rows["pid"].append(pid)
                 rows["column"].append("__file__")
@@ -695,7 +688,11 @@ def _decode_blob_file(fpath: str, wanted: set[str] | None = None
     from parquet_toolkit_spark.codecs.container import decode_blob
     from parquet_toolkit_spark.sources.fs import task_open_ipc
 
-    bt = task_open_ipc(fpath).read_all()
+    try:
+        bt = task_open_ipc(fpath).read_all()
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"committed pid file {fpath} is missing; run fsck_store") from e
     names = bt.column("column").to_pylist()
     blob_arr = bt.column("blob").combine_chunks()
     bufs = blob_arr.buffers()
@@ -756,7 +753,8 @@ def compact_store(spark: SparkSession, enc_dir: str,
     with live dirs), the manifest swap commits the change atomically, and
     old member dirs are deleted only after commit — a crash at any point
     leaves either the old committed view or the new one, plus at worst
-    orphan dirs that decode ignores and fsck_store reports.
+    orphan dirs that every reader ignores. Member files come from the
+    store's read plan: a lost one fails its task.
 
     bloom_columns=None auto-detects: columns whose manifest stats carry a
     bloom keep one on the merged chunks.
@@ -764,20 +762,18 @@ def compact_store(spark: SparkSession, enc_dir: str,
     from parquet_toolkit_spark.sources.fs import DriverFS
 
     dfs = DriverFS(spark)
-    man = read_manifest(spark, enc_dir)
-    if man is None:
+    plan = store.read_plan(dfs, enc_dir)
+    if plan is None:
         raise FileNotFoundError(f"no manifest under {enc_dir}")
-    # one driver-side arrow read replaces three O(pids) collect jobs
-    # (sizes, bloom columns, codec hints below)
-    cols = ["pid", "column", "codec", "bytes_out", "stats_json"]
+    sizes = {p: b for p, _f, b in plan.files}
+    # driver-side arrow reads, not O(pids) collect jobs: the plan gives
+    # sizes and member files, this the bloom columns and codec hints
+    cols = ["pid", "column", "codec", "stats_json"]
     mt = store.manifest_table(dfs, enc_dir, cols)
     mrows = list(zip(*(mt.column(c).to_pylist() for c in cols)))
-    sizes: dict[int, int] = {}
-    for p, _c, _cd, bo, _sj in mrows:
-        sizes[p] = sizes.get(p, 0) + (bo or 0)
     if bloom_columns is None:
         bloom_columns = tuple(sorted(
-            {c for _p, c, _cd, _bo, sj in mrows
+            {c for _p, c, _cd, sj in mrows
              if sj is not None and '"bloom"' in sj}
         ))
 
@@ -801,19 +797,7 @@ def compact_store(spark: SparkSession, enc_dir: str,
     if len(cur) >= 2:
         groups.append(cur)
     if not groups:
-        return man
-
-    # member files in (pid, filename) order — concat preserves the sorted
-    # layout's row order across adjacent pids
-    pid_files = {pid: [f for f, _ in store.data_files(dfs, d)] for pid, d in
-                 store.pid_dirs(dfs, os.path.join(enc_dir, store.BLOBS)
-                                ).items()}
-    missing = [p for g in groups for p in g if not pid_files.get(p)]
-    if missing:
-        raise FileNotFoundError(
-            f"manifest lists pids {missing} but no blob files exist; "
-            "run fsck_store"
-        )
+        return read_manifest(spark, enc_dir)
 
     next_pid = store.next_pid(dfs, enc_dir)
     merged_pids = [p for g in groups for p in g]
@@ -824,13 +808,16 @@ def compact_store(spark: SparkSession, enc_dir: str,
     # is the candidate list — selection stays size-optimal among them
     merged_set = set(merged_pids)
     hints: dict[str, list[str]] = {}
-    for p, c, cd, _bo, _sj in mrows:
+    for p, c, cd, _sj in mrows:
         if p not in merged_set:
             continue
         hints.setdefault(c, [])
         if cd not in hints[c]:
             hints[c].append(cd)
-    bins = [(next_pid + i, [f for p in g for f in pid_files[p]],
+    # member files in pid order — concat preserves the sorted layout's
+    # row order across adjacent pids
+    paths = {p: f for p, f, _b in plan.files}
+    bins = [(next_pid + i, [paths[p] for p in g],
              sum(sizes[p] for p in g)) for i, g in enumerate(groups)]
     # largest merged bin (by ENCODED bytes, not path-string length —
     # code-review r4) first for balanced striping
@@ -853,8 +840,7 @@ def compact_store(spark: SparkSession, enc_dir: str,
 
     new_rows = _striped_tasks(spark, task_rows, concurrency, compact_task,
                               _ROWS_DDL).toArrow()
-    store.commit(dfs, enc_dir, new_rows, merged_pids,
-                 store.read_schema_map(dfs, enc_dir))
+    store.commit(dfs, enc_dir, new_rows, merged_pids, plan.schema_map)
     # post-commit cleanup: the manifest no longer references the members,
     # so a crash here leaves only ignorable orphans
     for p in merged_pids:
@@ -878,49 +864,50 @@ def decode_pipeline(spark: SparkSession, enc_dir: str,
     memory-mapped IPC file only faults the pages of the selected rows'
     buffers, so untouched columns cost ~0 IO).
     pids: decode only these partitions — pair with pids_matching_range
-    (zone-map pruning from the manifest's per-chunk min/max stats)."""
+    (zone-map pruning from the manifest's per-chunk min/max stats).
+    Every file comes from the store's read plan: a committed pid whose
+    file is lost fails the action, naming the file."""
+    plan = _read_plan(spark, enc_dir, columns)
+    if pids is not None:
+        plan = plan._replace(files=[t for t in plan.files if t[0] in pids])
+    if not plan.files:
+        raise FileNotFoundError(
+            f"no committed blob files under {enc_dir}/{store.BLOBS}")
+    return _decode_plan(spark, plan, keep_pid, concurrency)
+
+
+def _read_plan(spark: SparkSession, enc_dir: str,
+               columns: list[str] | None = None, filters=()
+               ) -> store.ReadPlan:
+    """store.read_plan, refusing a store with _schema.json but NO
+    manifest: that is a broken commit, and decoding its pid dirs would
+    resurrect orphan/partial blobs (ADVICE r2)."""
     from parquet_toolkit_spark.sources.fs import DriverFS
 
-    dfs = DriverFS(spark)
-    schema_map = store.read_schema_map(dfs, enc_dir)
-    blobs_dir = os.path.join(enc_dir, store.BLOBS)
-
-    # only manifest-committed pids are decoded: a crashed run may leave
-    # orphan blob files with no manifest row (F5 parity: the manifest is
-    # the source of truth, like the reference's alreadyMerged set). A store
-    # with _schema.json but NO manifest is a broken commit — refuse rather
-    # than resurrect orphan/partial blobs (ADVICE r2). Driver-side arrow
-    # read: no Spark job for the O(pids) pid set.
-    committed = store.committed_pids(dfs, enc_dir)
-    if committed is None:
+    plan = store.read_plan(DriverFS(spark), enc_dir, columns, filters)
+    if plan is None:
         raise FileNotFoundError(
             f"no manifest under {enc_dir}: encode commit incomplete; "
             "re-run encode_partitions(resume=True) to rebuild it"
         )
-    if pids is not None:
-        committed &= set(pids)
-    pid_files = [(pid, f, sz)
-                 for pid, d in store.pid_dirs(dfs, blobs_dir).items()
-                 if pid in committed
-                 for f, sz in store.data_files(dfs, d)]
-    if not pid_files:
-        raise FileNotFoundError(f"no committed blob files under {blobs_dir}")
-    # largest-first for balanced striping
-    pid_files.sort(key=lambda t: -t[2])
-    task_rows = pa.table({
-        "pid": pa.array([p for p, _, _ in pid_files], pa.int32()),
-        "file": [f for _, f, _ in pid_files],
-    })
+    return plan
 
-    if columns is not None:
-        unknown = set(columns) - set(schema_map)
-        if unknown:
-            raise KeyError(f"unknown columns {sorted(unknown)}")
-        schema_map = {c: t for c, t in schema_map.items() if c in columns}
+
+def _decode_plan(spark: SparkSession, plan: store.ReadPlan,
+                 keep_pid: bool, concurrency: int | None) -> DataFrame:
+    """Decode the plan's files in striped tasks, largest first; a plan
+    with no files is an empty frame with the plan's schema, no IO."""
     out_schema = ", ".join(
         (["pid int"] if keep_pid else [])
-        + [f"`{c}` {t}" for c, t in schema_map.items()])
-    schema = _spark_schema(schema_map)
+        + [f"`{c}` {t}" for c, t in plan.schema_map.items()])
+    if not plan.files:
+        return spark.createDataFrame([], out_schema)
+    files = sorted(plan.files, key=lambda t: -t[2])
+    task_rows = pa.table({
+        "pid": pa.array([p for p, _f, _b in files], pa.int32()),
+        "file": [f for _p, f, _b in files],
+    })
+    schema = _spark_schema(plan.schema_map)
 
     def decode_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         for task in stripe.to_pylist():
@@ -1006,24 +993,22 @@ def pids_matching_range(spark: SparkSession, enc_dir: str, column: str,
         LessThanOrEqual,
     )
 
-    from parquet_toolkit_spark.sources.fs import DriverFS
-
-    pids, stats = store.chunk_stats(DriverFS(spark), enc_dir, {column})
-    if isinstance(lo, _dcm.Decimal) or isinstance(hi, _dcm.Decimal):
-        # loud refusal kept from r6: Decimal bounds on a column with no
-        # decimal zone maps means the caller is pruning the wrong column
-        if not any((s.get("logical") or "").startswith("dec_")
-                   for s in stats.values()):
-            raise TypeError(
-                f"Decimal bounds on {column!r}, but its chunks carry no "
-                "decimal zone maps (is the column decimal-typed?)"
-            )
     flts = []
     if lo is not None:
         flts.append(GreaterThanOrEqual((column,), lo))
     if hi is not None:
         flts.append(LessThanOrEqual((column,), hi))
-    return store.admit_pids(pids, stats, flts)
+    plan = _read_plan(spark, enc_dir, filters=flts)
+    if isinstance(lo, _dcm.Decimal) or isinstance(hi, _dcm.Decimal):
+        # loud refusal kept from r6: Decimal bounds on a column with no
+        # decimal zone maps means the caller is pruning the wrong column
+        if not any((s.get("logical") or "").startswith("dec_")
+                   for s in plan.stats.values()):
+            raise TypeError(
+                f"Decimal bounds on {column!r}, but its chunks carry no "
+                "decimal zone maps (is the column decimal-typed?)"
+            )
+    return {p for p, _f, _b in plan.files}
 
 
 def pids_matching_value(spark: SparkSession, enc_dir: str, column: str,
@@ -1037,15 +1022,13 @@ def pids_matching_value(spark: SparkSession, enc_dir: str, column: str,
     Driver cost is O(pids) bloom probes (4KB each, numpy)."""
     from pyspark.sql.datasource import EqualTo
 
-    from parquet_toolkit_spark.sources.fs import DriverFS
-
     # shared admission (_chunk_admits): bloom probe + zone-map point
     # range, with the logical-unit handling (temporal units, decimal
     # mantissa scaling) applied consistently — a raw bloom probe with a
     # Decimal value would hash the unscaled value and could UNSOUNDLY
     # prune (r5)
-    pids, stats = store.chunk_stats(DriverFS(spark), enc_dir, {column})
-    return store.admit_pids(pids, stats, [EqualTo((column,), value)])
+    plan = _read_plan(spark, enc_dir, filters=[EqualTo((column,), value)])
+    return {p for p, _f, _b in plan.files}
 
 
 def _prefix_upper_bound(prefix: str) -> str | None:
@@ -1106,19 +1089,14 @@ def decode_where(spark: SparkSession, enc_dir: str,
             "semantics (col == NULL matches nothing); filter nulls with "
             "decode_pipeline + isNull instead")
 
-    # ONE manifest scan serves every predicate (a per-predicate
-    # pids_matching_* call re-reads and re-collects the manifest — ~6
-    # driver scans for 3 predicates on a 10^6-pid store; code-review
-    # r4). Per-chunk admission is the data source's — same zone-map/
-    # bloom/prefix evidence, one shared implementation.
+    # the store's read plan admits pids for every predicate and names
+    # the files and schema from ONE manifest read (code-review r4)
     from pyspark.sql.datasource import (
         EqualTo,
         GreaterThanOrEqual,
         LessThanOrEqual,
         StringStartsWith,
     )
-
-    from parquet_toolkit_spark.sources.fs import DriverFS
 
     flts: list = []
     for col, spec in predicates.items():
@@ -1133,26 +1111,11 @@ def decode_where(spark: SparkSession, enc_dir: str,
         else:
             flts.append(EqualTo((col,), spec))
 
-    dfs = DriverFS(spark)
-    pids = store.admit_pids(*store.chunk_stats(dfs, enc_dir, set(predicates)),
-                            flts)
-
-    pred_cols = list(predicates)
     want = columns
     if columns is not None:
-        columns = list(dict.fromkeys(columns + pred_cols))
-    if not pids:
-        # fully pruned: an empty result with the store's schema, no IO
-        schema_map = store.read_schema_map(dfs, enc_dir)
-        keep_cols = columns if columns is not None else list(schema_map)
-        ddl = ", ".join(
-            ([f"pid int"] if keep_pid else [])
-            + [f"`{c}` {schema_map[c]}" for c in keep_cols])
-        df = spark.createDataFrame([], ddl)
-    else:
-        df = decode_pipeline(spark, enc_dir, keep_pid=keep_pid,
-                             concurrency=concurrency, columns=columns,
-                             pids=pids)
+        columns = list(dict.fromkeys(columns + list(predicates)))
+    df = _decode_plan(spark, _read_plan(spark, enc_dir, columns, flts),
+                      keep_pid, concurrency)
     for col, spec in predicates.items():
         if isinstance(spec, dict) and "prefix" in spec:
             df = df.where(F.col(col).startswith(spec["prefix"]))

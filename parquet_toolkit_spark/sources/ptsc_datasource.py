@@ -10,11 +10,14 @@ reader prunes PIDS at the manifest layer (int/string zone maps, prefix
 bounds, per-chunk blooms — the same evidence decode_where uses) and
 returns every filter as residual, because pid pruning is a SUPERSET
 optimization: Spark re-applies the predicates row-level, so results are
-exact while pruned partitions cost zero blob IO. Pid files are bundled
-into at most MAX_PARTITIONS input partitions; reads yield Arrow batches
-through the store's one pid-file reader, encode._read_pid (memory-mapped
-IPC, zero-copy blob views), and writes go through its one writer,
-encode._write_pid.
+exact while pruned partitions cost zero blob IO. The admitted pid files
+come from the store's one read plan (store.read_plan: one manifest read,
+no listing) and are bundled into at most MAX_PARTITIONS input
+partitions, each carrying the plan's schema, so a task reads no driver
+filesystem; a lost committed pid file fails the read. Reads yield Arrow
+batches through the store's one pid-file reader, encode._read_pid
+(memory-mapped IPC, zero-copy blob views), and writes go through its one
+writer, encode._write_pid.
 
 Driver-side planning reads the manifest with pyarrow directly — no
 nested Spark jobs during query planning, and the reader stays picklable.
@@ -239,29 +242,24 @@ class PtscReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        dfs = DriverFS()
-        pids = store.admit_pids(
-            *store.chunk_stats(dfs, self.path,
-                               {f.attribute[0] for f in self.filters}),
-            self.filters)
-        dirs = store.pid_dirs(dfs, os.path.join(self.path, store.BLOBS))
-        files = [(sz, f) for pid in sorted(pids) if pid in dirs
-                 for f, sz in store.data_files(dfs, dirs[pid])]
-        return [InputPartition([f for _sz, f in b])
-                for b in bundle_by_size(files, size_of=lambda t: t[0])]
+        from parquet_toolkit_spark.operators.encode import _spark_schema
+
+        plan = store.read_plan(DriverFS(), self.path, filters=self.filters)
+        if plan is None:
+            raise FileNotFoundError(f"no manifest under {self.path}")
+        schema = _spark_schema(plan.schema_map)
+        return [InputPartition((schema, [f for _p, f, _b in b]))
+                for b in bundle_by_size(plan.files, size_of=lambda t: t[2])]
 
     def read(self, partition):
         # an empty partitions() list (every pid pruned) reaches read as
         # one None partition — Spark's planner contract, not an error
         if partition is None:
             return
-        from parquet_toolkit_spark.operators.encode import (
-            _read_pid,
-            _spark_schema,
-        )
+        from parquet_toolkit_spark.operators.encode import _read_pid
 
-        schema = _spark_schema(store.read_schema_map(DriverFS(), self.path))
-        for fpath in partition.value:
+        schema, files = partition.value
+        for fpath in files:
             yield from _read_pid(fpath, schema).to_batches(
                 max_chunksize=32768)
 

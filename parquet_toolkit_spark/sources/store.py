@@ -20,7 +20,8 @@ Layout of a store directory::
                                rename into blobs/; commit deletes it
 
 The manifest is the source of truth: a blob directory without committed
-manifest rows is an orphan that readers ignore and fsck_store reports.
+manifest rows is an orphan that every reader, fsck_store included,
+ignores (next_pid skips its number).
 Every writer but encode_partitions takes fresh pids from ``next_pid``
 (orphan dirs included); encode_partitions writes staged pid i to pid i,
 skipping committed pids on resume and committing an empty manifest
@@ -44,12 +45,22 @@ refresh the root _schema.json. The crash states a reader can meet:
   take the schema map committed beside the manifest they read and use
   the root copy only when that one is absent (stores written before
   the schema rode the swap).
+
+Readers: every reader of committed blobs (decode_pipeline, decode_where,
+the pids_matching_* lookups, the ptsc reader, compact_store, fsck_store
+and encode_partitions' resume check) runs one ``read_plan``: one
+manifest read gives the schema map, the admitted pids with their file
+``pid_file(store, pid)`` and encoded bytes, and the filter columns'
+chunk stats. No reader lists blobs/: a committed pid whose file is lost
+fails the read with the file's path (so its pid) in the error, never
+returns fewer rows; fsck_store reports it as missing_blob.
 """
 
 from __future__ import annotations
 
 import json
 import posixpath
+from typing import NamedTuple
 
 import pyarrow as pa
 
@@ -58,6 +69,7 @@ MANIFEST_NEW = "manifest_new"
 MANIFEST_OLD = "manifest_old"
 SCHEMA_FILE = "_schema.json"
 BLOBS = "blobs"
+PID_FILE = "part-0.arrow"
 TMP = "_tmp"
 
 MANIFEST_SCHEMA = pa.schema([
@@ -92,10 +104,9 @@ def pid_dirs(dfs, folder: str) -> dict[int, str]:
     return out
 
 
-def data_files(dfs, folder: str) -> list[tuple[str, int]]:
-    """Sorted (path, size) of the .arrow blob files in `folder`."""
-    return [(f, sz) for f, sz in dfs.list_files(folder)
-            if f.endswith(".arrow")]
+def pid_file(store: str, pid: int) -> str:
+    """The one name of a pid's blob file: blobs/pid=N/part-0.arrow."""
+    return posixpath.join(pid_dir(store, pid), PID_FILE)
 
 
 def _committed_parts(dfs, store: str) -> tuple[str, list[str]] | None:
@@ -116,18 +127,22 @@ def manifest_table(dfs, store: str,
     """Committed manifest rows as a pyarrow Table, read driver-side
     through the pyarrow fs shim (no Spark job); None when the store has
     no manifest. `columns` prunes the read."""
+    found = _committed_parts(dfs, store)
+    return None if found is None else _read_parts(found[1], columns)
+
+
+def _read_parts(parts: list[str],
+                columns: list[str] | None) -> pa.Table:
+    """The committed rows of the manifest parts `parts`."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from parquet_toolkit_spark.sources.fs import task_fs
 
-    found = _committed_parts(dfs, store)
-    if found is None:
-        return None
-    fs, _ = task_fs(found[1][0])
+    fs, _ = task_fs(parts[0])
     read = None if columns is None else list(dict.fromkeys(
         [*columns, "status"]))
-    t = pq.read_table([task_fs(f)[1] for f in found[1]], filesystem=fs,
+    t = pq.read_table([task_fs(f)[1] for f in parts], filesystem=fs,
                       columns=read)
     t = t.filter(pc.equal(t.column("status"), "committed"))
     if columns is not None and "status" not in columns:
@@ -168,7 +183,10 @@ def next_pid(dfs, store: str) -> int:
 def read_schema_map(dfs, store: str) -> dict[str, str]:
     """{column: Spark DDL} of the store: the copy committed beside the
     manifest, else the root copy."""
-    found = _committed_parts(dfs, store)
+    return _schema_of(dfs, store, _committed_parts(dfs, store))
+
+
+def _schema_of(dfs, store: str, found) -> dict[str, str]:
     paths = [posixpath.join(found[0], SCHEMA_FILE)] if found else []
     paths.append(posixpath.join(store, SCHEMA_FILE))
     for p in paths:
@@ -231,32 +249,46 @@ def commit(dfs, store: str, rows: pa.Table, replaced,
     dfs.delete(posixpath.join(store, TMP), recursive=True)
 
 
-def chunk_stats(dfs, store: str, columns: set[str]
-                ) -> tuple[set[int], dict[tuple[int, str], dict]]:
-    """(committed pids, {(pid, column): stats} for `columns`) from one
-    manifest read. Raises FileNotFoundError when there is no manifest."""
-    t = manifest_table(dfs, store, ["pid", "column", "stats_json"])
-    if t is None:
-        raise FileNotFoundError(f"no manifest under {store}")
-    pids: set[int] = set()
-    stats: dict[tuple[int, str], dict] = {}
-    for p, c, sj in zip(t.column("pid").to_pylist(),
-                        t.column("column").to_pylist(),
-                        t.column("stats_json").to_pylist()):
-        pids.add(p)
-        if c in columns:
-            stats[(p, c)] = json.loads(sj)
-    return pids, stats
+class ReadPlan(NamedTuple):
+    """{column: Spark DDL}; the admitted (pid, pid_file, summed
+    bytes_out) in pid order; {(pid, column): stats} of filter columns."""
+    schema_map: dict[str, str]
+    files: list[tuple[int, str, int]]
+    stats: dict[tuple[int, str], dict]
 
 
-def admit_pids(pids: set[int], stats: dict, filters) -> set[int]:
-    """The pids whose chunks could hold a row matching every filter
-    (single-column pyspark.sql.datasource filters). A pid without stats
-    for a filter's column is kept: pruning must stay sound."""
+def read_plan(dfs, store: str, columns: list[str] | None = None,
+              filters=()) -> ReadPlan | None:
+    """The one plan of every store reader (None: no manifest), from one
+    manifest read and no listing of blobs/. `columns` prunes the schema
+    map (KeyError on an unknown one). `filters` (single-column
+    pyspark.sql.datasource filters) admit the pids whose chunks could
+    hold a match; a pid without stats for the column is kept (sound)."""
     from parquet_toolkit_spark.sources.ptsc_datasource import _chunk_admits
 
+    found = _committed_parts(dfs, store)
+    if found is None:
+        return None
+    schema_map = _schema_of(dfs, store, found)
+    if columns is not None:
+        unknown = set(columns) - set(schema_map)
+        if unknown:
+            raise KeyError(f"unknown columns {sorted(unknown)}")
+        schema_map = {c: t for c, t in schema_map.items() if c in columns}
+    keys = {f.attribute[0] for f in filters}
+    read = ["pid", "column", "bytes_out"] + (["stats_json"] if keys else [])
+    t = _read_parts(found[1], read)
+    sizes: dict[int, int] = {}
+    stats: dict[tuple[int, str], dict] = {}
+    for p, c, bo, *sj in zip(*(t.column(n).to_pylist() for n in read)):
+        sizes[p] = sizes.get(p, 0) + (bo or 0)
+        if c in keys:
+            stats[(p, c)] = json.loads(sj[0])
+    pids = set(sizes)
     for f in filters:
         col = f.attribute[0]
         pids = {p for p in pids if (p, col) not in stats
                 or _chunk_admits(stats[(p, col)], f)}
-    return pids
+    return ReadPlan(schema_map,
+                    [(p, pid_file(store, p), sizes[p]) for p in sorted(pids)],
+                    stats)

@@ -345,9 +345,12 @@ def test_prefix_upper_bound_skips_surrogates(spark, corpus_df, tmp_path):
 
 
 def test_fsck_store_detects_corruption_and_loss(spark, corpus_df, tmp_path):
+    import json
+    import re
     import shutil
 
-    from parquet_toolkit_spark.operators.encode import fsck_store
+    from parquet_toolkit_spark.operators.encode import decode_where, fsck_store
+    from parquet_toolkit_spark.sources.ptsc_datasource import PtscDataSource
 
     staging = str(tmp_path / "stg_fsck")
     enc = str(tmp_path / "enc_fsck")
@@ -360,6 +363,24 @@ def test_fsck_store_detects_corruption_and_loss(spark, corpus_df, tmp_path):
 
     pid_dirs = sorted(glob.glob(os.path.join(enc, "blobs", "pid=*")))
     assert len(pid_dirs) >= 2
+    bad_pid = int(os.path.basename(pid_dirs[0]).split("=")[1])
+    lost_pid = int(os.path.basename(pid_dirs[1]).split("=")[1])
+    repo_min = {r.pid: json.loads(r.stats_json)["smin"] for r in
+                read_manifest(spark, enc).where(F.col("column") == "repo")
+                .collect()}
+
+    # lose a whole pid dir: every reader fails naming the lost file,
+    # none returns the other pids' rows as if they were the store
+    shutil.rmtree(pid_dirs[1])
+    spark.dataSource.register(PtscDataSource)
+    lost = re.escape(f"pid={lost_pid}/part-0.arrow")
+    for read in (
+            lambda: decode_pipeline(spark, enc).count(),
+            lambda: decode_where(spark, enc,
+                                 {"repo": repo_min[lost_pid]}).count(),
+            lambda: spark.read.format("ptsc").load(enc).count()):
+        with pytest.raises(Exception, match=lost):
+            read()
 
     # flip one byte mid-file: either a blob sha mismatch (corrupt) or a
     # torn container (unreadable) — both must surface for THAT pid only
@@ -367,17 +388,13 @@ def test_fsck_store_detects_corruption_and_loss(spark, corpus_df, tmp_path):
     data = bytearray(open(victim, "rb").read())
     data[len(data) // 2] ^= 0xFF
     open(victim, "wb").write(bytes(data))
-    bad_pid = int(os.path.basename(pid_dirs[0]).split("=")[1])
-    ok_pid = int(os.path.basename(pid_dirs[1]).split("=")[1])
-
-    # lose a whole pid dir
-    shutil.rmtree(pid_dirs[1])
 
     rep = {(r.pid, r.status) for r in fsck_store(spark, enc).collect()}
     assert any(p == bad_pid and s in ("corrupt", "unreadable")
                for p, s in rep)
-    assert (ok_pid, "missing_blob") in rep
-    assert all(s == "ok" for p, s in rep if p not in (bad_pid, ok_pid))
+    # the lost pid reads missing_blob per column, with no unreadable row
+    assert {s for p, s in rep if p == lost_pid} == {"missing_blob"}
+    assert all(s == "ok" for p, s in rep if p not in (bad_pid, lost_pid))
 
 
 def test_encode_without_prefetch_matches_prefetch(spark, corpus_df, tmp_path):

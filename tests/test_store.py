@@ -199,6 +199,70 @@ def test_store_calls_add_no_spark_job(spark, tmp_path):
     shutil.rmtree(stg)
 
 
+def test_readers_plan_from_one_manifest_read(spark, tmp_path, monkeypatch):
+    # decode_where, decode_pipeline and the ptsc reader take their files
+    # from one manifest read and list no blob dir, so the driver's
+    # filesystem calls are the same for 3 pids and for 12
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    stores = {n: str(tmp_path / f"enc{n}") for n in (3, 12)}
+    for n, enc in stores.items():
+        _ptsc_store(spark, enc, 0, 600, parts=n)
+    calls = []
+
+    def record(name, real):
+        def wrapped(*a, **k):
+            calls.append((name, a[1] if name != "read_table" else None))
+            return real(*a, **k)
+        return wrapped
+
+    for name in [n for n in vars(DriverFS) if not n.startswith("_")]:
+        monkeypatch.setattr(DriverFS, name,
+                            record(name, getattr(DriverFS, name)))
+    monkeypatch.setattr(pq, "read_table", record("read_table", pq.read_table))
+
+    def counts(enc):
+        reader = PtscDataSource({"path": enc}).reader(None)
+        reader.pushFilters([GreaterThanOrEqual(("k",), 10)])
+        out = {}
+        for name, build in {
+            "where": lambda: decode_where(spark, enc, {"k": (10, 19)}),
+            "pipeline": lambda: decode_pipeline(spark, enc),
+            "ptsc": reader.partitions,
+        }.items():
+            calls.clear()
+            build()
+            ops = [op for op, _p in calls]
+            assert ops.count("read_table") == 1 and "list_dirs" not in ops
+            assert {p for op, p in calls if op == "list_files"} == {
+                os.path.join(enc, "manifest")}
+            out[name] = sorted(ops)
+        return out
+
+    assert counts(stores[3]) == counts(stores[12])
+
+
+def test_ptsc_read_reads_no_driver_filesystem(spark, tmp_path, monkeypatch):
+    # a Python worker has no session, so DriverFS cannot resolve a remote
+    # store there: the partitions carry the schema, and read() opens
+    # only the pid files
+    import pickle
+
+    enc = str(tmp_path / "enc")
+    _ptsc_store(spark, enc, 0, 200, parts=2)
+    reader = PtscDataSource({"path": enc}).reader(None)
+    parts = pickle.loads(pickle.dumps(reader.partitions()))
+
+    def refuse(*_a, **_k):
+        raise RuntimeError("a driver filesystem read inside a task")
+
+    monkeypatch.setattr(store, "read_schema_map", refuse)
+    monkeypatch.setattr(DriverFS, "exists", refuse)
+    got = [k for p in parts for b in reader.read(p)
+           for k in b.column("k").to_pylist()]
+    assert sorted(got) == list(range(200))
+
+
 def test_encode_pipeline_crash_before_commit_keeps_old_store(
         spark, tmp_path, monkeypatch):
     # re-encoding writes fresh pids beside the committed ones; a crash
