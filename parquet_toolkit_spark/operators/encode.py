@@ -29,9 +29,11 @@ Two ways to fill a store:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import math
+import operator
 import os
 from collections.abc import Callable, Iterator
 
@@ -894,28 +896,46 @@ def _read_plan(spark: SparkSession, enc_dir: str,
 
 
 def _decode_plan(spark: SparkSession, plan: store.ReadPlan,
-                 keep_pid: bool, concurrency: int | None) -> DataFrame:
-    """Decode the plan's files in striped tasks, largest first; a plan
-    with no files is an empty frame with the plan's schema, no IO."""
+                 keep_pid: bool, concurrency: int | None,
+                 read: Callable[[str, pa.Schema], pa.Table | None] = _read_pid,
+                 on_driver: bool = False) -> DataFrame:
+    """Run `read(pid_file, schema)` over the plan's files (None: the pid
+    yields no rows). In striped tasks, largest first; or, on_driver or
+    for a plan with no files, in this process, as one partition of the
+    decoded rows."""
     out_schema = ", ".join(
         (["pid int"] if keep_pid else [])
         + [f"`{c}` {t}" for c, t in plan.schema_map.items()])
-    if not plan.files:
-        return spark.createDataFrame([], out_schema)
+    schema = _spark_schema(plan.schema_map)
+
+    def decode(pid: int, fpath: str) -> pa.Table | None:
+        table = read(fpath, schema)
+        if table is not None and keep_pid:
+            table = table.add_column(0, "pid", pa.array(
+                [pid] * table.num_rows, pa.int32()))
+        return table
+
+    if on_driver or not plan.files:
+        empty = pa.schema(([pa.field("pid", pa.int32())] if keep_pid else [])
+                          + list(schema)).empty_table()
+        tables = [t for p, f, _b in plan.files
+                  if (t := decode(p, f)) is not None]
+        # one partition, so a count() needs no exchange; and an Arrow
+        # table even when empty: a frame of an empty Python list counts
+        # in a Python job (local[4]: 2 jobs, ~550 ms against 1, ~100 ms)
+        return spark.createDataFrame(pa.concat_tables([empty, *tables]),
+                                     out_schema).coalesce(1)
     files = sorted(plan.files, key=lambda t: -t[2])
     task_rows = pa.table({
         "pid": pa.array([p for p, _f, _b in files], pa.int32()),
         "file": [f for _p, f, _b in files],
     })
-    schema = _spark_schema(plan.schema_map)
 
     def decode_task(stripe: pa.Table) -> Iterator[pa.RecordBatch]:
         for task in stripe.to_pylist():
-            table = _read_pid(task["file"], schema)
-            if keep_pid:
-                table = table.add_column(0, "pid", pa.array(
-                    [task["pid"]] * table.num_rows, pa.int32()))
-            yield from table.to_batches(max_chunksize=32768)
+            table = decode(task["pid"], task["file"])
+            if table is not None:
+                yield from table.to_batches(max_chunksize=32768)
 
     return _striped_tasks(spark, task_rows, concurrency, decode_task,
                           out_schema)
@@ -1056,6 +1076,76 @@ def _prefix_upper_bound(prefix: str) -> str | None:
     return None
 
 
+# decode_where's crossover: admitted pids whose requested columns hold
+# less than this many manifest bytes_in are filtered and decoded on the
+# driver, larger lookups in striped tasks. Set just under the smallest
+# admitted bytes_in at which the wide path won, and under Spark's 48 MB
+# Arrow local-relation threshold. decode_where(columns=None).count() on
+# repo ranges of the F0 seed-1 corpus (30k rows, content included),
+# local[4] on a 4-core VM, medians of 5 interleaved calls, ms:
+#   8 pids:  admitted 2/3/4/5/6/8 pids = 14.6/21.8/29.1/36.3/43.6/58.4 MB
+#            driver 271/310/338/361/486/496, wide 368/307/296/321/384/378
+#   32 pids: admitted 2/5/9/17/32 pids = 3.6/9.1/16.3/30.9/58.4 MB
+#            driver 120/174/221/371/551, wide 205/279/348/533/863
+_DRIVER_LOOKUP_BYTES = 20 << 20
+
+
+def _row_mask(table: pa.Table, predicates: dict) -> pa.ChunkedArray | None:
+    """A row mask keeping at least every row `predicates` match: a prefix
+    is pc.starts_with, equality and ranges compare on integer and string
+    columns, and any other predicate keeps every row (decode_where's
+    Spark residual stays exact). None: no predicate narrows."""
+    import pyarrow.compute as pc
+
+    def is_str(t: pa.DataType) -> bool:
+        return pa.types.is_string(t) or pa.types.is_large_string(t)
+
+    def fits(v, t: pa.DataType) -> bool:
+        if pa.types.is_integer(t):
+            return (isinstance(v, int) and not isinstance(v, bool)
+                    and -(1 << 63) <= v < (1 << 63))
+        return is_str(t) and isinstance(v, str)
+
+    parts = []
+    for col, spec in predicates.items():
+        arr = table.column(col)
+        if isinstance(spec, dict):
+            if is_str(arr.type) and isinstance(spec.get("prefix"), str):
+                parts.append(pc.starts_with(arr, spec["prefix"]))
+        elif isinstance(spec, tuple):
+            parts += [cmp(arr, v) for cmp, v in
+                      zip((pc.greater_equal, pc.less_equal), spec)
+                      if v is not None and fits(v, arr.type)]
+        elif fits(spec, arr.type):
+            parts.append(pc.equal(arr, spec))
+    if not parts:
+        return None
+    return pc.fill_null(functools.reduce(pc.and_, parts), False)
+
+
+def _lookup_pid(fpath: str, schema: pa.Schema,
+                predicates: dict) -> pa.Table | None:
+    """decode_where's per-pid read, late-materialized: decode only the
+    predicate columns, mask them (_row_mask), and decode `schema`'s other
+    columns only when a row passes; those rows come back Spark-typed in
+    `schema`'s order. None: no row passes."""
+    keys = pa.schema([f for f in schema if f.name in predicates])
+    rest = pa.schema([f for f in schema if f.name not in predicates])
+    head = _read_pid(fpath, keys)
+    mask = _row_mask(head, predicates)
+    if mask is not None:
+        head = head.filter(mask)
+    if not head.num_rows:
+        return None
+    cols = dict(zip(head.column_names, head.columns))
+    if len(rest):
+        tail = _read_pid(fpath, rest)
+        tail = tail if mask is None else tail.filter(mask)
+        cols.update(zip(tail.column_names, tail.columns))
+    return pa.Table.from_arrays([cols[n] for n in schema.names],
+                                schema=schema)
+
+
 def decode_where(spark: SparkSession, enc_dir: str,
                  predicates: dict,
                  columns: list[str] | None = None,
@@ -1064,9 +1154,9 @@ def decode_where(spark: SparkSession, enc_dir: str,
     """Predicate-pushdown decode: one call composing every pruning layer
     the store offers — the blob-store analogue of a parquet scan with
     PushedFilters. Each predicate prunes pids at the METADATA layer
-    (manifest stats; no blob IO), the intersected pid set is decoded with
-    column pruning, and the same predicates re-apply row-level so the
-    result is EXACT, not a superset.
+    (manifest stats; no blob IO), the admitted pids are decoded with
+    column pruning and late materialization, and the same predicates
+    re-apply row-level so the result is EXACT, not a superset.
 
     predicates: {column: spec} where spec is
       scalar            equality — bloom probe (if built) AND zone-map
@@ -1078,7 +1168,27 @@ def decode_where(spark: SparkSession, enc_dir: str,
     Pid sets intersect across predicates (each is a sound superset, so
     the intersection is too). Pruning evidence comes free from the
     manifest; columns without stats/blooms simply don't prune — the
-    residual keeps the answer exact either way."""
+    residual keeps the answer exact either way.
+
+    Each admitted pid is read late-materialized (_lookup_pid): only the
+    predicate columns are decoded and masked with pyarrow, and the other
+    requested columns are decoded only for a pid with a passing row.
+    Where that runs is set by the admitted pids' manifest bytes_in for
+    the requested columns, against a fixed crossover:
+      under _DRIVER_LOOKUP_BYTES   on the driver, while this call runs.
+                        The frame is one partition of the passing rows,
+                        so its action starts no Python task. It holds the
+                        store as it was at the call: a compact_store
+                        between the call and the action does not change
+                        its rows. The IO is part of the call, so a query
+                        body that calls decode_where (bench.py's
+                        q_decode_where) does it while the body is built,
+                        not in the timed execution.
+      at or above it    in striped tasks at `concurrency` (None: one task
+                        per pid), which read the pid files when the
+                        action runs, as decode_pipeline does.
+    Either way the exact answer comes from one Spark .where() over the
+    residual predicates."""
     if not predicates:
         raise ValueError("decode_where needs at least one predicate; "
                          "use decode_pipeline for full scans")
@@ -1099,34 +1209,33 @@ def decode_where(spark: SparkSession, enc_dir: str,
     )
 
     flts: list = []
+    conds: list = []
     for col, spec in predicates.items():
         if isinstance(spec, dict) and "prefix" in spec:
             flts.append(StringStartsWith((col,), spec["prefix"]))
+            conds.append(F.col(col).startswith(spec["prefix"]))
         elif isinstance(spec, tuple):
             lo, hi = spec
             if lo is not None:
                 flts.append(GreaterThanOrEqual((col,), lo))
+                conds.append(F.col(col) >= F.lit(lo))
             if hi is not None:
                 flts.append(LessThanOrEqual((col,), hi))
+                conds.append(F.col(col) <= F.lit(hi))
         else:
             flts.append(EqualTo((col,), spec))
+            conds.append(F.col(col) == F.lit(spec))
 
     want = columns
     if columns is not None:
         columns = list(dict.fromkeys(columns + list(predicates)))
-    df = _decode_plan(spark, _read_plan(spark, enc_dir, columns, flts),
-                      keep_pid, concurrency)
-    for col, spec in predicates.items():
-        if isinstance(spec, dict) and "prefix" in spec:
-            df = df.where(F.col(col).startswith(spec["prefix"]))
-        elif isinstance(spec, tuple):
-            lo, hi = spec
-            if lo is not None:
-                df = df.where(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.where(F.col(col) <= F.lit(hi))
-        else:
-            df = df.where(F.col(col) == F.lit(spec))
+    plan = _read_plan(spark, enc_dir, columns, flts)
+    admitted = sum(plan.bytes_in[p] for p, _f, _b in plan.files)
+    df = _decode_plan(spark, plan, keep_pid, concurrency,
+                      functools.partial(_lookup_pid, predicates=predicates),
+                      on_driver=admitted < _DRIVER_LOOKUP_BYTES)
+    if conds:
+        df = df.where(functools.reduce(operator.and_, conds))
     if want is not None:
         df = df.select(*(["pid"] if keep_pid else []), *want)
     return df

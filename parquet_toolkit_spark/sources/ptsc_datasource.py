@@ -22,10 +22,18 @@ writer, encode._write_pid.
 Driver-side planning reads the manifest with pyarrow directly — no
 nested Spark jobs during query planning, and the reader stays picklable.
 
+Session requirement: because PtscReader implements pushFilters, Spark
+refuses to plan any format("ptsc") read (DATA_SOURCE_PUSHDOWN_DISABLED)
+unless spark.sql.python.filterPushdown.enabled is true. Spark's default
+is false; runtime.spark_builder_defaults sets it, and a session built
+without it must set it before the first read.
+
 Capability note: the 4.1 Python source API pushes FILTERS only (no
 column pruning); narrow projections that want column pruning should use
 decode_pipeline/decode_where, which fault only the selected columns'
-pages.
+pages. Narrow lookups belong on decode_where: a small one runs on the
+driver with no Python task, while every format("ptsc") action plans in
+Spark's Python planner processes and reads in Python tasks.
 """
 
 from __future__ import annotations

@@ -50,10 +50,14 @@ Readers: every reader of committed blobs (decode_pipeline, decode_where,
 the pids_matching_* lookups, the ptsc reader, compact_store, fsck_store
 and encode_partitions' resume check) runs one ``read_plan``: one
 manifest read gives the schema map, the admitted pids with their file
-``pid_file(store, pid)`` and encoded bytes, and the filter columns'
-chunk stats. No reader lists blobs/: a committed pid whose file is lost
-fails the read with the file's path (so its pid) in the error, never
-returns fewer rows; fsck_store reports it as missing_blob.
+``pid_file(store, pid)`` and encoded bytes, the raw bytes (bytes_in) of
+the requested columns per pid, and the filter columns' chunk stats. No
+reader lists blobs/: a committed pid whose file is lost fails the read
+with the file's path (so its pid) in the error, never returns fewer
+rows; fsck_store reports it as missing_blob. decode_where executes its
+plan on the driver when the admitted bytes_in is under its crossover
+(it then reads the pid files while the call runs) and in Spark tasks
+otherwise (they read the files when the action runs).
 """
 
 from __future__ import annotations
@@ -251,10 +255,12 @@ def commit(dfs, store: str, rows: pa.Table, replaced,
 
 class ReadPlan(NamedTuple):
     """{column: Spark DDL}; the admitted (pid, pid_file, summed
-    bytes_out) in pid order; {(pid, column): stats} of filter columns."""
+    bytes_out) in pid order; {(pid, column): stats} of filter columns;
+    {pid: summed bytes_in of the schema map's columns}."""
     schema_map: dict[str, str]
     files: list[tuple[int, str, int]]
     stats: dict[tuple[int, str], dict]
+    bytes_in: dict[int, int]
 
 
 def read_plan(dfs, store: str, columns: list[str] | None = None,
@@ -276,12 +282,16 @@ def read_plan(dfs, store: str, columns: list[str] | None = None,
             raise KeyError(f"unknown columns {sorted(unknown)}")
         schema_map = {c: t for c, t in schema_map.items() if c in columns}
     keys = {f.attribute[0] for f in filters}
-    read = ["pid", "column", "bytes_out"] + (["stats_json"] if keys else [])
+    read = (["pid", "column", "bytes_in", "bytes_out"]
+            + (["stats_json"] if keys else []))
     t = _read_parts(found[1], read)
     sizes: dict[int, int] = {}
+    raw: dict[int, int] = {}
     stats: dict[tuple[int, str], dict] = {}
-    for p, c, bo, *sj in zip(*(t.column(n).to_pylist() for n in read)):
+    for p, c, bi, bo, *sj in zip(*(t.column(n).to_pylist() for n in read)):
         sizes[p] = sizes.get(p, 0) + (bo or 0)
+        if c in schema_map:
+            raw[p] = raw.get(p, 0) + (bi or 0)
         if c in keys:
             stats[(p, c)] = json.loads(sj[0])
     pids = set(sizes)
@@ -291,4 +301,4 @@ def read_plan(dfs, store: str, columns: list[str] | None = None,
                 or _chunk_admits(stats[(p, col)], f)}
     return ReadPlan(schema_map,
                     [(p, pid_file(store, p), sizes[p]) for p in sorted(pids)],
-                    stats)
+                    stats, {p: raw.get(p, 0) for p in pids})

@@ -1,3 +1,4 @@
+import functools
 import os
 import sys
 
@@ -36,3 +37,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
+
+
+def on_wide_lookup_path(test):
+    """`test` run with decode_where's driver crossover at 0, so every
+    lookup takes the wide (striped-task) path. A module binds it to a
+    second name, `test_x_wide = on_wide_lookup_path(test_x)`, so the same
+    body checks both paths: `test_x` itself runs the small lookups of a
+    test store on the driver."""
+    @functools.wraps(test)
+    def wide(*args, **kwargs):
+        from parquet_toolkit_spark.operators import encode
+
+        saved, encode._DRIVER_LOOKUP_BYTES = encode._DRIVER_LOOKUP_BYTES, 0
+        try:
+            return test(*args, **kwargs)
+        finally:
+            encode._DRIVER_LOOKUP_BYTES = saved
+    return wide

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import on_wide_lookup_path
 from parquet_toolkit_spark.datagen import write_corpus
 from parquet_toolkit_spark.operators.encode import (
     decode_pipeline,
@@ -656,6 +657,10 @@ def test_decode_where_composes_all_pruning_layers(spark, tmp_path):
     assert sorted(got.seq.tolist()) == sorted(want.seq.tolist())
 
 
+test_decode_where_composes_all_pruning_layers_wide = on_wide_lookup_path(
+    test_decode_where_composes_all_pruning_layers)
+
+
 def test_float_zone_maps_prune_and_stay_sound(spark, sf_dir, tmp_path):
     """Float zone maps: after a price-sorted layout, a float range
     predicate prunes pids at the manifest layer and decode_where stays
@@ -712,6 +717,10 @@ def test_float_zone_maps_prune_and_stay_sound(spark, sf_dir, tmp_path):
     assert _chunk_admits(st2, EqualTo(("x",), 1.5))
 
 
+test_float_zone_maps_prune_and_stay_sound_wide = on_wide_lookup_path(
+    test_float_zone_maps_prune_and_stay_sound)
+
+
 def test_datetime_predicates_prune_timestamp_chunks(spark, sf_dir, tmp_path):
     """decode_where with datetime values: timestamp chunks store int64
     microsecond zone maps, and datetime predicates compare on the same
@@ -752,6 +761,10 @@ def test_datetime_predicates_prune_timestamp_chunks(spark, sf_dir, tmp_path):
                           LessThanOrEqual(("ts",), hi))
     }
     assert 0 < len(admitted) < n_pids
+
+
+test_datetime_predicates_prune_timestamp_chunks_wide = on_wide_lookup_path(
+    test_datetime_predicates_prune_timestamp_chunks)
 
 
 def test_zone_map_evidence_dispatch_is_sound(spark, tmp_path):
@@ -808,6 +821,10 @@ def test_zone_map_evidence_dispatch_is_sound(spark, tmp_path):
     want4 = {r.id for r in df.where(
         (F.col("score") >= 1000) & (F.col("score") <= 1999)).collect()}
     assert got4 == want4
+
+
+test_zone_map_evidence_dispatch_is_sound_wide = on_wide_lookup_path(
+    test_zone_map_evidence_dispatch_is_sound)
 
 
 def test_decimal_pipeline_and_zonemap_pruning(spark, tmp_path):
@@ -912,6 +929,73 @@ def test_decode_where_decimal_predicates(spark, tmp_path):
     n_pids = 8
     keep = pids_matching_value(spark, enc, "price", D("1.23"))
     assert 0 < len(keep) < n_pids
+
+
+test_decode_where_decimal_predicates_wide = on_wide_lookup_path(
+    test_decode_where_decimal_predicates)
+
+
+def test_decode_where_nan_floats_keep_pid_and_all_columns(spark, tmp_path):
+    """A float column holding NaN and nulls (the pyarrow mask keeps every
+    row of a float column; Spark's residual orders NaN above every value),
+    keep_pid=True, and columns=None (every column, in schema order)."""
+    from parquet_toolkit_spark.operators.encode import decode_where
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(i, nan if i % 7 == 0 else None if i % 11 == 0 else i / 4,
+          f"s{i % 5}") for i in range(3000)],
+        "id long, x double, s string")
+    enc = str(tmp_path / "enc_nan")
+    encode_pipeline(spark, df, enc, target_bytes=8 << 10, run_id="nan",
+                    range_keys=("id",), sort_keys=("id",), n_partitions=6)
+    where = (F.col("x") >= 500.0) & (F.col("s") == "s3")
+    want = {r.id for r in df.where(where).collect()}
+    assert any(i % 7 == 0 for i in want)  # NaN rows pass x >= 500.0
+
+    got = decode_where(spark, enc, {"x": (500.0, None), "s": "s3"},
+                       keep_pid=True)
+    assert got.columns == ["pid", "id", "x", "s"]
+    rows = got.collect()
+    assert {r.id for r in rows} == want and len(rows) == len(want)
+    pid_of = {r.id: r.pid for r in
+              decode_pipeline(spark, enc, keep_pid=True).collect()}
+    assert all(r.pid == pid_of[r.id] for r in rows)
+
+
+test_decode_where_nan_floats_keep_pid_and_all_columns_wide = (
+    on_wide_lookup_path(test_decode_where_nan_floats_keep_pid_and_all_columns))
+
+
+def test_decode_where_decodes_other_columns_only_for_matches(
+        spark, tmp_path, monkeypatch):
+    """Late materialization: an admitted pid with no matching row decodes
+    only its predicate column; a pid with a match decodes the others
+    after its predicate column."""
+    from parquet_toolkit_spark.operators import encode
+
+    df = spark.range(0, 4000).select(
+        (F.col("id") * 2).alias("k"), F.col("id").cast("string").alias("s"),
+        F.repeat(F.lit("body "), 40).alias("body"))
+    enc = str(tmp_path / "enc_late")
+    encode_pipeline(spark, df, enc, target_bytes=16 << 10, run_id="late",
+                    range_keys=("k",), sort_keys=("k",), n_partitions=4)
+    calls = []
+    real = encode._decode_blob_file
+
+    def record(fpath, wanted=None):
+        calls.append((fpath, wanted))
+        return real(fpath, wanted)
+
+    monkeypatch.setattr(encode, "_decode_blob_file", record)
+    # k is even: 1001 lies inside one pid's zone map and matches no row
+    assert encode.decode_where(spark, enc, {"k": 1001}).count() == 0
+    assert len(calls) == 1 and calls[0][1] == {"k"}
+
+    calls.clear()
+    rows = encode.decode_where(spark, enc, {"k": 1000}).collect()
+    assert [(r.k, r.s) for r in rows] == [(1000, "500")]
+    assert [w for _f, w in calls] == [{"k"}, {"s", "body"}]
 
 
 def test_compact_store_decimal_and_nested(spark, tmp_path):

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import on_wide_lookup_path
 from parquet_toolkit_spark.datagen import write_corpus
 from parquet_toolkit_spark.operators.encode import (
     compact_store,
@@ -87,6 +88,31 @@ def test_decode_where_pruned_reads_committed_schema(spark, tmp_path):
     got = decode_where(spark, enc, {"k": (10**9, None)})
     assert got.columns == list(committed) == ["k", "s"]
     assert got.count() == 0
+
+
+test_decode_where_pruned_reads_committed_schema_wide = on_wide_lookup_path(
+    test_decode_where_pruned_reads_committed_schema)
+
+
+def test_decode_where_driver_frame_reads_at_the_call(spark, tmp_path,
+                                                     monkeypatch):
+    # a driver-path lookup decodes while decode_where runs, so its frame
+    # keeps the rows of the store as it was then; a wide-path frame reads
+    # the pid files when its action runs, and a compaction in between has
+    # deleted them
+    from parquet_toolkit_spark.operators import encode
+
+    enc = str(tmp_path / "snap")
+    _ptsc_store(spark, enc, 0, 600, parts=3)
+    driver = decode_where(spark, enc, {"k": (100, 199)}, columns=["k"])
+    with monkeypatch.context() as m:
+        m.setattr(encode, "_DRIVER_LOOKUP_BYTES", 0)
+        wide = decode_where(spark, enc, {"k": (100, 199)}, columns=["k"])
+    compact_store(spark, enc, target_bytes=1 << 20, run_id="snap-c")
+    assert sorted(r.k for r in driver.collect()) == list(range(100, 200))
+    with pytest.raises(Exception, match="part-0.arrow"):
+        wide.count()
+    assert decode_where(spark, enc, {"k": (100, 199)}).count() == 100
 
 
 def test_resume_refuses_schema_change(spark, tmp_path):

@@ -10,6 +10,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import on_wide_lookup_path
 from parquet_toolkit_spark.operators.encode import (
     decode_where,
     encode_pipeline,
@@ -60,6 +61,10 @@ def test_zorder_prunes_both_dimensions_exactly(spark, tmp_path):
     assert got2 == want2 and got2
 
 
+test_zorder_prunes_both_dimensions_exactly_wide = on_wide_lookup_path(
+    test_zorder_prunes_both_dimensions_exactly)
+
+
 def test_zorder_beats_single_key_layout_on_second_dim(spark, tmp_path):
     df = _events(spark)
     zo, sk = str(tmp_path / "zo"), str(tmp_path / "sk")
@@ -99,6 +104,10 @@ def test_zorder_null_and_skew_stay_exact(spark, tmp_path):
     full = decode_where(spark, enc, {"event_id": (0, 10**9)},
                         columns=["event_id", "user_id"])
     assert full.where(F.col("user_id").isNull()).count() == 1000
+
+
+test_zorder_null_and_skew_stay_exact_wide = on_wide_lookup_path(
+    test_zorder_null_and_skew_stay_exact)
 
 
 def test_zorder_key_guards(spark):
