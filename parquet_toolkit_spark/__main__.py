@@ -297,9 +297,10 @@ def main(argv: list[str] | None = None) -> dict:
             kw["sort_keys"] = tuple(_cols(args.sort_keys))
         if _cols(args.cluster_keys):
             kw["cluster_keys"] = tuple(_cols(args.cluster_keys))
+        df, footers = read_parquet_footed(spark, [args.input])
         encode_pipeline(
-            spark, read_parquet_footed(spark, [args.input])[0], args.output,
-            target_bytes=_size(args.target_size), run_id=args.run_id,
+            spark, df, args.output, target_bytes=_size(args.target_size),
+            run_id=args.run_id, footers=footers,
             bloom_columns=tuple(_cols(args.bloom_columns) or ()), **kw)
         rep = encoded_size_report(spark, args.output)
         res = {"pids": rep["n_partitions"], "bytes_in": rep["bytes_in"],

@@ -266,6 +266,11 @@ def _footer_ddl(metas: list) -> str | None:
             return None
         if [(f.name, f.dataType.simpleString()) for f in written] != fields:
             return None
+    return ddl_text(fields)
+
+
+def ddl_text(fields: list[tuple[str, str]]) -> str:
+    """The DDL schema text of (name, Spark simpleString type) pairs."""
     return ", ".join("`{}` {}".format(n.replace("`", "``"), ddl)
                      for n, ddl in fields)
 
@@ -417,6 +422,41 @@ def range_pid(df: DataFrame, keys: list[str], bounds: list[tuple],
     return F.expr(search(0, len(bounds)))
 
 
+def range_pid_arrow(keys, bounds: list[tuple]):
+    """The Arrow twin of range_pid: the pid of each row of the Arrow
+    table `keys` (the range key columns), #{bounds <= key} with a null
+    key field first, as an int32 numpy array. One sort of the key rows,
+    then a binary search of each ascending bound in that order; the pids
+    follow from where the bounds fall, with no temporary beyond the sort
+    order and the pid arrays. Catalyst's order only for key types whose
+    Arrow order is Catalyst's: integers, strings, binary, date and
+    boolean (Python compares their values in the same order)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = keys.num_rows
+    order = pc.sort_indices(
+        keys, sort_keys=[(k, "ascending") for k in keys.column_names],
+        null_placement="at_start").to_numpy()
+    cols = keys.columns
+
+    def below(j: int, bound: tuple) -> bool:  # sorted row j < bound
+        row = tuple(c[int(order[j])].as_py() for c in cols)
+        return _order_key(row) < bound
+
+    starts = [0]  # starts[i + 1]: the first sorted row >= bounds[i]
+    for b in bounds:
+        lo, hi, key = starts[-1], n, _order_key(b)
+        while lo < hi:
+            mid = (lo + hi) // 2
+            lo, hi = (mid + 1, hi) if below(mid, key) else (lo, mid)
+        starts.append(lo)
+    pid = np.empty(n, np.int32)
+    pid[order] = np.repeat(np.arange(len(starts), dtype=np.int32),
+                           np.diff(starts + [n]))
+    return pid
+
+
 def _murmur3_int(x):
     """Spark's Murmur3_x86_32.hashInt(x, seed=42), i.e. F.hash of an int
     column, vectorized over an int array; int32 results."""
@@ -464,14 +504,22 @@ def range_split(df: DataFrame, keys: list[str], n: int,
     quantiles of key_sample; the rows then move in one hash shuffle
     (place_by_pid)."""
     keys = list(keys)
+    bounds = split_bounds(df, keys, n, footers, n_rows, descending)
+    return place_by_pid(df, range_pid(df, keys, bounds, descending), n)
+
+
+def split_bounds(df: DataFrame, keys: list[str], n: int,
+                 footers: list[tuple[str, object]], n_rows: int | None,
+                 descending: bool = False) -> list[tuple]:
+    """The n-1 bounds of a range layout of `df` on `keys`: quantiles of
+    key_sample (range_split and layout_stage's in-process path)."""
     nested = [f.name for f in df.schema.fields if f.name in keys
               and f.dataType.simpleString().startswith(
                   ("array<", "struct<", "map<"))]
     if nested:
         raise TypeError(f"range keys must be atomic columns: {nested}")
-    bounds = range_bounds(*key_sample(df, keys, footers, n_rows), n,
-                          descending)
-    return place_by_pid(df, range_pid(df, keys, bounds, descending), n)
+    return range_bounds(*key_sample(df, keys, footers, n_rows), n,
+                        descending)
 
 
 def compact(spark: SparkSession, in_path: str | list[str], out_path: str,

@@ -986,7 +986,15 @@ def _read_plan(spark: SparkSession, plan: dict) -> DataFrame:
     """A plan's live rows in its pinned schema (no lineage columns)."""
     md = plan["md"]
     if not plan["data"]:  # fully-deleted table: empty frame, declared schema
-        return spark.createDataFrame([], md["schema_ddl"])
+        # an empty Arrow table, not an empty list: a list-built frame
+        # counts in a Python job and starts a second Python daemon
+        import pyarrow as pa
+
+        from parquet_toolkit_spark.sources.ddl import ddl_to_arrow
+
+        empty = pa.schema([(n, ddl_to_arrow(t))
+                           for n, t, _r in md["schema_fields"]])
+        return spark.createDataFrame(empty.empty_table(), md["schema_ddl"])
     return _scan_live_rows(spark, plan).select(
         *[n for n, _t, _r in md["schema_fields"]])
 

@@ -39,19 +39,34 @@ def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
 
 
+def _with_encode_constant_at_zero(name, test):
+    """`test` run with the crossover constant `encode.<name>` at 0."""
+    @functools.wraps(test)
+    def at_zero(*args, **kwargs):
+        from parquet_toolkit_spark.operators import encode
+
+        saved = getattr(encode, name)
+        setattr(encode, name, 0)
+        try:
+            return test(*args, **kwargs)
+        finally:
+            setattr(encode, name, saved)
+    return at_zero
+
+
 def on_wide_lookup_path(test):
     """`test` run with decode_where's driver crossover at 0, so every
     lookup takes the wide (striped-task) path. A module binds it to a
     second name, `test_x_wide = on_wide_lookup_path(test_x)`, so the same
     body checks both paths: `test_x` itself runs the small lookups of a
     test store on the driver."""
-    @functools.wraps(test)
-    def wide(*args, **kwargs):
-        from parquet_toolkit_spark.operators import encode
+    return _with_encode_constant_at_zero("_DRIVER_LOOKUP_BYTES", test)
 
-        saved, encode._DRIVER_LOOKUP_BYTES = encode._DRIVER_LOOKUP_BYTES, 0
-        try:
-            return test(*args, **kwargs)
-        finally:
-            encode._DRIVER_LOOKUP_BYTES = saved
-    return wide
+
+def on_spark_layout_path(test):
+    """`test` run with layout_stage's in-process crossover at 0, so every
+    layout takes the Spark path. Bound to a second name,
+    `test_x_spark = on_spark_layout_path(test_x)`, like
+    on_wide_lookup_path: `test_x` itself lays out a small parquet scan
+    in this process."""
+    return _with_encode_constant_at_zero("_ARROW_LAYOUT_BYTES", test)

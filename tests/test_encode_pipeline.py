@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import on_wide_lookup_path
+from conftest import on_spark_layout_path, on_wide_lookup_path
 from parquet_toolkit_spark.datagen import write_corpus
 from parquet_toolkit_spark.operators.encode import (
     decode_pipeline,
@@ -99,6 +99,9 @@ def test_checkpoint_resume(spark, corpus_df, tmp_path):
     assert man3.where(F.col("run_id") == "run3").count() == 0
 
 
+test_checkpoint_resume_spark = on_spark_layout_path(test_checkpoint_resume)
+
+
 def test_staged_layout_is_sorted_and_sized(spark, corpus_df, tmp_path):
     staging = str(tmp_path / "staging2")
     layout_stage(spark, corpus_df, staging, target_bytes=1 << 20)
@@ -115,6 +118,10 @@ def test_staged_layout_is_sorted_and_sized(spark, corpus_df, tmp_path):
         t = pq.read_table(f, columns=["repo", "path", "commit"])
         keys = list(zip(*(t.column(c).to_pylist() for c in ("repo", "path", "commit"))))
         assert keys == sorted(keys), f"{f} not sorted within partition"
+
+
+test_staged_layout_is_sorted_and_sized_spark = on_spark_layout_path(
+    test_staged_layout_is_sorted_and_sized)
 
 
 def test_manifest_stats_are_populated(spark, corpus_df, tmp_path):
@@ -324,6 +331,10 @@ def test_manifest_swap_crash_recovery(spark, corpus_df, tmp_path):
     encode_partitions(spark, staging, enc, run_id="b", resume=False)
     assert os.path.exists(man) and not os.path.exists(man_old)
     assert decode_pipeline(spark, enc).count() == N_ROWS
+
+
+test_manifest_swap_crash_recovery_spark = on_spark_layout_path(
+    test_manifest_swap_crash_recovery)
 
 
 def test_prefix_upper_bound_skips_surrogates(spark, corpus_df, tmp_path):
@@ -1160,6 +1171,193 @@ def test_layout_stage_bounds_ignore_session_history(spark, corpus_df,
         assert max(sizes) <= 1.25 * sum(sizes) / len(sizes), sizes
     assert len(digests[0]) == 8
     assert digests[0] == digests[1] == digests[2]
+
+
+test_layout_stage_bounds_ignore_session_history_spark = on_spark_layout_path(
+    test_layout_stage_bounds_ignore_session_history)
+
+
+def _typed_input(out_dir):
+    """Three parquet files of 500 rows in row groups of 120: a column of
+    every type the in-process layout admits, range keys k (int, 30%
+    null, negative values) and d (date, null where k is and more), and a
+    unique id. A layout on (k, d) into 6 pids has a first bound of two
+    nulls, so pid 0 is empty."""
+    import datetime
+    import decimal
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    n = 1500
+    k_null = rng.random(n) < 0.3
+    some_null = rng.random(n) < 0.1
+    day = datetime.date(2020, 1, 1)
+    t = pa.table({
+        "id": pa.array(np.arange(n), pa.int64()),
+        "k": pa.array(rng.integers(-50, 50, n), pa.int32(), mask=k_null),
+        "d": pa.array([day + datetime.timedelta(days=int(x))
+                       for x in rng.integers(-400, 400, n)], pa.date32(),
+                      mask=k_null | some_null),
+        "s": pa.array([None if i % 11 == 0 else f"s{int(x):03d}"
+                       for i, x in enumerate(rng.integers(0, 200, n))]),
+        "bin": pa.array([bytes([int(x) % 256, int(x) // 256])
+                         for x in rng.integers(0, 1 << 16, n)]),
+        "flag": pa.array(rng.random(n) < 0.5, mask=some_null[::-1].copy()),
+        "i8": pa.array(rng.integers(-128, 128, n), pa.int8()),
+        "i16": pa.array(rng.integers(-3000, 3000, n), pa.int16()),
+        "f32": pa.array(rng.standard_normal(n), pa.float32()),
+        "f64": pa.array(rng.standard_normal(n), mask=some_null),
+        "ts": pa.array(rng.integers(0, 1 << 50, n), pa.timestamp("us")),
+        "dec": pa.array([decimal.Decimal(int(x)).scaleb(-2)
+                         for x in rng.integers(-10**8, 10**8, n)],
+                        pa.decimal128(10, 2)),
+        "dec_wide": pa.array([decimal.Decimal(int(x)).scaleb(-4)
+                              for x in rng.integers(-10**15, 10**15, n)],
+                             pa.decimal128(22, 4)),
+    })
+    os.makedirs(out_dir)
+    for i in range(3):
+        pq.write_table(t.slice(500 * i, 500),
+                       os.path.join(out_dir, f"part-{i}.parquet"),
+                       row_group_size=120)
+    return out_dir
+
+
+def test_layout_stage_paths_stage_the_same(spark, corpus_dir, tmp_path,
+                                           monkeypatch):
+    """On the F0 corpus and on a typed table, the in-process and the
+    Spark layout_stage write the same part files (equal pyarrow tables
+    per part index; pid 0 of the typed table is empty, and both write
+    its file), the same schema for spark.read.parquet, and
+    encode_partitions gives the same manifest rows over either. A
+    filtered, a projected or a hive-partitioned frame, a Z-order layout,
+    a float key and an empty input take the Spark path."""
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.operators import encode
+
+    calls = []
+    real = encode._stage_in_process
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(encode, "_stage_in_process", spy)
+    typed = _typed_input(str(tmp_path / "typed"))
+    cases = {
+        "f0": (corpus_dir, dict(n_partitions=8)),
+        "typed": (typed, dict(n_partitions=6, range_keys=("k", "d"),
+                              sort_keys=("s", "bin", "flag", "id"))),
+    }
+    limits = {"arrow": encode._ARROW_LAYOUT_BYTES, "spark": 0}
+    for name, (src, kw) in cases.items():
+        staged = {}
+        for path, limit in limits.items():
+            monkeypatch.setattr(encode, "_ARROW_LAYOUT_BYTES", limit)
+            calls.clear()
+            stg = str(tmp_path / f"{name}_{path}")
+            layout_stage(spark, spark.read.parquet(src), stg, **kw)
+            assert len(calls) == (path == "arrow"), (name, path)
+            man = encode_partitions(spark, stg, stg + "_enc", run_id="same")
+            staged[path] = (
+                {os.path.basename(f)[:10]: pq.read_table(f)
+                 for f in glob.glob(os.path.join(stg, "part-*"))},
+                spark.read.parquet(stg).schema,
+                sorted(tuple(r) for r in man.select(
+                    "pid", "column", "codec", "bytes_out", "checksum")
+                    .collect()))
+        files, schema, rows = staged["arrow"]
+        assert sorted(files) == sorted(staged["spark"][0]), name
+        for part, table in files.items():
+            assert table.equals(staged["spark"][0][part]), (name, part)
+        assert schema == staged["spark"][1], name
+        assert rows == staged["spark"][2], name
+    # the Spark write leaves partition 0's file even when it is empty
+    assert files["part-00000"].num_rows == 0 and len(files) == 6
+
+    monkeypatch.setattr(encode, "_ARROW_LAYOUT_BYTES", 1 << 40)
+    df = spark.read.parquet(typed)
+    hive, empty = str(tmp_path / "hive"), str(tmp_path / "empty")
+    df.write.partitionBy("flag").parquet(hive)
+    df.limit(0).write.parquet(empty)
+    on_spark = {
+        "filtered": (df.where("k > 0"), {}),
+        "projected": (df.select("k", "id", "s"), {}),
+        "hive": (spark.read.parquet(hive), {}),
+        "z-order": (df, dict(cluster_keys=("k", "id"))),
+        "float key": (df, dict(range_keys=("f64",))),
+        "empty": (spark.read.parquet(empty), {}),
+    }
+    for name, (frame, kw) in on_spark.items():
+        calls.clear()
+        layout_stage(spark, frame, str(tmp_path / "stg_spark"),
+                     **{"n_partitions": 3, "range_keys": ("k",),
+                        "sort_keys": ("k", "id"), **kw})
+        assert calls == [], name
+
+
+def test_layout_stage_read_bounds_dictionary_text(spark, tmp_path,
+                                                  monkeypatch):
+    """The footers estimate a dictionary-encoded text column by its pages,
+    not its values: 80-byte strings of 8 distinct values estimate ~4 B a
+    row and decode to 84. An input under the crossover by that estimate
+    but far over it decoded is laid out by Spark: the in-process read
+    gives up once it holds the crossover's bytes, having written
+    nothing. With the crossover above the decoded size, the same input
+    is laid out in this process, and both stage the same rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_toolkit_spark.operators import encode
+    from parquet_toolkit_spark.operators.layout import (
+        _footer_decoded_bytes_per_row,
+        input_footers,
+    )
+
+    n = 200_000
+    words = [f"{i:02d}" * 40 for i in range(8)]
+    t = pa.table({
+        "k": pa.array(np.arange(n)[::-1] % 977, pa.int64()),
+        "s": pa.array([words[i % 8] for i in range(n)]),
+    })
+    src = str(tmp_path / "dict")
+    os.makedirs(src)
+    for i in range(4):  # pyarrow's default write dictionary-encodes `s`
+        pq.write_table(t.slice(i * n // 4, n // 4),
+                       os.path.join(src, f"part-{i}.parquet"))
+    df = spark.read.parquet(src)
+    footers = input_footers(df)
+    assert "RLE_DICTIONARY" in footers[0][1].row_group(0).column(1).encodings
+    estimate = _footer_decoded_bytes_per_row([md for _f, md in footers]) * n
+    assert t.nbytes > 6 * estimate
+
+    results = []
+    real = encode._stage_in_process
+
+    def spy(*args, **kwargs):
+        results.append(real(*args, **kwargs))
+        return results[-1]
+
+    monkeypatch.setattr(encode, "_stage_in_process", spy)
+    staged = {}
+    for name, limit in (("capped", int(2 * estimate)),
+                        ("in_process", 2 * t.nbytes)):
+        monkeypatch.setattr(encode, "_ARROW_LAYOUT_BYTES", limit)
+        stg = str(tmp_path / name)
+        assert layout_stage(spark, df, stg, n_partitions=4,
+                            range_keys=("k",), sort_keys=("k", "s")) == 4
+        staged[name] = {os.path.basename(f)[:10]: pq.read_table(f)
+                        for f in glob.glob(os.path.join(stg, "part-*"))}
+    assert results == [False, True]
+    assert sorted(staged["capped"]) == sorted(staged["in_process"])
+    for part, table in staged["capped"].items():
+        assert table.equals(staged["in_process"][part]), part
+    assert sum(x.num_rows for x in staged["capped"].values()) == n
 
 
 def test_encode_module_imports_no_pandas():

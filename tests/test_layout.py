@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import on_spark_layout_path
 from parquet_toolkit_spark.operators.layout import (
     compact,
     estimate_bytes_per_row,
@@ -230,6 +231,28 @@ def test_range_pid_counts_the_bounds_before_each_key(spark, ddl, descending):
     assert all(r.pid == r.want for r in rows)
 
 
+@pytest.mark.parametrize("ddl", ["string", "date", "binary", "boolean"])
+def test_range_pid_arrow_equals_range_pid(spark, ddl):
+    """range_pid_arrow, the in-process layout's pid rule, ranks every
+    row as range_pid does on a key of each admitted type (nulls, quotes,
+    non-ASCII and empty strings among keys and bounds) plus a second,
+    negative-valued int key."""
+    from parquet_toolkit_spark.operators.layout import (
+        _order_key,
+        range_pid,
+        range_pid_arrow,
+    )
+
+    rows = [(v, i % 5 - 2) for i, v in enumerate(_typed_keys(ddl))]
+    df = spark.createDataFrame(rows, f"k {ddl}, j int")
+    bounds = sorted(set(rows[::9] + rows[1::23]), key=_order_key)
+    got = df.select(range_pid(df, ["k", "j"], bounds).alias("pid"),
+                    "k", "j").toArrow()
+    assert len(bounds) >= 3
+    assert (range_pid_arrow(got.select(["k", "j"]), bounds).tolist()
+            == got.column("pid").to_pylist())
+
+
 def test_murmur3_port_matches_spark_hash(spark):
     from parquet_toolkit_spark.operators.layout import _murmur3_int
 
@@ -258,15 +281,19 @@ def test_place_by_pid_puts_pid_p_in_partition_p(spark, n):
 
 
 def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
-    """layout_stage on a parquet frame runs the shuffle's map stage and
-    the write, and so does sort_by_key: it reads its input with the
-    footers' schema, so Spark runs no schema-inference job. No sampling
-    job and no count job run before the shuffle. compact and
-    split_by_size run only the write. A Z-order layout_stage adds one
-    sample of the Morton key: its column ranks come from the footers."""
+    """layout_stage on a small parquet frame lays it out in this process
+    and runs no Spark job; on the Spark path (the _spark binding) it runs
+    the shuffle's map stage and the write, and so does sort_by_key: it
+    reads its input with the footers' schema, so Spark runs no schema-
+    inference job. No sampling job and no count job run before the
+    shuffle. compact and split_by_size run only the write. A Z-order
+    layout_stage (always the Spark path) adds one sample of the Morton
+    key: its column ranks come from the footers."""
+    from parquet_toolkit_spark.operators import encode
     from parquet_toolkit_spark.operators.encode import layout_stage
     from parquet_toolkit_spark.operators.layout import read_parquet_footed
 
+    path = "arrow" if encode._ARROW_LAYOUT_BYTES else "spark"
     src = f"{SF}/lineitem.parquet"
     df = spark.read.parquet(src)
     footed, _ = read_parquet_footed(spark, [src])
@@ -295,16 +322,22 @@ def test_range_layouts_pin_spark_job_counts(spark, tmp_path):
     }
     try:
         for name, call in calls.items():
-            sc.setJobGroup(f"range-pin-{name}", name)
+            sc.setJobGroup(f"range-pin-{path}-{name}", name)
             call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
-    jobs = {name: len(tracker.getJobIdsForGroup(f"range-pin-{name}"))
+    jobs = {name: len(tracker.getJobIdsForGroup(f"range-pin-{path}-{name}"))
             for name in calls}
-    assert jobs == {"layout_stage": 2, "layout_stage_n": 2, "sort_by_key": 2,
-                    "layout_stage_z": 3, "compact": 1, "split_by_size": 1}
+    plain = 0 if path == "arrow" else 2
+    assert jobs == {"layout_stage": plain, "layout_stage_n": plain,
+                    "sort_by_key": 2, "layout_stage_z": 3, "compact": 1,
+                    "split_by_size": 1}
+
+
+test_range_layouts_pin_spark_job_counts_spark = on_spark_layout_path(
+    test_range_layouts_pin_spark_job_counts)
 
 
 def _file_rows(files):
@@ -407,6 +440,40 @@ def test_footer_schema_read_equals_inferred_schema(spark, tmp_path, name):
     assert ([strip_local_scheme(f) for f, _ in footers]
             == [strip_local_scheme(f) for f, _ in input_footers(want)])
     assert df.count() == want.count()
+
+
+def test_layouts_read_each_footer_once(spark, tmp_path, monkeypatch):
+    """The CLI encode verb (read_parquet_footed, then encode_pipeline)
+    and layout_stage on both of its paths read each input footer once:
+    the footers the caller read reach plan_layout and the in-process
+    path."""
+    from parquet_toolkit_spark.__main__ import main
+    from parquet_toolkit_spark.datagen import write_corpus
+    from parquet_toolkit_spark.operators.encode import layout_stage
+    from parquet_toolkit_spark.sources import parquet_tools
+
+    src = write_corpus(str(tmp_path / "corpus"), 1200, n_files=6, seed=3)
+    read, real = [], parquet_tools.read_footers
+
+    def counted(files):
+        read.extend(files)
+        return real(files)
+
+    def stage():
+        layout_stage(spark, spark.read.parquet(src), str(tmp_path / "stg"),
+                     n_partitions=3)
+
+    monkeypatch.setattr(parquet_tools, "read_footers", counted)
+    for name, run in {
+        "cli encode": lambda: main([
+            "encode", "--input", src, "--output", str(tmp_path / "enc"),
+            "--target-size", "256kb"]),
+        "layout_stage": stage,
+        "layout_stage_spark": on_spark_layout_path(stage),
+    }.items():
+        read.clear()
+        run()
+        assert len(read) == 6 and len(set(read)) == 6, (name, read)
 
 
 def test_footer_schema_read_falls_back_on_int96(spark, tmp_path):

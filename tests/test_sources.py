@@ -3564,6 +3564,39 @@ def test_iceberg_reads_pin_spark_job_counts(spark, tmp_path):
     assert jobs == {"read_data": 9, "iceberg_fs": 1}
 
 
+def test_iceberg_empty_scan_has_no_python_stage(spark, tmp_path):
+    """read_data of a scan that admits no data file (a range filter
+    outside every file's bounds) is an empty frame in the declared
+    schema, built from a local relation: its count runs one Spark job
+    and its plan scans no Python RDD."""
+    import contextlib
+    import io
+
+    from parquet_toolkit_spark.sources import iceberg_compat as ic
+
+    tdir = str(tmp_path / "t")
+    ic.write_table(spark, spark.createDataFrame(
+        [(i, f"u{i}") for i in range(20)], "id long, u string"), tdir)
+    miss = {"id": (5000, 6000)}
+    assert not ic.scan_plan(tdir, None, spark, range_filter=miss)["data"]
+
+    df = ic.read_data(spark, tdir, range_filter=miss)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("iceberg-empty", "iceberg-empty")
+        n = df.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 0
+    assert df.schema.simpleString() == "struct<id:bigint,u:string>"
+    assert len(sc.statusTracker().getJobIdsForGroup("iceberg-empty")) == 1
+    with contextlib.redirect_stdout(io.StringIO()) as plan:
+        df.explain()
+    assert "LocalTableScan" in plan.getvalue()
+    assert "ExistingRDD" not in plan.getvalue()
+
+
 def test_iceberg_rewrites_pin_spark_job_counts(spark, tmp_path):
     """A sorted rewrite picks its range bounds from the live files'
     footers and runs the shuffle's map stage and the write; a Z-order

@@ -12,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import on_wide_lookup_path
+from conftest import on_spark_layout_path, on_wide_lookup_path
 from parquet_toolkit_spark.datagen import write_corpus
 from parquet_toolkit_spark.operators.encode import (
     compact_store,
@@ -75,6 +75,10 @@ def test_encode_writers_stage_schema_inside_swap(spark, corpus_df, tmp_path):
     encode_partitions(spark, stg, enc2, run_id="e0")
     committed, root = _schemas(enc2)
     assert committed == root and set(committed) == set(corpus_df.columns)
+
+
+test_encode_writers_stage_schema_inside_swap_spark = on_spark_layout_path(
+    test_encode_writers_stage_schema_inside_swap)
 
 
 def test_decode_where_pruned_reads_committed_schema(spark, tmp_path):
